@@ -68,11 +68,17 @@ def _sf_from_dir(d: str) -> float:
         return -1.0
 
 
-def _load_fingerprint() -> dict:
+def _load_fingerprint(spark) -> dict:
     """Machine-load snapshot a reviewer can use to reject a
     contaminated run (concurrent pytest/Spark work inflates per-query
-    numbers 2-5x and is otherwise invisible in the output)."""
-    fp: dict = {"cpus": os.cpu_count()}
+    numbers 2-5x and is otherwise invisible in the output). ``cpus``
+    is the host's core count; ``default_parallelism`` and
+    ``spark_graft_cpus`` are what the Spark session actually used."""
+    fp: dict = {
+        "cpus": os.cpu_count(),
+        "spark_graft_cpus": os.environ.get("SPARK_GRAFT_CPUS"),
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+    }
     try:
         la1, la5, la15 = os.getloadavg()
         fp.update(loadavg1=round(la1, 2), loadavg5=round(la5, 2), loadavg15=round(la15, 2))
@@ -679,7 +685,7 @@ def _bench_streaming(spark) -> dict:
 
 def main() -> None:
     spark = get_spark("bench")
-    fp_start = _load_fingerprint()
+    fp_start = _load_fingerprint(spark)
     # Steady-state warmup so per-query timings measure the query, not
     # one-time session costs: JVM + parquet footers, the events-table
     # nanos shim, whole-stage codegen compilation, and the Python
@@ -773,7 +779,7 @@ def main() -> None:
             spark.sparkContext._jvm.System.gc()
 
     streaming = _bench_streaming(spark)
-    fp_end = _load_fingerprint()
+    fp_end = _load_fingerprint(spark)
 
     payload = {
         "metric": "total_query_wall_sec",

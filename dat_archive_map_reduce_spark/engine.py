@@ -41,7 +41,11 @@ from typing import Any, Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dat_archive_map_reduce_spark.errors import SchemaError, ViewNotFoundError
+from dat_archive_map_reduce_spark.errors import (
+    EngineError,
+    SchemaError,
+    ViewNotFoundError,
+)
 from dat_archive_map_reduce_spark.functions.keys import (
     key_json as _canon_key_json,
     normalize_key,
@@ -55,6 +59,7 @@ from dat_archive_map_reduce_spark.operators.map_reduce import (
 )
 from dat_archive_map_reduce_spark.plans.catalog import (
     OFFSETS_SCHEMA,
+    REBUILD_HINT,
     AppendOnlyLog,
     BucketedEntriesTable,
     BucketedMetaTable,
@@ -219,6 +224,7 @@ class MapReduce:
                 value_type=value_type,
             )
         )
+        import glob as _glob
         import os as _os
 
         existing = self.views.get(name)
@@ -233,6 +239,24 @@ class MapReduce:
                 old_sid = json.load(f)["store"]
         except (FileNotFoundError, KeyError, json.JSONDecodeError):
             pass
+        if old_sid is None and _os.path.isdir(
+            f"{self.warehouse}/views/{name}/entries"
+        ):
+            # entries on disk but no store.json: a per-view store from
+            # before shared stores existed
+            raise EngineError(
+                f"view {name!r} has a per-view entries store without "
+                "store.json; " + REBUILD_HINT
+            )
+        ent_root, ptr_root = self._store_paths(vdef)
+        fresh_ptrs = not _os.path.exists(f"{ptr_root}/_manifest.json")
+        if fresh_ptrs and _glob.glob(f"{ent_root}/*/_manifest.json"):
+            # shards on disk but no pointer table: a store written
+            # before the pointer table existed
+            raise EngineError(
+                f"entries store {ent_root} has shards but no pointer "
+                "table; " + REBUILD_HINT
+            )
         self.views[name] = vdef
         sid = self._store_key(vdef)
         if old_sid is not None and old_sid != sid:
@@ -252,6 +276,10 @@ class MapReduce:
             json.dump({"store": sid}, f)
         _os.replace(tmp, sp)
         self._add_store_member(sid, name)
+        if fresh_ptrs:
+            # every store has its pointer table from birth, so
+            # entries_df never has to walk shard manifests
+            self._entries_ptr_table(name).overwrite_rows([])
         return vdef
 
     def _view(self, name: str) -> ViewDefinition:
@@ -266,14 +294,7 @@ class MapReduce:
         (path, map code, key schema), so twin views (the mapped +
         reduced pattern) write each entry row ONCE; 'view:<name>' — a
         private store, used when the map's behavior is not provable
-        from its code (ViewDefinition.map_identity returns None) or
-        when the view already has a LEGACY per-view store on disk
-        (pre-r15 warehouse — membership math must never move an
-        existing store)."""
-        import os as _os
-
-        if _os.path.isdir(f"{self.warehouse}/views/{vdef.name}/entries"):
-            return f"view:{vdef.name}"
+        from its code (ViewDefinition.map_identity returns None)."""
         ident = vdef.map_identity()
         return f"map:{ident}" if ident is not None else f"view:{vdef.name}"
 
@@ -317,12 +338,18 @@ class MapReduce:
     def _remove_store_member(self, sid: str, name: str) -> None:
         """Drop ``name`` from the shared store's member registry; a
         store left with NO members is deleted outright (its entries
-        are derived data no remaining view references)."""
-        p = self._store_members_path(sid)
-        if p is None:
-            return
+        are derived data no remaining view references). A private
+        store has exactly one member, so it always goes."""
         import os as _os
         import shutil as _shutil
+
+        p = self._store_members_path(sid)
+        if p is None:
+            for d in ("entries", "entries_ptrs"):
+                _shutil.rmtree(
+                    f"{self.warehouse}/views/{name}/{d}", ignore_errors=True
+                )
+            return
 
         members = self._store_members(sid) - {name}
         if members:
@@ -337,8 +364,7 @@ class MapReduce:
         """Per-(store, origin) entries shard, hash-bucketed on file_url
         (the retraction key): merges rewrite only buckets containing
         the batch's changed files — see BucketedEntriesTable. Views
-        sharing a map stage resolve the SAME shard (r14 verdict #5);
-        pre-r15 per-view layouts keep resolving their legacy path."""
+        sharing a map stage resolve the SAME shard (r14 verdict #5)."""
         vdef = self._view(view)
         ent_root, _ = self._store_paths(vdef)
         return BucketedEntriesTable(
@@ -355,9 +381,7 @@ class MapReduce:
         its keys' buckets, so the copy-on-write rewrite is
         O(delta-buckets * |reduced|/N) with untouched buckets
         hardlinked — the same delta-proportional contract the entries
-        shards get from file_url bucketing. A flat legacy snapshot
-        (pre-r13 warehouse, or a reset) re-buckets on its next merge
-        and is incremental afterwards."""
+        shards get from file_url bucketing."""
         vdef = self._view(view)
         return BucketedEntriesTable(
             self.spark,
@@ -492,22 +516,6 @@ class MapReduce:
         if rows:
             self._entries_ptr_table(view).upsert_rows(rows, key_cols=(0,))
 
-    def _bootstrap_entry_ptrs(self, view: str) -> "list[tuple[str, int]]":
-        """One-time upgrade for a warehouse written before the pointer
-        table existed: resolve every known origin's shard manifest
-        (the legacy O(origins) walk) and persist the consolidated
-        rows, so every later entries_df is pointer-table-only."""
-        rows: "list[tuple[str, int]]" = []
-        base, _ = self._store_paths(self._view(view))
-        for o in sorted(self._known_origins()):
-            try:
-                with open(f"{base}/{_origin_shard(o)}/_manifest.json") as f:
-                    rows.append((o, int(json.load(f)["current"])))
-            except (FileNotFoundError, KeyError, ValueError, json.JSONDecodeError):
-                continue  # origin known but shard never materialized
-        self._entries_ptr_table(view).overwrite_rows(rows)
-        return rows
-
     def entries_df(self, view: str, origins: Sequence[str] | None = None) -> DataFrame:
         """All current entries of a view as ONE DataFrame. Shards stay
         per-origin on disk (retraction rewrites one shard), but the
@@ -552,30 +560,22 @@ class MapReduce:
             hit = self._entries_df_cache.get(cache_key)
             if hit is not None and hit[0] == cur_ptr_v:
                 return hit[1]
-        if ptr.exists():
-            rows = ptr.read_rows(origins)
-            if origins is not None:
-                want = set(origins)
-                rows = [r for r in rows if r[0] in want]
-                # explicit origins absent from the pointer table fall
-                # back to their manifests (bounded by the request)
-                have = {o for o, _v in rows}
-                for o in want - have:
-                    try:
-                        with open(
-                            f"{base}/{_origin_shard(o)}/_manifest.json"
-                        ) as f:
-                            rows.append((o, int(json.load(f)["current"])))
-                    except (
-                        FileNotFoundError, KeyError, ValueError,
-                        json.JSONDecodeError,
-                    ):
-                        continue
-        else:
-            rows = self._bootstrap_entry_ptrs(view)
-            if origins is not None:
-                want = set(origins)
-                rows = [r for r in rows if r[0] in want]
+        rows = ptr.read_rows(origins)
+        if origins is not None:
+            want = set(origins)
+            rows = [r for r in rows if r[0] in want]
+            # explicit origins absent from the pointer table fall
+            # back to their manifests (bounded by the request)
+            have = {o for o, _v in rows}
+            for o in want - have:
+                try:
+                    with open(f"{base}/{_origin_shard(o)}/_manifest.json") as f:
+                        rows.append((o, int(json.load(f)["current"])))
+                except (
+                    FileNotFoundError, KeyError, ValueError,
+                    json.JSONDecodeError,
+                ):
+                    continue
         dirs: list[str] = []
         for o, v in rows:
             root = f"{base}/{_origin_shard(o)}"
@@ -647,17 +647,6 @@ class MapReduce:
         sees rows for a previously-missing origin emits found.
         """
         self._indexed_origins.add(origin)
-        target_version = self.current_version(origin)
-        if target_version == 0:
-            if origin not in self._missing_origins:
-                self._missing_origins.add(origin)
-                self._emit("archive-missing", origin=origin)
-            if watch:
-                self.watch_views()
-            return
-        if origin in self._missing_origins:
-            self._missing_origins.discard(origin)
-            self._emit("archive-found", origin=origin)
         log = self.changelog.read_origin(origin)
         # bucket-pruned metadata read: one origin touches one bucket
         # file, not the whole (views x sources) table
@@ -666,69 +655,39 @@ class MapReduce:
             for v, o, lv in self.offsets.read_rows([origin])
             if o == origin
         }
-        any_work = False
-        offset_updates: list[tuple[str, str, int]] = []
-        # group views by (entries store, start offset): map-twin views
-        # at the same offset share ONE merge (the entries rows are
-        # byte-identical — r14 verdict #5) and re-aggregate each from
-        # the shared affected keys; a twin at a DIFFERENT offset (e.g.
-        # defined later) indexes separately over its own update range
-        groups: "dict[tuple[str, int], list[tuple[str, ViewDefinition]]]" = {}
+        # views grouped by start offset: each group's unapplied slice
+        # runs through the maintenance cycle once (a view defined
+        # later indexes separately over its own, longer slice). No
+        # batch token, so re-aggregation takes the refold. The cycle's
+        # probe finds the target version; an empty slice applies
+        # nothing and emits nothing.
+        by_start: "dict[int, list[ViewDefinition]]" = {}
         for name, vdef in self.views.items():
-            start = offsets.get(name, 0)
-            if start >= target_version:
-                continue
-            groups.setdefault((self._store_key(vdef), start), []).append(
-                (name, vdef)
-            )
-        for (_sid, start), members in groups.items():
-            for name, _v in members:
-                self._emit(
-                    "archive-indexing",
-                    origin=origin,
-                    view=name,
-                    version=target_version,
-                )
-            updates = latest_wins(
-                glob_filter(log, members[0][1].path),
-                start=start,
-                end=target_version,
-            )
+            by_start.setdefault(offsets.get(name, 0), []).append(vdef)
+        applied = False
+        for start, vdefs in by_start.items():
             try:
-                applied = self._apply_updates_group(
-                    [v for _n, v in members], origin, updates
+                applied |= bool(
+                    self._maintain_batch(
+                        log.filter(F.col("version") > start), vdefs, progress=True
+                    )
                 )
             except Exception as e:  # reference archive-error, indexer.js:338
                 self._emit(
                     "archive-error",
                     origin=origin,
-                    view=members[0][0],
+                    view=vdefs[0].name,
                     error=str(e),
                 )
                 raise
-            # progress granularity is the compacted batch, not the
-            # single file: one emission per (view, origin) delta
-            # (reference ticks per update, lib/indexer.js:413-418 —
-            # per-row driver callbacks would defeat batch execution)
-            for name, _v in members:
-                self._emit(
-                    "archive-index-progress",
-                    origin=origin,
-                    view=name,
-                    processed=applied,
-                    total=applied,
-                )
-                offset_updates.append((name, origin, target_version))
-                self._emit(
-                    "archive-indexed",
-                    origin=origin,
-                    view=name,
-                    version=target_version,
-                )
-            any_work = True
-        self._set_offsets(offset_updates)
-        if any_work:
-            self._emit("indexes-updated", origin=origin, version=target_version)
+        if not applied:
+            if self.current_version(origin) == 0:
+                if origin not in self._missing_origins:
+                    self._missing_origins.add(origin)
+                    self._emit("archive-missing", origin=origin)
+            elif origin in self._missing_origins:
+                self._missing_origins.discard(origin)
+                self._emit("archive-found", origin=origin)
         if watch:
             self.watch_views()
 
@@ -773,9 +732,6 @@ class MapReduce:
                 return False
             _time.sleep(retry_interval)
 
-    def _set_offset(self, view: str, origin: str, version: int) -> None:
-        self._set_offsets([(view, origin, version)])
-
     def _set_offsets(self, updates: list[tuple[str, str, int]]) -> None:
         """Upsert a batch of (view, origin, last_version) rows in ONE
         bucket-scoped metadata write. The offsets table is one row per
@@ -808,10 +764,9 @@ class MapReduce:
         defer_commit: bool = False,
     ):
         """THE retract-then-add merge of one (view, origin) entries
-        shard — the single implementation both the batch path
-        (_apply_entry_updates) and the watch path (_apply_view_batch)
-        go through, so retraction semantics cannot diverge between
-        them. Retracts every entry derived from a file in ``updates``
+        shard (the one-job multi-origin writer,
+        _merge_view_shards_onejob, applies the same anti-join).
+        Retracts every entry derived from a file in ``updates``
         (provenance anti-join on file_url, lib/view.js:126-148),
         appends ``new_entries``, writes the shard. Returns the LAZY
         retracted-keys DataFrame; its plan resolves the pre-overwrite
@@ -831,11 +786,7 @@ class MapReduce:
         O(keys-touched) batch-write analog (lib/view.js:89-103)."""
         ent_table = self._entries_table(vdef.name, origin)
         affected_urls = updates.select("url")
-        if not ent_table.current_is_bucketed():
-            # pre-bucketing (flat) snapshot: one full re-bucketing
-            # rewrite; every later merge is incremental
-            bucket_ids = list(range(ent_table.n_buckets))
-        elif bucket_ids is None or ent_table.n_buckets != self.entries_buckets:
+        if bucket_ids is None or ent_table.n_buckets != self.entries_buckets:
             # callers precompute ids with the ENGINE's bucket count;
             # a shard created under a different count pins its own
             # (_buckets.json), so recompute against the shard's N —
@@ -1018,98 +969,215 @@ class MapReduce:
         """A shard can join the one-job multi-origin write iff it is
         absent (first index) or its current snapshot is bucketed at
         the engine bucket count — the layout the job's (origin,
-        bucket) partitioning assumes. Flat legacy snapshots and
-        rebucketed shards (per-shard N != engine default) fall back
-        to _merge_entry_shard, which handles both."""
+        bucket) partitioning assumes. Rebucketed shards (per-shard N
+        != engine default) fall back to _merge_entry_shard, which
+        recomputes their ids."""
         t = self._entries_table(view, origin)
-        return not t.exists() or (
-            t.current_is_bucketed() and t.n_buckets == self.entries_buckets
-        )
+        return not t.exists() or t.n_buckets == self.entries_buckets
 
-    def _apply_entry_updates(
-        self, vdef: ViewDefinition, origin: str, updates: DataFrame
-    ) -> "tuple[int, DataFrame | None]":
-        """The entries half of the merge for one (view, origin): map
-        the new 'put' contents and run the shard merge. Returns (n
-        file updates applied, CACHED affected-keys DataFrame or None
-        if the batch was empty) — the caller owns re-aggregation
-        scope and must unpersist the keys. Used by the single-origin
-        batch paths (index/index_file/unindex_file); watch mode's
-        multi-origin analog is _apply_view_batch.
-        """
-        updates = updates.cache()
-        try:
-            # one probe job returns the batch size AND the touched
-            # bucket ids (bounded: <= entries_buckets values), so the
-            # merge needs no second look at the updates
-            probe = updates.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.collect_set(self._url_bucket_expr()).alias("bs"),
-            ).first()
-            n_updates = probe["n"]
-            if n_updates == 0:
-                return 0, None
-            new_entries = run_map(
-                updates.filter(F.col("type") == "put"),
-                vdef.map,
-                vdef.key_types(),
-                value_type=vdef.value_type,
-            )
-            retracted_rows = self._merge_entry_shard(
-                vdef, origin, updates, new_entries, bucket_ids=sorted(probe["bs"])
-            )
-            # keys touched now or before: the re-aggregation scope
-            # (old keys ∪ new keys, lib/indexer.js:228,273-274)
-            affected_keys = (
-                retracted_rows.select("key_json")
-                .union(new_entries.select("key_json"))
-                .distinct()
-                .cache()
-            )
-            # fill the keys cache NOW, while ``updates`` is still
-            # cached — materializing lazily after the finally below
-            # would re-run the map UDF from the raw changelog
-            affected_keys.count()
-            return n_updates, affected_keys
-        finally:
-            updates.unpersist()
-
-    def _apply_updates(self, vdef: ViewDefinition, origin: str, updates: DataFrame) -> int:
-        """Apply a latest-wins-compacted update batch for one
-        (view, origin): entries merge + re-fold of the affected keys
-        (reference readAndIndexFile/unindexFile,
-        lib/indexer.js:217-292). Returns the number of file updates
-        applied (for archive-index-progress).
-        """
-        return self._apply_updates_group([vdef], origin, updates)
-
-    def _apply_updates_group(
+    def _maintain_batch(
         self,
-        vdefs: "list[ViewDefinition]",
-        origin: str,
-        updates: DataFrame,
-    ) -> int:
-        """_apply_updates for a group of views SHARING one entries
-        store (same _store_key — byte-identical entry rows): the
-        merge runs once, every member re-aggregates from the shared
-        affected keys (r14 verdict #5 — running the merge per twin
-        doubled entry-write IO, and under a shared store the second
-        merge would find its own rows already present). The map stage
-        enforces the strictest declared-integer value_type in the
-        group, mirroring the watch path's shared-map contract."""
-        lead = vdefs[0]
-        for v in vdefs:
-            if v.value_type in ("long", "int", "bigint"):
-                lead = v
-                break
-        n_updates, affected_keys = self._apply_entry_updates(lead, origin, updates)
-        if affected_keys is None:
-            return 0
-        for v in vdefs:
-            if v.reduce is not None:
-                self._reaggregate(v, affected_keys)
-        affected_keys.unpersist()
-        return n_updates
+        batch_df: DataFrame,
+        views: "list[ViewDefinition]",
+        batch_token: "str | None" = None,
+        progress: bool = False,
+        bookkeeping: bool = True,
+    ) -> "dict[str, int]":
+        """THE maintenance cycle (reference indexArchive,
+        lib/indexer.js:121-179): apply one batch of changelog rows to
+        ``views`` — a snapshot of the registry, so a view define()d
+        concurrently simply joins the next batch. Every entry point
+        runs it: watch passes each micro-batch with its stream token;
+        index() passes one origin's unapplied slice per distinct start
+        offset, with no token (re-aggregation then refolds);
+        index_file/unindex_file pass their one-row batch with
+        ``bookkeeping=False`` (no offsets, no events). ``progress``
+        adds index()'s archive-index-progress events. Returns
+        {origin: target version} over the batch's origins.
+
+        Per-batch fixed costs are the throughput ceiling (bench
+        maintain_curve), so the cycle pays each one ONCE per batch,
+        not once per (origin, view): one persisted scan of the batch,
+        one probe job, one compaction per distinct glob, one Python
+        map stage per (glob, map, key schema), one offsets read, one
+        _apply_store_batch per entries store, one offsets write.
+
+        The offsets table is PROGRESS METADATA here, never a row
+        filter: the parquet file stream delivers each changelog file
+        exactly once, so gating rows on version > stored offset would
+        silently DROP data whenever one version's files span
+        micro-batches (the offset advances after the first slice; the
+        second slice then fails the gate). Every row of the batch
+        applies (version-0 puts from directory-corpus imports
+        included). Re-delivery happens only on batch replay or a
+        fresh checkpoint over an already-indexed warehouse — both
+        converge, because the merge is retract-then-add and in-batch
+        latest-wins keeps the newest version."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        def _path_key(vdef: ViewDefinition) -> tuple:
+            p = vdef.path
+            return tuple(p) if isinstance(p, (list, tuple)) else (p,)
+
+        groups: "dict[str, list[ViewDefinition]]" = {}
+        for vdef in views:
+            groups.setdefault(self._store_key(vdef), []).append(vdef)
+        batch_df = batch_df.persist()
+        try:
+            path_groups: dict = {}
+            # views sharing a map stage may differ in value_type; the
+            # shared run enforces the strictest declared-integer one
+            # (enforcement is a check, not a transform — the emitted
+            # rows are identical whenever it passes, so the cache
+            # stays shared; run_map docstring, r13 ADVICE)
+            mk_vt: dict = {}
+            for vdef in views:
+                pk = _path_key(vdef)
+                path_groups.setdefault(pk, vdef.path)
+                if vdef.value_type in ("long", "int", "bigint"):
+                    mk_vt[(pk, vdef.map, tuple(vdef.key_schema))] = vdef.value_type
+            # the probe job and the Python map stage both read only the
+            # persisted batch and neither needs the other's output, so
+            # they run CONCURRENTLY (r14: serializing them put the two
+            # largest per-batch fixed costs end-to-end). The map is
+            # materialized OPTIMISTICALLY for every (path, map, schema)
+            # group before the probe says which groups matched — a
+            # group with no matching files costs one empty-input job.
+            upd_cache: dict = {}  # path-key -> cached compacted updates
+            mapped: dict = {}  # (path-key, map fn, key schema) -> cached entries
+            with ThreadPoolExecutor(max_workers=1) as probe_pool:
+                probe_fut = probe_pool.submit(
+                    self._probe_batch, batch_df, path_groups
+                )
+                try:
+                    for vdef in views:
+                        pk = _path_key(vdef)
+                        if pk not in upd_cache:
+                            upd_cache[pk] = latest_wins(
+                                glob_filter(batch_df, vdef.path)
+                            ).cache()
+                        mk = (pk, vdef.map, tuple(vdef.key_schema))
+                        if mk not in mapped:
+                            # views sharing (path, map fn, key schema)
+                            # share ONE Python map stage per batch (the
+                            # mapped+reduced twin-view pattern halves
+                            # the dominant per-batch Python cost)
+                            mapped[mk] = run_map(
+                                upd_cache[pk].filter(F.col("type") == "put"),
+                                vdef.map,
+                                vdef.key_types(),
+                                value_type=mk_vt.get(mk),
+                            ).cache()
+                    # materialize each shared map output ONCE before
+                    # concurrent readers race to compute it: several
+                    # store applies, or a token's delta re-aggregation
+                    # beside the entries write. Counts run concurrently
+                    # (sequential ones would make a multi-group batch's
+                    # wall the SUM of its map stages). A lone reader —
+                    # index() on one store — fills the cache itself.
+                    if mapped and (batch_token is not None or len(groups) > 1):
+                        with ThreadPoolExecutor(
+                            max_workers=min(len(mapped), 4)
+                        ) as mp:
+                            list(mp.map(lambda df: df.count(), mapped.values()))
+                except BaseException:
+                    # a raising user map fn (or a dying job) must not
+                    # leak the pinned caches on every foreachBatch
+                    # retry of a persistently-failing stream
+                    for df in mapped.values():
+                        df.unpersist()
+                    for upd in upd_cache.values():
+                        upd.unpersist()
+                    raise
+                per_origin, g_counts, g_buckets = probe_fut.result()
+            origins = sorted(per_origin)
+            offset_updates = []
+            if bookkeeping:
+                for origin in origins:
+                    self._indexed_origins.add(origin)
+                    if origin in self._missing_origins:
+                        # data arrived for a source registered before it
+                        # had any changelog rows (reference
+                        # archive-found, lib/indexer.js:309-340)
+                        self._missing_origins.discard(origin)
+                        self._emit("archive-found", origin=origin)
+                # driver-local metadata read, BUCKET-PRUNED to the
+                # batch's origins (r13 verdict #3) — no Spark job
+                offsets = (
+                    {(v, o): lv for v, o, lv in self.offsets.read_rows(origins)}
+                    if origins
+                    else {}
+                )
+                for vdef in views:
+                    for origin in origins:
+                        target = per_origin[origin]
+                        self._emit(
+                            "archive-indexing",
+                            origin=origin,
+                            view=vdef.name,
+                            version=target,
+                        )
+                        if target > offsets.get((vdef.name, origin), 0):
+                            offset_updates.append((vdef.name, origin, target))
+            # apply STORES concurrently — views sharing an entries store
+            # (map-twins, r14 verdict #5) go through ONE
+            # _apply_store_batch call (one merge + per-view
+            # re-aggregation; concurrent per-view merges of a shared
+            # store would race the snapshot version). Distinct stores
+            # are disjoint storage, so their merges run as parallel
+            # Spark jobs and the batch wall is ~the slowest store.
+            try:
+                def _apply_group(vdefs: "list[ViewDefinition]") -> None:
+                    pk = _path_key(vdefs[0])
+                    self._apply_store_batch(
+                        vdefs,
+                        (upd_cache[pk], g_counts[pk], g_buckets[pk]),
+                        mapped[(pk, vdefs[0].map, tuple(vdefs[0].key_schema))],
+                        batch_token,
+                    )
+
+                gs = list(groups.values())
+                if len(gs) > 1:
+                    with ThreadPoolExecutor(max_workers=min(len(gs), 4)) as pool:
+                        list(pool.map(_apply_group, gs))
+                elif gs:
+                    _apply_group(gs[0])
+            finally:
+                for df in mapped.values():
+                    df.unpersist()
+                for upd in upd_cache.values():
+                    upd.unpersist()
+            if bookkeeping:
+                for vdef in views:
+                    for origin in origins:
+                        if progress:
+                            # progress granularity is the compacted
+                            # batch, not the single file (reference
+                            # ticks per update, lib/indexer.js:413-418
+                            # — per-row driver callbacks would defeat
+                            # batch execution)
+                            n = g_counts[_path_key(vdef)].get(origin, 0)
+                            self._emit(
+                                "archive-index-progress",
+                                origin=origin,
+                                view=vdef.name,
+                                processed=n,
+                                total=n,
+                            )
+                        self._emit(
+                            "archive-indexed",
+                            origin=origin,
+                            view=vdef.name,
+                            version=per_origin[origin],
+                        )
+                self._set_offsets(offset_updates)
+                for origin in origins:
+                    self._emit(
+                        "indexes-updated", origin=origin, version=per_origin[origin]
+                    )
+            return per_origin
+        finally:
+            batch_df.unpersist()
 
     def _probe_batch(
         self, batch_df: DataFrame, path_groups: "dict[tuple, object]"
@@ -1149,58 +1217,34 @@ class MapReduce:
                     buckets[pk][r["origin"]] = sorted(r[f"bs_{i}"])
         return targets, counts, buckets
 
-    def _apply_view_batch(
-        self,
-        vdef: ViewDefinition,
-        log: DataFrame,
-        origin_starts: "dict[str, int]",
-        prepared: "tuple[DataFrame, dict[str, int], dict[str, list[int]]]",
-        mapped: "DataFrame | None" = None,
-        batch_token: "int | None" = None,
-    ) -> "dict[str, int]":
-        """Single-view shim over _apply_store_batch (kept for direct
-        callers/tests; the watch path groups map-twin views and calls
-        the store form so a shared store merges exactly once)."""
-        return self._apply_store_batch(
-            [vdef], log, origin_starts, prepared, mapped, batch_token
-        )
-
     def _apply_store_batch(
         self,
         vdefs: "list[ViewDefinition]",
-        log: DataFrame,
-        origin_starts: "dict[str, int]",
         prepared: "tuple[DataFrame, dict[str, int], dict[str, list[int]]]",
-        mapped: "DataFrame | None" = None,
-        batch_token: "int | None" = None,
-    ) -> "dict[str, int]":
-        """Watch-path merge for ONE ENTRIES STORE (every view in
-        ``vdefs`` shares it — map-twins, r14 verdict #5) over a
-        multi-origin micro-batch, paying each per-batch cost once
-        instead of once per (origin, view): a single latest-wins
-        window across all origins (partitioned by (origin, pathname),
-        so one shuffle), the map UDF run ONCE and persisted, ONE
-        entries merge for the whole group (the rows are
+        new_entries: DataFrame,
+        batch_token: "str | None" = None,
+    ) -> None:
+        """Merge for ONE ENTRIES STORE (every view in ``vdefs`` shares
+        it — map-twins, r14 verdict #5) over a multi-origin batch,
+        paying each per-batch cost once instead of once per (origin,
+        view): ONE entries merge for the whole group (the rows are
         byte-identical across members — merging per twin doubled the
         entry-write IO, and under a shared store concurrent per-view
         merges would race the snapshot version), one shared premerge
         retraction probe, and a re-aggregation per member view over
-        the union of every origin's affected keys. Converges to the
-        identical state as per-origin _apply_updates cycles — the
-        entries shards and the reduced merges see the same rows, only
-        batched. Returns {origin: n file updates applied}.
+        the union of every origin's affected keys.
 
         ``prepared``: caller-owned (cached updates, per-origin counts,
-        touched bucket ids) from engine._probe_batch + the shared
-        compaction — watch builds it once per distinct glob per batch
+        touched bucket ids) from _probe_batch + the shared compaction
+        — _maintain_batch builds it once per distinct glob per batch
         and unpersists it (there is deliberately NO build-it-yourself
         fallback: a second probe implementation here would drift from
         the live one).
 
-        ``mapped``: caller-owned, already-materialized map output over
-        ``prepared``'s updates — views sharing (path, map, key schema)
-        pay the Python map stage ONCE per batch (watch groups them);
-        the caller unpersists it.
+        ``new_entries``: caller-owned, already-materialized map output
+        over ``prepared``'s updates — views sharing (path, map, key
+        schema) pay the Python map stage ONCE per batch; the caller
+        unpersists it.
 
         ``batch_token``: the stream's lineage-scoped batch token
         ('<query_id>:<batch_id>', see _token_applied). When set and
@@ -1209,37 +1253,18 @@ class MapReduce:
         re-aggregation takes the exact DELTA path
         (_reaggregate_exact_delta) — committed BEFORE any entries
         pointer flips, with the token in the reduced manifest for
-        exactly-once under replay. Without a token (direct calls)
-        the general refold path runs after the merges, as before.
+        exactly-once under replay. Without a token (index() and the
+        single-file ops) the general refold runs after the merges.
         """
-        if not origin_starts:
-            return {}
         updates, counts, buckets = prepared
         if not counts:
-            return {}
-        # merge LEAD: the store is shared by every member (watch groups
-        # by _store_key), so ONE member drives the entries merge; the
-        # map stage enforces the strictest declared-integer value_type
-        # in the group (mirrors the shared-map cache contract)
+            return
+        # the store is shared by every member, so ONE member drives the
+        # entries merge
         vdef = vdefs[0]
-        for v in vdefs:
-            if v.value_type in ("long", "int", "bigint"):
-                vdef = v
-                break
-        owns_map = mapped is None
-        new_entries = (
-            run_map(
-                updates.filter(F.col("type") == "put"),
-                vdef.map,
-                vdef.key_types(),
-                value_type=vdef.value_type,
-            ).cache()
-            if owns_map
-            else mapped
-        )
         # Per-view re-aggregation routing. sum/avg require a SYNCED
         # sidecar: a reduced table materialized before the view
-        # declared value_type (the pre-r13 upgrade), or a crash
+        # declared value_type, or a crash
         # between a refold's two table commits, leaves reduced/sidecar
         # state the delta arithmetic would silently diverge on (r13
         # ADVICE) — those batches take the general refold, which
@@ -1256,98 +1281,86 @@ class MapReduce:
 
         kinds = {v.name: _delta_kind(v) for v in vdefs}
         delta_applied: "dict[str, bool]" = {}
-        try:
-            # materialize the mapped batch ONCE up front so the
-            # concurrent shard writes below all read the cache
-            # instead of racing to compute the Python stage
-            if owns_map:
-                new_entries.count()
+        # can this batch retract anything? absent shards cannot —
+        # a driver-side manifest check, no Spark job (the backfill
+        # / first-index fast path: skips the retraction side of
+        # the delta AND the premerge probe entirely)
+        no_old = all(
+            not self._entries_table(vdef.name, o).exists()
+            for o in counts
+        )
+        if any(kinds.values()):
+            # REDUCED FIRST: the delta derives from the PRE-merge
+            # shard state, so it must commit before any entries
+            # pointer FLIPS — but the entries WRITE jobs (data
+            # files into not-yet-published snapshot dirs) carry no
+            # ordering constraint, so they run CONCURRENTLY with
+            # the reduced commits and only their pointer flips wait
+            # (r13 verdict #1: the serialized delta-then-merge
+            # chain was the per-batch latency floor). Both sides
+            # read the retraction state from plans pinned to the
+            # PRE-merge snapshots, so the overlap cannot leak.
+            # The premerge retraction probe is computed ONCE for
+            # the whole group (shared store = shared retractions).
+            from concurrent.futures import ThreadPoolExecutor
 
-            # can this batch retract anything? absent shards cannot —
-            # a driver-side manifest check, no Spark job (the backfill
-            # / first-index fast path: skips the retraction side of
-            # the delta AND the premerge probe entirely)
-            no_old = all(
-                not self._entries_table(vdef.name, o).exists()
-                for o in counts
-            )
-            if any(kinds.values()):
-                # REDUCED FIRST: the delta derives from the PRE-merge
-                # shard state, so it must commit before any entries
-                # pointer FLIPS — but the entries WRITE jobs (data
-                # files into not-yet-published snapshot dirs) carry no
-                # ordering constraint, so they run CONCURRENTLY with
-                # the reduced commits and only their pointer flips wait
-                # (r13 verdict #1: the serialized delta-then-merge
-                # chain was the per-batch latency floor). Both sides
-                # read the retraction state from plans pinned to the
-                # PRE-merge snapshots, so the overlap cannot leak.
-                # The premerge retraction probe is computed ONCE for
-                # the whole group (shared store = shared retractions).
-                from concurrent.futures import ThreadPoolExecutor
-
-                retr = (
-                    None
-                    if no_old
-                    else self._retracted_rows_premerge(
-                        vdef, updates, counts, buckets
-                    )
+            retr = (
+                None
+                if no_old
+                else self._retracted_rows_premerge(
+                    vdef, updates, counts, buckets
                 )
-                with ThreadPoolExecutor(max_workers=1) as wpool:
-                    fut = wpool.submit(
-                        self._write_entry_merges,
-                        vdef,
-                        updates,
-                        new_entries,
-                        counts,
-                        buckets,
-                    )
-                    for v in vdefs:
-                        if kinds[v.name] == "exact":
-                            self._reaggregate_exact_delta(
+            )
+            with ThreadPoolExecutor(max_workers=1) as wpool:
+                fut = wpool.submit(
+                    self._write_entry_merges,
+                    vdef,
+                    updates,
+                    new_entries,
+                    counts,
+                    buckets,
+                )
+                for v in vdefs:
+                    if kinds[v.name] == "exact":
+                        self._reaggregate_exact_delta(
+                            v, new_entries, retr, batch_token
+                        )
+                        delta_applied[v.name] = True
+                    elif kinds[v.name] == "minmax":
+                        # False when some key's extreme fell past
+                        # the histogram bound — nothing committed,
+                        # the post-merge refold handles that view
+                        delta_applied[v.name] = (
+                            self._reaggregate_minmax_delta(
                                 v, new_entries, retr, batch_token
                             )
-                            delta_applied[v.name] = True
-                        elif kinds[v.name] == "minmax":
-                            # False when some key's extreme fell past
-                            # the histogram bound — nothing committed,
-                            # the post-merge refold handles that view
-                            delta_applied[v.name] = (
-                                self._reaggregate_minmax_delta(
-                                    v, new_entries, retr, batch_token
-                                )
-                            )
-                    pairs = fut.result()
-            else:
-                pairs = self._write_entry_merges(
-                    vdef, updates, new_entries, counts, buckets
-                )
-            # publish the entries snapshots (pointer flips — after the
-            # reduced commits on the delta paths)
-            for _retr, commit in pairs:
-                commit()
-            refold = [
-                v
-                for v in vdefs
-                if v.reduce is not None and not delta_applied.get(v.name)
-            ]
-            if refold:
-                retr = pairs[0][0]
-                for p, _c in pairs[1:]:
-                    retr = retr.union(p)
-                keys = (
-                    retr.select("key_json")
-                    .union(new_entries.select("key_json"))
-                    .distinct()
-                    .cache()
-                )
-                for v in refold:
-                    self._reaggregate(v, keys)
-                keys.unpersist()
-            return counts
-        finally:
-            if owns_map:
-                new_entries.unpersist()
+                        )
+                pairs = fut.result()
+        else:
+            pairs = self._write_entry_merges(
+                vdef, updates, new_entries, counts, buckets
+            )
+        # publish the entries snapshots (pointer flips — after the
+        # reduced commits on the delta paths)
+        for _retr, commit in pairs:
+            commit()
+        refold = [
+            v
+            for v in vdefs
+            if v.reduce is not None and not delta_applied.get(v.name)
+        ]
+        if refold:
+            retr = pairs[0][0]
+            for p, _c in pairs[1:]:
+                retr = retr.union(p)
+            keys = (
+                retr.select("key_json")
+                .union(new_entries.select("key_json"))
+                .distinct()
+                .cache()
+            )
+            self._refold(refold, keys)
+            keys.unpersist()
 
     def _write_entry_merges(
         self,
@@ -1405,18 +1418,14 @@ class MapReduce:
         multiplicity preserved, read from the CURRENT (pre-merge)
         shard snapshots — the count-delta path's subtraction side.
         Touched buckets only on engine-layout shards; a shard with a
-        divergent pinned bucket count (post-rebucket) or a flat
-        legacy snapshot reads whole — rare, and correct either way
-        (the semi join does the narrowing)."""
+        divergent pinned bucket count (post-rebucket) reads whole —
+        rare, and correct either way (the semi join does the
+        narrowing)."""
         affected_urls = updates.select("url")
         parts = []
         for o in sorted(counts):
             t = self._entries_table(vdef.name, o)
-            if (
-                t.exists()
-                and t.current_is_bucketed()
-                and t.n_buckets == self.entries_buckets
-            ):
+            if t.n_buckets == self.entries_buckets:
                 parts.append(t.read_buckets(buckets[o]))
             else:
                 parts.append(t.read())
@@ -1439,19 +1448,15 @@ class MapReduce:
         mints a NEW query id, so the restarted stream's batch 0 can
         never collide with a stale stored token from the old lineage
         and silently drop a genuinely different batch, the r12
-        ADVICE scenario). Legacy manifests hold the bare int batch
-        id; treat a matching trailing id as applied (the one-restart
-        upgrade window) rather than double-applying."""
+        ADVICE scenario). A stored bare-int token predates lineage
+        scoping: a stream cannot tell whether it is a replay, so it
+        is refused."""
         stored = table.manifest_meta().get("batch_token")
-        if stored is None:
-            return False
-        if stored == batch_token:
-            return True
-        return (
-            isinstance(stored, int)
-            and isinstance(batch_token, str)
-            and batch_token.rsplit(":", 1)[-1] == str(stored)
-        )
+        if isinstance(stored, int) and isinstance(batch_token, str):
+            raise EngineError(
+                f"{table.root} holds a bare-int batch token; " + REBUILD_HINT
+            )
+        return stored is not None and stored == batch_token
 
     def _reaggregate_exact_delta(
         self,
@@ -1779,7 +1784,7 @@ class MapReduce:
     def _driver_bucket_ids(table, keys: "list[str]") -> "list[int]":
         # mirrors _touched_bucket_ids_multi's kinds without the probe
         # job: bucket_of == the in-plan bucket expr (pinned by test)
-        if not table.exists() or not table.current_is_bucketed():
+        if not table.exists():
             return list(range(table.n_buckets))
         return sorted({table.bucket_of(k) for k in keys})
 
@@ -2238,47 +2243,27 @@ class MapReduce:
             delta.unpersist()
 
     def _touched_bucket_ids_multi(
-        self,
-        tables: "list[BucketedEntriesTable]",
-        keys_df: DataFrame,
-        probe_absent: bool = False,
+        self, tables: "list[BucketedEntriesTable]", keys_df: DataFrame
     ) -> "list[tuple[str, list[int]]]":
         """Touched ('kind', bucket ids) for several key_json-bucketed
         tables, sharing ONE probe job across all of them (r13 spent
         one collect per table). Kinds: 'absent' — no snapshot on disk,
         every id without a probe (there is nothing to read or hardlink
-        behind them, so exact ids buy nothing; pass probe_absent=True
-        for callers that use probed-empty as an empty-input early
-        out); 'flat' — legacy un-bucketed layout, every id (one full
-        re-bucketing rewrite, incremental afterwards); 'probed' — the
-        keys' ids from one shared distinct-collect. When every table
-        skips the probe (the first-batch fast path) NO Spark job runs."""
-        plan: "list[int]" = []
-        out: "list[tuple[str, list[int]] | None]" = [None] * len(tables)
-        for i, t in enumerate(tables):
-            if not t.exists():
-                if probe_absent:
-                    plan.append(i)
-                else:
-                    out[i] = ("absent", list(range(t.n_buckets)))
-            elif not t.current_is_bucketed():
-                out[i] = ("flat", list(range(t.n_buckets)))
-            else:
-                plan.append(i)
-        if plan:
-            rows = (
-                keys_df.select(
-                    *[
-                        tables[i].bucket_expr("key_json").alias(f"b{i}")
-                        for i in plan
-                    ]
-                )
-                .distinct()
-                .collect()
-            )
-            for i in plan:
-                out[i] = ("probed", sorted({r[f"b{i}"] for r in rows}))
-        return out
+        behind them, so exact ids buy nothing); 'probed' — the keys'
+        ids from one shared distinct-collect. When every table is
+        absent (the first-batch fast path) NO Spark job runs."""
+        present = [t for t in tables if t.exists()]
+        ids = (
+            self._key_bucket_ids(keys_df, {t.n_buckets for t in present})
+            if present
+            else {}
+        )
+        return [
+            ("probed", ids[t.n_buckets])
+            if t in present
+            else ("absent", list(range(t.n_buckets)))
+            for t in tables
+        ]
 
     def _has_data_files(self, table: VersionedTable) -> bool:
         """Does the table's current snapshot hold any data files?
@@ -2308,13 +2293,12 @@ class MapReduce:
         table materialized BEFORE the view declared value_type — the
         sidecar does not exist, and the first delta batch would read
         an empty one and silently overwrite touched keys with the
-        bare delta; a crash between a pre-r14 refold's two separate
-        commits — a stale sidecar that would skew every later delta
-        forever; or a pre-r14 refold manifest with no markers at all —
-        unverifiable. Every mismatch routes that batch to the general
-        refold, which realigns BOTH tables from entries (bootstrapping
-        the FULL sidecar, not just the touched keys) and re-stamps the
-        shared marker — one O(view) recovery/upgrade pass, after which
+        bare delta; or a crash between two table commits — a stale
+        sidecar that would skew every later delta forever. Every
+        mismatch routes that batch to the general refold, which
+        realigns BOTH tables from entries (bootstrapping the FULL
+        sidecar, not just the touched keys) and re-stamps the shared
+        marker — one O(view) recovery pass, after which
         the delta path resumes. Driver-side manifest reads only; the
         same contract covers min/max views' value-histogram sidecar
         (_reduced_hist_table); count views have no sidecar and are
@@ -2452,7 +2436,7 @@ class MapReduce:
                         for bd in _os.listdir(src_root):
                             if bd.startswith("_b="):
                                 _os.rename(f"{src_root}/{bd}", f"{dest}/{bd}")
-                    if cur is not None and t.current_is_bucketed():
+                    if cur is not None:
                         touched = set(ids)
                         for b in range(n):
                             if b in touched:
@@ -2475,24 +2459,51 @@ class MapReduce:
         _commit()
         return None
 
-    def _touched_bucket_ids(
-        self, table: BucketedEntriesTable, keys_df: DataFrame
-    ) -> "list[int]":
-        """Touched bucket ids of a key_json-bucketed table for the
-        given keys — or ALL ids when the current snapshot is flat
-        (legacy/reset layout: one full re-bucketing rewrite, every
-        later merge incremental)."""
-        if table.exists() and not table.current_is_bucketed():
-            return list(range(table.n_buckets))
-        return sorted(
-            r["b"]
-            for r in keys_df.select(table.bucket_expr("key_json").alias("b"))
+    @staticmethod
+    def _key_bucket_ids(keys_df: DataFrame, ns: "set[int]") -> "dict[int, list[int]]":
+        """Touched key_json bucket ids of ``keys_df`` under each bucket
+        count in ``ns``, from ONE distinct-collect: every refold of a
+        batch shares it instead of probing per table."""
+        ns = sorted(ns)
+        bucket = F.crc32(F.col("key_json").cast("string"))
+        rows = (
+            keys_df.select(
+                *[F.pmod(bucket, F.lit(n)).cast("int").alias(f"b{n}") for n in ns]
+            )
             .distinct()
             .collect()
         )
+        return {n: sorted({r[f"b{n}"] for r in rows}) for n in ns}
 
-    def _reaggregate(self, vdef: ViewDefinition, affected_keys: DataFrame) -> None:
+    def _reaggregate_tables(self, vdef: ViewDefinition) -> "list[BucketedEntriesTable]":
+        """The key_json-bucketed tables a refold of ``vdef`` commits:
+        the reduced table, plus its sidecar for sum/avg and min/max."""
+        tables = [self._reduced_table(vdef.name)]
+        if vdef.exact_delta_fold() in ("sum", "avg"):
+            tables.append(self._reduced_cnt_table(vdef.name))
+        elif vdef.reduce in ("min", "max"):
+            tables.append(self._reduced_hist_table(vdef.name))
+        return tables
+
+    def _refold(self, vdefs: "list[ViewDefinition]", affected_keys: DataFrame) -> None:
+        """_reaggregate every view in ``vdefs`` over the same affected
+        keys, probing their touched bucket ids once."""
+        if not vdefs:
+            return
+        tables = [t for v in vdefs for t in self._reaggregate_tables(v)]
+        ids = self._key_bucket_ids(affected_keys, {t.n_buckets for t in tables})
+        for v in vdefs:
+            self._reaggregate(v, affected_keys, ids)
+
+    def _reaggregate(
+        self,
+        vdef: ViewDefinition,
+        affected_keys: DataFrame,
+        key_ids: "dict[int, list[int]]",
+    ) -> None:
         """Re-fold only affected keys, merge into the reduced table.
+        ``key_ids``: the keys' touched bucket ids per bucket count
+        (_key_bucket_ids over at least this view's tables).
 
         reduced' = (reduced  ⟕anti affected) ∪ fold(entries ⟕semi affected)
         — the Parquet copy-on-write equivalent of MERGE, committed
@@ -2518,15 +2529,15 @@ class MapReduce:
         whole sidecar from entries, covering both that window and a
         reduced table materialized before the view declared
         value_type)."""
-        red_table = self._reduced_table(vdef.name)
+        tables = self._reaggregate_tables(vdef)
+        red_table = tables[0]
+        ids = key_ids[red_table.n_buckets]
+        if not ids:
+            return  # empty affected set: nothing to refold or delete
         if vdef.exact_delta_fold() in ("sum", "avg"):
-            cnt_table = self._reduced_cnt_table(vdef.name)
+            cnt_table = tables[1]
             synced = self._sidecar_synced(vdef)
-            (rk, ids), (_ck, cnt_ids) = self._touched_bucket_ids_multi(
-                [red_table, cnt_table], affected_keys, probe_absent=True
-            )
-            if rk == "probed" and not ids:
-                return  # empty affected set: nothing to refold or delete
+            cnt_ids = key_ids[cnt_table.n_buckets]
             import uuid as _uuid
 
             sync = {"sync": _uuid.uuid4().hex}
@@ -2598,16 +2609,12 @@ class MapReduce:
             # same way the sum/avg refold maintains (cnt, ssum): both
             # tables rebuild from ONE touched-entries pass and commit
             # fused with a shared sync marker. An unsynced sidecar
-            # (pre-r14 warehouse, refold crash window, or a delta
-            # batch that hit the bound on SOME key) bootstraps the
+            # (refold crash window, or a delta batch that hit the
+            # bound on SOME key) bootstraps the
             # FULL histogram from entries.
-            hist_table = self._reduced_hist_table(vdef.name)
+            hist_table = tables[1]
             synced = self._sidecar_synced(vdef)
-            (rk, ids), (_hk, hist_ids) = self._touched_bucket_ids_multi(
-                [red_table, hist_table], affected_keys, probe_absent=True
-            )
-            if rk == "probed" and not ids:
-                return  # empty affected set: nothing to refold or delete
+            hist_ids = key_ids[hist_table.n_buckets]
             import uuid as _uuid
 
             sync = {"sync": _uuid.uuid4().hex}
@@ -2656,9 +2663,6 @@ class MapReduce:
                 sort_cols=["key_json"],
             )
             return
-        ids = self._touched_bucket_ids(red_table, affected_keys)
-        if not ids:
-            return  # empty affected set: nothing to refold or delete
         old = red_table.read_buckets(ids)
         entries = self.entries_df(vdef.name)
         touched = entries.join(F.broadcast(affected_keys), "key_json", "left_semi")
@@ -2678,9 +2682,7 @@ class MapReduce:
             [{"origin": origin, "pathname": pathname, "version": v, "type": "put", "content": content}],
         )
         self._indexed_origins.add(origin)
-        for vdefs in self._views_by_store():
-            upd = glob_filter(row, vdefs[0].path)
-            self._apply_updates_group(vdefs, origin, upd)
+        self._maintain_batch(row, list(self.views.values()), bookkeeping=False)
 
     def unindex_file(self, origin: str, pathname: str) -> None:
         """Retract one file everywhere (the reference *intends* this;
@@ -2690,9 +2692,7 @@ class MapReduce:
             self.spark,
             [{"origin": origin, "pathname": pathname, "version": self.current_version(origin) + 1, "type": "del", "content": None}],
         )
-        for vdefs in self._views_by_store():
-            upd = glob_filter(row, vdefs[0].path)
-            self._apply_updates_group(vdefs, origin, upd)
+        self._maintain_batch(row, list(self.views.values()), bookkeeping=False)
 
     def _views_by_store(self) -> "list[list[ViewDefinition]]":
         """Defined views grouped by entries store (map-twins together,
@@ -2715,15 +2715,15 @@ class MapReduce:
         for vdefs in self._views_by_store():
             lead = vdefs[0]
             ent_table = self._entries_table(lead.name, origin)
+            if not ent_table.exists():
+                continue  # nothing of this origin in the store
             gone_keys = ent_table.read().select("key_json").distinct()
             gone_keys = gone_keys.cache()
             ent_table.reset()
             # drop the origin's pointer row BEFORE re-aggregating —
             # the refold's entries_df must no longer see this shard
             self._entries_ptr_table(lead.name).delete_rows([origin])
-            for vdef in vdefs:
-                if vdef.reduce is not None:
-                    self._reaggregate(vdef, gone_keys)
+            self._refold([v for v in vdefs if v.reduce is not None], gone_keys)
             gone_keys.unpersist()
         self.offsets.overwrite_rows(
             [r for r in self.offsets.read_rows() if r[1] != origin]
@@ -2841,9 +2841,7 @@ class MapReduce:
         ``watch_views(changelog_expire_every=N)`` for the in-stream
         cadence — safe there because the watch stream reads with
         ignoreMissingFiles and the deleted files' surviving rows are
-        re-delivered via the compacted copies. Requires the
-        origin-partitioned log layout (a legacy flat warehouse cannot
-        file-swap per origin).
+        re-delivered via the compacted copies.
 
         Returns {origin: {files_removed, files_added, rows_expired}}.
         """
@@ -2857,12 +2855,6 @@ class MapReduce:
         return self._expire_changelog_unsafe()
 
     def _expire_changelog_unsafe(self) -> "dict[str, dict[str, int]]":
-        if not self.changelog.partition_by:
-            raise RuntimeError(
-                "changelog expiry needs the origin-partitioned log "
-                "layout; this warehouse predates partitioning (flat "
-                "files) — rebuild it to enable retention"
-            )
         out: "dict[str, dict[str, int]]" = {}
         for origin, floor in sorted(self.changelog_floors().items()):
             if floor <= 0:
@@ -3055,9 +3047,7 @@ class MapReduce:
         if vdef.reduce is not None:
             red = self._reduced_table(view)
             # the reduced table is bucketed ON key_json, so a point
-            # lookup reads exactly one bucket (read_buckets falls back
-            # to the whole snapshot on a flat legacy layout); within
-            # the bucket, the key_json sort makes parquet row-group
+            # lookup reads exactly one bucket; within the bucket, the key_json sort makes parquet row-group
             # min/max stats prune the scan further
             row = (
                 red.read_buckets([red.bucket_of(kj)])

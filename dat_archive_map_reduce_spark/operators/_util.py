@@ -59,11 +59,21 @@ def eager_release(result: DataFrame, *intermediates: DataFrame) -> DataFrame:
     except BaseException:
         # the materialize failed: drop the result's (unmaterialized)
         # storage level too, so nothing from this call outlives it
-        out.unpersist()
+        _quiet_unpersist(out)
         raise
     finally:
         # release the intermediates on success AND failure — without
         # this a failed count() leaked them for the session lifetime
         for df in intermediates:
-            df.unpersist()
+            _quiet_unpersist(df)
     return out
+
+
+def _quiet_unpersist(df: DataFrame) -> None:
+    """Cleanup-path unpersist: an error here (say, the SparkContext
+    that failed the count() is gone too) must not mask the error being
+    propagated."""
+    try:
+        df.unpersist()
+    except Exception:
+        pass

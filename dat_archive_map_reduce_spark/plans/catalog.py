@@ -27,6 +27,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dat_archive_map_reduce_spark.errors import EngineError
+
+REBUILD_HINT = (
+    "warehouses written by earlier engine versions are refused, not "
+    "migrated: rebuild this one by re-indexing its sources from the "
+    "changelog into a fresh warehouse"
+)
+
 
 def empty_df(spark: SparkSession, schema: T.StructType) -> DataFrame:
     """Zero-partition empty DataFrame. ``createDataFrame([], schema)``
@@ -270,10 +278,7 @@ class VersionedTable:
         cur = self._current()
         if cur is None:
             raise ValueError("cannot compact a table with no snapshots")
-        size = 0
-        for dirpath, _, files in os.walk(self._snapshot_dir(cur)):
-            size += sum(os.path.getsize(os.path.join(dirpath, f)) for f in files)
-        n_files = max(1, math.ceil(size / target_file_bytes))
+        n_files = max(1, math.ceil(self._row_data_bytes(cur) / target_file_bytes))
         df = self.read()
         if zorder and sort_cols and len(sort_cols) >= 2:
             from dat_archive_map_reduce_spark.operators.zorder import zorder_layout
@@ -289,6 +294,32 @@ class VersionedTable:
         out.write.mode("overwrite").parquet(self._snapshot_dir(v))
         self._set_current(v)
         return v
+
+    def _row_data_bytes(self, v: int) -> int:
+        """Row-data size of snapshot ``v`` from its parquet footers,
+        read driver-side: fixed-width columns count values x width,
+        byte-array columns their uncompressed chunk size. Unlike
+        on-disk bytes, this does not grow with the number of files the
+        snapshot is split into (per-file headers, footers and
+        dictionaries dominate small files), so compacting the same
+        rows lands on the same file count however fragmented the
+        input was."""
+        import pyarrow.parquet as pq
+
+        width = {"BOOLEAN": 1, "INT32": 4, "FLOAT": 4, "INT64": 8, "DOUBLE": 8, "INT96": 12}
+        total = 0
+        for dirpath, _, files in os.walk(self._snapshot_dir(v)):
+            for f in files:
+                if not f.endswith(".parquet") or f.startswith(("_", ".")):
+                    continue
+                md = pq.ParquetFile(os.path.join(dirpath, f)).metadata
+                for i in range(md.num_row_groups):
+                    rg = md.row_group(i)
+                    for j in range(rg.num_columns):
+                        c = rg.column(j)
+                        w = width.get(c.physical_type)
+                        total += c.num_values * w if w else c.total_uncompressed_size
+        return total
 
     def reset(self) -> None:
         """Logical wipe: point at a fresh empty snapshot (reference
@@ -399,12 +430,10 @@ class BucketedEntriesTable(VersionedTable):
     membership can be derived driver-side from the url strings alone,
     without reading any data.
 
-    Layout compatibility: read() uses recursiveFileLookup with a
-    pinned schema, so it reads bucketed and flat (plain overwrite/
-    reset) snapshots alike; ``current_is_bucketed`` tells the merge
-    path whether the previous snapshot supports per-bucket reuse (a
-    flat snapshot forces one full re-bucketing rewrite, after which
-    merges are incremental again).
+    Every snapshot this class writes is bucketed, ``reset()``
+    included. A FLAT snapshot (part files directly in the snapshot
+    dir, from a plain VersionedTable overwrite) is a foreign layout:
+    the bucket-scoped reads and merges refuse it with EngineError.
 
     Bucket-count evolution: membership math depends on N, so N is
     pinned PER SNAPSHOT — every bucketed snapshot carries a
@@ -498,6 +527,23 @@ class BucketedEntriesTable(VersionedTable):
     def _bucket_dir(self, v: int, b: int) -> str:
         return f"{self._snapshot_dir(v)}/_b={b}"
 
+    def reset(self) -> None:
+        """Logical wipe without a Spark job: point at a fresh EMPTY
+        bucketed snapshot (an empty dir plus its layout meta), so the
+        next merge hardlinks nothing and rewrites only the buckets it
+        touches. Like every unstamped commit it erases any batch token
+        the manifest held."""
+        import shutil
+
+        n = self.n_buckets
+        v = (self._current() or 0) + 1
+        dest = self._snapshot_dir(v)
+        if os.path.isdir(dest):  # crash-orphaned dir: overwrite-clears-dest
+            shutil.rmtree(dest, ignore_errors=True)
+        os.makedirs(dest)
+        self._write_snapshot_meta(dest, n)
+        self._set_current(v)
+
     def current_is_bucketed(self) -> bool:
         v = self._current()
         if v is None:
@@ -515,6 +561,13 @@ class BucketedEntriesTable(VersionedTable):
                 f"deleted or corrupted; refusing to merge against it"
             )
         return all(n.startswith(("_b=", "_", ".")) for n in os.listdir(d))
+
+    def _require_bucketed(self) -> None:
+        if not self.current_is_bucketed():
+            raise EngineError(
+                f"{self.root} holds a flat (unbucketed) snapshot; "
+                + REBUILD_HINT
+            )
 
     # -- reads ---------------------------------------------------------
     def read(self, version: int | None = None) -> DataFrame:
@@ -539,13 +592,11 @@ class BucketedEntriesTable(VersionedTable):
         """Rows of the given buckets of the CURRENT snapshot. The
         path list resolves NOW, so the returned plan stays pinned to
         this snapshot across a subsequent pointer flip (the merge
-        path's retracted-keys contract). Falls back to the whole
-        snapshot when it predates bucketing (flat layout)."""
+        path's retracted-keys contract)."""
         v = self._current()
         if v is None:
             return empty_df(self.spark, self.schema)
-        if not self.current_is_bucketed():
-            return self.read()
+        self._require_bucketed()
         dirs = [
             self._bucket_dir(v, b)
             for b in bucket_ids
@@ -566,8 +617,9 @@ class BucketedEntriesTable(VersionedTable):
         origin."""
         v = self._current()
         out: "dict[int, int]" = {}
-        if v is None or not self.current_is_bucketed():
+        if v is None:
             return out
+        self._require_bucketed()
         for b in range(self.n_buckets):
             d = self._bucket_dir(v, b)
             if not os.path.isdir(d):
@@ -681,10 +733,7 @@ class BucketedEntriesTable(VersionedTable):
         ONLY rows whose bucket id is in ``touched_ids`` — i.e. the
         touched buckets' full post-merge contents) is written
         bucket-partitioned in ONE Spark job; every other bucket's
-        files are hardlinked from the previous snapshot. If the
-        previous snapshot is flat (pre-bucketing or a reset), the
-        caller must pass the FULL table as touched_df with all ids —
-        one re-bucketing rewrite, incremental afterwards.
+        files are hardlinked from the previous snapshot.
 
         ``meta``: extra manifest keys committed atomically with the
         pointer flip (same contract as overwrite(meta=...)) — the
@@ -702,11 +751,13 @@ class BucketedEntriesTable(VersionedTable):
         tables' write jobs, or to ORDER pointer flips across tables —
         the exact-delta watch path runs the entries-shard writes
         concurrently with the reduced commit but flips the entries
-        pointers only after it (engine._apply_view_batch). An
+        pointers only after it (engine._apply_store_batch). An
         abandoned closure (commit-ordering predecessor failed) leaves
         only an orphaned vNNNNNNNN directory that the next merge's
         mode('overwrite') at the same version clears."""
         cur = self._current()
+        if cur is not None:
+            self._require_bucketed()
         n = self.n_buckets  # the CURRENT snapshot's layout count
         v = (cur or 0) + 1
         dest = self._snapshot_dir(v)
@@ -727,13 +778,9 @@ class BucketedEntriesTable(VersionedTable):
         if sort_cols:
             w = w.sortWithinPartitions("_b", *sort_cols)
         w.write.mode("overwrite").partitionBy("_b").parquet(dest)
-        # pin the layout decision at WRITE time: nothing else mutates
-        # this table between the write and its deferred commit (the
-        # engine serializes writers per table within a batch)
-        was_bucketed = cur is not None and self.current_is_bucketed()
 
         def _commit() -> None:
-            if was_bucketed:
+            if cur is not None:
                 touched = set(touched_ids)
                 for b in range(n):
                     if b in touched:
@@ -796,12 +843,9 @@ class BucketedMetaTable(VersionedTable):
     O(origins-in-batch), flat in total source count. All IO stays
     driver-local pyarrow (read_rows/overwrite_rows contract — never a
     Spark job); the snapshot + pointer-flip protocol is unchanged, so
-    crash-safety, time travel, and vacuum are identical.
-
-    Layout compatibility: a flat legacy snapshot (part-*.parquet from
-    the pre-r14 writer or a plain Spark overwrite) reads whole
-    whatever the filter, and the next upsert/overwrite re-buckets it
-    in one full rewrite — incremental afterwards."""
+    crash-safety, time travel, and vacuum are identical. A snapshot
+    holding any other data file (a flat part-*.parquet layout) is
+    foreign and refused with EngineError."""
 
     def __init__(
         self,
@@ -838,16 +882,17 @@ class BucketedMetaTable(VersionedTable):
 
     def _bucket_files(self, v: int, values=None) -> "list[str]":
         """Data files of snapshot ``v``, pruned to ``values``' buckets
-        when given and the snapshot is bucketed; flat legacy snapshots
-        read whole regardless of the filter."""
+        when given. Raises EngineError on a flat snapshot."""
         import glob as _glob
 
         d = self._snapshot_dir(v)
-        bucketed = sorted(_glob.glob(f"{d}/bucket-*.parquet"))
-        if not bucketed:
-            return sorted(_glob.glob(f"{d}/*.parquet"))  # flat legacy
+        files = sorted(_glob.glob(f"{d}/*.parquet"))
+        if any(not os.path.basename(f).startswith("bucket-") for f in files):
+            raise EngineError(
+                f"{self.root} holds a flat (unbucketed) snapshot; " + REBUILD_HINT
+            )
         if values is None:
-            return bucketed
+            return files
         want = sorted({self.bucket_of(x) for x in values})
         return [
             self._bucket_path(d, b)
@@ -925,29 +970,20 @@ class BucketedMetaTable(VersionedTable):
         is rewritten with its surviving rows + the updates, every
         untouched bucket file hardlinks into the new snapshot (same
         inode, two directory entries — vacuum of either snapshot
-        leaves the other readable). A flat legacy current snapshot is
-        re-bucketed whole by this upsert; incremental afterwards."""
-        import glob as _glob
+        leaves the other readable)."""
         import pyarrow.parquet as pq
 
         if not updates:
             return
+        cur = self._current()
+        if cur is None:
+            self.overwrite_rows(updates)
+            return
+        self._bucket_files(cur)  # refuses a flat snapshot
         by_bucket: "dict[int, list]" = {}
         for r in updates:
             by_bucket.setdefault(self.bucket_of(r[self._col_idx]), []).append(r)
         keys = {tuple(r[i] for i in key_cols) for r in updates}
-        cur = self._current()
-        flat = cur is not None and not _glob.glob(
-            f"{self._snapshot_dir(cur)}/bucket-*.parquet"
-        )
-        if cur is None or flat:
-            old = self.read_rows() if cur is not None else []
-            merged = [
-                r for r in old if tuple(r[i] for i in key_cols) not in keys
-            ]
-            merged.extend(updates)
-            self.overwrite_rows(merged)
-            return
         names = [f.name for f in self.schema.fields]
         old_dir = self._snapshot_dir(cur)
         v, d = self._fresh_snapshot_dir()
@@ -976,9 +1012,8 @@ class BucketedMetaTable(VersionedTable):
     def delete_rows(self, values) -> None:
         """Drop every row whose bucket column value is in ``values``,
         touching ONLY those values' buckets (untouched bucket files
-        hardlink, exactly like upsert_rows). A flat legacy snapshot
-        re-buckets whole. No-op on an absent table."""
-        import glob as _glob
+        hardlink, exactly like upsert_rows). No-op on an absent
+        table."""
         import pyarrow.parquet as pq
 
         values = set(values)
@@ -987,12 +1022,7 @@ class BucketedMetaTable(VersionedTable):
         cur = self._current()
         if cur is None:
             return
-        flat = not _glob.glob(f"{self._snapshot_dir(cur)}/bucket-*.parquet")
-        if flat:
-            self.overwrite_rows(
-                [r for r in self.read_rows() if r[self._col_idx] not in values]
-            )
-            return
+        self._bucket_files(cur)  # refuses a flat snapshot
         want = {self.bucket_of(x) for x in values}
         names = [f.name for f in self.schema.fields]
         old_dir = self._snapshot_dir(cur)
@@ -1042,14 +1072,10 @@ class AppendOnlyLog:
     both batch and file-stream readers discover the layout from the
     user-provided schema.
 
-    LAYOUT MIGRATION GUARD: a warehouse written before partitioning
-    existed has flat ``part-*.parquet`` files directly in the log
-    directory. Appending ``col=value/`` subdirectories next to them
-    would make every subsequent read throw Spark's "Conflicting
-    directory structures" — bricking the warehouse. So on open, if
-    flat data files are present, this log drops to unpartitioned
-    (legacy) mode for its lifetime; only warehouses born partitioned
-    get partition pruning.
+    A partitioned log refuses to open over flat ``part-*.parquet``
+    files in its directory (EngineError): appending ``col=value/``
+    subdirectories next to them would make every later read throw
+    Spark's "Conflicting directory structures".
 
     TWO-LEVEL LAYOUT (``hash_levels=1``): at millions of sources a
     single flat ``origin=...`` level turns every driver-side
@@ -1090,10 +1116,11 @@ class AppendOnlyLog:
             and not os.path.isdir(os.path.join(self.root, name))
             for name in os.listdir(self.root)
         ):
-            # pre-partitioning layout on disk: stay flat forever
-            self.partition_by = ()
-            self.hash_levels = 0
-            return
+            raise EngineError(
+                f"changelog at {self.root} holds flat data files but "
+                f"is opened partitioned by {self.partition_by}; "
+                + REBUILD_HINT
+            )
         if not self.partition_by:
             self.hash_levels = 0
             return

@@ -22,8 +22,9 @@ corpus_pack_chunks, corpus_curriculum_order and the rank-scaffold stat
 queries) return an eagerly-materialized, PERSISTED DataFrame via
 ``operators._util.eager_release`` — their fat intermediates are
 released inside the query function, and the CALLER OWNS the returned
-result's cache. bench.py and the tests ``unpersist()`` the result after
-consuming it; an external library consumer iterating QUERIES should do
+result's cache. bench.py clears the cache between queries
+(``spark.catalog.clearCache()``) and the tests ``unpersist()`` the
+result after consuming it; an external library consumer iterating QUERIES should do
 the same (``df.unpersist()`` after collection) or accumulate one
 result-sized cache entry per call. Result caches are small (result
 rows, never fact-table rows), so the leak is bounded — but release them

@@ -13,12 +13,15 @@ Spark-first translation:
   a burst of changes lands in one batch, exactly the amortization the
   debounce buys the reference
 - re-index cycle        -> ``foreachBatch`` running the SAME
-  retract-then-add merge the batch path uses (engine._apply_updates),
-  so watch mode converges to the identical state as a cold re-index
-  (the reference's test/view.js:187-231 equivalence contract)
-- exactly-once          -> streaming checkpointLocation + the engine's
-  per-(view, origin) offsets; replayed batches are no-ops because
-  updates at or below the stored offset are filtered out.
+  maintenance cycle index() runs (engine._maintain_batch), so watch
+  mode converges to the identical state as a cold re-index (the
+  reference's test/view.js:187-231 equivalence contract)
+- exactly-once          -> the streaming checkpoint delivers each
+  changelog file once; a replayed batch re-applies idempotently (the
+  merge is retract-then-add) and the exact-delta re-aggregation skips
+  a batch whose lineage-scoped token its manifest already holds. The
+  per-(view, origin) offsets are progress metadata, never a row
+  filter.
 
 Event-time operators (windowed aggregations over the `events` table)
 live here too: tumbling / sliding / session windows with watermarks.
@@ -26,18 +29,12 @@ live here too: tumbling / sliding / session windows with watermarks.
 
 from __future__ import annotations
 
-import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dat_archive_map_reduce_spark.operators.map_reduce import run_map
-from dat_archive_map_reduce_spark.sources.files import (
-    FILES_SCHEMA,
-    glob_filter,
-    latest_wins,
-)
+from dat_archive_map_reduce_spark.sources.files import FILES_SCHEMA
 
 
 def watch(
@@ -147,290 +144,35 @@ def watch(
                 lineage.append("q")
         return f"{lineage[0]}:{batch_id}"
 
-    restamped: list = []
-    # captured BEFORE the stream starts (the query writes its
-    # checkpoint metadata at start): an absent metadata file means
-    # this is a FRESH checkpoint, so NO stored bare-int token can be a
-    # same-checkpoint replay — all of them are stale
-    fresh_checkpoint = not os.path.exists(
-        f"{engine.warehouse}/_stream_checkpoint/metadata"
-    )
-
-    def _neutralize_legacy_tokens(batch_id: int) -> None:
-        """r13 ADVICE #4: a bare-int batch token stored by a pre-r13
-        engine matches ANY lineage whose trailing batch id equals it
-        (_token_applied's one-restart upgrade arm) — so a checkpoint
-        deleted DURING the upgrade window could still silently skip a
-        genuinely new batch whose id collides. On the FIRST batch of
-        each stream instance: under a FRESH checkpoint (no metadata
-        existed at stream start) EVERY stored bare int is stale and is
-        restamped; under a resumed checkpoint, a stored bare int EQUAL
-        to the incoming batch id is the legitimate same-checkpoint
-        upgrade replay and is left for the legacy arm to honor, while
-        any other bare int cannot be mid-replay of this batch. The
-        restamp rewrites it to an inert 'legacy:<id>' string (matches
-        no lineage, trips no legacy arm), closing the collision for
-        every later batch. Driver-side manifest IO once per stream
-        start; no-op on r13+ warehouses (tokens are already strings)."""
-        for name, vdef in list(engine.views.items()):
-            if vdef.exact_delta_fold() is None:
-                continue
-            tables = [engine._reduced_table(name)]
-            if vdef.exact_delta_fold() in ("sum", "avg"):
-                tables.append(engine._reduced_cnt_table(name))
-            for t in tables:
-                m = t.manifest_meta()
-                tok = m.get("batch_token")
-                if isinstance(tok, int) and (fresh_checkpoint or tok != batch_id):
-                    cur = t._current()
-                    if cur is not None:
-                        m["batch_token"] = f"legacy:{tok}"
-                        t._set_current(cur, m)
-
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if not restamped:
-            restamped.append(True)
-            _neutralize_legacy_tokens(batch_id)
-        # Per-batch fixed costs are the watch path's throughput ceiling
-        # (bench maintain_curve), so the cycle is structured to pay
-        # each one ONCE per micro-batch, not once per (origin, view):
-        # one persisted scan of the batch, one offsets read, one
-        # re-aggregation per reduced view over the union of all
-        # origins' affected keys, one offsets rewrite. The per-origin
-        # entries writes remain — per-origin sharding is what makes
-        # retraction a one-shard rewrite.
-        batch_df = batch_df.persist()
-        try:
-            # snapshot the view registry ONCE per batch: the probe's
-            # path_groups and the plan loop below must see the same
-            # set — a view define()d concurrently between the two
-            # iterations would otherwise KeyError at g_counts[pk]
-            # (or RuntimeError mid-iteration) and kill the stream;
-            # with the snapshot a late view simply joins next batch
-            views_snapshot = list(engine.views.items())
-            # ONE probe job: per-origin targets + per-path-group
-            # compacted counts and touched bucket ids (engine
-            # _probe_batch) — the r10 flow paid a second job per
-            # distinct (glob, offsets) for the counts
-            path_groups: dict = {}
-            for _name, vdef in views_snapshot:
-                pk = (
-                    tuple(vdef.path)
-                    if isinstance(vdef.path, (list, tuple))
-                    else (vdef.path,)
-                )
-                path_groups.setdefault(pk, vdef.path)
-            # views sharing a map stage may differ in value_type; the
-            # shared run enforces the strictest declared-integer one
-            # (enforcement is a check, not a transform — the emitted
-            # rows are identical whenever it passes, so the cache
-            # stays shared; run_map docstring, r13 ADVICE)
-            mk_vt: dict = {}
-            for _name, vdef in views_snapshot:
-                pk0 = (
-                    tuple(vdef.path)
-                    if isinstance(vdef.path, (list, tuple))
-                    else (vdef.path,)
-                )
-                if vdef.value_type in ("long", "int", "bigint"):
-                    mk_vt[(pk0, vdef.map, tuple(vdef.key_schema))] = vdef.value_type
-            from concurrent.futures import ThreadPoolExecutor
-
-            # the probe job and the Python map stage both read only the
-            # persisted batch and neither needs the other's output, so
-            # they run CONCURRENTLY (r14: serializing them put the two
-            # largest per-batch fixed costs end-to-end). The map is
-            # materialized OPTIMISTICALLY for every (path, map, schema)
-            # group before the probe says which groups matched — a
-            # group with no matching files costs one empty-input job,
-            # and the stream only fires when files arrived at all.
-            upd_cache: dict = {}  # path-key -> cached compacted updates
-            mapped: dict = {}  # (path-key, map fn, key schema) -> cached entries
-            with ThreadPoolExecutor(max_workers=1) as probe_pool:
-                probe_fut = probe_pool.submit(
-                    engine._probe_batch, batch_df, path_groups
-                )
-                try:
-                    for name, vdef in views_snapshot:
-                        pk = (
-                            tuple(vdef.path)
-                            if isinstance(vdef.path, (list, tuple))
-                            else (vdef.path,)
-                        )
-                        if pk not in upd_cache:
-                            upd_cache[pk] = latest_wins(
-                                glob_filter(batch_df, vdef.path)
-                            ).cache()
-                        mk = (pk, vdef.map, tuple(vdef.key_schema))
-                        if mk not in mapped:
-                            # views sharing (path, map fn, key schema)
-                            # share ONE Python map stage per batch (the
-                            # mapped+reduced twin-view pattern halves
-                            # the dominant per-batch Python cost)
-                            mapped[mk] = run_map(
-                                upd_cache[pk].filter(F.col("type") == "put"),
-                                vdef.map,
-                                vdef.key_types(),
-                                value_type=mk_vt.get(mk),
-                            ).cache()
-                    # materialize each shared map output ONCE before
-                    # the concurrent view applies race to read it —
-                    # concurrently: sequential counts would serialize
-                    # the dominant Python map cost and make a
-                    # multi-group batch's wall the SUM of its map
-                    # stages instead of the max (the r10 pool shape)
-                    if len(mapped) > 1:
-                        with ThreadPoolExecutor(
-                            max_workers=min(len(mapped), 4)
-                        ) as mp:
-                            list(mp.map(lambda df: df.count(), mapped.values()))
-                    else:
-                        for df in mapped.values():
-                            df.count()
-                except BaseException:
-                    # a raising user map fn (or a dying job) must not
-                    # leak the pinned caches on every foreachBatch
-                    # retry of a persistently-failing stream
-                    for df in mapped.values():
-                        df.unpersist()
-                    for upd in upd_cache.values():
-                        upd.unpersist()
-                    raise
-                per_origin, g_counts, g_buckets = probe_fut.result()
-            origins = sorted(per_origin)
-            for origin in origins:
-                engine._indexed_origins.add(origin)
-                if origin in engine._missing_origins:
-                    # data arrived for a source that was registered
-                    # before it had any changelog rows (reference
-                    # archive-found, lib/indexer.js:309-340)
-                    engine._missing_origins.discard(origin)
-                    engine._emit("archive-found", origin=origin)
-            # driver-local metadata read, BUCKET-PRUNED to the batch's
-            # origins (r13 verdict #3): O(origins-in-batch) bucket
-            # files, not the whole (views x sources) table — no Spark
-            # job either way. Superset rows sharing a bucket ride
-            # along harmlessly (the dict is keyed exactly).
-            offsets = (
-                {(v, o): lv for v, o, lv in engine.offsets.read_rows(origins)}
-                if origins
-                else {}
-            )
-            offset_updates = []
-            # Pass 1 (driver-side planning). The offsets table is
-            # PROGRESS METADATA here, never a row filter: the parquet
-            # file stream already delivers each changelog file exactly
-            # once, so gating rows on version > stored offset would
-            # silently DROP data whenever one version's files span
-            # micro-batches (the offset advances after the first
-            # slice; the second slice then fails the gate). Every row
-            # of the batch applies. Re-delivery happens only on batch
-            # replay or a fresh checkpoint over an already-indexed
-            # warehouse — both converge, because the merge is
-            # retract-then-add and in-batch latest-wins keeps the
-            # newest version. Views watching the SAME glob share one
-            # compaction per batch. start=-1 admits version-0 rows
-            # (directory-corpus imports use version=0 puts).
-            plan = []  # (name, vdef, origin_starts, path-key, map-key)
-            shared: dict = {}  # path-key -> (cached updates, counts, buckets)
-            for name, vdef in views_snapshot:
-                origin_starts = {origin: -1 for origin in origins}
-                for origin in origins:
-                    target = per_origin[origin]
-                    engine._emit(
-                        "archive-indexing", origin=origin, view=name, version=target
-                    )
-                    if target > offsets.get((name, origin), 0):
-                        offset_updates.append((name, origin, target))
-                pk = mk = None
-                if origin_starts:
-                    pk = (
-                        tuple(vdef.path)
-                        if isinstance(vdef.path, (list, tuple))
-                        else (vdef.path,)
-                    )
-                    if pk not in shared:
-                        shared[pk] = (
-                            upd_cache[pk],
-                            g_counts[pk],
-                            g_buckets[pk],
-                        )
-                    mk = (pk, vdef.map, tuple(vdef.key_schema))
-                plan.append((name, vdef, origin_starts, pk, mk))
-            # Pass 2: apply STORES concurrently — views sharing an
-            # entries store (map-twins, r14 verdict #5) are grouped
-            # into ONE _apply_store_batch call (one merge + per-view
-            # re-aggregation; concurrent per-view merges of a shared
-            # store would race the snapshot version and double the
-            # entry-write IO). Distinct stores are disjoint storage,
-            # so their merges run as parallel Spark jobs and the batch
-            # wall is ~the slowest store, not the sum.
-            try:
-                todo = [t for t in plan if t[2]]
-                groups: dict = {}  # store key -> [plan tuples]
-                for t in todo:
-                    groups.setdefault(engine._store_key(t[1]), []).append(t)
-
-                def _apply_group(grp):
-                    lead = grp[0]
-                    engine._apply_store_batch(
-                        [t[1] for t in grp],
-                        batch_df,
-                        lead[2],
-                        prepared=shared[lead[3]],
-                        mapped=mapped.get(lead[4]),
-                        batch_token=_batch_token(batch_id),
-                    )
-
-                gs = list(groups.values())
-                if len(gs) > 1:
-                    with ThreadPoolExecutor(max_workers=min(len(gs), 4)) as pool:
-                        list(pool.map(_apply_group, gs))
-                elif gs:
-                    _apply_group(gs[0])
-            finally:
-                for df in mapped.values():
-                    df.unpersist()
-                for upd in upd_cache.values():
-                    upd.unpersist()
-            for name, *_ in plan:
-                for origin in origins:
-                    engine._emit(
-                        "archive-indexed",
-                        origin=origin,
-                        view=name,
-                        version=per_origin[origin],
-                    )
-            engine._set_offsets(offset_updates)
-            for origin in origins:
-                engine._emit(
-                    "indexes-updated", origin=origin, version=per_origin[origin]
-                )
+        targets = engine._maintain_batch(
+            batch_df,
+            list(engine.views.values()),
+            batch_token=_batch_token(batch_id),
+        )
+        if (
+            vacuum_every is not None
+            or changelog_expire_every is not None
+            or rebucket_every is not None
+        ):
+            batch_counter[0] += 1
+            # rebucket BEFORE vacuum so the superseded
+            # pre-migration snapshot is trimmable in the same
+            # firing when both cadences coincide
             if (
-                vacuum_every is not None
-                or changelog_expire_every is not None
-                or rebucket_every is not None
+                rebucket_every is not None
+                and batch_counter[0] % rebucket_every == 0
             ):
-                batch_counter[0] += 1
-                # rebucket BEFORE vacuum so the superseded
-                # pre-migration snapshot is trimmable in the same
-                # firing when both cadences coincide
-                if (
-                    rebucket_every is not None
-                    and batch_counter[0] % rebucket_every == 0
-                ):
-                    engine.auto_rebucket_entries(rebucket_bytes)
-                if vacuum_every is not None and batch_counter[0] % vacuum_every == 0:
-                    engine.vacuum(keep_last=vacuum_keep)
-                if (
-                    changelog_expire_every is not None
-                    and batch_counter[0] % changelog_expire_every == 0
-                ):
-                    engine._expire_changelog_unsafe()
-            if on_batch is not None:
-                on_batch(batch_id, len(origins))
-        finally:
-            batch_df.unpersist()
+                engine.auto_rebucket_entries(rebucket_bytes)
+            if vacuum_every is not None and batch_counter[0] % vacuum_every == 0:
+                engine.vacuum(keep_last=vacuum_keep)
+            if (
+                changelog_expire_every is not None
+                and batch_counter[0] % changelog_expire_every == 0
+            ):
+                engine._expire_changelog_unsafe()
+        if on_batch is not None:
+            on_batch(batch_id, len(targets))
 
     writer = (
         stream.writeStream.foreachBatch(_process)

@@ -1,0 +1,323 @@
+"""One maintenance path, no layout-upgrade shims.
+
+index(), index_file/unindex_file and watch all run the engine's one
+maintenance cycle (MapReduce._maintain_batch). Warehouse layouts that
+only earlier engine versions wrote are refused with EngineError on
+first use instead of migrated. Also pinned here: the driver-side
+bucketed reset, compaction sizing that does not depend on how many
+files the input was split into, and eager_release's error path.
+"""
+
+import json
+import os
+import shutil
+
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from dat_archive_map_reduce_spark.engine import MapReduce
+from dat_archive_map_reduce_spark.errors import EngineError
+from dat_archive_map_reduce_spark.streaming import watch as W
+
+
+def map_kv(content, meta, emit):
+    obj = json.loads(content)
+    emit(obj["k"], obj["v"])
+
+
+def map_kv_logged(content, meta, emit):
+    """map_kv that appends one line per call to the file the content
+    names — a call counter that works across Python workers."""
+    obj = json.loads(content)
+    with open(obj["log"], "a") as f:
+        f.write(meta["url"] + "\n")
+    emit(obj["k"], obj["v"])
+
+
+def _row(origin, path, version, k, v, typ="put"):
+    return {
+        "origin": origin,
+        "pathname": path,
+        "version": version,
+        "type": typ,
+        "content": None if typ == "del" else json.dumps({"k": k, "v": v}),
+    }
+
+
+def _count_engine(spark, wh):
+    db = MapReduce(spark, wh)
+    db.define("c", path="/d/*.json", map=map_kv, reduce="count",
+              key_schema=["string"])
+    return db
+
+
+def _indexed(spark, wh):
+    db = _count_engine(spark, wh)
+    db.index_source("dat://a", [
+        _row("dat://a", f"/d/{i}.json", 1, f"k{i % 4}", i) for i in range(8)
+    ])
+    return db
+
+
+# -- each old layout: build it, return the first use that must refuse --
+
+
+def _flat_reduced_snapshot(spark, wh):
+    from dat_archive_map_reduce_spark.operators.map_reduce import reduced_schema
+    from dat_archive_map_reduce_spark.plans.catalog import VersionedTable
+
+    db = _indexed(spark, wh)
+    red = db._reduced_table("c")
+    flat = VersionedTable(spark, red.root, reduced_schema(db._view("c").key_types()))
+    flat.overwrite(red.read(), sort_cols=["key_json"])
+    return lambda: db.get("c", "k1")
+
+
+def _flat_entries_shard(spark, wh):
+    from dat_archive_map_reduce_spark.operators.map_reduce import entries_schema
+    from dat_archive_map_reduce_spark.plans.catalog import VersionedTable
+
+    db = _indexed(spark, wh)
+    ent = db._entries_table("c", "dat://a")
+    flat = VersionedTable(spark, ent.root, entries_schema(db._view("c").key_types()))
+    flat.overwrite(ent.read())
+    return lambda: db.index_source(
+        "dat://a", [_row("dat://a", "/d/0.json", 2, "k9", 0)]
+    )
+
+
+def _flat_offsets_snapshot(spark, wh):
+    from dat_archive_map_reduce_spark.plans.catalog import (
+        OFFSETS_SCHEMA,
+        VersionedTable,
+    )
+
+    _indexed(spark, wh).close()
+    flat = VersionedTable(spark, f"{wh}/offsets", OFFSETS_SCHEMA)
+    flat.overwrite_rows([("c", "dat://a", 1)])
+    db = _count_engine(spark, wh)
+    return db.list_indexed
+
+
+def _bare_int_token(spark, wh):
+    db = _indexed(spark, wh)
+    red = db._reduced_table("c")
+    red._set_current(red._current(), {"batch_token": 0})
+    db.append_changes([_row("dat://a", "/d/8.json", 2, "k1", 8)])
+    return lambda: db._maintain_batch(
+        db.changelog.read_origin("dat://a").filter(F.col("version") == 2),
+        list(db.views.values()),
+        batch_token="lineage:0",
+    )
+
+
+def _store_without_pointer_table(spark, wh):
+    db = _indexed(spark, wh)
+    shutil.rmtree(db._entries_ptr_table("c").root)
+    db.close()
+    return lambda: _count_engine(spark, wh)
+
+
+def _per_view_store(spark, wh):
+    db = _indexed(spark, wh)
+    ent_root, _ = db._store_paths(db._view("c"))
+    db.close()
+    os.rename(ent_root, f"{wh}/views/c/entries")
+    os.remove(f"{wh}/views/c/store.json")
+    return lambda: _count_engine(spark, wh)
+
+
+def _flat_changelog(spark, wh):
+    db = MapReduce(spark, wh)
+    db.changelog.partition_by = ()
+    db.append_changes([_row("dat://a", "/d/0.json", 1, "k0", 0)])
+    return lambda: MapReduce(spark, wh)
+
+
+OLD_LAYOUTS = {
+    "flat-reduced-snapshot": _flat_reduced_snapshot,
+    "flat-entries-shard": _flat_entries_shard,
+    "flat-offsets-snapshot": _flat_offsets_snapshot,
+    "bare-int-token": _bare_int_token,
+    "store-without-pointer-table": _store_without_pointer_table,
+    "per-view-store": _per_view_store,
+    "flat-changelog": _flat_changelog,
+}
+
+
+@pytest.mark.parametrize("layout", sorted(OLD_LAYOUTS))
+def test_old_layout_refused(spark, tmp_path, layout):
+    """Each layout an earlier engine version wrote raises EngineError
+    on first use, naming the rebuild; nothing migrates it."""
+    first_use = OLD_LAYOUTS[layout](spark, str(tmp_path / "wh"))
+    with pytest.raises(EngineError, match="rebuild"):
+        first_use()
+
+
+def test_bucketed_reset_is_driver_side(spark, tmp_path):
+    """reset() flips a BucketedEntriesTable to an EMPTY bucketed
+    snapshot (no part files, layout meta present) without a Spark job,
+    and the next merge writes only the buckets it touches. A plain
+    VersionedTable reset under the same job group does run a job, so
+    the probe can see one."""
+    from dat_archive_map_reduce_spark.plans.catalog import (
+        BucketedEntriesTable,
+        VersionedTable,
+    )
+
+    sch = T.StructType([
+        T.StructField("key_json", T.StringType(), False),
+        T.StructField("value", T.StringType(), True),
+    ])
+    t = BucketedEntriesTable(spark, str(tmp_path / "b"), sch,
+                             bucket_col="key_json", n_buckets=4)
+    rows = spark.createDataFrame([(f"k{i}", str(i)) for i in range(16)], sch)
+    t.write_merged(list(range(4)), rows)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("reset-probe", "reset must not run a job")
+    try:
+        t.reset()
+        reset_jobs = list(tracker.getJobIdsForGroup("reset-probe"))
+        VersionedTable(spark, str(tmp_path / "plain"), sch).reset()
+        plain_jobs = list(tracker.getJobIdsForGroup("reset-probe"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert reset_jobs == []
+    assert plain_jobs, "the job-group probe must see a Spark reset's job"
+    assert t.current_is_bucketed()
+    assert sorted(os.listdir(t._snapshot_dir(t._current()))) == ["_bucketmeta.json"]
+    assert t.n_buckets == 4
+    assert t.read().count() == 0
+    b = t.bucket_of("k1")
+    t.write_merged([b], rows.filter(F.col("key_json") == "k1"))
+    v = t._current()
+    buckets = [n for n in os.listdir(t._snapshot_dir(v)) if n.startswith("_b=")]
+    assert buckets == [f"_b={b}"]  # nothing hardlinked from the reset
+    assert [r["key_json"] for r in t.read().collect()] == ["k1"]
+
+
+def test_index_maps_each_changed_file_once(spark, tmp_path):
+    """index() runs the map UDF once per changed file: the mapped
+    output is cached for the merge, the re-aggregation keys and every
+    twin view of the shared store."""
+    log_dir = tmp_path / "calls"
+    log_dir.mkdir()
+
+    def rows(n, version, first):
+        return [
+            {
+                "origin": "dat://a",
+                "pathname": f"/d/{first + i}.json",
+                "version": version,
+                "content": json.dumps({
+                    "k": f"k{(first + i) % 5}", "v": first + i,
+                    "log": str(log_dir / f"v{version}.log"),
+                }),
+            }
+            for i in range(n)
+        ]
+
+    def calls(version):
+        p = log_dir / f"v{version}.log"
+        return len(p.read_text().splitlines()) if p.exists() else 0
+
+    db = MapReduce(spark, str(tmp_path / "wh"))
+    for name, reduce in (("m", None), ("c", "count"), ("lo", "min")):
+        db.define(name, path="/d/*.json", map=map_kv_logged, reduce=reduce,
+                  key_schema=["string"])
+    db.index_source("dat://a", rows(24, 1, 0))
+    assert calls(1) == 24
+    # an update re-keying 6 existing files and adding 2 new ones
+    db.index_source("dat://a", rows(8, 2, 18))
+    assert calls(2) == 8
+    assert calls(1) == 24  # no already-applied file is mapped again
+    assert db.get("c", "k3") == {"key": "k3", "value": 5}
+    db.close()
+
+
+def test_index_and_watch_event_sequences(spark, tmp_path):
+    """index() and a watch drain emit their event sequences from the
+    one cycle: index adds per-view progress, watch does not."""
+
+    def run(drive):
+        log = []
+        db = MapReduce(spark, str(tmp_path / drive))
+        for ev in ("archive-indexing", "archive-index-progress",
+                   "archive-indexed", "indexes-updated"):
+            db.on(ev, lambda _ev=ev, **kw: log.append((_ev, kw.get("view"))))
+        db.define("m", path="/d/*.json", map=map_kv, key_schema=["string"])
+        db.define("c", path="/d/*.json", map=map_kv, reduce="count",
+                  key_schema=["string"])
+        db.append_changes([_row("dat://a", "/d/0.json", 1, "x", 1)])
+        if drive == "index":
+            db.index("dat://a")
+        else:
+            W.watch_until_caught_up(db)
+        db.close()
+        return log
+
+    assert run("index") == [
+        ("archive-indexing", "m"), ("archive-indexing", "c"),
+        ("archive-index-progress", "m"), ("archive-indexed", "m"),
+        ("archive-index-progress", "c"), ("archive-indexed", "c"),
+        ("indexes-updated", None),
+    ]
+    assert run("watch") == [
+        ("archive-indexing", "m"), ("archive-indexing", "c"),
+        ("archive-indexed", "m"), ("archive-indexed", "c"),
+        ("indexes-updated", None),
+    ]
+
+
+@pytest.mark.parametrize("input_files", [4, 8])
+def test_compaction_file_count_ignores_input_fragmentation(spark, tmp_path, input_files):
+    """compact() sizes its output from the rows' data bytes, so the
+    same rows compact to the same file count whether they arrived as
+    4 files or 8 (on-disk bytes gave 6 and 10 files here)."""
+    import glob
+
+    from dat_archive_map_reduce_spark.plans.catalog import VersionedTable
+
+    schema = T.StructType([
+        T.StructField("x", T.LongType(), False),
+        T.StructField("y", T.LongType(), False),
+    ])
+    grid = spark.range(0, 64 * 64).select(
+        (F.col("id") % 64).alias("x"), (F.col("id") / F.lit(64)).cast("long").alias("y")
+    )
+    t = VersionedTable(spark, str(tmp_path / "t"), schema)
+    t.overwrite(grid.repartition(input_files))
+    assert len(glob.glob(f"{t._snapshot_dir(t._current())}/*.parquet")) == input_files
+    v = t.compact(sort_cols=["x", "y"], target_file_bytes=1 << 12)
+    # 4096 rows x two 8-byte columns = 64 KiB of row data -> 16 files
+    assert len(glob.glob(f"{t._snapshot_dir(v)}/*.parquet")) == 16
+    assert t.read().count() == 64 * 64
+
+
+def test_eager_release_propagates_count_error(spark):
+    """A failing count() inside eager_release propagates ITS error even
+    when the cleanup unpersist() calls fail too."""
+    from pyspark.sql.functions import udf
+
+    from dat_archive_map_reduce_spark.operators._util import eager_release
+
+    class BrokenCache:
+        unpersisted = 0
+
+        def unpersist(self):
+            BrokenCache.unpersisted += 1
+            raise RuntimeError("cleanup failed")
+
+    @udf("long")
+    def boom(x):
+        raise ValueError("count failed")
+
+    bad = spark.range(4).select(boom("id").alias("v"))
+    with pytest.raises(Exception) as ei:
+        eager_release(bad, BrokenCache(), BrokenCache())
+    assert "count failed" in str(ei.value)
+    assert "cleanup failed" not in str(ei.value)
+    assert BrokenCache.unpersisted == 2

@@ -3,7 +3,7 @@
 The reduced table is hash-bucketed on key_json so every re-aggregation
 commit (general refold and the exact-delta watch path) rewrites only
 the delta's buckets — these tests pin the equality, exactly-once,
-delete-on-empty, hardlink-reuse, and legacy-migration contracts.
+delete-on-empty and hardlink-reuse contracts.
 """
 
 import json
@@ -128,9 +128,7 @@ def test_sum_double_values_refuse_delta_path(spark, tmp_path):
 def test_token_lineage_scoping(spark, tmp_path):
     """_token_applied: same-lineage replays skip; a NEW lineage (the
     out-of-band checkpoint-deletion scenario, r12 ADVICE) never
-    matches a stale token even at the same batch id; legacy bare-int
-    manifests match on the trailing id (the one-restart upgrade
-    window, skipping rather than double-applying)."""
+    matches a stale token even at the same batch id."""
     from pyspark.sql import types as T
 
     from dat_archive_map_reduce_spark.plans.catalog import (
@@ -145,10 +143,6 @@ def test_token_lineage_scoping(spark, tmp_path):
     assert MapReduce._token_applied(t, "lin2:7") is False  # new lineage
     assert MapReduce._token_applied(t, "lin1:8") is False
     assert MapReduce._token_applied(t, 7) is False  # int vs scoped str
-    t.overwrite(empty_df(spark, sch), meta={"batch_token": 5})  # legacy
-    assert MapReduce._token_applied(t, 5) is True
-    assert MapReduce._token_applied(t, "anylin:5") is True  # upgrade window
-    assert MapReduce._token_applied(t, "anylin:6") is False
     t2 = VersionedTable(spark, str(tmp_path / "tok2"), sch)
     assert MapReduce._token_applied(t2, "lin1:0") is False  # no manifest
 
@@ -199,39 +193,6 @@ def test_reduced_table_bucketed_and_hardlink_reuse(spark, tmp_path):
     db.close()
 
 
-def test_reduced_flat_legacy_snapshot_migrates(spark, tmp_path):
-    """A pre-r13 warehouse holds FLAT reduced snapshots (plain
-    VersionedTable overwrites). The first merge against one re-buckets
-    in a single full rewrite and is incremental afterwards, with
-    identical query results throughout."""
-    from dat_archive_map_reduce_spark.operators.map_reduce import (
-        reduced_schema,
-    )
-    from dat_archive_map_reduce_spark.plans.catalog import VersionedTable
-
-    db = MapReduce(spark, str(tmp_path / "wh-l"))
-    db.define("c", path="/d/*.json", map=map_sum, reduce="count",
-              key_schema=["string"])
-    db.index_source("dat://a", [
-        _row("dat://a", f"/d/{i}.json", 1, f"k{i % 4}", i) for i in range(8)
-    ])
-    red = db._reduced_table("c")
-    # simulate the legacy layout: rewrite the current reduced state as
-    # a FLAT snapshot through the plain VersionedTable API
-    flat = VersionedTable(spark, red.root, reduced_schema(
-        db._view("c").key_types()))
-    flat.overwrite(red.read(), sort_cols=["key_json"])
-    assert not red.current_is_bucketed()
-    before = _reduced_pairs(db, "c")
-    assert db.get("c", "k1") == {"key": "k1", "value": 2}  # flat get works
-    # next merge re-buckets and stays correct
-    db.index_source("dat://a", [_row("dat://a", "/d/8.json", 2, "k1", 8)])
-    assert red.current_is_bucketed()
-    assert db.get("c", "k1") == {"key": "k1", "value": 3}
-    assert len(_reduced_pairs(db, "c")) == len(before)
-    db.close()
-
-
 def test_sum_delta_interleaved_with_batch_refold(spark, tmp_path):
     """Stream deltas and batch-path refolds interleave on a sum view:
     the refold erases the token and realigns reduced + sidecar with
@@ -245,7 +206,7 @@ def test_sum_delta_interleaved_with_batch_refold(spark, tmp_path):
         _row("dat://a", "/d/1.json", 1, "y", 2),
     ])
     W.watch_until_caught_up(db)  # stream delta (token stamped)
-    # BATCH path: single-file op takes _apply_updates -> general refold
+    # BATCH path: a single-file op runs token-less -> general refold
     db.index_file("dat://a", "/d/2.json", json.dumps({"k": "x", "v": 10}))
     assert db._reduced_table("s").manifest_meta().get("batch_token") is None
     assert db.get("s", "x") == {"key": "x", "value": 11.0}

@@ -3,8 +3,7 @@
 Pins: the sidecar sync marker (refold fallback on desync and on a
 reduced table materialized before value_type was declared), the fused
 reduced+sidecar single-job commit, declared-integer value enforcement
-in the map stage, legacy bare-int token neutralization, get_many
-key-canonicalization fan-out, the single-relation entries_df read,
+in the map stage, get_many key-canonicalization fan-out, the single-relation entries_df read,
 and the origin-bucketed offsets table.
 """
 
@@ -174,49 +173,6 @@ def test_schema_error_direct_run_map(spark):
     assert "non-integer value" in str(ei.value)
 
 
-def test_legacy_int_token_neutralized_on_fresh_checkpoint(spark, tmp_path):
-    """r13 ADVICE #4 executable: a pre-r13 warehouse stores bare-int
-    batch tokens; if its checkpoint is deleted, the restarted stream's
-    batch 0 collides with a stored int 0 and the legacy trailing-id
-    arm would silently SKIP the genuinely new batch. The stream-start
-    restamp (fresh checkpoint -> every bare int is stale) must
-    neutralize it so the batch applies."""
-    import shutil
-
-    wh = str(tmp_path / "wh-legacy")
-
-    def build():
-        d = MapReduce(spark, wh)
-        d.define("c", path="/d/*.json", map=map_sum, reduce="count",
-                 key_schema=["string"])
-        return d
-
-    db = build()
-    db.append_changes([_row("dat://a", "/d/0.json", 1, "x", 1)])
-    W.watch_until_caught_up(db)
-    assert db.get("c", "x") == {"key": "x", "value": 1}
-    db.close()
-    # devolve to the pre-r13 scheme: bare int 0 (the drain was batch 0)
-    red = MapReduce(spark, wh)
-    red.define("c", path="/d/*.json", map=map_sum, reduce="count",
-               key_schema=["string"])
-    t = red._reduced_table("c")
-    t._set_current(t._current(), {"batch_token": 0})
-    red.close()
-    shutil.rmtree(f"{wh}/_stream_checkpoint")
-
-    db2 = build()
-    db2.append_changes([_row("dat://a", "/d/1.json", 2, "y", 1)])
-    W.watch_until_caught_up(db2)  # fresh checkpoint: batch 0 again
-    # without the restamp, the legacy arm matches 0 == trailing 0 and
-    # drops the delta; with it, the batch applies
-    assert db2.get("c", "y") == {"key": "y", "value": 1}
-    assert db2.get("c", "x") == {"key": "x", "value": 1}
-    tok = db2._reduced_table("c").manifest_meta().get("batch_token")
-    assert isinstance(tok, str) and ":" in tok and not tok.startswith("legacy:")
-    db2.close()
-
-
 def test_get_many_fans_out_canonicalizing_keys(spark, tmp_path):
     """r13 ADVICE #5: distinct caller keys canonicalizing to the same
     key_json ('a' vs ['a'], 1 vs 1.0) must EACH appear in the result
@@ -305,30 +261,6 @@ def test_offsets_bucketed_pruned_and_hardlinked(spark, tmp_path):
             rewritten += 1
             assert b == b42
     assert rewritten == 1 and shared == t.n_buckets - 1
-
-
-def test_offsets_flat_legacy_snapshot_upgrades(spark, tmp_path):
-    """A pre-r14 flat offsets snapshot reads whole whatever the filter
-    and is re-bucketed by its first upsert — the warehouse upgrade is
-    invisible to the engine."""
-    from dat_archive_map_reduce_spark.plans.catalog import (
-        OFFSETS_SCHEMA,
-        BucketedMetaTable,
-        VersionedTable,
-    )
-
-    root = str(tmp_path / "off-legacy")
-    flat = VersionedTable(spark, root, OFFSETS_SCHEMA)
-    flat.overwrite_rows([("v", "dat://a", 1), ("v", "dat://b", 2)])
-    t = BucketedMetaTable(spark, root, OFFSETS_SCHEMA, bucket_col="origin")
-    # flat snapshot: pruned read falls back to the whole table
-    assert sorted(t.read_rows(["dat://a"])) == [
-        ("v", "dat://a", 1), ("v", "dat://b", 2),
-    ]
-    t.upsert_rows([("v", "dat://a", 5)], key_cols=(0, 1))
-    assert sorted(t.read_rows()) == [("v", "dat://a", 5), ("v", "dat://b", 2)]
-    # now bucketed: the pruned read touches one file
-    assert len(t._bucket_files(t._current(), ["dat://b"])) == 1
 
 
 def test_engine_offsets_roundtrip_through_buckets(spark, tmp_path):

@@ -208,26 +208,6 @@ def test_entries_ptr_table_tracks_flips(spark, tmp_path):
     db.close()
 
 
-def test_entries_ptr_bootstrap_legacy_warehouse(spark, tmp_path):
-    """A warehouse written before the pointer table existed (simulated
-    by deleting it) bootstraps the consolidated rows from the legacy
-    per-origin manifests on the first entries_df — and persists them,
-    so the walk happens once."""
-    db = MapReduce(spark, str(tmp_path / "wh"))
-    db.define("m", path="/d/*.json", map=map_kv, key_schema=["string"])
-    db.index_source("dat://a", [_row("dat://a", "/d/0.json", 1, "a", 1)])
-    db.index_source("dat://b", [_row("dat://b", "/d/0.json", 1, "b", 2)])
-    shutil.rmtree(db._entries_ptr_table("m").root)
-    assert sorted(
-        r["key_json"] for r in db.entries_df("m").select("key_json").collect()
-    ) == ['"a"', '"b"']
-    assert dict(db._entries_ptr_table("m").read_rows()) == {
-        "dat://a": db._entries_table("m", "dat://a")._current(),
-        "dat://b": db._entries_table("m", "dat://b")._current(),
-    }
-    db.close()
-
-
 def test_entries_df_missing_snapshot_raises(spark, tmp_path):
     """A manifest pointing at a missing snapshot directory raises
     FileNotFoundError instead of silently serving partial results

@@ -1302,7 +1302,7 @@ def test_count_delta_reaggregation_exactly_once(spark, tmp_path):
 
     # (2)+(4) crash window: v2 updates — commit the reduced delta with
     # a new token but 'crash' before the entries merges, then replay
-    # the whole batch through _apply_view_batch with the same token
+    # the whole batch through _apply_store_batch with the same token
     upd_rows = [
         {"origin": "dat://c0", "pathname": "/d/0.json", "version": 2,
          "content": json.dumps({"first": "keyX", "second": 0,
@@ -1335,10 +1335,8 @@ def test_count_delta_reaggregation_exactly_once(spark, tmp_path):
     )
     # crash happened here: reduced reflects v2, entries still v1.
     # replay of the full batch with the same token:
-    db._apply_view_batch(
-        vdef, upd, {"dat://c0": -1},
-        prepared=(upd, counts, buckets), mapped=new_e,
-        batch_token=tok2,
+    db._apply_store_batch(
+        [vdef], (upd, counts, buckets), new_e, batch_token=tok2,
     )
     upd.unpersist()
     new_e.unpersist()

@@ -295,34 +295,6 @@ def test_changelog_scan_prunes_by_origin_partition(spark, tmp_path):
     assert db.current_version("dat://p1") == 1
 
 
-def test_changelog_legacy_flat_layout_still_works(spark, tmp_path):
-    """Layout migration guard: a warehouse whose changelog was written
-    BEFORE origin-partitioning (flat part files in the log dir) must
-    keep appending flat — mixing origin=... subdirs into a flat dir
-    would make every subsequent read throw Spark's conflicting-
-    directory-structures error, bricking the warehouse."""
-    import os
-
-    wh = str(tmp_path / "wh-legacy")
-    row = {"origin": "dat://old", "pathname": "/a.json", "version": 1,
-           "content": json.dumps({"first": "x", "second": 1, "third": "t"})}
-    # simulate the old build: write the changelog flat
-    db0 = MapReduce(spark, wh)
-    db0.changelog.partition_by = ()
-    db0.append_changes([row])
-    assert any(n.endswith(".parquet")
-               for n in os.listdir(db0.changelog.root))
-
-    # a fresh engine on the same warehouse must detect the flat layout
-    db1 = MapReduce(spark, wh)
-    assert db1.changelog.partition_by == ()
-    db1.append_changes([{**row, "origin": "dat://new"}])
-    assert not any(n.startswith("origin=")
-                   for n in os.listdir(db1.changelog.root))
-    assert db1.current_version("dat://old") == 1
-    assert db1.current_version("dat://new") == 1
-
-
 def test_bucket_fn_driver_matches_spark(spark):
     """The merge path derives touched-bucket ids from url strings in
     TWO places — in-plan (F.crc32 % N) and driver-side (zlib.crc32 %

@@ -39,11 +39,12 @@ def timed(cls, name):
 
 
 for m in (
+    "_maintain_batch",
     "_probe_batch",
-    "_apply_view_batch",
+    "_apply_store_batch",
     "_reaggregate_exact_delta",
     "_retracted_rows_premerge",
-    "_touched_bucket_ids",
+    "_key_bucket_ids",
     "_merge_view_shards_onejob",
     "_merge_entry_shard",
     "_set_offsets",

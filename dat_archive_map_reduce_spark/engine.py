@@ -65,6 +65,7 @@ from dat_archive_map_reduce_spark.plans.catalog import (
     BucketedMetaTable,
     VersionedTable,
     empty_df,
+    local_df,
 )
 from dat_archive_map_reduce_spark.plans.view_def import ViewDefinition, validate_view_def
 from dat_archive_map_reduce_spark.sources.files import (
@@ -1912,9 +1913,10 @@ class MapReduce:
             key_by_json.setdefault(r["key_json"], r["key"])
         from pyspark.sql import types as T
 
-        hist_local = self.spark.createDataFrame(new_hist, hist_table.schema)
+        hist_local = local_df(self.spark, new_hist, hist_table.schema)
         key_type = red_table.schema["key"].dataType
-        red_local = self.spark.createDataFrame(
+        red_local = local_df(
+            self.spark,
             [(key_by_json[k], k, v) for k, v in new_red.items()],
             T.StructType(
                 [

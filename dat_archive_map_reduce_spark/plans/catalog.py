@@ -46,6 +46,38 @@ def empty_df(spark: SparkSession, schema: T.StructType) -> DataFrame:
     return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
 
 
+def local_df(
+    spark: SparkSession, rows: "list[tuple]", schema: T.StructType
+) -> DataFrame:
+    """Driver rows (tuples or ``Row``s in ``schema`` order, struct
+    values too) as a ``LocalTableScan``.
+
+    The rows go to the JVM as one ``pyarrow.Table``, so no Python
+    worker ever touches them. ``createDataFrame(list, schema)``
+    pickles the list into a ``PythonRDD`` instead, one Python task per
+    slice (4 at 4 cpus), and every Python task costs about 0.22 s of
+    worker CPU however little it does: at task start
+    ``pyspark.worker_util.setup_spark_files`` calls
+    ``importlib.invalidate_caches()``, which under CPython 3.11 makes
+    each of the worker's 16 zipimporters re-read ``pyspark.zip``'s
+    directory, about 26,700 entries per task. Engine paths
+    build driver rows through here, never through
+    ``createDataFrame(list)``."""
+    if not rows:
+        return empty_df(spark, schema)
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = [
+        pa.array([r[i] for r in rows], type=f.type)
+        for i, f in enumerate(arrow_schema)
+    ]
+    return spark.createDataFrame(
+        pa.Table.from_arrays(columns, schema=arrow_schema), schema
+    )
+
+
 class VersionedTable:
     def __init__(self, spark: SparkSession, root: str, schema: T.StructType):
         self.spark = spark

@@ -14,6 +14,15 @@ config choices are the ones that matter at 100 TB too:
   ops) moves data in columnar batches instead of pickled rows.
 - UTC session timezone: deterministic timestamp semantics that match
   the DuckDB oracle.
+- Generated-code cache of 1000 classes (Spark's default is 100). One
+  maintenance cycle uses about 350 generated classes and an analytics
+  pass about 170, so the default cache evicted them all between
+  cycles: each steady watch cycle ran ~295 Janino compiles and a warm
+  ``index()`` cycle ~150, loading and unloading hundreds of classes
+  that the JIT threads (the cycle's largest CPU consumer, 6-10 s at
+  4 cpus) then compiled again. At 1000 a warm cycle compiles a
+  handful; each entry is one loaded class, so the cap still bounds
+  metaspace.
 """
 
 from __future__ import annotations
@@ -82,6 +91,8 @@ def get_spark(app_name: str = "dat_archive_map_reduce_spark") -> SparkSession:
         .config(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
         )
+        # static: the cache lives in the JVM, sized once per process
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.schemaInference", "true")
     )

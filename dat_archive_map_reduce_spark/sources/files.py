@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dat_archive_map_reduce_spark.plans.catalog import local_df
+
 FILES_SCHEMA = T.StructType(
     [
         T.StructField("origin", T.StringType(), False),
@@ -130,7 +132,8 @@ def read_directory_corpus(
 
 
 def changelog_from_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:
-    """Build a changelog DataFrame from plain dicts (tests, fixtures).
+    """Build a changelog DataFrame from plain dicts (append_changes,
+    index_file/unindex_file, tests).
 
     Fills url from origin+pathname when absent.
     """
@@ -143,7 +146,7 @@ def changelog_from_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:
         filled.append(
             (r["origin"], r["pathname"], r["url"], int(r["version"]), r["type"], r["content"])
         )
-    return spark.createDataFrame(filled, FILES_SCHEMA)
+    return local_df(spark, filled, FILES_SCHEMA)
 
 
 def latest_wins(changelog: DataFrame, start: int | None = None, end: int | None = None) -> DataFrame:

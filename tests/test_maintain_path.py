@@ -5,7 +5,9 @@ maintenance cycle (MapReduce._maintain_batch). Warehouse layouts that
 only earlier engine versions wrote are refused with EngineError on
 first use instead of migrated. Also pinned here: the driver-side
 bucketed reset, compaction sizing that does not depend on how many
-files the input was split into, and eager_release's error path.
+files the input was split into, eager_release's error path, driver
+rows that reach the JVM without a Python worker, and a warm cycle that
+reuses its generated code.
 """
 
 import json
@@ -13,6 +15,7 @@ import os
 import shutil
 
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -321,3 +324,90 @@ def test_eager_release_propagates_count_error(spark):
     assert "count failed" in str(ei.value)
     assert "cleanup failed" not in str(ei.value)
     assert BrokenCache.unpersisted == 2
+
+
+def test_driver_rows_start_no_python_workers(spark):
+    """Driver-built frames (the changelog rows append_changes,
+    index_file and unindex_file write, the min/max driver delta's
+    rows) are LocalTableScans: their lineage has no PythonRDD, so no
+    Python worker task runs to hand them to the JVM. Struct keys,
+    single and compound, survive the Arrow conversion."""
+    from dat_archive_map_reduce_spark.plans.catalog import local_df
+    from dat_archive_map_reduce_spark.sources.files import changelog_from_rows
+
+    key = T.StructType([
+        T.StructField("k0", T.StringType(), True),
+        T.StructField("k1", T.LongType(), True),
+    ])
+    schema = T.StructType([
+        T.StructField("key", key, False),
+        T.StructField("key_json", T.StringType(), False),
+        T.StructField("value", T.StringType(), True),
+    ])
+    rows = [
+        (Row(k0="a", k1=1), '["a",1]', "1.0"),
+        (("b", 2), '["b",2]', None),
+    ]
+    frames = {
+        "changelog_from_rows": changelog_from_rows(spark, [
+            _row("dat://a", "/d/0.json", 1, "k0", 0),
+            _row("dat://a", "/d/1.json", 2, None, None, typ="del"),
+        ]),
+        "local_df": local_df(spark, rows, schema),
+    }
+    for name, df in frames.items():
+        lineage = df._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, (name, lineage)
+    assert frames["local_df"].collect() == [
+        Row(key=Row(k0="a", k1=1), key_json='["a",1]', value="1.0"),
+        Row(key=Row(k0="b", k1=2), key_json='["b",2]', value=None),
+    ]
+    assert [(r["url"], r["type"], r["content"]) for r in
+            frames["changelog_from_rows"].collect()][1] == (
+        "dat://a/d/1.json", "del", None)
+    assert local_df(spark, [], schema).rdd.getNumPartitions() == 0
+
+
+def test_warm_cycle_reuses_generated_code(spark, tmp_path):
+    """A warm maintenance cycle finds its generated classes in Spark's
+    codegen cache: the third of three same-shaped 8-file index()
+    updates, and the third of three watch drains, each run at most 30
+    Janino compiles. With Spark's default 100-entry cache every such
+    cycle recompiled about 150 classes."""
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+
+    def update(version):
+        return [
+            _row("dat://a", f"/d/{i}.json", version, f"k{i % 4}", version * 100 + i)
+            for i in range(8)
+        ]
+
+    db = MapReduce(spark, str(tmp_path / "wh"))
+    for name, reduce in (("m", None), ("c", "count"), ("lo", "min")):
+        db.define(name, path="/d/*.json", map=map_kv, reduce=reduce,
+                  key_schema=["string"])
+    db.index_source("dat://a", [
+        _row("dat://a", f"/d/{i}.json", 1, f"k{i % 4}", i) for i in range(24)
+    ])
+
+    def compiles_per_cycle(cycle, versions):
+        counts = []
+        for v in versions:
+            before = compiles.getCount()
+            cycle(v)
+            counts.append(compiles.getCount() - before)
+        return counts
+
+    by_index = compiles_per_cycle(
+        lambda v: db.index_source("dat://a", update(v)), (2, 3, 4))
+
+    def drain(v):
+        db.append_changes(update(v))
+        W.watch_until_caught_up(db)
+
+    by_watch = compiles_per_cycle(drain, (5, 6, 7))
+    assert db.get("lo", "k1") == {"key": "k1", "value": 9.0}
+    db.close()
+    assert by_index[-1] <= 30, by_index
+    assert by_watch[-1] <= 30, by_watch

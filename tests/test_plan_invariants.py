@@ -447,6 +447,50 @@ FORCED_BROADCAST_SITES = {
 }
 
 
+# the only functions on engine paths that may call createDataFrame:
+# a Python list there becomes a PythonRDD, one Python worker task per
+# slice (see local_df)
+DRIVER_FRAME_BUILDERS = {"empty_df", "local_df"}
+ENGINE_PATHS = ("engine.py", "plans", "sources", "streaming")
+
+
+def test_engine_paths_build_driver_frames_only_through_catalog_helpers():
+    import ast
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "dat_archive_map_reduce_spark")
+    files = []
+    for rel in ENGINE_PATHS:
+        path = os.path.join(pkg, rel)
+        if rel.endswith(".py"):
+            files.append(path)
+            continue
+        for dirpath, _dirs, names in os.walk(path):
+            files += [os.path.join(dirpath, f) for f in names if f.endswith(".py")]
+
+    sites = []
+
+    def visit(node, func, rel):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame"
+        ):
+            sites.append((rel, func, node.lineno))
+        for child in ast.iter_child_nodes(node):
+            visit(child, func, rel)
+
+    for path in files:
+        with open(path) as fh:
+            visit(ast.parse(fh.read()), None, os.path.relpath(path, pkg))
+    assert {func for _rel, func, _line in sites} == DRIVER_FRAME_BUILDERS, (
+        "createDataFrame( on an engine path outside empty_df/local_df — "
+        f"build driver rows with plans.catalog.local_df: {sites}"
+    )
+
+
 def test_no_new_unaudited_forced_broadcasts():
     import os
 

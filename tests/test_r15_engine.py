@@ -436,7 +436,15 @@ def test_twin_store_bytes_halved_vs_private(spark, tmp_path):
     assert sb < 0.65 * pb, (sb, pb)
 
 
-def test_minmax_driver_delta_matches_vectorized_path(spark, tmp_path):
+def map_kv_pair(content, meta, emit):
+    """map_kv under a compound (string, long) key: [k, len(k)]."""
+    obj = json.loads(content)
+    emit([obj["k"], len(obj["k"])], obj["v"])
+
+
+@pytest.mark.parametrize("key_schema", [["string"], ["string", "long"]],
+                         ids=["string", "string-long"])
+def test_minmax_driver_delta_matches_vectorized_path(spark, tmp_path, key_schema):
     """The r15 driver-side micro-batch fast path of the min/max
     histogram delta must commit BIT-IDENTICAL reduced + histogram
     state to the vectorized Spark form it replaces: run the same
@@ -445,14 +453,22 @@ def test_minmax_driver_delta_matches_vectorized_path(spark, tmp_path):
     batch to the vectorized plan), and compare both tables row by
     row plus the batch tokens. A string-valued emit rides along:
     both paths must skip it identically (the try_cast filter runs
-    BEFORE the driver gate, so it reaches neither routing)."""
+    BEFORE the driver gate, so it reaches neither routing). The
+    compound key checks that the driver path's struct keys survive
+    its Arrow-built frames."""
+    compound = len(key_schema) > 1
+
+    def key(k):
+        return [k, len(k)] if compound else k
+
     dbs = []
     for name, limit in (("drv", None), ("vec", 0)):
         db = MapReduce(spark, str(tmp_path / f"wh-{name}"))
         if limit is not None:
             db._DELTA_DRIVER_LIMIT = limit
-        db.define("mn", path="/d/*.json", map=map_kv, reduce="min",
-                  key_schema=["string"])
+        db.define("mn", path="/d/*.json",
+                  map=map_kv_pair if compound else map_kv, reduce="min",
+                  key_schema=key_schema)
         rows = [_row("dat://a", f"/d/{i}.json", 1, f"k{i % 3}", i)
                 for i in range(9)]
         # a non-numeric value: skipped by the fold on both paths
@@ -479,9 +495,8 @@ def test_minmax_driver_delta_matches_vectorized_path(spark, tmp_path):
         assert isinstance(tok, str) and ":" in tok
         assert (db._reduced_hist_table("mn").manifest_meta()
                 .get("batch_token") == tok)
-    assert drv.get("mn", "k0") == {"key": "k0", "value": 3.0}
-    assert drv.get("mn", "k1") == {"key": "k1", "value": 4.0}
-    assert drv.get("mn", "f") == {"key": "f", "value": -7.0}
+    for k, v in (("k0", 3.0), ("k1", 4.0), ("f", -7.0)):
+        assert drv.get("mn", key(k)) == {"key": key(k), "value": v}
     for db in dbs:
         db.close()
 

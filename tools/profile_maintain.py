@@ -1,6 +1,8 @@
 """Profile the maintain-curve 8k point: wrap the engine's per-batch
-stages with timers and print a wall-clock breakdown. Diagnostic only —
-not part of the bench contract."""
+stages with timers and print a wall-clock breakdown, plus the Janino
+compiles the run paid for (a codegen cache too small for one cycle
+shows up there as hundreds per batch). Diagnostic only — not part of
+the bench contract."""
 
 from __future__ import annotations
 
@@ -124,6 +126,8 @@ def main() -> None:
             reduce="count",
             key_schema=["string"],
         )
+        compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+        compiles0 = compiles.getCount()
         t0 = time.perf_counter()
         db.append_changes(rows)
         t_append = time.perf_counter() - t0
@@ -131,6 +135,7 @@ def main() -> None:
         q = _watch(db)
         q.awaitTermination()
         wall = time.perf_counter() - t0
+        n_compiles = compiles.getCount() - compiles0
         db.close()
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -143,6 +148,7 @@ def main() -> None:
         print(f"  mark stream_done: +{(t0 + wall) - t_base:.3f}s")
     for k, v in sorted(TIMES.items(), key=lambda kv: -sum(kv[1])):
         print(f"  {k:50s} n={len(v):3d} total={sum(v):7.3f}s max={max(v):.3f}s")
+    print(f"janino compiles (append + watch): {n_compiles}")
     spark.stop()
 
 

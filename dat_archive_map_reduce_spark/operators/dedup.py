@@ -10,25 +10,22 @@ for 100 TB corpora:
   with actual overlap, not |docs|^2.
 - **MinHash + LSH**: per-doc signature folded natively in one narrow
   projection (no Python, no shuffle), banded bucketing, candidate
-  pairs only within equal (band, band-hash) buckets — the classic
+  pairs only within equal (band, bucket) buckets — the classic
   sub-quadratic near-dup path; candidates then verified with exact
   Jaccard.
-- **SimHash**: 64-bit signature; Hamming-≤k pairs found via the
+- **SimHash**: 60-bit signature; Hamming-≤k pairs found via the
   pigeonhole band trick (split signature into k+1 chunks; any pair
   within distance k matches on ≥1 chunk) — again no full cross join.
 
-All signatures are seeded and content-derived (xxhash64 with baked-in
-seed coefficients) so re-runs and retries are deterministic.
+All signatures are content-derived from md5, which every SQL engine
+computes identically, so re-runs and retries are deterministic and
+the DuckDB oracle replays each stage bit-for-bit.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# Mersenne prime modulus for the universal-hash permutations
-_MERSENNE = (1 << 61) - 1
 
 
 # ---------------------------------------------------------------------
@@ -274,104 +271,6 @@ def ngram_jaccard_pairs(
     )
 
 
-# ---------------------------------------------------------------------
-# MinHash + LSH
-# ---------------------------------------------------------------------
-
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_perm: int = 64,
-    shingle_n: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """(id, signature array<long>) — one MinHash signature per doc.
-
-    Fully native AND fully narrow (the same shape as
-    simhash_signatures): per row, shingle hashes come from
-    ``transform(... xxhash64(...))`` and the num_perm mins fold in one
-    higher-order ``aggregate`` whose accumulator is the signature
-    array. Seed-derived (a, b) coefficients are baked into the plan as
-    array literals — no broadcast, no Python workers, no shuffle;
-    signature cost is one pass over each doc's shingles at any scale.
-    Docs shorter than shingle_n hash as one whole-text gram.
-    """
-    # 31-bit coefficients x 32-bit shingle hashes keep every product
-    # under 2^63 — no long overflow under ANSI mode, no need for
-    # wrap-around semantics.
-    rng = np.random.RandomState(seed)
-    a = rng.randint(1, 1 << 31, size=num_perm).tolist()
-    b = rng.randint(0, 1 << 31, size=num_perm).tolist()
-    a_lit = "array(" + ",".join(f"{x}L" for x in a) + ")"
-    b_lit = "array(" + ",".join(f"{x}L" for x in b) + ")"
-    toks = f"split(lower({text_col}), ' ')"
-    expr = F.expr(
-        f"""
-        aggregate(
-          CASE WHEN size({toks}) >= {shingle_n}
-               THEN array_distinct(transform(
-                      sequence(1, size({toks}) - {shingle_n - 1}),
-                      i -> xxhash64(concat_ws(' ', slice({toks}, i, {shingle_n}))) & 4294967295L))
-               ELSE array(xxhash64(concat_ws(' ', {toks})) & 4294967295L)
-          END,
-          array_repeat({_MERSENNE}L, {num_perm}),
-          (acc, h) -> zip_with(acc, sequence(0, {num_perm - 1}),
-            (v, i) -> least(v, pmod({a_lit}[i] * h + {b_lit}[i], {_MERSENNE}L))))
-        """
-    )
-    return df.select(F.col(id_col).alias("id"), expr.alias("signature"))
-
-
-def banded_signatures(
-    signatures: DataFrame, bands: int, num_perm: int
-) -> DataFrame:
-    """(id, band, bucket) rows: hash each signature's r = num_perm/bands
-    slice per band. Two docs collide iff some band's slice matches."""
-    r = num_perm // bands
-    return signatures.select(
-        "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bi: F.struct(
-                    bi.alias("band"),
-                    F.hash(F.slice("signature", bi * r + 1, r)).alias("bucket"),
-                ),
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame, bands: int = 16, *, num_perm: int
-) -> DataFrame:
-    """Band the signatures and emit candidate pairs per equal bucket.
-
-    rows-per-band r = num_perm/bands; two docs collide iff some band's
-    r-slice matches exactly. The bucket join shuffles on
-    (band, band_hash) — sub-quadratic, no cross join anywhere.
-
-    ``num_perm`` is required: a ``first()`` probe of the signature
-    column would force a full evaluation of the signature pipeline
-    before the real job even starts, and every caller knows its own
-    permutation count statically.
-    """
-    banded = banded_signatures(signatures, bands, num_perm)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-
-
 def verify_jaccard_pairs(
     cands: DataFrame,
     df: DataFrame,
@@ -527,46 +426,9 @@ def prefix_filter_candidates(sets: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def minhash_dedup_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: signature -> banded buckets
-    -> candidate pairs -> exact-Jaccard verification (no false
-    positives leave this operator; recall is the LSH S-curve).
-
-    Verification is verify_jaccard_pairs — a direct join of per-doc
-    shingle sets onto the candidate list; at scale it runs over the
-    tiny candidate subset, not the corpus.
-    """
-    # fan_out the INPUT (the signature projection is narrow, so a
-    # single-file input would otherwise fold every signature on one
-    # task), then persist the signatures: the cache is the
-    # materialization barrier that stops projection collapse from
-    # re-evaluating the signature fold inside every downstream
-    # consumer (both self-join sides, band explode). At 100 TB this
-    # materialization is a signatures table on storage; in-session,
-    # memory/disk cache serves the same role.
-    from dat_archive_map_reduce_spark.operators._util import fan_out
-
-    from dat_archive_map_reduce_spark.operators._util import eager_release
-
-    sigs = minhash_signatures(fan_out(df), text_col, id_col, num_perm, shingle_n).persist()
-    # persisted: verification consumes the candidate list twice (the
-    # broadcast id prune and the final pair join). Both released once
-    # the verified pairs materialize (verify_jaccard_pairs returns
-    # them eagerly cached already, so the extra count is free).
-    cands = lsh_candidate_pairs(sigs, bands, num_perm=num_perm).persist()
-    pairs = verify_jaccard_pairs(
-        cands, df, text_col, id_col, n=shingle_n, threshold=threshold
-    )
-    return eager_release(pairs, sigs, cands)
-
+# ---------------------------------------------------------------------
+# MinHash + LSH
+# ---------------------------------------------------------------------
 
 def portable_minhash_pairs(
     df: DataFrame,
@@ -586,20 +448,17 @@ def portable_minhash_pairs(
     the signature slot is the MINIMUM such string over the doc's
     shingle set. md5 produces identical lowercase hex everywhere, and
     min over strings is a total order, so an oracle can replay every
-    stage exactly — unlike ``minhash_dedup_pairs`` (xxhash64 + seeded
-    affine permutations, cheaper per shingle but Spark-specific).
-    Collision probability per slot is still Pr[argmin agrees] =
-    J(a, b): md5 is a fixed pseudo-random order on shingles, the same
-    guarantee the integer family gives. Banding: ``bands`` buckets of
-    r = num_perm/bands concatenated slots; candidates sharing any
-    bucket are verified with exact Jaccard (no false positives leave).
+    stage exactly. Collision probability per slot is Pr[argmin
+    agrees] = J(a, b): md5 is a fixed pseudo-random order on
+    shingles. Banding: ``bands`` buckets of r = num_perm/bands
+    concatenated slots; candidates sharing any bucket are verified
+    with exact Jaccard (no false positives leave).
 
-    Scale shape is identical to the production path: narrow signature
-    pass (one md5 per (slot, shingle)), one shuffle to band buckets,
-    pair explode JVM-side from sorted bucket lists, verification joins
-    only the candidate subset. Costs ~num_perm md5s per shingle, so
-    keep num_perm small (8 slots resolve >= 0.5 Jaccard fine) or pay
-    linearly for sharper S-curves.
+    Scale shape: narrow signature pass (one md5 per (slot, shingle)),
+    one shuffle to band buckets, pair explode JVM-side from sorted
+    bucket lists, verification joins only the candidate subset. Costs
+    ~num_perm md5s per shingle, so keep num_perm small (8 slots
+    resolve >= 0.5 Jaccard fine) or pay linearly for sharper S-curves.
     """
     if num_perm % bands:
         raise ValueError("num_perm must be a multiple of bands")
@@ -613,6 +472,40 @@ def portable_minhash_pairs(
     return eager_release(_verify_pairs_against_sets(cands, sets, threshold), sets)
 
 
+def portable_minhash_sigs(sets: DataFrame, num_perm: int = 8) -> DataFrame:
+    """(id long, signature array<string>) — slot i is the minimum
+    ``md5(i ':' shingle)`` hex string over the doc's shingle set.
+    ``sets`` is shingle_sets output (doc, sh, n_sh); docs shorter than
+    the shingle length have no set and so no signature."""
+    return sets.select(
+        F.col("doc").alias("id"),
+        F.expr(
+            f"transform(sequence(0, {num_perm - 1}), i -> "
+            f"array_min(transform(sh, s -> md5(concat(cast(i AS string), ':', s)))))"
+        ).alias("signature"),
+    )
+
+
+def portable_minhash_bands(
+    signatures: DataFrame, num_perm: int = 8, bands: int = 4
+) -> DataFrame:
+    """(id, band, bucket) rows: band b's bucket is the concatenation of
+    signature slots [b*r, (b+1)*r), r = num_perm/bands. Two docs are
+    LSH candidates iff some band's bucket matches."""
+    if num_perm % bands:
+        raise ValueError("num_perm must be a multiple of bands")
+    r = num_perm // bands
+    return signatures.select(
+        "id",
+        F.explode(
+            F.expr(
+                f"transform(sequence(0, {bands - 1}), b -> struct(b AS band, "
+                f"concat_ws('', slice(signature, b * {r} + 1, {r})) AS bucket))"
+            )
+        ).alias("bb"),
+    ).select("id", "bb.band", "bb.bucket")
+
+
 def portable_minhash_candidates(
     sets: DataFrame,
     num_perm: int = 8,
@@ -620,35 +513,17 @@ def portable_minhash_candidates(
 ) -> DataFrame:
     """The CANDIDATE stage of portable_minhash_pairs alone: banded
     md5-minhash buckets to distinct (id_a, id_b) pairs, NO exact
-    verify — the portable-family twin of the lsh_candidate_pairs /
-    verify_jaccard_pairs split. Use when the caller needs raw LSH
-    detections (e.g. the S-curve recall report, which compares the
-    candidate stage against independently-computed ground truth);
-    pipelines acting on pairs should go through
-    portable_minhash_pairs, whose verify removes false positives.
-    ``sets`` is shingle_sets output (doc, sh, n_sh)."""
-    if num_perm % bands:
-        raise ValueError("num_perm must be a multiple of bands")
-    r = num_perm // bands
-    sig = sets.select(
-        "doc",
-        F.expr(
-            f"transform(sequence(0, {num_perm - 1}), i -> "
-            f"array_min(transform(sh, s -> md5(concat(cast(i AS string), ':', s)))))"
-        ).alias("sig"),
+    verify. Use when the caller needs raw LSH detections (e.g. the
+    S-curve recall report, which compares the candidate stage against
+    independently-computed ground truth); pipelines acting on pairs
+    should go through portable_minhash_pairs, whose verify removes
+    false positives. ``sets`` is shingle_sets output (doc, sh, n_sh)."""
+    banded = portable_minhash_bands(
+        portable_minhash_sigs(sets, num_perm), num_perm, bands
     )
-    banded = sig.select(
-        "doc",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}), b -> struct(b AS band, "
-                f"concat_ws('', slice(sig, b * {r} + 1, {r})) AS bucket))"
-            )
-        ).alias("bb"),
-    ).select("doc", "bb.band", "bb.bucket")
     buckets = (
         banded.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("doc")).alias("ds"))
+        .agg(F.sort_array(F.collect_list("id")).alias("ds"))
         .filter(F.size("ds") >= 2)
     )
     # ordered pairs (ds[i], ds[j]), i < j, exploded JVM-side
@@ -675,8 +550,8 @@ def incremental_minhash_pairs(
     base_sigs: DataFrame | None,
     text_col: str,
     id_col: str,
-    num_perm: int = 64,
-    bands: int = 16,
+    num_perm: int = 8,
+    bands: int = 4,
     shingle_n: int = 3,
     threshold: float = 0.5,
 ) -> tuple[DataFrame, DataFrame]:
@@ -686,45 +561,44 @@ def incremental_minhash_pairs(
 
     This is how MinHash dedup runs operationally at 100 TB: signatures
     are computed once per document and PERSISTED (``base_sigs`` — e.g.
-    a VersionedTable the caller appends each batch's signatures to);
-    each incoming batch only pays signature cost for its own docs plus
-    one bucket join against the base's banded signatures. Returns
-    ``(pairs, new_sigs)`` — append ``new_sigs`` to the signature table
-    after the batch commits. Batch-split invariance: processing a
-    corpus in any batch order yields exactly the union of the one-shot
-    ``minhash_dedup_pairs`` output, because signatures, banding, and
-    verification are all per-doc deterministic (tested).
+    a log the caller appends each batch's ``(id, signature)`` rows
+    to); each incoming batch only pays signature cost for its own docs
+    plus one bucket join of its bands against new + base bands.
+    Returns ``(pairs, new_sigs)`` — append ``new_sigs`` to the
+    signature table after the batch commits. Batch-split invariance:
+    processing a corpus in any batch order yields exactly the union of
+    the one-shot ``portable_minhash_pairs`` output, because
+    signatures, banding, and verification are all per-doc
+    deterministic (tested).
     """
-    from dat_archive_map_reduce_spark.operators._util import fan_out
-
-    new_sigs = minhash_signatures(
-        fan_out(new_docs), text_col, id_col, num_perm, shingle_n
+    new_sigs = portable_minhash_sigs(
+        shingle_sets(new_docs, text_col, id_col, shingle_n), num_perm
     ).persist()
-    nb = banded_signatures(new_sigs, bands, num_perm)
-    within = lsh_candidate_pairs(new_sigs, bands, num_perm=num_perm)
+    nb = portable_minhash_bands(new_sigs, num_perm, bands)
     if base_sigs is not None:
-        bb = banded_signatures(base_sigs, bands, num_perm)
-        a, b = nb.alias("a"), bb.alias("b")
-        cross = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.id") != F.col("b.id")),
-            )
-            .select(
-                F.least("a.id", "b.id").alias("id_a"),
-                F.greatest("a.id", "b.id").alias("id_b"),
-            )
-            .distinct()
-        )
-        cands = within.union(cross).distinct()
+        every = nb.unionByName(portable_minhash_bands(base_sigs, num_perm, bands))
         corpus = base_docs.select(id_col, text_col).union(
             new_docs.select(id_col, text_col)
         )
     else:
-        cands = within
+        every = nb
         corpus = new_docs.select(id_col, text_col)
+    # one bucket join of the new bands against new + base bands finds
+    # the within-batch and the cross pairs together
+    a, b = nb.alias("a"), every.alias("b")
+    cands = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.id") != F.col("b.id")),
+        )
+        .select(
+            F.least("a.id", "b.id").alias("id_a"),
+            F.greatest("a.id", "b.id").alias("id_b"),
+        )
+        .distinct()
+    )
     from dat_archive_map_reduce_spark.operators._util import eager_release
 
     cands = cands.persist()
@@ -743,52 +617,6 @@ def incremental_minhash_pairs(
 # SimHash
 # ---------------------------------------------------------------------
 
-def simhash_dedup_pairs(
-    df: DataFrame, text_col: str, id_col: str, max_distance: int = 3
-) -> DataFrame:
-    """Full SimHash near-dup pipeline: fan out the input (the signature
-    fold is narrow — a single-file input would run it on one task),
-    persist the signatures (the barrier that keeps the self-join from
-    re-evaluating the fold on both sides), then pigeonhole pair
-    search. Mirrors minhash_dedup_pairs' materialization discipline."""
-    from dat_archive_map_reduce_spark.operators._util import fan_out
-
-    from dat_archive_map_reduce_spark.operators._util import eager_release
-
-    sigs = simhash_signatures(fan_out(df), text_col, id_col).persist()
-    return eager_release(simhash_near_pairs(sigs, max_distance=max_distance), sigs)
-
-
-def simhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """64-bit SimHash per doc: sign of the token-hash bit-vote sum.
-
-    Fully native AND fully narrow — no Python, no explode, no shuffle:
-    token hashes come from ``transform(split(text), t -> xxhash64(t))``
-    and the 64 bit-votes fold in one higher-order ``aggregate`` whose
-    accumulator is the vote array, all inside a single projection. The
-    previous formulation (explode tokens -> groupBy(id) with 64 sum
-    aggregates) shuffled every token and paid a 64-buffer
-    HashAggregate; this one is 6x faster at sf0.1 and embarrassingly
-    parallel at any scale — signature cost is exactly one pass over
-    each document's tokens.
-    """
-    expr = F.expr(
-        """
-        aggregate(
-          zip_with(
-            aggregate(
-              transform(split(lower({text}), ' '), t -> xxhash64(t)),
-              array_repeat(0L, 64),
-              (acc, h) -> zip_with(acc, sequence(0L, 63L),
-                (v, i) -> v + (CAST(shiftrightunsigned(h, CAST(i AS INT)) & 1 AS BIGINT) * 2 - 1))),
-            sequence(0L, 63L),
-            (v, i) -> IF(v > 0, shiftleft(1L, CAST(i AS INT)), 0L)),
-          0L, (a, x) -> a | x)
-        """.format(text=text_col)
-    )
-    return df.select(F.col(id_col).alias("id"), expr.alias("simhash"))
-
-
 def portable_simhash_pairs(
     df: DataFrame, text_col: str, id_col: str, max_distance: int = 3
 ) -> DataFrame:
@@ -800,14 +628,12 @@ def portable_simhash_pairs(
     weighting matters: on a corpus drawn from a small shared
     vocabulary, distinct-token majorities converge to the vocabulary's
     own majority bits and every signature collapses toward one point;
-    term-frequency votes preserve per-document variation (the same
-    weighting simhash_dedup_pairs uses). Every stage —
-    signatures, pigeonhole chunk buckets, Hamming verify — replays
+    term-frequency votes preserve per-document variation. Every stage
+    — signatures, pigeonhole chunk buckets, Hamming verify — replays
     bit-for-bit in any SQL engine, so the pipeline can sit behind the
-    exact-hash oracle gate. Proof twin of simhash_dedup_pairs
-    (xxhash64 + native shifts, the cheaper production path).
+    exact-hash oracle gate.
 
-    Same scale shape: the signature fold is narrow (one md5 per
+    Scale shape: the signature fold is narrow (one md5 per
     distinct token, bit extraction from the SAME hex string via the
     vote accumulator), pair search is the pigeonhole chunk join —
     max_distance+1 chunks of 60/(max_distance+1) bits; any pair within

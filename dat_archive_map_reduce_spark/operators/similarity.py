@@ -1,15 +1,17 @@
 """Similarity search over embedding columns (array<float>).
 
 Extensions beyond the reference (SURVEY.md §2.2): brute-force cosine
-top-k as the exact baseline, plus two sub-linear paths for scale —
-random-hyperplane LSH bucketing and an IVF (inverted-file) coarse
-quantizer. At 100 TB the exact path is the per-partition kernel; the
-index paths bound how many partitions a query touches.
+top-k as the exact baseline, plus sub-linear paths for scale —
+sign-LSH bucketing, an IVF (inverted-file) coarse quantizer and
+product quantization with asymmetric-distance (PQ/ADC) scans. At
+100 TB the exact path is the per-partition kernel; the index paths
+bound how many partitions a query touches.
 
 Vector math uses native higher-order functions (zip_with + aggregate)
-— JVM-side, no Python in the hot loop. The Pandas-UDF variant
-(`cosine_topk_pandas`) exists for wide batches where one numpy matmul
-per Arrow batch beats per-row expression eval.
+— JVM-side, no Python in the hot loop. LSH planes come from md5 and
+the portable IVF/PQ codebooks from corpus data points, so those paths
+replay bit-for-bit under the SQL oracle; the seeded IVF path
+(train_centroids/ivf_topk) is recall-tested instead.
 """
 
 from __future__ import annotations
@@ -80,8 +82,8 @@ def knn_join(
     Contract: the QUERY side must be broadcastable (say <= 10^4-10^5
     rows); work is |queries| x |corpus|, spread across corpus
     partitions. When both sides are large this degenerates to all-pairs
-    — use ann_cosine_near_pairs / lsh_topk / ivf_topk to prune
-    candidates first and keep this as the per-candidate scorer."""
+    — use ann_cosine_near_pairs / portable_lsh_topk / ivf_topk to
+    prune candidates first and keep this as the per-candidate scorer."""
     from pyspark.sql import Window
 
     q = queries.select(
@@ -103,110 +105,9 @@ def knn_join(
     )
 
 
-def cosine_topk_pandas(
-    corpus: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Same contract as brute_force_topk but the per-batch kernel is one
-    numpy matmul (Arrow in, Arrow out). Wins when dim is large."""
-    qv = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(qv)
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("cos_sim", T.DoubleType(), True),
-        ]
-    )
-
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            sims = (m @ qv) / (np.linalg.norm(m, axis=1) * qn)
-            # partial top-k per batch: only k rows leave each worker
-            idx = np.argsort(-sims)[:k]
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy()[idx], "cos_sim": sims[idx]})
-
-    return (
-        corpus.select(id_col, vec_col)
-        .mapInPandas(_score, schema=out_schema)
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
-    )
-
-
 # ---------------------------------------------------------------------
-# LSH (random hyperplanes) — the scale path
+# sign-LSH (md5-derived Rademacher hyperplanes) — the scale path
 # ---------------------------------------------------------------------
-
-def hyperplane_signatures(
-    corpus: DataFrame,
-    dim: int,
-    n_planes: int = 16,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Sign-bit signature per vector against seeded random hyperplanes.
-
-    The hyperplane matrix is derived from the seed on each worker (no
-    broadcast needed); signature = packed int of sign bits, computed in
-    one numpy matmul per Arrow batch.
-    """
-    rng = np.random.RandomState(seed)
-    planes = rng.normal(size=(n_planes, dim))
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("bucket", T.LongType(), False),
-        ]
-    )
-
-    def _sig(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            bits = (m @ planes.T) > 0
-            weights = (1 << np.arange(n_planes, dtype=np.int64))
-            buckets = (bits * weights[None, :]).sum(axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "bucket": buckets})
-
-    return corpus.select(id_col, vec_col).mapInPandas(_sig, schema=out_schema)
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    query_vec: Sequence[float],
-    dim: int,
-    k: int = 10,
-    n_planes: int = 10,
-    probe_hamming: int = 2,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Approximate top-k: score only vectors whose hyperplane bucket is
-    within `probe_hamming` bits of the query's bucket (multi-probe).
-
-    Candidate filter is a native bit_count(xor) <= h predicate over the
-    precomputable signature column — at scale the signatures table is
-    tiny and bucket-bucketed, so a query touches a small candidate set
-    instead of the full corpus.
-    """
-    rng = np.random.RandomState(seed)
-    planes = rng.normal(size=(n_planes, dim))
-    qv = np.asarray(query_vec, dtype=np.float64)
-    qbits = (planes @ qv) > 0
-    qbucket = int(((1 << np.arange(n_planes, dtype=np.int64)) * qbits).sum())
-
-    sigs = hyperplane_signatures(corpus, dim, n_planes, seed, vec_col, id_col)
-    cands = sigs.filter(
-        F.bit_count(F.col("bucket").bitwiseXOR(F.lit(qbucket))) <= probe_hamming
-    ).select(id_col)
-    pruned = corpus.join(cands, id_col, "left_semi")
-    return brute_force_topk(pruned, query_vec, k, vec_col, id_col)
-
 
 def _portable_planes(num_planes: int, dim: int) -> list[list[float]]:
     """Rademacher (+/-1) hyperplanes derived from md5(p ':' d) — entry
@@ -253,6 +154,16 @@ def _empty_batch_result(df: DataFrame, out_col: str) -> DataFrame:
     return df.sparkSession.createDataFrame(
         [], f"qid long, vec_id long, {out_col} double"
     )
+
+
+def _empty_topk(corpus: DataFrame, id_col: str, out_col: str) -> DataFrame:
+    """Typed empty (id, <score>) result for a single-query serving call
+    whose codebook fetch found no rows (empty corpus) — an empty
+    answer, not a crash. limit(0) plans as an empty local relation,
+    so no job runs."""
+    return corpus.select(
+        F.col(id_col), F.lit(None).cast("double").alias(out_col)
+    ).limit(0)
 
 
 def _portable_sig_expr(num_planes: int, dim: int, vec_col: str) -> Column:
@@ -342,17 +253,16 @@ def portable_lsh_topk(
     """Sign-LSH approximate top-k with ENGINE-PORTABLE hyperplanes, so
     the whole path — plane derivation, signatures, multi-probe
     candidate filter, exact-cosine rerank — replays bit-for-bit in any
-    SQL engine with md5. Proof twin of lsh_topk (Gaussian planes from
-    a seeded RNG — not reproducible outside numpy).
+    SQL engine with md5.
 
     Determinism requires matching FLOAT SUMMATION ORDER, not just the
     planes: the projection folds dimension-by-dimension left-to-right
     (Spark `aggregate`, oracle `list_reduce`, and the driver-side
     query-signature loop below all fold identically), and +/-1
-    multiplies are exact, so the sign test agrees everywhere. Same
-    scale shape as lsh_topk: narrow signature scan, native
-    bit_count(xor) probe predicate, TakeOrderedAndProject rerank over
-    the candidate subset only.
+    multiplies are exact, so the sign test agrees everywhere. Scale
+    shape: narrow signature scan, native bit_count(xor) probe
+    predicate, TakeOrderedAndProject rerank over the candidate subset
+    only.
     """
     dim = len(query_vec)
     planes = _portable_planes(num_planes, dim)
@@ -430,6 +340,8 @@ def portable_ivf_topk(
         .select(id_col, vec_col)
         .collect()
     }
+    if not rows:  # empty corpus: empty answer, not a crash
+        return _empty_topk(corpus, id_col, "cos_sim")
     cents = [(cid, rows[cid]) for cid in sorted(rows)]
 
     def _py_cos(a: Sequence[float], b: Sequence[float]) -> float:
@@ -660,7 +572,7 @@ def signbit_chunk_codes(
     Pigeonhole: two signatures within Hamming distance < n_chunks agree
     on at least one full chunk, so candidate generation is an equi-join
     per chunk — no cross join, no random state. Axis-aligned planes
-    (instead of the seeded gaussian ones in hyperplane_signatures) keep
+    (instead of the md5-derived ones in _portable_planes) keep
     the whole pipeline native-column AND oracle-expressible in SQL.
     """
     bits_per = n_bits // n_chunks
@@ -761,8 +673,8 @@ def cosine_near_pairs(
     Replication factor B is the knob: shuffle volume is N*B rows while
     tile count is B(B+1)/2; pick B ~ sqrt(desired parallelism). At
     100 TB you don't run exact all-pairs at all — LSH/IVF candidates
-    first (lsh_topk/ivf_topk), then THIS as the verify kernel on the
-    pruned set.
+    first (portable_lsh_topk/ivf_topk), then THIS as the verify
+    kernel on the pruned set.
 
     Output: (id_a, id_b, cos_sim), id_a < id_b, exact doubles.
     """
@@ -850,56 +762,6 @@ def sqdist(a: Column, b: Column) -> Column:
     )
 
 
-def pq_train(
-    corpus: DataFrame,
-    m: int = 4,
-    k: int = 16,
-    sample_n: int = 4096,
-    iters: int = 5,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> np.ndarray:
-    """Train PQ codebooks — per-subspace k-means over an ordered
-    driver-side sample (same bounded-fetch recipe as train_centroids,
-    same orderBy(id) determinism). Returns shape (m, k, d/m).
-
-    PQ is the 100 TB ANN storage story: d-dim float vectors compress
-    to m single-byte codes (here 64 floats = 256 bytes -> 4 bytes),
-    and the ADC scan reads ONLY the codes table — ~64x less I/O than
-    a brute-force scan — while distances stay within quantization
-    error. IVF prunes WHICH vectors to score; PQ shrinks WHAT a score
-    costs; they compose (IVF-PQ is exactly FAISS's default recipe).
-    """
-    sample = np.stack(
-        [
-            r[vec_col]
-            for r in corpus.select(id_col, vec_col)
-            .orderBy(id_col)
-            .limit(sample_n)
-            .collect()
-        ]
-    ).astype(np.float64)
-    d = sample.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    dsub = d // m
-    rng = np.random.RandomState(seed)
-    books = np.empty((m, k, dsub))
-    for mi in range(m):
-        sub = sample[:, mi * dsub : (mi + 1) * dsub]
-        cents = sub[rng.choice(len(sub), size=k, replace=False)].copy()
-        for _ in range(iters):
-            d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-            assign = d2.argmin(1)
-            for c in range(k):
-                members = sub[assign == c]
-                if len(members):
-                    cents[c] = members.mean(0)
-        books[mi] = cents
-    return books
-
-
 def _pq_code_exprs(codebooks, vec_col: str) -> list[Column]:
     """One argmin-code Column per subspace: array_min over
     struct(dist, code) — struct comparison minimizes dist first, code
@@ -911,8 +773,7 @@ def _pq_code_exprs(codebooks, vec_col: str) -> list[Column]:
     fold appears once per subspace in the plan, so codegen size is
     O(m), not O(m*k) (the per-centroid-expression form compiled a
     ~1.4 MiB stage at m=8 x k=32). Distance arithmetic is the same
-    ordered zip_with fold, so codes are bit-identical either way
-    (pinned by test_pq_encode_pandas_equals_native)."""
+    ordered zip_with fold, so codes are bit-identical either way."""
     m, k, dsub = codebooks.shape
     v = F.col(vec_col).cast("array<double>")
     codes = []
@@ -972,21 +833,12 @@ def pq_adc_topk(
     query_vec,
     k: int = 10,
     id_col: str = "vec_id",
-    corpus: DataFrame | None = None,
-    rerank: int = 0,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Asymmetric-distance top-k over a PQ codes table: build the
     (m x k) query-to-centroid distance table driver-side, bake it as
     literals, and score each row as the m-term ordered sum of
     element_at lookups — a narrow scan of the codes table with zero
-    shuffle before TakeOrderedAndProject.
-
-    With ``rerank > 0`` (requires ``corpus``), the top ``rerank`` ADC
-    candidates are exact-cosine rescored and the best ``k`` returned —
-    the standard two-stage serving shape: cheap approximate scan over
-    everything, exact math over a constant-size shortlist.
-    """
+    shuffle before TakeOrderedAndProject."""
     tables = _py_adc_table(codebooks, query_vec)
     adc = None
     for mi, row in enumerate(tables):
@@ -995,21 +847,7 @@ def pq_adc_topk(
         )
         adc = term if adc is None else adc + term
     scored = codes.select(F.col(id_col), adc.alias("adc_dist"))
-    if not rerank:
-        return scored.orderBy(F.asc("adc_dist"), F.asc(id_col)).limit(k)
-    if corpus is None:
-        raise ValueError("rerank requires the raw corpus")
-    short = scored.orderBy(F.asc("adc_dist"), F.asc(id_col)).limit(rerank)
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        corpus.join(F.broadcast(short.select(id_col)), id_col, "left_semi")
-        .select(
-            F.col(id_col),
-            cosine(F.col(vec_col).cast("array<double>"), qlit).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
-    )
+    return scored.orderBy(F.asc("adc_dist"), F.asc(id_col)).limit(k)
 
 
 def portable_pq_adc_topk(
@@ -1026,18 +864,19 @@ def portable_pq_adc_topk(
     given ids (k = len(centroid_ids)), so — like portable_ivf_topk —
     training disappears and every stage (encode argmin, ADC table,
     ordered m-term sum, tie-breaks) replays bit-for-bit in a SQL
-    oracle. Proof twin of pq_train/pq_encode/pq_adc_topk, whose
-    k-means codebooks no oracle can reproduce (BLAS summation order).
+    oracle.
 
-    Scale shape is the production one: codebook = bounded driver
-    fetch baked as literals; encode = narrow map; ADC = codes-only
-    scan + TakeOrderedAndProject."""
+    Scale shape: codebook = bounded driver fetch baked as literals;
+    encode = narrow map (pq_encode); ADC = codes-only scan +
+    TakeOrderedAndProject (pq_adc_topk)."""
     rows = {
         r[id_col]: [float(x) for x in r[vec_col]]
         for r in corpus.filter(F.col(id_col).isin(list(centroid_ids)))
         .select(id_col, vec_col)
         .collect()
     }
+    if not rows:  # empty corpus: empty answer, not a crash
+        return _empty_topk(corpus, id_col, "adc_dist")
     ordered = [rows[cid] for cid in sorted(rows)]
     d = len(ordered[0])
     dsub = d // m
@@ -1128,55 +967,6 @@ def portable_pq_adc_batch_topk(
         adc = adc + F.element_at(F.col(f"qd{mi}"), F.col(f"c{mi}"))
     scored = cand.select("qid", "vec_id", adc.alias("_adc"))
     return _per_query_topk(scored, "_adc", k, "adc_dist", ascending=True)
-
-
-def l2_normalized(
-    corpus: DataFrame, vec_col: str = "embedding"
-) -> DataFrame:
-    """Replace ``vec_col`` with its unit-L2 version (native transform,
-    map-only). PQ/ADC quantizes SQUARED-L2; on unit vectors
-    ||a-b||^2 = 2 - 2*cos(a,b), so L2-trained codebooks rank exactly
-    like cosine — normalize first whenever the serving metric is
-    cosine (the standard FAISS METRIC_INNER_PRODUCT recipe)."""
-    v = F.col(vec_col).cast("array<double>")
-    return corpus.withColumn(
-        vec_col, F.transform(v, lambda x: x / norm(v))
-    )
-
-
-def pq_encode_pandas(
-    corpus: DataFrame,
-    codebooks: np.ndarray,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Production PQ encode: one numpy distance matrix + argmin per
-    (Arrow batch, subspace) instead of the expression-tree encode.
-    The native `pq_encode` stays the portable/oracle path, but its
-    codegen cost is quadratic-ish in m*k (m=8 x k=32 compiled a
-    ~1.4 MiB stage and ran ~10x slower than this kernel at sf0.1) —
-    for real codebook sizes the vectorized Arrow island is the right
-    trade, exactly like `cosine_topk_pandas` vs the fused expression.
-    Ties break to the smaller code (numpy argmin is first-minimum),
-    matching the native encode's struct ordering."""
-    m, k, dsub = codebooks.shape
-    books = codebooks.astype(np.float64)
-    out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType(), False)]
-        + [T.StructField(f"c{mi}", T.IntegerType(), False) for mi in range(m)]
-    )
-
-    def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            out = {id_col: pdf[id_col].to_numpy()}
-            for mi in range(m):
-                sub = mat[:, mi * dsub : (mi + 1) * dsub]
-                d2 = ((sub[:, None, :] - books[mi][None, :, :]) ** 2).sum(-1)
-                out[f"c{mi}"] = d2.argmin(axis=1).astype(np.int32)
-            yield pd.DataFrame(out)
-
-    return corpus.select(id_col, vec_col).mapInPandas(_enc, schema=out_schema)
 
 
 def nearest_seed_assignment(

@@ -1070,17 +1070,6 @@ def dedup_ngram_jaccard_uncapped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
 
 
-@query("dedup_minhash_lsh")  # no oracle: seeded-hash pipeline, not SQL-expressible
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash(64)+LSH(16 bands) near-dup pairs, exact-Jaccard-verified.
-    tests/test_extensions.py asserts recall vs the exact pair set."""
-    from dat_archive_map_reduce_spark.operators.dedup import minhash_dedup_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    pairs = minhash_dedup_pairs(d, "text", "doc_id", num_perm=64, bands=16, threshold=0.5)
-    return pairs.select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
-
-
 @query(
     "dedup_minhash_portable",
     oracle="""
@@ -1122,9 +1111,8 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     (signature slot i = min md5(i ':' shingle) hex string), so the
     ENTIRE LSH pipeline — signatures, banding, candidate buckets,
     exact-Jaccard verify — replays bit-for-bit under the SQL oracle.
-    Proof twin of dedup_minhash_lsh: that one keeps the cheaper
-    xxhash64/affine family (engine-specific, recall-tested); this one
-    puts the same pipeline shape under the hard hash gate."""
+    The only MinHash family in the engine: the incremental and
+    streaming near-dup ingest band with the same signatures."""
     from dat_archive_map_reduce_spark.operators.dedup import portable_minhash_pairs
 
     d = _t(spark, sf_dir, "documents")
@@ -1177,22 +1165,11 @@ def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit SimHash at Hamming distance <= 3 built on an
     engine-portable hash (md5-nibble bit votes, majority rule), so
     signatures, pigeonhole chunk buckets, and the Hamming verify all
-    replay bit-for-bit under the SQL oracle. Proof twin of
-    dedup_simhash (xxhash64 + native shifts — the production path)."""
+    replay bit-for-bit under the SQL oracle."""
     from dat_archive_map_reduce_spark.operators.dedup import portable_simhash_pairs
 
     d = _t(spark, sf_dir, "documents")
     return portable_simhash_pairs(d, "text", "doc_id", max_distance=3)
-
-
-@query("dedup_simhash")  # no oracle: xxhash64-seeded signatures
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash-64 near-dup pairs at Hamming distance <= 3 via the
-    pigeonhole chunk self-join (no cross join)."""
-    from dat_archive_map_reduce_spark.operators.dedup import simhash_dedup_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    return simhash_dedup_pairs(d, "text", "doc_id", max_distance=3)
 
 
 @query(
@@ -1512,8 +1489,7 @@ def ann_lsh_portable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH approximate top-10 with md5-derived Rademacher planes:
     the plane matrix, signatures, multi-probe filter (Hamming <= 2),
     and exact-cosine rerank all replay bit-for-bit under the SQL
-    oracle — the hash-gated proof twin of ann_lsh_topk (Gaussian
-    planes, recall-tested only)."""
+    oracle."""
     from dat_archive_map_reduce_spark.operators.similarity import portable_lsh_topk
 
     e = _t(spark, sf_dir, "embeddings")
@@ -1580,19 +1556,6 @@ def ann_lsh_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe_hamming=2,
         dim=64,
     )
-
-
-@query("ann_lsh_topk")  # no oracle: seeded hyperplanes, approximate by design
-def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-10 via random-hyperplane LSH with multi-probe;
-    tests assert recall vs brute force."""
-    from dat_archive_map_reduce_spark.operators.similarity import lsh_topk
-
-    e = _t(spark, sf_dir, "embeddings")
-    qvec = e.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
-    return lsh_topk(
-        e.filter(F.col("vec_id") != 0), qvec, dim=len(qvec), k=10, n_planes=8, probe_hamming=4
-    ).select("vec_id", F.round("cos_sim", 4).alias("cos_sim"))
 
 
 # =====================================================================
@@ -5457,9 +5420,8 @@ def ann_pq_adc_portable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (subspace mi's centroids = the mi-th 16-dim subvectors of corpus
     rows 1-16; m=4 subspaces over the 64-dim embeddings): encode
     argmin, the (m x k) query distance table, the ordered m-term ADC
-    sum, and both tie-breaks replay bit-for-bit under the SQL oracle —
-    the hash-gated proof twin of ann_pq_topk (k-means codebooks,
-    recall-tested only). PQ is the 100 TB ANN storage story: the scan
+    sum, and both tie-breaks replay bit-for-bit under the SQL oracle.
+    PQ is the 100 TB ANN storage story: the scan
     reads 4 small-int codes per vector instead of 64 floats (~64x
     less I/O), then TakeOrderedAndProject."""
     from dat_archive_map_reduce_spark.operators.similarity import portable_pq_adc_topk
@@ -5546,41 +5508,6 @@ def ann_pq_adc_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         centroid_ids=tuple(range(4, 20)),
         k=10,
     )
-
-
-@query("ann_pq_topk")  # no oracle: k-means codebooks (BLAS summation order)
-def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production PQ serving shape: train per-subspace k-means
-    codebooks on an ordered sample (deterministic, like
-    train_centroids), encode the corpus to an 8-code table (m=8
-    subspaces x 32 codes = 40 bits/vector, ~13x less scan I/O than
-    the raw floats; map-only, narrow), ADC-scan the codes for a
-    100-candidate shortlist, then exact-cosine rerank to top 10 —
-    cheap approximate math over everything, exact math over a
-    constant-size shortlist. Recall vs brute force is pinned at 10/10
-    on the test corpus (tests/test_extensions.py)."""
-    from dat_archive_map_reduce_spark.operators.similarity import (
-        pq_adc_topk,
-        pq_encode_pandas,
-        pq_train,
-    )
-
-    from dat_archive_map_reduce_spark.operators.similarity import l2_normalized
-
-    e = _t(spark, sf_dir, "embeddings")
-    qvec = e.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
-    corpus = e.filter(F.col("vec_id") != 0)
-    # cosine serving -> L2-normalize before quantizing (unit-vector
-    # L2 ranks exactly like cosine; FAISS inner-product recipe)
-    unit = l2_normalized(e)
-    nq = sum(float(x) * float(x) for x in qvec) ** 0.5
-    qunit = [float(x) / nq for x in qvec]
-    books = pq_train(unit, m=8, k=32, iters=5, seed=42)
-    codes = pq_encode_pandas(unit.filter(F.col("vec_id") != 0), books)
-    top = pq_adc_topk(
-        codes, books, qunit, k=10, corpus=corpus, rerank=100
-    )
-    return top.select("vec_id", F.round("cos_sim", 4).alias("cos_sim"))
 
 
 @query(
@@ -11902,10 +11829,6 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
 NO_ORACLE_TWINS: "dict[str, str]" = {
     "ann_ivf_topk": "ann_ivf_portable_topk",
     "approx_distinct": "approx_distinct_portable",
-    "dedup_minhash_lsh": "dedup_minhash_portable",
-    "dedup_simhash": "dedup_simhash_portable",
-    "ann_lsh_topk": "ann_lsh_portable_topk",
-    "ann_pq_topk": "ann_pq_adc_portable_topk",
     # the BPE loop's oracle-gated single iteration is the twin for both
     # the full training loop and the train-then-serve composition
     "corpus_bpe_train": "corpus_bpe_merge_step",
@@ -15620,8 +15543,8 @@ def _reorder_registry() -> None:
     )
     slot_holder = no_oracle_rank[0] if no_oracle_rank else None
     # the slot-holder's hash-green portable twin must land in the SAME
-    # driver window (r13 verdict #4: CORRECTNESS_r13 carried the weak
-    # dedup_simhash row without its twin's green row, so the
+    # driver window (r13 verdict #4: CORRECTNESS_r13 carried a weak
+    # no-oracle row without its twin's green row, so the
     # driver-facing artifact could not prove the twin discipline on
     # its own) — the pair is placed adjacently, or the slot defers to
     # the next rotation when fewer than two seats remain

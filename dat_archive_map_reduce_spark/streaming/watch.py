@@ -333,19 +333,20 @@ def streaming_neardup_ingest(
     schema,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_perm: int = 64,
-    bands: int = 16,
+    num_perm: int = 8,
+    bands: int = 4,
     threshold: float = 0.5,
 ) -> None:
     """Continuous near-dup ingestion: stream document batches from a
     parquet directory, check each micro-batch against the ACCUMULATED
-    corpus via incremental MinHash (operators/dedup.py::
+    corpus via incremental md5-portable MinHash (operators/dedup.py::
     incremental_minhash_pairs), append verified pairs to ``pairs_out``
     and the batch's signatures + docs to the state tables.
 
     State layout under ``state_root``:
-      - ``sigs``: AppendOnlyLog of (id, signature) — banded per batch,
-        never recomputed; the base side of every bucket join
+      - ``sigs``: AppendOnlyLog of (id long, signature array<string>)
+        — banded per batch, never recomputed; the base side of every
+        bucket join
       - ``docs``: AppendOnlyLog of (id, text) — verification corpus
         (at 100 TB this is the main table itself, not a copy)
     Exactly-once: the stream checkpoint makes batch replay idempotent
@@ -363,7 +364,7 @@ def streaming_neardup_ingest(
     sig_schema = T.StructType(
         [
             T.StructField("id", T.LongType(), False),
-            T.StructField("signature", T.ArrayType(T.LongType()), False),
+            T.StructField("signature", T.ArrayType(T.StringType()), False),
         ]
     )
     doc_schema = T.StructType(

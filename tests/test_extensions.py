@@ -27,27 +27,9 @@ def embeddings(spark):
     return load_table(spark, SF, "embeddings").cache()
 
 
-def test_minhash_lsh_recall(documents):
-    """LSH candidates must recover >=80% of true jaccard>=0.5 pairs
-    (16 bands x 4 rows: collision prob at s=0.5 is ~0.67 per band,
-    ~1.0 overall)."""
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.ngram_jaccard_pairs(documents, "text", "doc_id", 3, 0.5).collect()
-    }
-    found = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.minhash_dedup_pairs(documents, "text", "doc_id").collect()
-    }
-    assert found <= exact  # verified pipeline emits no false positives
-    if exact:
-        assert len(found & exact) / len(exact) >= 0.8
-
-
 def test_portable_minhash_recall_and_no_false_positives(documents):
-    """The md5-string MinHash family (the oracle-replayable twin of
-    minhash_dedup_pairs) obeys the same LSH contract: verified output
-    is a subset of the exact jaccard>=0.5 pairs, with high recall
+    """The md5-string MinHash family obeys the LSH contract: verified
+    output is a subset of the exact jaccard>=0.5 pairs, with high recall
     (4 bands x 2 rows: collision prob at s=0.5 is 1-(1-0.25)^4 ~ 0.68
     per true pair, but true pairs here sit well above threshold)."""
     exact = {
@@ -63,25 +45,12 @@ def test_portable_minhash_recall_and_no_false_positives(documents):
         assert len(found & exact) / len(exact) >= 0.8
 
 
-def test_simhash_no_false_positives(documents):
-    sigs = dedup.simhash_signatures(documents, "text", "doc_id")
-    pairs = dedup.simhash_near_pairs(sigs, max_distance=3).collect()
-    for r in pairs:
-        assert r["hamming"] <= 3
-    # identical docs must collide at distance 0
-    dup = documents.limit(1).union(documents.limit(1)).withColumn(
-        "doc_id", F.monotonically_increasing_id()
-    )
-    sigs2 = dedup.simhash_signatures(dup, "text", "doc_id").collect()
-    assert sigs2[0]["simhash"] == sigs2[1]["simhash"]
-
-
 def test_portable_simhash_contract(spark, documents):
-    """The md5-vote SimHash twin obeys the SimHash contract: verified
+    """The md5-vote SimHash obeys the SimHash contract: verified
     distances respect the bound, identical docs collide at distance 0,
-    and the pair count stays in the same regime as the xxhash path
-    (signatures must NOT collapse to one point — the distinct-token
-    formulation did, emitting thousands of spurious pairs)."""
+    and the pair count stays small (signatures must NOT collapse to
+    one point — the distinct-token formulation did, emitting thousands
+    of spurious pairs)."""
     pairs = dedup.portable_simhash_pairs(documents, "text", "doc_id").collect()
     for r in pairs:
         assert r["hamming"] <= 3
@@ -116,31 +85,14 @@ def test_exact_dedup_counts(spark):
     assert out == {1: 2, 3: 1}
 
 
-def test_lsh_topk_recall(embeddings):
-    """Multi-probe hyperplane LSH recall on RANDOM 64-dim vectors.
-
-    Random data is the documented worst case for signed random
+def test_portable_lsh_topk_recall(embeddings):
+    """Multi-probe sign LSH with md5-Rademacher planes on RANDOM
+    64-dim vectors, the documented worst case for signed random
     projections: the true top-10 sit at cosine ~0.5 (60 deg), so
     per-plane agreement is only ~2/3 and deep multi-probe is needed.
-    Empirically (seed=42): planes=8/probe=4 -> 6/10 recall scanning
-    ~64% of the corpus. Real embedding corpora (clustered) sit far up
-    the S-curve. We pin >=4/10 as the regression floor."""
-    qvec = embeddings.filter(F.col("vec_id") == 0).first()["embedding"]
-    corpus = embeddings.filter(F.col("vec_id") != 0)
-    exact = [r["vec_id"] for r in similarity.brute_force_topk(corpus, qvec, k=10).collect()]
-    approx = [
-        r["vec_id"]
-        for r in similarity.lsh_topk(
-            corpus, qvec, dim=len(qvec), k=10, n_planes=8, probe_hamming=4
-        ).collect()
-    ]
-    assert len(set(approx) & set(exact)) >= 4
-
-
-def test_portable_lsh_topk_recall(embeddings):
-    """The md5-Rademacher-plane twin meets the same recall floor as
-    the Gaussian-plane path on random 64-dim vectors (worst case for
-    sign LSH), and returns candidates ranked by exact cosine."""
+    Real embedding corpora (clustered) sit far up the S-curve. Pins
+    >=4/10 recall as the regression floor, and candidates ranked by
+    exact cosine."""
     qvec = embeddings.filter(F.col("vec_id") == 0).first()["embedding"]
     corpus = embeddings.filter(F.col("vec_id") != 0)
     exact = [r["vec_id"] for r in similarity.brute_force_topk(corpus, qvec, k=10).collect()]
@@ -176,16 +128,6 @@ def test_portable_ivf_topk_recall(embeddings):
     sims = [r["cos_sim"] for r in rows]
     assert sims == sorted(sims, reverse=True)
     assert len(set(r["vec_id"] for r in rows) & set(exact)) >= 3
-
-
-def test_pandas_topk_matches_native(embeddings):
-    qvec = embeddings.filter(F.col("vec_id") == 0).first()["embedding"]
-    corpus = embeddings.filter(F.col("vec_id") != 0)
-    native = [(r["vec_id"], round(r["cos_sim"], 6))
-              for r in similarity.brute_force_topk(corpus, qvec, k=10).collect()]
-    pandas = [(r["vec_id"], round(r["cos_sim"], 6))
-              for r in similarity.cosine_topk_pandas(corpus, qvec, k=10).collect()]
-    assert native == pandas
 
 
 def test_multimodal_decode_and_features(spark):
@@ -609,10 +551,10 @@ def test_cross_containment_finds_quoted_probe(spark):
 def test_incremental_minhash_equals_batch(documents):
     """Batch-split invariance: ingesting the corpus in two batches
     against an accumulated signature table finds exactly the one-shot
-    pipeline's verified pair set."""
+    portable pipeline's verified pair set."""
     full = {
         (r.id_a, r.id_b)
-        for r in dedup.minhash_dedup_pairs(documents, "text", "doc_id").collect()
+        for r in dedup.portable_minhash_pairs(documents, "text", "doc_id").collect()
     }
     half_a = documents.filter(F.col("doc_id") % 2 == 0)
     half_b = documents.filter(F.col("doc_id") % 2 == 1)
@@ -707,41 +649,6 @@ def test_train_centroids_partitioning_invariant(embeddings):
         assert np.array_equal(ref, got), f"centroids drifted at {parts} partitions"
 
 
-def test_pq_adc_rerank_recall(embeddings):
-    """PQ-ADC shortlist + exact rerank must recover >=80% of the true
-    cosine top-10 (m=8 subspaces x 32 codes = 40-bit vectors,
-    100-candidate shortlist over the 500-vector sf0.001 corpus;
-    measured 10/10 — the bound leaves slack for codebook drift)."""
-    qvec = embeddings.filter(F.col("vec_id") == 0).first()["embedding"]
-    corpus = embeddings.filter(F.col("vec_id") != 0)
-    exact = [r["vec_id"] for r in similarity.brute_force_topk(corpus, qvec, k=10).collect()]
-    # cosine serving -> normalize before quantizing (L2 on unit
-    # vectors ranks exactly like cosine)
-    unit = similarity.l2_normalized(embeddings)
-    ucorpus = unit.filter(F.col("vec_id") != 0)
-    qn = [float(x) for x in qvec]
-    import math as _math
-    nq = _math.sqrt(sum(x * x for x in qn))
-    qunit = [x / nq for x in qn]
-    books = similarity.pq_train(unit, m=8, k=32, iters=5, seed=42)
-    codes = similarity.pq_encode_pandas(ucorpus, books)
-    got = [
-        r["vec_id"]
-        for r in similarity.pq_adc_topk(
-            codes, books, qunit, k=10, corpus=corpus, rerank=100
-        ).collect()
-    ]
-    assert len(set(got) & set(exact)) >= 8
-
-
-def test_pq_train_partitioning_invariant(embeddings):
-    """PQ codebooks train on an ordered sample — bit-equal across
-    partition layouts, like train_centroids."""
-    ref = similarity.pq_train(embeddings.repartition(1), m=4, k=8, iters=2)
-    got = similarity.pq_train(embeddings.repartition(13), m=4, k=8, iters=2)
-    assert np.array_equal(ref, got)
-
-
 def test_portable_pq_matches_driver_side_replay(embeddings):
     """The portable PQ pipeline's ADC distances replayed in plain
     Python over collected vectors equal the Spark answer exactly —
@@ -778,20 +685,6 @@ def test_portable_pq_matches_driver_side_replay(embeddings):
         ).collect()
     ]
     assert got == expect
-
-
-def test_pq_encode_pandas_equals_native(embeddings):
-    """The vectorized Arrow encoder must produce exactly the codes the
-    native expression encoder does (ties included — numpy argmin and
-    the struct array_min both take the first minimum)."""
-    books = similarity.pq_train(embeddings, m=4, k=8, iters=2)
-    nat = {
-        tuple(r) for r in similarity.pq_encode(embeddings, books).collect()
-    }
-    pan = {
-        tuple(r) for r in similarity.pq_encode_pandas(embeddings, books).collect()
-    }
-    assert nat == pan
 
 
 def test_mg_heavy_hitters_randomized_corpora(spark):
@@ -1848,8 +1741,9 @@ def test_bpe_assume_covered_raises_on_uncovered_word(spark):
 
 
 def test_batch_serving_empty_corpus_returns_empty(spark):
-    """Batched retrieval over an empty corpus returns a typed empty
-    result instead of crashing on .first()-based dim inference."""
+    """Portable retrieval over an empty corpus returns a typed empty
+    result instead of crashing: the batch paths on .first()-based dim
+    inference, the single-query paths on an empty codebook fetch."""
     emb_schema = "vec_id long, embedding array<double>"
     empty = spark.createDataFrame([], emb_schema)
     queries = spark.createDataFrame(
@@ -1861,6 +1755,13 @@ def test_batch_serving_empty_corpus_returns_empty(spark):
     out2 = similarity.portable_pq_adc_batch_topk(empty, queries, m=4, k=5)
     assert out2.count() == 0
     assert set(out2.columns) == {"qid", "vec_id", "adc_dist"}
+    qvec = [1.0] * 8
+    out3 = similarity.portable_pq_adc_topk(empty, qvec, m=4, k=5)
+    assert out3.count() == 0
+    assert out3.columns == ["vec_id", "adc_dist"]
+    out4 = similarity.portable_ivf_topk(empty, qvec, k=5)
+    assert out4.count() == 0
+    assert out4.columns == ["vec_id", "cos_sim"]
 
 
 def test_codec_rejects_16bit_ppm_and_truncated_wav_chunk():

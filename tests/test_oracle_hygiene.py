@@ -88,7 +88,7 @@ def test_every_no_oracle_query_has_gated_portable_twin():
 
 def test_weak_window_is_self_contained():
     """r13 verdict #4: CORRECTNESS_r13's 50-query driver window carried
-    the weak dedup_simhash row WITHOUT its hash-green twin, so the
+    a weak no-oracle row WITHOUT its hash-green twin, so the
     driver-facing artifact could not prove the twin discipline on its
     own. The rotation must place every in-window no-oracle query's
     portable twin in the SAME leading window (or defer the pair)."""

@@ -242,11 +242,12 @@ CONTRACTS = [
     # the purchase filter pushes to the scan
     ("events_conversion_attribution", 3, 1, False, True),
     # S-curve tuning report: capped inverted-index pair pipeline +
-    # the RAW portable-LSH candidate stage (no verify joins — the
-    # review split portable_minhash_candidates out for exactly this)
+    # the RAW md5-MinHash candidate stage (portable_minhash_candidates:
+    # signatures, bands and bucket pairs, no verify joins)
     # + the pair-keyed left join and <=10-row decile rollup
-    # +1 r15: the shared shingling pass (feeds ground truth AND
-    # minhash) rides ONE fan_out exchange instead of shingling twice
+    # +1 r15: the shared shingling pass (feeds ground truth AND the
+    # MinHash signatures) rides ONE fan_out exchange instead of
+    # shingling twice
     ("dedup_lsh_scurve_report", 7, 0, False, False),
     # RFM: ONE fact shuffle (the per-user rollup, persisted), then
     # 3 composed exact-NTILE passes whose exchanges are user-grain or
@@ -421,7 +422,9 @@ FORCED_BROADCAST_SITES = {
     # in-plan broadcast variant was A/B'd and rejected — see the
     # docstring), so ranking.py is back to its 4 offsets broadcasts
     "operators/ranking.py": 4,
-    "operators/similarity.py": 14,
+    # 13 = 14 - the PQ-ADC rerank arm's shortlist broadcast (deleted
+    # with the rerank parameter)
+    "operators/similarity.py": 13,
     # 8 = the per-origin merge's two batch-bounded affected_urls
     # broadcasts + the r12 one-job merge's identical pair + the
     # count-delta pre-merge retraction probe's one + the count-delta

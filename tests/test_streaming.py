@@ -494,10 +494,10 @@ def test_stream_stream_interval_join_equals_batch(spark, tmp_path):
 
 def test_streaming_neardup_ingest_equals_batch(spark, tmp_path):
     """Continuous near-dup ingestion over micro-batches must find
-    exactly the one-shot MinHash pipeline's verified pair set: docs
-    arrive in two files (one per trigger), each batch is checked
-    against the accumulated signature/doc logs."""
-    from dat_archive_map_reduce_spark.operators.dedup import minhash_dedup_pairs
+    exactly the one-shot portable MinHash pipeline's verified pair
+    set: docs arrive in two files (one per trigger), each batch is
+    checked against the accumulated signature/doc logs."""
+    from dat_archive_map_reduce_spark.operators.dedup import portable_minhash_pairs
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text").cache()
     src = str(tmp_path / "src")
@@ -521,7 +521,7 @@ def test_streaming_neardup_ingest_equals_batch(spark, tmp_path):
     }
     want = {
         (r.id_a, r.id_b)
-        for r in minhash_dedup_pairs(docs, "text", "doc_id").collect()
+        for r in portable_minhash_pairs(docs, "text", "doc_id").collect()
     }
     assert got == want
     assert len(want) > 0

@@ -84,9 +84,9 @@ Notes on expected shapes:
   of data size) for the offsets prefix sum — metadata, never fact
   rows. Same shape in corpus_pack_chunks / corpus_train_pipeline,
   which reuse the prefix-sum.
-- dedup_simhash / dedup_minhash_lsh: signatures fold in ONE narrow
-  native projection (no Python); the extra round-robin exchange is
-  fan_out — it parallelizes single-file inputs AND is the
+- dedup_simhash_portable / dedup_minhash_portable: signatures fold
+  in ONE narrow native projection (no Python); the extra round-robin
+  exchange is fan_out — it parallelizes single-file inputs AND is the
   materialization barrier that stops projection collapse from
   re-folding signatures inside every join side.
 - dedup_embedding_ann_gemm: the registered prefilter->verify

@@ -63,9 +63,12 @@ from dat_archive_map_reduce_spark.plans.catalog import (
     AppendOnlyLog,
     BucketedEntriesTable,
     BucketedMetaTable,
+    Target,
     VersionedTable,
     empty_df,
     local_df,
+    stack_targets,
+    write_bucketed,
 )
 from dat_archive_map_reduce_spark.plans.view_def import ViewDefinition, validate_view_def
 from dat_archive_map_reduce_spark.sources.files import (
@@ -156,8 +159,8 @@ class MapReduce:
         # entries_df plan cache: store key -> (ptr version, DataFrame)
         self._entries_df_cache: dict = {}
         # sweep staged-write orphans: a crash (or an exception that
-        # escaped a deferred commit) between a staged pair/onejob
-        # write and its commit/cancel leaves a data-sized _merge-*
+        # escaped a deferred commit) between a staged write_bucketed
+        # job and its commit/cancel leaves a data-sized _merge-*
         # temp dir nothing references (r14 ADVICE). Open-time is the
         # safe sweep point under the single-driver orchestration
         # contract (SURVEY §2.1 #18): no other engine can own one.
@@ -477,10 +480,10 @@ class MapReduce:
         """Per-view consolidated shard-pointer index (r14 verdict #1):
         one row (origin, version) per materialized entries shard,
         origin-hash-bucketed like the offsets table, upserted inside
-        every shard pointer flip (_merge_entry_shard commit,
-        _merge_view_shards_onejob commit, rebucket; deleted on
-        unindex, reset on view reset). entries_df resolves every
-        shard's current snapshot from k small bucket files instead of
+        every shard pointer flip (the _merge_entries commit and
+        rebucket; deleted on unindex, reset on view reset).
+        entries_df resolves every shard's current snapshot from k
+        small bucket files instead of
         opening one _manifest.json per origin — the residual
         O(origins) driver work that made mapped-view plan
         construction grow 3.75x across 256->1024 origins (r14 bench);
@@ -755,226 +758,97 @@ class MapReduce:
         )
 
     # -- the core merge: retract-then-add + re-aggregate ------------
-    def _merge_entry_shard(
+    def _merge_entries(
         self,
         vdef: ViewDefinition,
-        origin: str,
         updates: DataFrame,
         new_entries: DataFrame,
-        bucket_ids: "list[int] | None" = None,
-        defer_commit: bool = False,
-    ):
-        """THE retract-then-add merge of one (view, origin) entries
-        shard (the one-job multi-origin writer,
-        _merge_view_shards_onejob, applies the same anti-join).
-        Retracts every entry derived from a file in ``updates``
-        (provenance anti-join on file_url, lib/view.js:126-148),
-        appends ``new_entries``, writes the shard. Returns the LAZY
-        retracted-keys DataFrame; its plan resolves the pre-overwrite
-        snapshot paths at construction, so it stays correct after the
-        pointer flip. ``updates``/``new_entries`` must already be
-        restricted to this origin.
+        buckets: "dict[str, list[int]]",
+    ) -> "tuple[DataFrame | None, Callable[[], Callable[[], None]]]":
+        """THE retract-then-add merge of one entries store's shards over
+        a batch of 1..N origins (``buckets``: origin -> touched bucket
+        ids at the engine count, from _probe_batch). Retracts every
+        entry derived from a file in ``updates`` (provenance anti-join
+        on file_url, lib/view.js:126-148) and appends ``new_entries``.
 
-        Delta-proportional IO: the shard is hash-bucketed on file_url,
-        and every row derived from url u lives in bucket crc32(u)%N —
-        so the batch's ``bucket_ids`` (from the urls alone; callers
-        pass them precomputed to skip the probe job here) bound BOTH
-        the retraction scan and the rewrite to the touched buckets;
-        untouched buckets carry into the new snapshot as hardlinks
-        (BucketedEntriesTable.write_merged). One Spark job per merge,
-        reading+writing O(delta + touched_buckets * shard/N), where
-        the flat layout read+rewrote O(shard) per batch — the LevelDB
-        O(keys-touched) batch-write analog (lib/view.js:89-103)."""
-        ent_table = self._entries_table(vdef.name, origin)
-        affected_urls = updates.select("url")
-        if bucket_ids is None or ent_table.n_buckets != self.entries_buckets:
-            # callers precompute ids with the ENGINE's bucket count;
-            # a shard created under a different count pins its own
-            # (_buckets.json), so recompute against the shard's N —
-            # stale ids here would hardlink a bucket that needed
-            # retraction
-            bucket_ids = None
-        if bucket_ids is None:
-            bucket_ids = sorted(
-                r["b"]
-                for r in updates.select(ent_table.bucket_expr("url").alias("b"))
+        Delta-proportional IO: each shard is hash-bucketed on file_url,
+        and every row derived from url u lives in bucket crc32(u)%N, so
+        the touched ids bound both the retraction read and the rewrite;
+        untouched buckets carry into the new snapshots as hardlinks —
+        the LevelDB O(keys-touched) batch-write analog
+        (lib/view.js:89-103). The pre-merge touched read is built ONCE
+        over every shard: file_url embeds its origin, so one anti-join
+        retracts exactly per origin. A shard whose pinned count differs
+        from the engine's (post-rebucket) gets its ids recomputed in
+        one shared collect, and still joins the one write —
+        write_bucketed buckets each row by its own shard's count.
+
+        Returns (retracted, write). ``retracted``: the LAZY (key,
+        key_json, value) rows the batch retracts, multiplicity
+        preserved, for the exact/min-max deltas and the refold's key
+        set; its plan is pinned to the pre-merge snapshot paths (the
+        read_buckets contract), so it stays correct after the flips.
+        None when no shard exists yet (nothing can retract — the
+        backfill fast path). ``write()`` runs the ONE Spark write job
+        and returns the commit closure: every shard's pointer flip,
+        then one pointer-table upsert for the batch's origins (r14
+        verdict #1). Offsets advance only after it, so a mid-commit
+        crash re-applies the batch idempotently."""
+        origins = sorted(buckets)
+        tables = [self._entries_table(vdef.name, o) for o in origins]
+        ids = {o: list(buckets[o]) for o in origins}
+        odd = [
+            (o, t)
+            for o, t in zip(origins, tables)
+            if t.exists() and t.n_buckets != self.entries_buckets
+        ]
+        if odd:
+            rows = (
+                updates.filter(F.col("origin").isin([o for o, _t in odd]))
+                .select(
+                    "origin",
+                    *[
+                        t.bucket_expr("url").alias(f"b{i}")
+                        for i, (_o, t) in enumerate(odd)
+                    ],
+                )
                 .distinct()
                 .collect()
             )
-        old_touched = ent_table.read_buckets(bucket_ids)
-        surviving = old_touched.join(
-            F.broadcast(affected_urls),
-            old_touched["file_url"] == affected_urls["url"],
-            "left_anti",
-        )
-        # retracted ROWS (multiplicity preserved): distinct key_json
-        # consumers project+distinct; the count-delta re-aggregation
-        # needs the exact per-key retraction counts
-        retracted_rows = old_touched.join(
-            F.broadcast(affected_urls),
-            old_touched["file_url"] == affected_urls["url"],
-            "left_semi",
-        ).select("key", "key_json")
-        commit0 = ent_table.write_merged(
-            bucket_ids,
-            surviving.unionByName(new_entries),
-            sort_cols=["key_json", "file_url", "emit_seq"],
-            defer_commit=True,
-        )
-
-        def commit() -> None:
-            commit0()
-            # keep the view's consolidated pointer table in step with
-            # the flip (r14 verdict #1): one bucket-scoped upsert
-            self._record_entry_ptrs(vdef.name, [origin])
-
-        # defer_commit=True hands the caller the pointer flip (the
-        # exact-delta watch path overlaps this write with the reduced
-        # commit but flips entries only after it)
-        if defer_commit:
-            return retracted_rows, commit
-        commit()
-        return retracted_rows
-
-    def _merge_view_shards_onejob(
-        self,
-        vdef: ViewDefinition,
-        updates: DataFrame,
-        new_entries: DataFrame,
-        counts: "dict[str, int]",
-        buckets: "dict[str, list[int]]",
-        defer_commit: bool = False,
-    ):
-        """Multi-origin watch merge in ONE Spark write job (r11
-        verdict #3): the per-origin _merge_entry_shard loop launches
-        one write job per (view, origin) — at 4 origins x 2 views
-        that job fan-out IS the fixed per-batch cost floor the
-        maintain bench measures. Here every origin's surviving + new
-        rows are written together, partitioned by (origin index,
-        bucket id) into a temp dir under the warehouse, then
-        committed per shard driver-side: move the written bucket dirs
-        into each shard's new snapshot, hardlink untouched buckets,
-        flip pointers. Semantics are identical to the per-origin loop
-        — same retraction anti-join (file_url embeds its origin, so
-        one global anti-join retracts exactly per-origin: a url never
-        appears in another origin's shard), same bucket layout, same
-        crash contract (pointer flips remain the only commit; offsets
-        advance only after every flip, so a mid-commit crash
-        re-applies the batch idempotently, exactly like a crash
-        between two of the old per-origin writes). Caller must have
-        verified every shard is ELIGIBLE: absent, or a bucketed
-        current snapshot at the engine bucket count (a divergent
-        shard falls back to _merge_entry_shard, which recomputes its
-        ids). Returns the LAZY retracted-keys DataFrame (plans pinned
-        to pre-flip snapshot paths, the read_buckets contract)."""
-        import os
-        import shutil
-        import tempfile as _tf
-
-        from dat_archive_map_reduce_spark.plans.catalog import _link_tree
-
-        origins = sorted(counts)
-        tables = {o: self._entries_table(vdef.name, o) for o in origins}
-        n = self.entries_buckets
-        affected_urls = updates.select("url")
-        old_touched = tables[origins[0]].read_buckets(buckets[origins[0]])
-        for o in origins[1:]:
-            old_touched = old_touched.unionByName(
-                tables[o].read_buckets(buckets[o])
+            for i, (o, _t) in enumerate(odd):
+                ids[o] = sorted({r[f"b{i}"] for r in rows if r["origin"] == o})
+        old = None
+        for o, t in zip(origins, tables):
+            if t.exists():
+                part = t.read_buckets(ids[o])
+                old = part if old is None else old.unionByName(part)
+        frame, retracted = new_entries, None
+        if old is not None:
+            urls = F.broadcast(updates.select("url"))
+            hit = old["file_url"] == urls["url"]
+            frame = old.join(urls, hit, "left_anti").unionByName(new_entries)
+            retracted = old.join(urls, hit, "left_semi").select(
+                "key", "key_json", "value"
             )
-        surviving = old_touched.join(
-            F.broadcast(affected_urls),
-            old_touched["file_url"] == affected_urls["url"],
-            "left_anti",
-        )
-        retracted_rows = old_touched.join(
-            F.broadcast(affected_urls),
-            old_touched["file_url"] == affected_urls["url"],
-            "left_semi",
-        ).select("key", "key_json")
-        o_idx = {o: i for i, o in enumerate(origins)}
-        mapping = F.create_map(
-            *[F.lit(x) for o in origins for x in (o, o_idx[o])]
-        )
-        w = (
-            surviving.unionByName(new_entries)
-            .withColumn("_o", mapping[F.col("origin")].cast("int"))
-            .withColumn("_b", tables[origins[0]].bucket_expr("file_url"))
-        )
-        tmp = _tf.mkdtemp(prefix="_merge-onejob-", dir=self.warehouse)
-        try:
-            (
-                # no explicit partition count: a REPARTITION_BY_COL
-                # shuffle lets AQE size the write tasks to the DELTA
-                # (a drip batch coalesces to ~1 task, a backfill keeps
-                # full parallelism) — an explicit (origin x bucket)
-                # count pinned 64 near-empty tasks per batch, which
-                # WAS the fixed cost this one-job path exists to cut.
-                # Each (_o,_b) combo still hashes wholly into one
-                # task, so every bucket dir gets at most a handful of
-                # sorted files
-                w.repartition("_o", "_b")
-                .sortWithinPartitions(
-                    "_o", "_b", "key_json", "file_url", "emit_seq"
-                )
-                .write.mode("overwrite")
-                .partitionBy("_o", "_b")
-                .parquet(tmp)
-            )
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
+        t_of = F.create_map(
+            *[F.lit(x) for i, o in enumerate(origins) for x in (o, i)]
+        )[F.col("origin")]
 
-        def _commit() -> None:
-            try:
-                for o in origins:
-                    t = tables[o]
-                    cur = t._current()
-                    v = (cur or 0) + 1
-                    dest = t._snapshot_dir(v)
-                    if os.path.isdir(dest):
-                        # crash-orphaned dir at this version: clear it,
-                        # the overwrite-clears-dest convention of every
-                        # writer
-                        shutil.rmtree(dest, ignore_errors=True)
-                    os.makedirs(dest, exist_ok=True)
-                    src_root = f"{tmp}/_o={o_idx[o]}"
-                    if os.path.isdir(src_root):
-                        for bd in os.listdir(src_root):
-                            if bd.startswith("_b="):
-                                os.rename(f"{src_root}/{bd}", f"{dest}/{bd}")
-                    # a touched bucket with no written dir is now EMPTY
-                    # — correct, and why only UNtouched buckets hardlink
-                    if cur is not None:
-                        touched = set(buckets[o])
-                        for b in range(n):
-                            if b in touched:
-                                continue
-                            src = t._bucket_dir(cur, b)
-                            if os.path.isdir(src):
-                                _link_tree(src, t._bucket_dir(v, b))
-                    t._write_snapshot_meta(dest, n)
-                    t._set_current(v)
-                # one pointer-table upsert for the whole batch's
-                # origins (r14 verdict #1), after every shard flipped
+        def write() -> "Callable[[], None]":
+            flip, _cancel, _hit = write_bucketed(
+                [Target(t, ids[o]) for o, t in zip(origins, tables)],
+                frame.withColumn("_t", t_of),
+                ["key_json", "file_url", "emit_seq"],
+                staging_dir=self.warehouse,
+            )
+
+            def commit() -> None:
+                flip()
                 self._record_entry_ptrs(vdef.name, origins)
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
 
-        if defer_commit:
-            return retracted_rows, _commit
-        _commit()
-        return retracted_rows
+            return commit
 
-    def _onejob_eligible(self, view: str, origin: str) -> bool:
-        """A shard can join the one-job multi-origin write iff it is
-        absent (first index) or its current snapshot is bucketed at
-        the engine bucket count — the layout the job's (origin,
-        bucket) partitioning assumes. Rebucketed shards (per-shard N
-        != engine default) fall back to _merge_entry_shard, which
-        recomputes their ids."""
-        t = self._entries_table(view, origin)
-        return not t.exists() or t.n_buckets == self.entries_buckets
+        return retracted, write
 
     def _maintain_batch(
         self,
@@ -1231,9 +1105,9 @@ class MapReduce:
         view): ONE entries merge for the whole group (the rows are
         byte-identical across members — merging per twin doubled the
         entry-write IO, and under a shared store concurrent per-view
-        merges would race the snapshot version), one shared premerge
-        retraction probe, and a re-aggregation per member view over
-        the union of every origin's affected keys.
+        merges would race the snapshot version) whose one pre-merge
+        read also yields the retracted rows, and a re-aggregation per
+        member view over the union of every origin's affected keys.
 
         ``prepared``: caller-owned (cached updates, per-origin counts,
         touched bucket ids) from _probe_batch + the shared compaction
@@ -1282,45 +1156,24 @@ class MapReduce:
 
         kinds = {v.name: _delta_kind(v) for v in vdefs}
         delta_applied: "dict[str, bool]" = {}
-        # can this batch retract anything? absent shards cannot —
-        # a driver-side manifest check, no Spark job (the backfill
-        # / first-index fast path: skips the retraction side of
-        # the delta AND the premerge probe entirely)
-        no_old = all(
-            not self._entries_table(vdef.name, o).exists()
-            for o in counts
-        )
+        # the store is shared, so its retractions are too: ONE merge
+        # (and one pre-merge read) serves every member view
+        retr, write = self._merge_entries(vdef, updates, new_entries, buckets)
         if any(kinds.values()):
             # REDUCED FIRST: the delta derives from the PRE-merge
             # shard state, so it must commit before any entries
-            # pointer FLIPS — but the entries WRITE jobs (data
-            # files into not-yet-published snapshot dirs) carry no
-            # ordering constraint, so they run CONCURRENTLY with
-            # the reduced commits and only their pointer flips wait
-            # (r13 verdict #1: the serialized delta-then-merge
-            # chain was the per-batch latency floor). Both sides
-            # read the retraction state from plans pinned to the
-            # PRE-merge snapshots, so the overlap cannot leak.
-            # The premerge retraction probe is computed ONCE for
-            # the whole group (shared store = shared retractions).
+            # pointer FLIPS — but the entries WRITE job (data files
+            # into not-yet-published snapshot dirs) carries no
+            # ordering constraint, so it runs CONCURRENTLY with the
+            # reduced commits and only its pointer flips wait (r13
+            # verdict #1: the serialized delta-then-merge chain was
+            # the per-batch latency floor). Both sides read the
+            # retraction state from plans pinned to the PRE-merge
+            # snapshots, so the overlap cannot leak.
             from concurrent.futures import ThreadPoolExecutor
 
-            retr = (
-                None
-                if no_old
-                else self._retracted_rows_premerge(
-                    vdef, updates, counts, buckets
-                )
-            )
             with ThreadPoolExecutor(max_workers=1) as wpool:
-                fut = wpool.submit(
-                    self._write_entry_merges,
-                    vdef,
-                    updates,
-                    new_entries,
-                    counts,
-                    buckets,
-                )
+                fut = wpool.submit(write)
                 for v in vdefs:
                     if kinds[v.name] == "exact":
                         self._reaggregate_exact_delta(
@@ -1336,108 +1189,24 @@ class MapReduce:
                                 v, new_entries, retr, batch_token
                             )
                         )
-                pairs = fut.result()
+                commit = fut.result()
         else:
-            pairs = self._write_entry_merges(
-                vdef, updates, new_entries, counts, buckets
-            )
+            commit = write()
         # publish the entries snapshots (pointer flips — after the
         # reduced commits on the delta paths)
-        for _retr, commit in pairs:
-            commit()
+        commit()
         refold = [
             v
             for v in vdefs
             if v.reduce is not None and not delta_applied.get(v.name)
         ]
         if refold:
-            retr = pairs[0][0]
-            for p, _c in pairs[1:]:
-                retr = retr.union(p)
-            keys = (
-                retr.select("key_json")
-                .union(new_entries.select("key_json"))
-                .distinct()
-                .cache()
-            )
+            keys = new_entries.select("key_json")
+            if retr is not None:
+                keys = retr.select("key_json").union(keys)
+            keys = keys.distinct().cache()
             self._refold(refold, keys)
             keys.unpersist()
-
-    def _write_entry_merges(
-        self,
-        vdef: ViewDefinition,
-        updates: DataFrame,
-        new_entries: DataFrame,
-        counts: "dict[str, int]",
-        buckets: "dict[str, list[int]]",
-    ) -> "list[tuple[DataFrame, Callable[[], None]]]":
-        """Run the entries-shard WRITE jobs for a multi-origin batch
-        and return [(lazy retracted-rows, commit closure)] — callers
-        run the commits (pointer flips) when their ordering
-        constraints allow. Dispatch: multi-origin batches with every
-        shard eligible take ONE write job for all shards
-        (_merge_view_shards_onejob — the per-origin job fan-out was
-        the dominant fixed per-batch cost); other multi-origin batches
-        write per-origin concurrently (disjoint directories — wall
-        clock is ~the slowest shard, not the sum); single-origin
-        batches (the steady-drip common case) write inline."""
-
-        def _write_shard(origin: str):
-            return self._merge_entry_shard(
-                vdef,
-                origin,
-                updates.filter(F.col("origin") == origin),
-                new_entries.filter(F.col("origin") == origin),
-                bucket_ids=buckets.get(origin),
-                defer_commit=True,
-            )
-
-        if len(counts) > 1 and all(
-            self._onejob_eligible(vdef.name, o) for o in counts
-        ):
-            return [
-                self._merge_view_shards_onejob(
-                    vdef, updates, new_entries, counts, buckets,
-                    defer_commit=True,
-                )
-            ]
-        if len(counts) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(len(counts), 8)) as pool:
-                return list(pool.map(_write_shard, sorted(counts)))
-        return [_write_shard(o) for o in sorted(counts)]
-
-    def _retracted_rows_premerge(
-        self,
-        vdef: ViewDefinition,
-        updates: DataFrame,
-        counts: "dict[str, int]",
-        buckets: "dict[str, list[int]]",
-    ) -> DataFrame:
-        """(key, key_json) rows about to be retracted by this batch,
-        multiplicity preserved, read from the CURRENT (pre-merge)
-        shard snapshots — the count-delta path's subtraction side.
-        Touched buckets only on engine-layout shards; a shard with a
-        divergent pinned bucket count (post-rebucket) reads whole —
-        rare, and correct either way (the semi join does the
-        narrowing)."""
-        affected_urls = updates.select("url")
-        parts = []
-        for o in sorted(counts):
-            t = self._entries_table(vdef.name, o)
-            if t.n_buckets == self.entries_buckets:
-                parts.append(t.read_buckets(buckets[o]))
-            else:
-                parts.append(t.read())
-        old = parts[0]
-        for p in parts[1:]:
-            old = old.unionByName(p)
-        return old.join(
-            F.broadcast(affected_urls),
-            old["file_url"] == affected_urls["url"],
-            "left_semi",
-        ).select("key", "key_json", "value")
 
     @staticmethod
     def _token_applied(table: VersionedTable, batch_token) -> bool:
@@ -1530,7 +1299,7 @@ class MapReduce:
         one probe collecting the touched bucket ids of BOTH tables
         (skipped when nothing is materialized yet), then ONE write
         job committing reduced and sidecar together
-        (_write_merged_pair) — r13 spent two id probes and two write
+        (write_bucketed) — r13 spent two id probes and two write
         jobs here, which with the bucketed-reduced layout regressed
         the per-batch maintain constant 2.4x."""
         fold = vdef.exact_delta_fold()
@@ -1651,24 +1420,26 @@ class MapReduce:
                 cnt_df = cold.join(
                     F.broadcast(delta_keys), "key_json", "left_anti"
                 ).unionByName(state.select("key_json", "cnt", "ssum"))
-                if not red_done and not cnt_done:
-                    # the common case: BOTH tables commit from ONE
-                    # Spark write job — reduced's pointer flips first,
-                    # then the sidecar's (the crash-window order the
-                    # replay logic above assumes)
-                    self._write_merged_pair(
-                        red_table, ids, red_df, meta,
-                        cnt_table, cids, cnt_df, meta,
-                        sort_cols=["key_json"],
+                # every pending table commits from ONE Spark write
+                # job — reduced's pointer flips first, then the
+                # sidecar's (the crash-window order the replay logic
+                # above assumes; in that window only the sidecar is
+                # pending)
+                todo = [
+                    (t, i, df)
+                    for t, i, df, done in (
+                        (red_table, ids, red_df, red_done),
+                        (cnt_table, cids, cnt_df, cnt_done),
                     )
-                elif not red_done:
-                    red_table.write_merged(
-                        ids, red_df, sort_cols=["key_json"], meta=meta
-                    )
-                else:  # crash window: only the sidecar is pending
-                    cnt_table.write_merged(
-                        cids, cnt_df, sort_cols=["key_json"], meta=meta
-                    )
+                    if not done
+                ]
+                commit, _cancel, _hit = write_bucketed(
+                    [Target(t, i, meta) for t, i, _df in todo],
+                    stack_targets([df for _t, _i, df in todo]),
+                    ["key_json"],
+                    staging_dir=self.warehouse,
+                )
+                commit()
             elif not red_done:
                 old = red_table.read_buckets(ids)
                 # batch-sized delta broadcasts; full-outer would
@@ -1934,20 +1705,21 @@ class MapReduce:
         red_df = old_red.filter(~kcol.isin(keys)).unionByName(red_local)
         hist_df = old_hist.filter(~kcol.isin(keys)).unionByName(hist_local)
         meta = {"batch_token": batch_token}
-        if not red_done and not hist_done:
-            self._write_merged_pair(
-                red_table, ids, red_df, meta,
-                hist_table, hids, hist_df, meta,
-                sort_cols=["key_json"],
+        todo = [
+            (t, i, df)
+            for t, i, df, done in (
+                (red_table, ids, red_df, red_done),
+                (hist_table, hids, hist_df, hist_done),
             )
-        elif not red_done:
-            red_table.write_merged(
-                ids, red_df, sort_cols=["key_json"], meta=meta
-            )
-        else:
-            hist_table.write_merged(
-                hids, hist_df, sort_cols=["key_json"], meta=meta
-            )
+            if not done
+        ]
+        commit, _cancel, _hit = write_bucketed(
+            [Target(t, i, meta) for t, i, _df in todo],
+            stack_targets([df for _t, _i, df in todo]),
+            ["key_json"],
+            staging_dir=self.warehouse,
+        )
+        commit()
         return True
 
     def _reaggregate_minmax_delta(
@@ -2187,54 +1959,44 @@ class MapReduce:
                 .unionByName(red_fresh)
             )
             meta = {"batch_token": batch_token}
-            if not red_done and not hist_done:
-                # optimistic staged write with the refold-needed keys
-                # riding along as _t=2 marker rows; a flagged key
-                # cancels the staged write (temp dir dropped, no
-                # table touched). Append-only batches skip the marker
-                # (adds cannot trip any flag).
-                probe = (
+            # optimistic staged write of every pending table (both,
+            # or in the crash window only the histogram) with the
+            # refold-needed keys riding along as marker rows; a flagged
+            # key cancels the staged write (temp dir dropped, no table
+            # touched). Append-only batches skip the marker (adds
+            # cannot trip any flag).
+            todo = [
+                (t, i, df)
+                for t, i, df, done in (
+                    (red_table, ids, red_df, red_done),
+                    (hist_table, hids, hist_df, hist_done),
+                )
+                if not done
+            ]
+            commit, cancel, probe_hit = write_bucketed(
+                [Target(t, i, meta) for t, i, _df in todo],
+                stack_targets([df for _t, _i, df in todo]),
+                ["key_json"],
+                probe_df=(
                     needs_refold.select("key_json")
                     if retracted_rows is not None
                     else None
-                )
-                staged = self._write_merged_pair(
-                    red_table, ids, red_df, meta,
-                    hist_table, hids, hist_df, meta,
-                    sort_cols=["key_json"],
-                    defer_commit=True,
-                    probe_df=probe,
-                )
-                if probe is not None:
-                    commit, cancel, probe_hit = staged
-                else:
-                    commit, cancel = staged
-                    probe_hit = False
-                try:
-                    if probe_hit:
-                        cancel()
-                        return False
-                    commit()
-                    return True
-                except BaseException:
-                    # an abandoned staged write leaks its data-sized
-                    # temp dir permanently (r14 ADVICE) — drop it on
-                    # the exception path (idempotent after commit's
-                    # own cleanup)
+                ),
+                staging_dir=self.warehouse,
+            )
+            try:
+                if probe_hit:
                     cancel()
-                    raise
-            # crash-window singles (rare): probe first, then write
-            if retracted_rows is not None and not needs_refold.isEmpty():
-                return False
-            if not red_done:
-                red_table.write_merged(
-                    ids, red_df, sort_cols=["key_json"], meta=meta
-                )
-            else:
-                hist_table.write_merged(
-                    hids, hist_df, sort_cols=["key_json"], meta=meta
-                )
-            return True
+                    return False
+                commit()
+                return True
+            except BaseException:
+                # an abandoned staged write leaks its data-sized temp
+                # dir permanently (r14 ADVICE) — drop it on the
+                # exception path (idempotent after commit's own
+                # cleanup)
+                cancel()
+                raise
         finally:
             try:
                 cand.unpersist()
@@ -2267,24 +2029,6 @@ class MapReduce:
             for t in tables
         ]
 
-    def _has_data_files(self, table: VersionedTable) -> bool:
-        """Does the table's current snapshot hold any data files?
-        Driver-side walk of one snapshot directory, no Spark job —
-        the 'is anything materialized' check (zero-partition empty
-        snapshots, e.g. a reset, write no part files)."""
-        import os as _os
-
-        v = table._current()
-        if v is None:
-            return False
-        for _dirpath, _dirs, files in _os.walk(table._snapshot_dir(v)):
-            if any(
-                f.endswith(".parquet") and not f.startswith(("_", "."))
-                for f in files
-            ):
-                return True
-        return False
-
     def _sidecar_synced(self, vdef: ViewDefinition) -> bool:
         """Is the (cnt, ssum) sidecar aligned with the reduced table —
         i.e. may the sum/avg exact-delta path trust it? Alignment is a
@@ -2312,7 +2056,7 @@ class MapReduce:
         else:
             return True
         red = self._reduced_table(vdef.name)
-        if not self._has_data_files(red):
+        if not red.has_data_files():
             return True  # nothing materialized: the first commit bootstraps both
         if not side.exists():
             return False
@@ -2320,146 +2064,6 @@ class MapReduce:
         rsync = rm.get("batch_token", rm.get("sync"))
         csync = cm.get("batch_token", cm.get("sync"))
         return rsync is not None and rsync == csync
-
-    def _write_merged_pair(
-        self,
-        a_table: BucketedEntriesTable,
-        a_ids: "list[int]",
-        a_df: DataFrame,
-        a_meta: "dict | None",
-        b_table: BucketedEntriesTable,
-        b_ids: "list[int]",
-        b_df: DataFrame,
-        b_meta: "dict | None",
-        sort_cols: "list[str] | None" = None,
-        defer_commit: bool = False,
-        probe_df: "DataFrame | None" = None,
-    ):
-        """Commit TWO bucketed tables from ONE Spark write job (r13
-        verdict #1): the reduced table and its (cnt, ssum) sidecar
-        fold over the same touched aggregate, and committing them as
-        two write_merged calls doubled the per-batch job count — at
-        micro-batch grain the job fan-out IS the latency. Both tables'
-        post-merge touched-bucket contents are written together to a
-        temp dir partitioned by (table idx, bucket id), then committed
-        driver-side per table IN CALLER ORDER: move the written bucket
-        dirs into each table's new snapshot, hardlink untouched
-        buckets, flip pointers — a's pointer first, then b's, so the
-        crash window between the two flips is the same one the delta
-        path's token replay (and, failing that, the sync-marker refold
-        fallback) recovers. Schemas may differ: each side's frame is
-        padded with the other's missing columns as typed NULLs
-        (parquet nulls are metadata-cheap, and every read pins its own
-        table schema, so the padding is never projected).
-
-        ``defer_commit=True`` runs the Spark write NOW and returns
-        (commit, cancel) closures: commit performs both tables'
-        driver-side commits; cancel discards the staged write (temp
-        dir removed, no table touched).
-
-        ``probe_df``: an optional MARKER frame whose rows ride the
-        same write job under partition _t=2 (never committed to
-        either table; dropped with the temp dir). Its non-emptiness
-        is answered for free by the write itself — partitionBy only
-        materializes non-empty partitions, so ``_t=2`` exists on disk
-        iff the frame had rows — and returned as a third element
-        ``probe_hit`` (r14 verdict #3: the min/max delta path's
-        refold-needed flag was a separate ~0.8 s isEmpty() job wave
-        per retracting batch AFTER the staged write; as marker rows
-        it costs one extra empty-or-tiny partition in the job that
-        runs anyway, and the answer is a driver-side isdir)."""
-        import os as _os
-        import shutil as _shutil
-        import tempfile as _tf
-
-        from dat_archive_map_reduce_spark.plans.catalog import _link_tree
-
-        def _pad(df: DataFrame, other: BucketedEntriesTable, tag: int, bexpr):
-            cols = [F.col(c) for c in df.columns]
-            have = set(df.columns)
-            for fld in other.schema.fields:
-                if fld.name not in have:
-                    cols.append(F.lit(None).cast(fld.dataType).alias(fld.name))
-            return (
-                df.select(*cols)
-                .withColumn("_t", F.lit(tag))
-                .withColumn("_b", bexpr)
-            )
-
-        w = _pad(a_df, b_table, 0, a_table.bucket_expr()).unionByName(
-            _pad(b_df, a_table, 1, b_table.bucket_expr())
-        )
-        if probe_df is not None:
-            have = set(probe_df.columns)
-            pcols = [
-                (
-                    F.col(f.name)
-                    if f.name in have
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                )
-                for f in w.schema.fields
-                if f.name not in ("_t", "_b")
-            ]
-            w = w.unionByName(
-                probe_df.select(*pcols)
-                .withColumn("_t", F.lit(2))
-                .withColumn("_b", F.lit(0))
-            )
-        # AQE-sized like write_merged: a drip batch coalesces to ~1
-        # write task, a backfill keeps full parallelism
-        w = w.repartition("_t", "_b")
-        if sort_cols:
-            w = w.sortWithinPartitions("_t", "_b", *sort_cols)
-        tmp = _tf.mkdtemp(prefix="_merge-pair-", dir=self.warehouse)
-        try:
-            w.write.mode("overwrite").partitionBy("_t", "_b").parquet(tmp)
-        except BaseException:
-            _shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        probe_hit = _os.path.isdir(f"{tmp}/_t=2")
-
-        def _commit() -> None:
-            try:
-                for idx, (t, ids, meta) in enumerate(
-                    ((a_table, a_ids, a_meta), (b_table, b_ids, b_meta))
-                ):
-                    cur = t._current()
-                    n = t.n_buckets
-                    v = (cur or 0) + 1
-                    dest = t._snapshot_dir(v)
-                    if _os.path.isdir(dest):
-                        # crash-orphaned dir at this version: clear it,
-                        # the overwrite-clears-dest convention of every
-                        # writer
-                        _shutil.rmtree(dest, ignore_errors=True)
-                    _os.makedirs(dest, exist_ok=True)
-                    src_root = f"{tmp}/_t={idx}"
-                    if _os.path.isdir(src_root):
-                        for bd in _os.listdir(src_root):
-                            if bd.startswith("_b="):
-                                _os.rename(f"{src_root}/{bd}", f"{dest}/{bd}")
-                    if cur is not None:
-                        touched = set(ids)
-                        for b in range(n):
-                            if b in touched:
-                                continue
-                            src = t._bucket_dir(cur, b)
-                            if _os.path.isdir(src):
-                                _link_tree(src, t._bucket_dir(v, b))
-                    t._write_snapshot_meta(dest, n)
-                    t._set_current(v, meta)
-            finally:
-                _shutil.rmtree(tmp, ignore_errors=True)
-
-        def _cancel() -> None:
-            _shutil.rmtree(tmp, ignore_errors=True)
-
-        if defer_commit:
-            if probe_df is not None:
-                return _commit, _cancel, probe_hit
-            return _commit, _cancel
-        _commit()
-        return None
 
     @staticmethod
     def _key_bucket_ids(keys_df: DataFrame, ns: "set[int]") -> "dict[int, list[int]]":
@@ -2598,11 +2202,13 @@ class MapReduce:
                     cnt_df = rest.unionByName(
                         both.select("key_json", "cnt", "ssum")
                     )
-                self._write_merged_pair(
-                    red_table, ids, red_df, sync,
-                    cnt_table, cnt_ids, cnt_df, sync,
-                    sort_cols=["key_json"],
+                commit, _cancel, _hit = write_bucketed(
+                    [Target(red_table, ids, sync), Target(cnt_table, cnt_ids, sync)],
+                    stack_targets([red_df, cnt_df]),
+                    ["key_json"],
+                    staging_dir=self.warehouse,
                 )
+                commit()
             finally:
                 both.unpersist()
             return
@@ -2659,11 +2265,13 @@ class MapReduce:
             else:
                 hist_ids = list(range(hist_table.n_buckets))
                 hist_df = _hist_rows(entries)
-            self._write_merged_pair(
-                red_table, ids, red_df, sync,
-                hist_table, hist_ids, hist_df, sync,
-                sort_cols=["key_json"],
+            commit, _cancel, _hit = write_bucketed(
+                [Target(red_table, ids, sync), Target(hist_table, hist_ids, sync)],
+                stack_targets([red_df, hist_df]),
+                ["key_json"],
+                staging_dir=self.warehouse,
             )
+            commit()
             return
         old = red_table.read_buckets(ids)
         entries = self.entries_df(vdef.name)

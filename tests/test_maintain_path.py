@@ -202,6 +202,48 @@ def test_bucketed_reset_is_driver_side(spark, tmp_path):
     assert [r["key_json"] for r in t.read().collect()] == ["k1"]
 
 
+def test_rebucket_write_tasks_do_not_scale_with_bucket_count(spark, tmp_path):
+    """rebucket() writes through the one bucketed writer, whose
+    shuffle has no explicit partition count, so AQE sizes the write
+    to the rows: no stage of the migration runs more tasks than
+    defaultParallelism, even at 4096 buckets. A shuffle pinned to the
+    bucket count ran one task per bucket."""
+    from dat_archive_map_reduce_spark.plans.catalog import BucketedEntriesTable
+
+    sch = T.StructType([
+        T.StructField("key_json", T.StringType(), False),
+        T.StructField("value", T.StringType(), True),
+    ])
+    t = BucketedEntriesTable(spark, str(tmp_path / "b"), sch,
+                             bucket_col="key_json", n_buckets=4)
+    keys = [f"k{i}" for i in range(64)]
+    t.write_merged(list(range(4)), spark.createDataFrame(
+        [(k, k) for k in keys], sch))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("rebucket-probe", "rebucket write task count")
+    try:
+        t.rebucket(4096, sort_cols=["key_json"])
+        jobs = list(tracker.getJobIdsForGroup("rebucket-probe"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    stages = [tracker.getStageInfo(s) for j in jobs
+              for s in tracker.getJobInfo(j).stageIds]
+    tasks = [s.numTasks for s in stages if s is not None]
+    assert tasks, "the job-group probe must see the rebucket's write"
+    assert max(tasks) <= sc.defaultParallelism, tasks
+    assert t.n_buckets == 4096
+    assert sorted(r["key_json"] for r in t.read().collect()) == sorted(keys)
+    import pyarrow.parquet as pq
+
+    snap = t._snapshot_dir(t._current())
+    for name in os.listdir(snap):
+        if name.startswith("_b="):
+            got = pq.read_table(f"{snap}/{name}").column("key_json").to_pylist()
+            assert {t.bucket_of(k) for k in got} == {int(name[3:])}
+
+
 def test_index_maps_each_changed_file_once(spark, tmp_path):
     """index() runs the map UDF once per changed file: the mapped
     output is cached for the merge, the re-aggregation keys and every

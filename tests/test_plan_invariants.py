@@ -443,7 +443,11 @@ FORCED_BROADCAST_SITES = {
     # the refold's hist rebuild): seven delta-key/affected-key-scoped
     # semi/anti/horizon joins, every one bounded by the micro-batch's
     # own key set like the sum/avg sidecar's
-    "engine.py": 24,
+    # 20 = 24 - the five affected_urls sites of the deleted per-origin
+    # merge (2), one-job merge (2) and pre-merge retraction probe (1)
+    # + _merge_entries' one batch-bounded url broadcast, shared by its
+    # anti and semi joins
+    "engine.py": 20,
     # streaming_contamination's blocklist — broadcast-sized BY
     # CONTRACT (distinct shingles of protected corpora; documented)
     "streaming/watch.py": 1,
@@ -491,6 +495,41 @@ def test_engine_paths_build_driver_frames_only_through_catalog_helpers():
     assert {func for _rel, func, _line in sites} == DRIVER_FRAME_BUILDERS, (
         "createDataFrame( on an engine path outside empty_df/local_df — "
         f"build driver rows with plans.catalog.local_df: {sites}"
+    )
+
+
+# the snapshot layout (version dirs, bucket dirs, layout meta, pointer
+# flips, hardlinked carries) belongs to plans/catalog.py: the engine
+# writes through write_bucketed and never assembles a snapshot itself
+SNAPSHOT_LAYOUT_NAMES = {
+    "_snapshot_dir",
+    "_bucket_dir",
+    "_write_snapshot_meta",
+    "_set_current",
+    "_link_tree",
+}
+
+
+def test_engine_leaves_the_snapshot_layout_to_the_catalog():
+    import ast
+    import os
+
+    pkg = os.path.join(os.path.dirname(__file__), "..", "dat_archive_map_reduce_spark")
+    with open(os.path.join(pkg, "engine.py")) as fh:
+        tree = ast.parse(fh.read())
+    sites = []
+    for node in ast.walk(tree):
+        name = (
+            node.attr if isinstance(node, ast.Attribute)
+            else node.id if isinstance(node, ast.Name)
+            else node.name if isinstance(node, ast.alias)
+            else None
+        )
+        if name in SNAPSHOT_LAYOUT_NAMES:
+            sites.append((name, getattr(node, "lineno", None)))
+    assert sites == [], (
+        "engine.py reaches into the snapshot layout — route the write "
+        f"through plans.catalog.write_bucketed: {sites}"
     )
 
 

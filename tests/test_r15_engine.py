@@ -177,7 +177,8 @@ def test_entries_ptr_table_tracks_flips(spark, tmp_path):
         "dat://a": manifest_current("dat://a"),
         "dat://b": manifest_current("dat://b"),
     }
-    # multi-origin watch batch (the onejob commit path)
+    # multi-origin watch batch (one _merge_entries write, one
+    # pointer-table upsert for both origins)
     db.append_changes([
         _row("dat://a", "/d/1.json", 2, "a2", 3),
         _row("dat://b", "/d/1.json", 2, "b2", 4),

@@ -1061,12 +1061,12 @@ def test_watch_maintenance_composition_under_stream(spark, tmp_path):
 
 def test_onejob_multi_origin_merge_semantics(spark, tmp_path):
     """The one-job multi-origin watch merge (r11 verdict #3) must be
-    indistinguishable from the per-origin loop: retraction by put and
+    indistinguishable from per-origin merges: retraction by put and
     del across origins in ONE batch, untouched buckets hardlinked, a
-    fully-retracted bucket left EMPTY (not stale-hardlinked), and the
-    all-or-nothing fallback when any origin's shard carries a
-    divergent bucket count (post-rebucket). State is pinned against a
-    batch-indexed twin after every phase."""
+    fully-retracted bucket left EMPTY (not stale-hardlinked), and a
+    shard carrying a divergent bucket count (post-rebucket) joining
+    the same write, bucketed by its own count. State is pinned
+    against a batch-indexed twin after every phase."""
     import os
     import zlib
 
@@ -1167,8 +1167,8 @@ def test_onejob_multi_origin_merge_semantics(spark, tmp_path):
     assert not pq, "fully-retracted bucket must not carry stale rows"
 
     # phase 3: rebucket a's shard to a DIVERGENT count -> the next
-    # multi-origin batch must fall back to the per-origin merge and
-    # still converge, keeping a's pinned count
+    # multi-origin batch writes a's rows at a's own count in the same
+    # job and must still converge, keeping a's pinned count
     db.rebucket_entries(8, views=["v"], origins=["dat://a"])
     upd3 = [
         {"origin": "dat://a", "pathname": "/d/5.json", "version": 3,
@@ -1330,7 +1330,7 @@ def test_count_delta_reaggregation_exactly_once(spark, tmp_path):
     tok2 = 999_001
     db._reaggregate_exact_delta(
         vdef, new_e,
-        db._retracted_rows_premerge(vdef, upd, counts, buckets),
+        db._merge_entries(vdef, upd, new_e, buckets)[0],
         batch_token=tok2,
     )
     # crash happened here: reduced reflects v2, entries still v1.

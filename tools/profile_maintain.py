@@ -16,6 +16,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import dat_archive_map_reduce_spark.engine as _E
+import dat_archive_map_reduce_spark.plans.catalog as _C
 from dat_archive_map_reduce_spark.engine import MapReduce
 from dat_archive_map_reduce_spark.plans.catalog import BucketedEntriesTable, VersionedTable
 from dat_archive_map_reduce_spark.session import get_spark
@@ -24,8 +26,10 @@ from dat_archive_map_reduce_spark.streaming.watch import watch as _watch
 TIMES: dict[str, list[float]] = {}
 
 
-def timed(cls, name):
-    orig = getattr(cls, name)
+def timed(owner, name):
+    """Wrap ``owner.name`` (a class or module attribute) with a timer."""
+    orig = getattr(owner, name)
+    label = f"{owner.__name__.rsplit('.', 1)[-1]}.{name}"
 
     @functools.wraps(orig)
     def wrap(*a, **k):
@@ -33,22 +37,18 @@ def timed(cls, name):
         try:
             return orig(*a, **k)
         finally:
-            TIMES.setdefault(f"{cls.__name__}.{name}", []).append(
-                time.perf_counter() - t0
-            )
+            TIMES.setdefault(label, []).append(time.perf_counter() - t0)
 
-    setattr(cls, name, wrap)
+    setattr(owner, name, wrap)
 
 
 for m in (
     "_maintain_batch",
     "_probe_batch",
     "_apply_store_batch",
+    "_merge_entries",
     "_reaggregate_exact_delta",
-    "_retracted_rows_premerge",
     "_key_bucket_ids",
-    "_merge_view_shards_onejob",
-    "_merge_entry_shard",
     "_set_offsets",
 ):
     timed(MapReduce, m)
@@ -56,6 +56,10 @@ for m in ("write_merged", "read_buckets"):
     timed(BucketedEntriesTable, m)
 for m in ("read_rows", "overwrite_rows"):
     timed(VersionedTable, m)
+# the one bucketed writer: every entries merge and re-aggregation
+# commit runs one Spark write job in it (the engine imports it by name)
+timed(_C, "write_bucketed")
+_E.write_bucketed = _C.write_bucketed
 
 
 MARKS: list[tuple[str, float]] = []

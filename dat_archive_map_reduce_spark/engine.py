@@ -36,6 +36,7 @@ from __future__ import annotations
 import hashlib
 import json
 import re as _re
+from contextlib import contextmanager
 from typing import Any, Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -284,6 +285,17 @@ class MapReduce:
             # every store has its pointer table from birth, so
             # entries_df never has to walk shard manifests
             self._entries_ptr_table(name).overwrite_rows([])
+        elif (
+            vdef.reduce is not None
+            and not self._reduced_table(name).exists()
+            and self._entries_ptr_table(name).read_rows()
+        ):
+            # a new reduced view over a store its twins already filled:
+            # its replay's deltas against those entries would be 0, so
+            # its first batch refolds it over all its keys
+            red = self._reduced_table(name)
+            red.reset()
+            red.set_meta({"refold": "reset"})
         return vdef
 
     def _view(self, name: str) -> ViewDefinition:
@@ -625,6 +637,8 @@ class MapReduce:
         self.changelog.append(changelog_from_rows(self.spark, rows))
 
     def current_version(self, origin: str) -> int:
+        if not self.changelog.has_partitions():
+            return 0
         row = (
             self.changelog.read_origin(origin)
             .agg(F.max("version").alias("v"))
@@ -648,9 +662,43 @@ class MapReduce:
         `archive-found` when it appears (lib/indexer.js:309-340). The
         Spark analog probes the changelog: an origin indexed while it
         has NO changelog rows is missing; the first index pass that
-        sees rows for a previously-missing origin emits found.
+        sees rows for a previously-missing origin emits found. Rows
+        that land after a pass read the log but before its
+        missing/found probe are applied by a second pass before found
+        is reported, so a found source is always queryable.
         """
         self._indexed_origins.add(origin)
+        applied = self._index_slices(origin)
+        if not applied:
+            cur = self.current_version(origin)
+            done = {v: lv for v, o, lv in self.offsets.read_rows([origin]) if o == origin}
+            if cur > min((done.get(v, 0) for v in self.views), default=cur):
+                # the rows arrived after this pass read the log: re-read
+                # it (the cycle emits archive-found once it applies them)
+                applied = self._index_slices(origin)
+        if not applied:
+            if cur == 0:
+                if origin not in self._missing_origins:
+                    self._missing_origins.add(origin)
+                    self._emit("archive-missing", origin=origin)
+            elif origin in self._missing_origins:
+                self._missing_origins.discard(origin)
+                self._emit("archive-found", origin=origin)
+        if watch:
+            self.watch_views()
+
+    def _index_slices(self, origin: str) -> bool:
+        """One index() pass: every view's unapplied slice of the
+        origin's changelog through the maintenance cycle, views grouped
+        by start offset (a view defined later indexes separately over
+        its own, longer slice). Each slice carries the token
+        ``index:<origin>:<start>-<target>`` — the target comes from the
+        cycle's probe — so re-aggregation takes the same delta route as
+        watch. Pending slices of a crashed pass replay first
+        (_replay_pending_slices). Returns whether any rows applied."""
+        self._replay_pending_slices()
+        if not self.changelog.has_partitions():
+            return False  # nothing appended yet: no Spark job
         log = self.changelog.read_origin(origin)
         # bucket-pruned metadata read: one origin touches one bucket
         # file, not the whole (views x sources) table
@@ -659,12 +707,6 @@ class MapReduce:
             for v, o, lv in self.offsets.read_rows([origin])
             if o == origin
         }
-        # views grouped by start offset: each group's unapplied slice
-        # runs through the maintenance cycle once (a view defined
-        # later indexes separately over its own, longer slice). No
-        # batch token, so re-aggregation takes the refold. The cycle's
-        # probe finds the target version; an empty slice applies
-        # nothing and emits nothing.
         by_start: "dict[int, list[ViewDefinition]]" = {}
         for name, vdef in self.views.items():
             by_start.setdefault(offsets.get(name, 0), []).append(vdef)
@@ -673,7 +715,10 @@ class MapReduce:
             try:
                 applied |= bool(
                     self._maintain_batch(
-                        log.filter(F.col("version") > start), vdefs, progress=True
+                        log.filter(F.col("version") > start),
+                        vdefs,
+                        batch_token=lambda t, s=start: f"index:{origin}:{s}-{t.get(origin, s)}",
+                        progress=True,
                     )
                 )
             except Exception as e:  # reference archive-error, indexer.js:338
@@ -684,16 +729,39 @@ class MapReduce:
                     error=str(e),
                 )
                 raise
-        if not applied:
-            if self.current_version(origin) == 0:
-                if origin not in self._missing_origins:
-                    self._missing_origins.add(origin)
-                    self._emit("archive-missing", origin=origin)
-            elif origin in self._missing_origins:
-                self._missing_origins.discard(origin)
-                self._emit("archive-found", origin=origin)
-        if watch:
-            self.watch_views()
+        return applied
+
+    def _replay_pending_slices(self) -> None:
+        """Replay every index() slice a crash left half-committed: some
+        reduced or sidecar table holds its token
+        ``index:<origin>:<start>-<target>`` while its views' offsets
+        for that origin still read ``start``. The replay applies
+        exactly that slice with that token — the committed tables skip
+        it, the rest apply it, the entries merge re-runs idempotently,
+        the offsets advance — before any other batch can overwrite the
+        token and re-delta those rows over a table that holds them.
+        Driver-side manifest and offsets reads only."""
+        pending: "dict[tuple[str, int, int], set[str]]" = {}
+        for v in self.views.values():
+            if v.reduce is None:
+                continue
+            for t in self._reaggregate_tables(v):
+                tok = t.manifest_meta().get("batch_token")
+                m = _re.fullmatch(r"index:(.*):(\d+)-(\d+)", tok) if isinstance(tok, str) else None
+                if m:
+                    pending.setdefault((m[1], int(m[2]), int(m[3])), set()).add(v.name)
+        for (origin, start, end), names in sorted(pending.items()):
+            offsets = {v: lv for v, o, lv in self.offsets.read_rows([origin]) if o == origin}
+            if all(offsets.get(n, 0) != start for n in names):
+                continue  # the slice completed: its offsets advanced
+            self._maintain_batch(
+                self.changelog.read_origin(origin).filter(
+                    F.col("version").between(start + 1, end)
+                ),
+                [v for v in self.views.values() if offsets.get(v.name, 0) == start],
+                batch_token=f"index:{origin}:{start}-{end}",
+                progress=True,
+            )
 
     def index_source(self, origin: str, rows: list[dict], watch: bool = False) -> None:
         """Convenience: append changes for origin then index it."""
@@ -764,7 +832,7 @@ class MapReduce:
         updates: DataFrame,
         new_entries: DataFrame,
         buckets: "dict[str, list[int]]",
-    ) -> "tuple[DataFrame | None, Callable[[], Callable[[], None]]]":
+    ) -> "tuple[DataFrame | None, list[str], list[Target], DataFrame]":
         """THE retract-then-add merge of one entries store's shards over
         a batch of 1..N origins (``buckets``: origin -> touched bucket
         ids at the engine count, from _probe_batch). Retracts every
@@ -783,17 +851,19 @@ class MapReduce:
         one shared collect, and still joins the one write —
         write_bucketed buckets each row by its own shard's count.
 
-        Returns (retracted, write). ``retracted``: the LAZY (key,
-        key_json, value) rows the batch retracts, multiplicity
-        preserved, for the exact/min-max deltas and the refold's key
-        set; its plan is pinned to the pre-merge snapshot paths (the
-        read_buckets contract), so it stays correct after the flips.
-        None when no shard exists yet (nothing can retract — the
-        backfill fast path). ``write()`` runs the ONE Spark write job
-        and returns the commit closure: every shard's pointer flip,
-        then one pointer-table upsert for the batch's origins (r14
-        verdict #1). Offsets advance only after it, so a mid-commit
-        crash re-applies the batch idempotently."""
+        Returns (retracted, origins, targets, frame), all lazy:
+        ``retracted`` — the (key, key_json, value) rows the batch
+        retracts, multiplicity preserved, for the deltas and the
+        refold's key set; its plan is pinned to the pre-merge snapshot
+        paths (the read_buckets contract), so it stays correct after
+        the flips. None when no shard exists yet (nothing can retract —
+        the backfill fast path). ``targets``/``frame``: one
+        write_bucketed target per origin shard, in ``origins`` order,
+        and the rows to write tagged ``_t`` = that index. The caller
+        writes them (beside its reduced targets), flips them after the
+        reduced commits, then records the pointers; offsets advance
+        only after that, so a mid-commit crash re-applies the batch
+        idempotently."""
         origins = sorted(buckets)
         tables = [self._entries_table(vdef.name, o) for o in origins]
         ids = {o: list(buckets[o]) for o in origins}
@@ -833,28 +903,36 @@ class MapReduce:
         t_of = F.create_map(
             *[F.lit(x) for i, o in enumerate(origins) for x in (o, i)]
         )[F.col("origin")]
+        targets = [Target(t, ids[o]) for o, t in zip(origins, tables)]
+        return retracted, origins, targets, frame.withColumn("_t", t_of)
 
-        def write() -> "Callable[[], None]":
-            flip, _cancel, _hit = write_bucketed(
-                [Target(t, ids[o]) for o, t in zip(origins, tables)],
-                frame.withColumn("_t", t_of),
-                ["key_json", "file_url", "emit_seq"],
-                staging_dir=self.warehouse,
-            )
+    @contextmanager
+    def _phase(self, name: str):
+        """Name every Spark job started inside the block after its
+        maintenance phase (``maintain:<phase>``), so an event log or
+        status store attributes each job to the cycle step that ran
+        it. Local properties are per thread and a worker thread does
+        not inherit its caller's, so a pool task opens its own phase."""
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(name)
+        try:
+            yield
+        finally:
+            sc.setJobDescription(prev)
 
-            def commit() -> None:
-                flip()
-                self._record_entry_ptrs(vdef.name, origins)
-
-            return commit
-
-        return retracted, write
+    def _crash_point(self, boundary: str) -> None:
+        """Fault-injection hook at the cycle's commit boundaries, a
+        no-op here: 'reduced' (reduced and sidecar tables committed),
+        'flips' (entries pointers flipped and recorded), 'offsets'
+        (just before the offsets write). Crash-replay tests raise
+        from it."""
 
     def _maintain_batch(
         self,
         batch_df: DataFrame,
         views: "list[ViewDefinition]",
-        batch_token: "str | None" = None,
+        batch_token: "str | Callable[[dict[str, int]], str] | None" = None,
         progress: bool = False,
         bookkeeping: bool = True,
     ) -> "dict[str, int]":
@@ -864,18 +942,23 @@ class MapReduce:
         concurrently simply joins the next batch. Every entry point
         runs it: watch passes each micro-batch with its stream token;
         index() passes one origin's unapplied slice per distinct start
-        offset, with no token (re-aggregation then refolds);
-        index_file/unindex_file pass their one-row batch with
+        offset with its slice token (a callable of the probe's
+        per-origin targets, since the slice's target is only known
+        once probed); index_file/unindex_file pass their one-row batch
+        with no token (re-aggregation then refolds) and
         ``bookkeeping=False`` (no offsets, no events). ``progress``
         adds index()'s archive-index-progress events. Returns
         {origin: target version} over the batch's origins.
 
-        Per-batch fixed costs are the throughput ceiling (bench
-        maintain_curve), so the cycle pays each one ONCE per batch,
-        not once per (origin, view): one persisted scan of the batch,
-        one probe job, one compaction per distinct glob, one Python
-        map stage per (glob, map, key schema), one offsets read, one
-        _apply_store_batch per entries store, one offsets write.
+        Per-batch fixed costs are the throughput ceiling: at micro-
+        batch grain nearly every Spark job costs its planning, task
+        launch and JIT work whatever its rows, so the cycle pays each
+        job ONCE per batch, not once per (origin, view): one probe of
+        the batch, one Python map stage per (glob, map, key schema)
+        (fused into the first job that reads it), then per entries
+        store one delta collect and ONE write (_apply_store_batch), and
+        driver-local offsets IO. Every job runs under a
+        ``maintain:<phase>`` description (_phase).
 
         The offsets table is PROGRESS METADATA here, never a row
         filter: the parquet file stream delivers each changelog file
@@ -898,8 +981,9 @@ class MapReduce:
         for vdef in views:
             groups.setdefault(self._store_key(vdef), []).append(vdef)
         batch_df = batch_df.persist()
+        upd_cache: dict = {}  # path-key -> cached compacted updates
+        mapped: dict = {}  # (path-key, map fn, key schema) -> cached entries
         try:
-            path_groups: dict = {}
             # views sharing a map stage may differ in value_type; the
             # shared run enforces the strictest declared-integer one
             # (enforcement is a check, not a transform — the emitted
@@ -907,64 +991,30 @@ class MapReduce:
             # stays shared; run_map docstring, r13 ADVICE)
             mk_vt: dict = {}
             for vdef in views:
-                pk = _path_key(vdef)
-                path_groups.setdefault(pk, vdef.path)
                 if vdef.value_type in ("long", "int", "bigint"):
-                    mk_vt[(pk, vdef.map, tuple(vdef.key_schema))] = vdef.value_type
-            # the probe job and the Python map stage both read only the
-            # persisted batch and neither needs the other's output, so
-            # they run CONCURRENTLY (r14: serializing them put the two
-            # largest per-batch fixed costs end-to-end). The map is
-            # materialized OPTIMISTICALLY for every (path, map, schema)
-            # group before the probe says which groups matched — a
-            # group with no matching files costs one empty-input job.
-            upd_cache: dict = {}  # path-key -> cached compacted updates
-            mapped: dict = {}  # (path-key, map fn, key schema) -> cached entries
-            with ThreadPoolExecutor(max_workers=1) as probe_pool:
-                probe_fut = probe_pool.submit(
-                    self._probe_batch, batch_df, path_groups
-                )
-                try:
-                    for vdef in views:
-                        pk = _path_key(vdef)
-                        if pk not in upd_cache:
-                            upd_cache[pk] = latest_wins(
-                                glob_filter(batch_df, vdef.path)
-                            ).cache()
-                        mk = (pk, vdef.map, tuple(vdef.key_schema))
-                        if mk not in mapped:
-                            # views sharing (path, map fn, key schema)
-                            # share ONE Python map stage per batch (the
-                            # mapped+reduced twin-view pattern halves
-                            # the dominant per-batch Python cost)
-                            mapped[mk] = run_map(
-                                upd_cache[pk].filter(F.col("type") == "put"),
-                                vdef.map,
-                                vdef.key_types(),
-                                value_type=mk_vt.get(mk),
-                            ).cache()
-                    # materialize each shared map output ONCE before
-                    # concurrent readers race to compute it: several
-                    # store applies, or a token's delta re-aggregation
-                    # beside the entries write. Counts run concurrently
-                    # (sequential ones would make a multi-group batch's
-                    # wall the SUM of its map stages). A lone reader —
-                    # index() on one store — fills the cache itself.
-                    if mapped and (batch_token is not None or len(groups) > 1):
-                        with ThreadPoolExecutor(
-                            max_workers=min(len(mapped), 4)
-                        ) as mp:
-                            list(mp.map(lambda df: df.count(), mapped.values()))
-                except BaseException:
-                    # a raising user map fn (or a dying job) must not
-                    # leak the pinned caches on every foreachBatch
-                    # retry of a persistently-failing stream
-                    for df in mapped.values():
-                        df.unpersist()
-                    for upd in upd_cache.values():
-                        upd.unpersist()
-                    raise
-                per_origin, g_counts, g_buckets = probe_fut.result()
+                    mk_vt[(_path_key(vdef), vdef.map, tuple(vdef.key_schema))] = (
+                        vdef.value_type
+                    )
+            # both caches fill lazily inside the first job that reads
+            # them (the probe, then the delta collect or the write), so
+            # the Python map stage costs no job of its own; views
+            # sharing (path, map fn, key schema) share ONE map stage
+            for vdef in views:
+                pk = _path_key(vdef)
+                if pk not in upd_cache:
+                    upd_cache[pk] = latest_wins(glob_filter(batch_df, vdef.path)).cache()
+                mk = (pk, vdef.map, tuple(vdef.key_schema))
+                if mk not in mapped:
+                    mapped[mk] = run_map(
+                        upd_cache[pk].filter(F.col("type") == "put"),
+                        vdef.map,
+                        vdef.key_types(),
+                        value_type=mk_vt.get(mk),
+                    ).cache()
+            with self._phase("maintain:probe"):
+                per_origin, g_counts, g_buckets = self._probe_batch(batch_df, upd_cache)
+            if callable(batch_token):
+                batch_token = batch_token(per_origin)
             origins = sorted(per_origin)
             offset_updates = []
             if bookkeeping:
@@ -994,101 +1044,102 @@ class MapReduce:
                         )
                         if target > offsets.get((vdef.name, origin), 0):
                             offset_updates.append((vdef.name, origin, target))
+
             # apply STORES concurrently — views sharing an entries store
             # (map-twins, r14 verdict #5) go through ONE
             # _apply_store_batch call (one merge + per-view
             # re-aggregation; concurrent per-view merges of a shared
             # store would race the snapshot version). Distinct stores
-            # are disjoint storage, so their merges run as parallel
+            # are disjoint storage, so their writes run as parallel
             # Spark jobs and the batch wall is ~the slowest store.
-            try:
-                def _apply_group(vdefs: "list[ViewDefinition]") -> None:
-                    pk = _path_key(vdefs[0])
-                    self._apply_store_batch(
-                        vdefs,
-                        (upd_cache[pk], g_counts[pk], g_buckets[pk]),
-                        mapped[(pk, vdefs[0].map, tuple(vdefs[0].key_schema))],
-                        batch_token,
-                    )
+            def _apply_group(vdefs: "list[ViewDefinition]") -> None:
+                pk = _path_key(vdefs[0])
+                self._apply_store_batch(
+                    vdefs,
+                    (upd_cache[pk], g_counts[pk], g_buckets[pk]),
+                    mapped[(pk, vdefs[0].map, tuple(vdefs[0].key_schema))],
+                    batch_token,
+                )
 
-                gs = list(groups.values())
-                if len(gs) > 1:
-                    with ThreadPoolExecutor(max_workers=min(len(gs), 4)) as pool:
-                        list(pool.map(_apply_group, gs))
-                elif gs:
-                    _apply_group(gs[0])
-            finally:
-                for df in mapped.values():
-                    df.unpersist()
-                for upd in upd_cache.values():
-                    upd.unpersist()
-            if bookkeeping:
-                for vdef in views:
-                    for origin in origins:
-                        if progress:
-                            # progress granularity is the compacted
-                            # batch, not the single file (reference
-                            # ticks per update, lib/indexer.js:413-418
-                            # — per-row driver callbacks would defeat
-                            # batch execution)
-                            n = g_counts[_path_key(vdef)].get(origin, 0)
-                            self._emit(
-                                "archive-index-progress",
-                                origin=origin,
-                                view=vdef.name,
-                                processed=n,
-                                total=n,
-                            )
+            gs = list(groups.values())
+            if len(gs) > 1:
+                with ThreadPoolExecutor(max_workers=min(len(gs), 4)) as pool:
+                    list(pool.map(_apply_group, gs))
+            elif gs:
+                _apply_group(gs[0])
+        finally:
+            for df in mapped.values():
+                df.unpersist()
+            for upd in upd_cache.values():
+                upd.unpersist()
+            batch_df.unpersist()
+        if bookkeeping:
+            for vdef in views:
+                for origin in origins:
+                    if progress:
+                        # progress granularity is the compacted batch,
+                        # not the single file (reference ticks per
+                        # update, lib/indexer.js:413-418 — per-row
+                        # driver callbacks would defeat batch execution)
+                        n = g_counts[_path_key(vdef)].get(origin, 0)
                         self._emit(
-                            "archive-indexed",
+                            "archive-index-progress",
                             origin=origin,
                             view=vdef.name,
-                            version=per_origin[origin],
+                            processed=n,
+                            total=n,
                         )
-                self._set_offsets(offset_updates)
-                for origin in origins:
                     self._emit(
-                        "indexes-updated", origin=origin, version=per_origin[origin]
+                        "archive-indexed",
+                        origin=origin,
+                        view=vdef.name,
+                        version=per_origin[origin],
                     )
-            return per_origin
-        finally:
-            batch_df.unpersist()
+            self._crash_point("offsets")
+            self._set_offsets(offset_updates)
+            for origin in origins:
+                self._emit(
+                    "indexes-updated", origin=origin, version=per_origin[origin]
+                )
+        return per_origin
 
     def _probe_batch(
-        self, batch_df: DataFrame, path_groups: "dict[tuple, object]"
+        self, batch_df: DataFrame, updates: "dict[tuple, DataFrame]"
     ) -> "tuple[dict[str, int], dict[tuple, dict[str, int]], dict[tuple, dict[str, list[int]]]]":
-        """ONE aggregation job over a micro-batch computing everything
-        the maintenance cycle needs driver-side: per-origin target
-        version, plus — per distinct view path-group — the compacted
-        update count per origin (distinct pathnames; latest_wins keeps
-        exactly one row per path) and the touched entries-bucket ids
-        (bounded: <= entries_buckets values per origin). Replaces the
-        r10 two-job probe (per-origin max, then per-group
-        count/bucket agg on the cached compaction) with a single
-        partial-combined groupBy — one fewer job wave per batch, and
-        the compaction caches can now fill lazily on their first real
-        consumer (the map stage) instead of a dedicated count job."""
-        from dat_archive_map_reduce_spark.sources.files import glob_to_regex
-
-        aggs = [F.max("version").alias("target")]
-        keys = list(path_groups)
+        """THE batch probe: ONE aggregation over the batch and each
+        path group's compacted updates computing what the cycle needs
+        driver-side — per-origin target version (over the whole batch,
+        so rows no view's glob matches still advance it), and per path
+        group the compacted update count per origin (latest_wins keeps
+        one row per path) and the touched entries-bucket ids (<=
+        entries_buckets per origin). Reading the compactions here
+        fills their caches, so the map stage after it starts from
+        them."""
+        keys = list(updates)
+        rows = batch_df.select(
+            "origin", "version", F.lit(None).cast("int").alias("_g"),
+            F.lit(None).cast("int").alias("_ub"),
+        )
         for i, pk in enumerate(keys):
-            pred = F.col("pathname").rlike(glob_to_regex(path_groups[pk]))
-            aggs.append(
-                F.count_distinct(F.when(pred, F.col("pathname"))).alias(f"n_{i}")
+            rows = rows.unionByName(
+                updates[pk].select(
+                    "origin", F.lit(None).cast("long").alias("version"),
+                    F.lit(i).alias("_g"), self._url_bucket_expr().alias("_ub"),
+                )
             )
-            aggs.append(
-                F.collect_set(F.when(pred, self._url_bucket_expr())).alias(f"bs_{i}")
-            )
-        rows = batch_df.groupBy("origin").agg(*aggs).collect()
-        targets = {r["origin"]: (r["target"] or 0) for r in rows}
+        aggs = [F.max("version").alias("target")]
+        for i in range(len(keys)):
+            in_g = F.col("_g") == i
+            aggs.append(F.count(F.when(in_g, 1)).alias(f"n_{i}"))
+            aggs.append(F.collect_set(F.when(in_g, F.col("_ub"))).alias(f"bs_{i}"))
+        got = rows.groupBy("origin").agg(*aggs).collect()
+        targets = {r["origin"]: (r["target"] or 0) for r in got}
         counts: "dict[tuple, dict[str, int]]" = {pk: {} for pk in keys}
         buckets: "dict[tuple, dict[str, list[int]]]" = {pk: {} for pk in keys}
         for i, pk in enumerate(keys):
-            for r in rows:
-                n = r[f"n_{i}"]
-                if n:
-                    counts[pk][r["origin"]] = n
+            for r in got:
+                if r[f"n_{i}"]:
+                    counts[pk][r["origin"]] = r[f"n_{i}"]
                     buckets[pk][r["origin"]] = sorted(r[f"bs_{i}"])
         return targets, counts, buckets
 
@@ -1099,114 +1150,197 @@ class MapReduce:
         new_entries: DataFrame,
         batch_token: "str | None" = None,
     ) -> None:
-        """Merge for ONE ENTRIES STORE (every view in ``vdefs`` shares
-        it — map-twins, r14 verdict #5) over a multi-origin batch,
-        paying each per-batch cost once instead of once per (origin,
-        view): ONE entries merge for the whole group (the rows are
-        byte-identical across members — merging per twin doubled the
-        entry-write IO, and under a shared store concurrent per-view
-        merges would race the snapshot version) whose one pre-merge
-        read also yields the retracted rows, and a re-aggregation per
-        member view over the union of every origin's affected keys.
+        """Apply one batch to ONE ENTRIES STORE (every view in ``vdefs``
+        shares it — map-twins, r14 verdict #5) over a multi-origin
+        batch, paying each per-batch cost once instead of once per
+        (origin, view): ONE entries merge for the whole group, whose
+        pre-merge read also yields the retracted rows; ONE delta
+        collect serving every member view's re-aggregation; and ONE
+        write_bucketed job carrying the entries shards AND every
+        view's reduced and sidecar targets (the reference's single
+        LevelDB batch of entries and reduced rows, lib/view.js:89-103).
 
         ``prepared``: caller-owned (cached updates, per-origin counts,
-        touched bucket ids) from _probe_batch + the shared compaction
-        — _maintain_batch builds it once per distinct glob per batch
-        and unpersists it (there is deliberately NO build-it-yourself
-        fallback: a second probe implementation here would drift from
-        the live one).
+        touched bucket ids) from _probe_batch + the shared compaction;
+        ``new_entries``: the caller-owned cached map output over those
+        updates. The caller unpersists both.
 
-        ``new_entries``: caller-owned, already-materialized map output
-        over ``prepared``'s updates — views sharing (path, map, key
-        schema) pay the Python map stage ONCE per batch; the caller
-        unpersists it.
+        Routing per view, independent of the entry point:
+        - ``batch_token`` set and the fold exactly subtractable (count,
+          or sum/avg over declared-integer values) with a synced
+          sidecar: the exact delta; min/max with a synced sidecar: the
+          value-histogram delta. A delta of at most _DELTA_DRIVER_LIMIT
+          (key, value) rows runs driver-side (_driver_delta); a larger
+          one builds the same tables in-plan (the vectorized arms).
+        - otherwise (collect, Python folds, an unsynced sidecar, no
+          token — index_file/unindex_file), and for a min/max view
+          whose extreme fell past the histogram bound: the refold,
+          after the entries flips.
 
-        ``batch_token``: the stream's lineage-scoped batch token
-        ('<query_id>:<batch_id>', see _token_applied). When set and
-        the view's fold is exactly subtractable (count, or sum over
-        declared-integer values — vdef.exact_delta_fold()),
-        re-aggregation takes the exact DELTA path
-        (_reaggregate_exact_delta) — committed BEFORE any entries
-        pointer flips, with the token in the reduced manifest for
-        exactly-once under replay. Without a token (index() and the
-        single-file ops) the general refold runs after the merges.
-        """
+        Commit order (the exactly-once contract): the one write job
+        stages every table; then the reduced and sidecar targets flip,
+        stamped with the token, so a replay of the same token skips
+        them; then the entries flips and one pointer-table upsert; the
+        caller writes offsets last. The deltas read the retraction
+        state from plans pinned to the PRE-merge snapshots, so staging
+        the entries in the same job cannot leak."""
         updates, counts, buckets = prepared
         if not counts:
             return
         # the store is shared by every member, so ONE member drives the
         # entries merge
-        vdef = vdefs[0]
-        # Per-view re-aggregation routing. sum/avg require a SYNCED
-        # sidecar: a reduced table materialized before the view
-        # declared value_type, or a crash
-        # between a refold's two table commits, leaves reduced/sidecar
+        lead = vdefs[0]
+        # sum/avg and min/max require a SYNCED sidecar: a reduced table
+        # materialized before the view declared value_type, or a crash
+        # between a refold's table commits, leaves reduced/sidecar
         # state the delta arithmetic would silently diverge on (r13
-        # ADVICE) — those batches take the general refold, which
-        # realigns and re-stamps both. min/max take the bounded
-        # value-histogram delta path (r14) under the same sync gate.
+        # ADVICE) — those batches refold, which realigns both
+        synced = {v.name: self._sidecar_synced(v) for v in vdefs if v.reduce is not None}
+
         def _delta_kind(v: ViewDefinition) -> "str | None":
-            if batch_token is None:
+            if batch_token is None or not synced.get(v.name):
                 return None
-            if v.exact_delta_fold() is not None and self._sidecar_synced(v):
+            if v.exact_delta_fold() is not None:
                 return "exact"
-            if v.reduce in ("min", "max") and self._sidecar_synced(v):
+            if v.reduce in ("min", "max"):
                 return "minmax"
             return None
 
-        kinds = {v.name: _delta_kind(v) for v in vdefs}
-        delta_applied: "dict[str, bool]" = {}
-        # the store is shared, so its retractions are too: ONE merge
-        # (and one pre-merge read) serves every member view
-        retr, write = self._merge_entries(vdef, updates, new_entries, buckets)
-        if any(kinds.values()):
-            # REDUCED FIRST: the delta derives from the PRE-merge
-            # shard state, so it must commit before any entries
-            # pointer FLIPS — but the entries WRITE job (data files
-            # into not-yet-published snapshot dirs) carries no
-            # ordering constraint, so it runs CONCURRENTLY with the
-            # reduced commits and only its pointer flips wait (r13
-            # verdict #1: the serialized delta-then-merge chain was
-            # the per-batch latency floor). Both sides read the
-            # retraction state from plans pinned to the PRE-merge
-            # snapshots, so the overlap cannot leak.
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=1) as wpool:
-                fut = wpool.submit(write)
+        # a reduced table marked "refold" (a twin reset over the kept
+        # shared store, or a crash between a past-bound mark and its
+        # refold) no longer tracks the entries it would take a delta
+        # against: it refolds over ALL its keys once
+        whole = {
+            v.name for v in vdefs
+            if v.reduce is not None
+            and "refold" in self._reduced_table(v.name).manifest_meta()
+        }
+        kinds = {v.name: v.name not in whole and _delta_kind(v) for v in vdefs}
+        refold = [v for v in vdefs if v.reduce is not None and not kinds[v.name]]
+        with self._phase("maintain:probe"):
+            retr, origins, targets, frame = self._merge_entries(
+                lead, updates, new_entries, buckets
+            )
+        n_ent = len(targets)
+        owners: "list[str]" = []  # view of each reduced/sidecar target
+        frames: "list[DataFrame]" = []
+        probes: "list[tuple[ViewDefinition, DataFrame]]" = []
+        cached: "list[DataFrame]" = []
+        try:
+            if any(kinds.values()):
+                with self._phase("maintain:delta"):
+                    rows = self._delta_rows(new_entries, retr)
                 for v in vdefs:
-                    if kinds[v.name] == "exact":
-                        self._reaggregate_exact_delta(
-                            v, new_entries, retr, batch_token
+                    if not kinds[v.name]:
+                        continue
+                    with self._phase(f"maintain:delta:{v.name}"):
+                        got = (
+                            self._driver_delta(v, rows, batch_token)
+                            if rows is not None
+                            else None
                         )
-                        delta_applied[v.name] = True
-                    elif kinds[v.name] == "minmax":
-                        # False when some key's extreme fell past
-                        # the histogram bound — nothing committed,
-                        # the post-merge refold handles that view
-                        delta_applied[v.name] = (
-                            self._reaggregate_minmax_delta(
-                                v, new_entries, retr, batch_token
+                        if got is None:
+                            arm = (
+                                self._reaggregate_exact_delta
+                                if kinds[v.name] == "exact"
+                                else self._reaggregate_minmax_delta
                             )
-                        )
-                commit = fut.result()
-        else:
-            commit = write()
-        # publish the entries snapshots (pointer flips — after the
-        # reduced commits on the delta paths)
-        commit()
-        refold = [
-            v
-            for v in vdefs
-            if v.reduce is not None and not delta_applied.get(v.name)
-        ]
-        if refold:
-            keys = new_entries.select("key_json")
-            if retr is not None:
-                keys = retr.select("key_json").union(keys)
+                            got = arm(v, new_entries, retr, batch_token, cached)
+                    if got is False:
+                        refold.append(v)
+                        continue
+                    pairs, probe = got
+                    for t, df in pairs:
+                        targets.append(t)
+                        frames.append(df)
+                        owners.append(v.name)
+                    if probe is not None:
+                        probes.append((v, probe))
+            if frames:
+                frame = frame.unionByName(
+                    stack_targets(frames, start=n_ent), allowMissingColumns=True
+                )
+            with self._phase("maintain:write"):
+                commit, cancel, hits = write_bucketed(
+                    targets,
+                    frame,
+                    ["key_json", "file_url", "emit_seq"],
+                    probes=[p for _v, p in probes],
+                    staging_dir=self.warehouse,
+                )
+            try:
+                # a flagged min/max key drops only its view's targets
+                refold += [v for (v, _p), hit in zip(probes, hits) if hit]
+                dropped = {v.name for v in refold}
+                commit(
+                    [n_ent + i for i, name in enumerate(owners) if name not in dropped]
+                )
+                for v in refold:
+                    if kinds[v.name]:
+                        # a delta view that must refold leaves its
+                        # sidecar unsynced until the refold re-stamps
+                        # it, so a crash before that refold makes the
+                        # replay refold too (its delta would be 0
+                        # against the already-flipped entries)
+                        self._reduced_table(v.name).set_meta({"refold": batch_token})
+                self._crash_point("reduced")
+                commit(range(n_ent))
+                self._record_entry_ptrs(lead.name, origins)
+                self._crash_point("flips")
+            finally:
+                cancel()
+        finally:
+            for df in cached:
+                df.unpersist()
+        for part in (
+            [v for v in refold if v.name not in whole],
+            [v for v in refold if v.name in whole],
+        ):
+            if not part:
+                continue
+            if part[0].name in whole:
+                keys = self.entries_df(lead.name).select("key_json")
+            else:
+                keys = new_entries.select("key_json")
+                if retr is not None:
+                    keys = retr.select("key_json").union(keys)
             keys = keys.distinct().cache()
-            self._refold(refold, keys)
-            keys.unpersist()
+            try:
+                self._refold(part, keys, {v.name: v.name not in whole and synced[v.name] for v in part})
+            finally:
+                keys.unpersist()
+
+    # delta rows above this take the vectorized arms; the collect stays
+    # micro-batch-bounded, the same class as the <=4096-row codebook
+    # fetches. A "row" is one already-aggregated (key, value) pair, so
+    # even a large batch over few distinct values qualifies.
+    _DELTA_DRIVER_LIMIT = 1024
+
+    def _delta_rows(
+        self, new_entries: DataFrame, retracted: "DataFrame | None"
+    ) -> "list | None":
+        """THE delta probe of a store's batch: net entry count per
+        (key, key_json, value) — added minus retracted, zero rows
+        dropped — from ONE aggregation over the map output and the
+        retracted rows, collected when it has at most
+        _DELTA_DRIVER_LIMIT rows (None above: the vectorized arms run).
+        Every delta fold derives from it driver-side: count from the
+        per-key sum, sum/avg from the value-weighted sum, min/max from
+        the per-value counts; its keys give every touched bucket id
+        through bucket_of, with no id probe."""
+        delta = new_entries.select("key", "key_json", "value", F.lit(1).alias("dc"))
+        if retracted is not None:
+            delta = delta.unionByName(
+                retracted.select("key", "key_json", "value", F.lit(-1).alias("dc"))
+            )
+        rows = (
+            delta.groupBy("key", "key_json", "value")
+            .agg(F.sum("dc").cast("long").alias("dc"))
+            .filter(F.col("dc") != 0)
+            .limit(self._DELTA_DRIVER_LIMIT + 1)
+            .collect()
+        )
+        return None if len(rows) > self._DELTA_DRIVER_LIMIT else rows
 
     @staticmethod
     def _token_applied(table: VersionedTable, batch_token) -> bool:
@@ -1232,264 +1366,157 @@ class MapReduce:
         self,
         vdef: ViewDefinition,
         new_entries: DataFrame,
-        retracted_rows: DataFrame,
+        retracted_rows: "DataFrame | None",
         batch_token,
-    ) -> None:
-        """Watch-path re-aggregation for the exactly-subtractable
-        folds WITHOUT the entries scan: for ``reduce='count'`` — and
-        for ``reduce='sum'`` over declared-integer values
+        cached: "list[DataFrame] | None" = None,
+    ) -> "tuple[list[tuple[Target, DataFrame]], None]":
+        """The vectorized arm of the exactly-subtractable folds, for a
+        delta too large to collect: ``reduce='count'``, and
+        ``reduce='sum'/'avg'`` over declared-integer values
         (value_type 'long'/'int': integer sums are exactly
         subtractable by the same argument, count being sum-of-ones;
-        double values are REFUSED to the refold path because FP
-        addition is non-associative and subtract-then-add would
-        drift from a true refold) — reduced'(k) =
-        old(k) - retracted(k) + added(k), computed from the batch's
-        own rows. _reaggregate's general path re-folds affected keys
-        from a FULL entries_df scan — O(view entries) per
-        micro-batch however small the delta. Here the only tables
-        touched are the reduced table (and, for sum, its cnt
-        sidecar), and those commits are BUCKET-SCOPED: the delta's
-        keys bound the touched key_json buckets, untouched buckets
-        hardlink, so the per-batch reduced rewrite is
-        O(delta-buckets), flat in |reduced| (r12 verdict #1).
-        Exactness: integer arithmetic (sum rides doubles but stays
-        integer-valued, exact to 2^53 — where the refold itself
-        degrades), so this converges to bit-identical state with the
-        full re-fold — pinned by the stream=batch equality tests,
-        whose batch twin still takes the general path.
-        Delete-on-empty: count filters cnt>0 directly; sum deletes
-        when the sidecar's live entry count reaches 0 (a key whose
-        remaining entries sum to 0 must STAY, so the sum itself
-        cannot be the signal — lib/view.js:139-143).
+        double values are REFUSED to the refold because FP addition is
+        non-associative and subtract-then-add would drift from a true
+        refold) — reduced'(k) = old(k) - retracted(k) + added(k),
+        computed from the batch's own rows, never from an entries
+        scan. Only the reduced table (and, for sum/avg, its (cnt,
+        ssum) sidecar) is touched, and BUCKET-SCOPED: the delta's keys
+        bound the touched key_json buckets (one shared id probe),
+        untouched buckets hardlink, so the per-batch reduced rewrite
+        is O(delta-buckets), flat in |reduced| (r12 verdict #1).
+        Exactness: integer arithmetic end to end (sum derives its
+        double only at format time), so this converges to state
+        bit-identical with the refold — pinned by the stream=batch
+        equality tests. Delete-on-empty: count drops cnt <= 0; sum
+        deletes when the sidecar's live entry count reaches 0 (a key
+        whose remaining entries sum to 0 must STAY — the sum cannot be
+        the signal, lib/view.js:139-143).
 
-        EXACTLY-ONCE under replay (the reason this path is safe at
-        all): a delta, unlike a refold, must apply exactly once per
-        logical batch. Two mechanisms compose: (1) ORDER — the caller
-        commits this BEFORE any entries pointer flips, so the
-        retraction side always reads the true pre-batch state; a
-        crash before this flip replays cleanly from scratch, and a
-        crash after it leaves the entries merges to their own
-        idempotent retract-then-add replay. (2) TOKEN — the
-        lineage-scoped batch token ('<query_id>:<batch_id>', see
-        _token_applied) commits atomically with each table's pointer
-        (manifest meta); a replay of an already-applied batch sees
-        its own token and skips, never double-applying. For sum the
-        reduced table commits FIRST, then the sidecar: a crash
-        between the two flips replays with reduced skipping on its
-        token while the sidecar — whose update derives only from its
-        OWN pre-batch rows plus the recomputed delta — applies,
-        re-aligning both. A checkpoint deleted out-of-band degrades
-        gracefully twice over: the new lineage's tokens can't match
-        stale ones (no silent skip), and the full changelog
-        re-delivers so retractions equal additions per key, delta=0.
-
-        Interleaved BATCH indexing composes safely too: the batch
-        path's general refold commits WITHOUT a token (erasing this
-        path's marker) and realigns reduced + sidecar with the
-        entries' current state — so a later stream replay's delta is
-        computed against that same state (entries already reflecting
-        a batch make its retractions equal its additions: delta 0).
-        Every ordering converges.
-
-        ``retracted_rows=None`` means the caller PROVED the batch
-        retracts nothing (no entries shard exists — the backfill /
-        first-index case): the subtraction side and its shuffle stage
-        are skipped entirely. Job budget (r13 verdict #1 — at
-        micro-batch grain the per-batch job count IS the latency):
-        one probe collecting the touched bucket ids of BOTH tables
-        (skipped when nothing is materialized yet), then ONE write
-        job committing reduced and sidecar together
-        (write_bucketed) — r13 spent two id probes and two write
-        jobs here, which with the bucketed-reduced layout regressed
-        the per-batch maintain constant 2.4x."""
+        Returns the (Target, frame) pairs of every table not yet
+        holding ``batch_token`` (see _driver_delta for the replay
+        rule), for the caller's one write; the cached delta goes into
+        ``cached``, which the caller unpersists after that write.
+        ``retracted_rows=None``: the caller PROVED the batch retracts
+        nothing (no entries shard yet), so the subtraction side and
+        its shuffle are skipped. Without ``cached`` nothing is cached."""
         fold = vdef.exact_delta_fold()
-        red_table = self._reduced_table(vdef.name)
-        cnt_table = (
-            self._reduced_cnt_table(vdef.name) if fold in ("sum", "avg") else None
-        )
+        red_table, *side = self._reaggregate_tables(vdef)
+        cnt_table = side[0] if side else None
         red_done = self._token_applied(red_table, batch_token)
         cnt_done = cnt_table is None or self._token_applied(cnt_table, batch_token)
         if red_done and cnt_done:
-            return  # replay of a fully-applied batch
-        if fold in ("sum", "avg"):
-            # EXACT integer deltas of the sufficient statistics
-            # (count, integer value sum) — pure BIGINT arithmetic
-            # end-to-end; the folded double is derived only at format
-            # time, so it cannot drift from the refold's (exact)
-            # double sums over the same integers
-            val_l = F.col("value").cast("long")
-            add = new_entries.groupBy("key", "key_json").agg(
-                F.count(F.lit(1)).cast("long").alias("dc"),
-                F.sum(val_l).cast("long").alias("dsl"),
+            return [], None  # replay of a fully-applied batch
+        val_l = F.col("value").cast("long")
+        stats = [F.count(F.lit(1)).cast("long").alias("dc")]
+        if cnt_table is not None:
+            stats.append(F.sum(val_l).cast("long").alias("dsl"))
+        delta = new_entries.groupBy("key", "key_json").agg(*stats)
+        if retracted_rows is not None:
+            sub = retracted_rows.groupBy("key", "key_json").agg(
+                (-F.count(F.lit(1))).cast("long").alias("dc"),
+                *(
+                    [(-F.sum(val_l)).cast("long").alias("dsl")]
+                    if cnt_table is not None
+                    else []
+                ),
             )
-            if retracted_rows is None:
-                delta = add.filter(
-                    (F.col("dc") != 0) | (F.col("dsl") != 0)
+            delta = (
+                delta.unionByName(sub)
+                .groupBy("key", "key_json")
+                .agg(
+                    *[
+                        F.sum(c).cast("long").alias(c)
+                        for c in (["dc", "dsl"] if cnt_table is not None else ["dc"])
+                    ]
                 )
-            else:
-                sub = retracted_rows.groupBy("key", "key_json").agg(
-                    (-F.count(F.lit(1))).cast("long").alias("dc"),
-                    (-F.sum(val_l)).cast("long").alias("dsl"),
-                )
-                delta = (
-                    add.unionByName(sub)
-                    .groupBy("key", "key_json")
-                    .agg(
-                        F.sum("dc").cast("long").alias("dc"),
-                        F.sum("dsl").cast("long").alias("dsl"),
-                    )
-                    .filter((F.col("dc") != 0) | (F.col("dsl") != 0))
-                )
-        else:
-            add = new_entries.groupBy("key", "key_json").agg(
-                F.count(F.lit(1)).cast("long").alias("dc")
             )
-            if retracted_rows is None:
-                delta = add.filter(F.col("dc") != 0)
-            else:
-                sub = retracted_rows.groupBy("key", "key_json").agg(
-                    (-F.count(F.lit(1))).cast("long").alias("dc")
+        nonzero = F.col("dc") != 0
+        if cnt_table is not None:
+            nonzero = nonzero | (F.col("dsl") != 0)
+        delta = delta.filter(nonzero)
+        if cached is not None:
+            delta = delta.cache()
+            cached.append(delta)
+        delta_keys = delta.select("key_json")
+        tables = [red_table] + ([cnt_table] if cnt_table is not None else [])
+        idlists = self._touched_ids(tables, delta_keys)
+        if idlists is None:
+            return [], None  # empty delta: replaying it is a no-op
+        ids = idlists[0]
+        meta = {"batch_token": batch_token}
+        old = red_table.read_buckets(ids)
+        if cnt_table is None:
+            # batch-sized delta broadcasts; full-outer would refuse a
+            # broadcast side, so: updated-existing ∪ brand-new keys
+            updated = (
+                old.join(
+                    F.broadcast(delta.select("key_json", "dc")), "key_json", "left"
                 )
-                delta = (
-                    add.unionByName(sub)
-                    .groupBy("key", "key_json")
-                    .agg(F.sum("dc").cast("long").alias("dc"))
-                    .filter(F.col("dc") != 0)
+                .select(
+                    "key",
+                    "key_json",
+                    (
+                        F.col("value").cast("long") + F.coalesce(F.col("dc"), F.lit(0))
+                    ).alias("cnt"),
                 )
-        # NOTE (r15): a driver-side micro-batch fast path here (the
-        # _minmax_delta_driver pattern) was implemented, equivalence-
-        # tested and MEASURED AT PARITY (2.35 vs 2.30 s/drip-batch,
-        # 15 jobs either way), then reverted: unlike the ~10-join
-        # minmax plan it replaced there, this path is already one
-        # probe + one write (r13 job-budget work), and the driver
-        # variant's own collects cost the same three small job waves.
-        delta = delta.cache()
-        try:
-            delta_keys = delta.select("key_json")
-            tables = [red_table] + ([cnt_table] if cnt_table is not None else [])
-            idlists = self._touched_bucket_ids_multi(tables, delta_keys)
-            # a probed-empty id set means the delta itself is empty:
-            # replaying it is a no-op anyway
-            if any(kind == "probed" and not ids for kind, ids in idlists):
-                return
-            ids = idlists[0][1]
-            cids = idlists[1][1] if cnt_table is not None else None
-            meta = {"batch_token": batch_token}
-            if fold in ("sum", "avg"):
-                old = red_table.read_buckets(ids)
-                # post-batch integer state of every delta key: the
-                # sidecar's OWN current rows (pre-batch — when
-                # !red_done the sidecar cannot be ahead, see commit
-                # order; when red_done, the crash-window replay
-                # recomputes against the sidecar's still-pre-batch
-                # rows) plus the delta. The reduced VALUE and the
-                # sidecar row both derive from this one frame.
-                cold = cnt_table.read_buckets(cids)
-                old_cnt = cold.join(
-                    F.broadcast(delta_keys), "key_json", "left_semi"
-                )
-                state = (
-                    delta.join(F.broadcast(old_cnt), "key_json", "left")
-                    .select(
-                        "key",
-                        "key_json",
-                        (
-                            F.coalesce(F.col("cnt"), F.lit(0))
-                            + F.col("dc")
-                        ).alias("cnt"),
-                        (
-                            F.coalesce(F.col("ssum"), F.lit(0))
-                            + F.col("dsl")
-                        ).alias("ssum"),
-                    )
-                    .filter(F.col("cnt") > 0)  # delete-on-empty
-                )
-                fmt = (
-                    F.col("ssum").cast("double")
-                    if fold == "sum"
-                    else F.col("ssum").cast("double") / F.col("cnt")
-                ).cast("string")
-                # untouched rows of touched buckets carry; every delta
-                # key's row is REPLACED by (or deleted from) the
-                # derived state
-                red_df = old.join(
-                    F.broadcast(delta_keys), "key_json", "left_anti"
-                ).unionByName(
-                    state.select("key", "key_json", fmt.alias("value"))
-                )
-                cnt_df = cold.join(
-                    F.broadcast(delta_keys), "key_json", "left_anti"
-                ).unionByName(state.select("key_json", "cnt", "ssum"))
-                # every pending table commits from ONE Spark write
-                # job — reduced's pointer flips first, then the
-                # sidecar's (the crash-window order the replay logic
-                # above assumes; in that window only the sidecar is
-                # pending)
-                todo = [
-                    (t, i, df)
-                    for t, i, df, done in (
-                        (red_table, ids, red_df, red_done),
-                        (cnt_table, cids, cnt_df, cnt_done),
-                    )
-                    if not done
-                ]
-                commit, _cancel, _hit = write_bucketed(
-                    [Target(t, i, meta) for t, i, _df in todo],
-                    stack_targets([df for _t, _i, df in todo]),
-                    ["key_json"],
-                    staging_dir=self.warehouse,
-                )
-                commit()
-            elif not red_done:
-                old = red_table.read_buckets(ids)
-                # batch-sized delta broadcasts; full-outer would
-                # refuse a broadcast side, so: updated-existing ∪
-                # brand-new keys
-                updated = (
-                    old.join(
-                        F.broadcast(delta.select("key_json", "dc")),
-                        "key_json",
-                        "left",
-                    )
-                    .select(
-                        "key",
-                        "key_json",
-                        (
-                            F.col("value").cast("long")
-                            + F.coalesce(F.col("dc"), F.lit(0))
-                        ).alias("cnt"),
-                    )
-                    .filter(F.col("cnt") > 0)
-                    .select(
-                        "key",
-                        "key_json",
-                        F.col("cnt").cast("string").alias("value"),
-                    )
-                )
-                fresh = (
-                    delta.join(old.select("key_json"), "key_json", "left_anti")
-                    .filter(F.col("dc") > 0)
-                    .select(
-                        "key",
-                        "key_json",
-                        F.col("dc").cast("string").alias("value"),
-                    )
-                )
-                red_table.write_merged(
-                    ids,
-                    updated.unionByName(fresh),
-                    sort_cols=["key_json"],
-                    meta=meta,
-                )
-        finally:
-            delta.unpersist()
+                .filter(F.col("cnt") > 0)
+                .select("key", "key_json", F.col("cnt").cast("string").alias("value"))
+            )
+            fresh = (
+                delta.join(old.select("key_json"), "key_json", "left_anti")
+                .filter(F.col("dc") > 0)
+                .select("key", "key_json", F.col("dc").cast("string").alias("value"))
+            )
+            return [(Target(red_table, ids, meta), updated.unionByName(fresh))], None
+        cids = idlists[1]
+        # post-batch integer state of every delta key: the sidecar's
+        # OWN current rows (pre-batch — when !red_done the sidecar
+        # cannot be ahead, see the commit order; when red_done, the
+        # crash-window replay recomputes against the sidecar's
+        # still-pre-batch rows) plus the delta. The reduced VALUE and
+        # the sidecar row both derive from this one frame.
+        cold = cnt_table.read_buckets(cids)
+        old_cnt = cold.join(F.broadcast(delta_keys), "key_json", "left_semi")
+        state = (
+            delta.join(F.broadcast(old_cnt), "key_json", "left")
+            .select(
+                "key",
+                "key_json",
+                (F.coalesce(F.col("cnt"), F.lit(0)) + F.col("dc")).alias("cnt"),
+                (F.coalesce(F.col("ssum"), F.lit(0)) + F.col("dsl")).alias("ssum"),
+            )
+            .filter(F.col("cnt") > 0)  # delete-on-empty
+        )
+        fmt = (
+            F.col("ssum").cast("double")
+            if fold == "sum"
+            else F.col("ssum").cast("double") / F.col("cnt")
+        ).cast("string")
+        # untouched rows of touched buckets carry; every delta key's
+        # row is REPLACED by (or deleted from) the derived state
+        red_df = old.join(F.broadcast(delta_keys), "key_json", "left_anti").unionByName(
+            state.select("key", "key_json", fmt.alias("value"))
+        )
+        cnt_df = cold.join(F.broadcast(delta_keys), "key_json", "left_anti").unionByName(
+            state.select("key_json", "cnt", "ssum")
+        )
+        return [
+            (Target(t, i, meta), df)
+            for t, i, df, done in (
+                (red_table, ids, red_df, red_done),
+                (cnt_table, cids, cnt_df, cnt_done),
+            )
+            if not done
+        ], None
 
     def _minmax_hist_parts(
-        self, vdef: ViewDefinition, live: DataFrame
+        self, vdef: ViewDefinition, live: DataFrame, cached: "list | None" = None
     ) -> "tuple[DataFrame, DataFrame, DataFrame]":
         """Rank a (key_json, v_txt, cnt) frame of LIVE value counts
         into the bounded-histogram shape: returns (ranked frame with
-        the rn column, kept hist rows, overflow hist rows). Ordering
+        the rn column, kept hist rows, overflow hist rows); with
+        ``cached`` the ranked frame is cached (and listed there) so
+        several jobs share its window. Ordering
         is (double value, text) in the fold's direction, so the rank
         is total and deterministic; the overflow row's horizon hz is
         the FIRST evicted value — by construction every evicted value
@@ -1518,6 +1545,9 @@ class MapReduce:
         ]
         w = Window.partitionBy("key_json").orderBy(*order)
         ranked = live.withColumn("rn", F.row_number().over(w))
+        if cached is not None:
+            ranked = ranked.cache()
+            cached.append(ranked)
         bound = self.minmax_hist_bound
         keep = ranked.filter(F.col("rn") <= bound).select(
             "key_json",
@@ -1541,94 +1571,193 @@ class MapReduce:
     # and Spark's double cast are both correctly-rounded, so ordering
     # and horizon comparisons agree bit-for-bit. Anything else
     # (Infinity/NaN spellings, whitespace, suffixes) routes to the
-    # vectorized path rather than risking a parser mismatch.
+    # vectorized arm rather than risking a parser mismatch.
     _MINMAX_NUM_RE = _re.compile(
         r"^[+-]?(\d+(\.\d*)?|\.\d+)([eE][+-]?\d+)?$"
     )
-    # delta rows above this take the vectorized path; the collect
-    # stays micro-batch-bounded, the same class as the <=4096-row
-    # codebook fetches. Note a "row" here is one already-aggregated
-    # (key, value) pair, so even a large backfill over few distinct
-    # values qualifies.
-    _DELTA_DRIVER_LIMIT = 1024
+    # plain JSON integers: the texts the sum/avg driver arm adds up
+    # exactly as Spark's cast to long would
+    _INT_RE = _re.compile(r"^-?\d+$")
 
     @staticmethod
     def _driver_bucket_ids(table, keys: "list[str]") -> "list[int]":
-        # mirrors _touched_bucket_ids_multi's kinds without the probe
-        # job: bucket_of == the in-plan bucket expr (pinned by test)
+        # _touched_ids without the probe job: bucket_of == the in-plan
+        # bucket expr (pinned by test)
         if not table.exists():
             return list(range(table.n_buckets))
         return sorted({table.bucket_of(k) for k in keys})
 
-    def _minmax_delta_driver(
-        self,
-        vdef: ViewDefinition,
-        red_table,
-        hist_table,
-        delta: DataFrame,
-        red_done: bool,
-        hist_done: bool,
-        batch_token,
-    ) -> "bool | None":
-        """Driver-side replica of the min/max histogram delta for
-        MICRO-BATCH-sized deltas (r15). The decision state — the
-        delta itself plus the touched keys' kept/overflow histogram
-        rows — is bounded by |delta| * (minmax_hist_bound + 1) rows,
-        so it collects in a handful of small jobs, the
-        route/rank/evict/flag logic runs in plain Python, and the
-        fused pair commit's plan is scan + literal-IN filter + union
-        of a local relation: ~6 Spark jobs per batch where the
-        vectorized form paid ~57 micro-jobs plus a multi-second
-        planning gap. Returns None when not eligible (big delta, or
-        any value text outside the strict-decimal domain where the
-        Python/Spark double parses provably agree — the vectorized
-        path then runs as before), True when applied, False when some
-        key needs the general refold (nothing committed, same
-        contract). The reduced VALUE text is still formatted IN-PLAN
-        (try_cast(double) -> cast(string)), never by Python, so the
-        committed bytes are bit-identical to the vectorized path's.
-        Exactly-once is unchanged: same batch-token metadata, same
-        reduced-then-histogram commit order, same crash-window
-        single-table writes."""
-        rows = delta.limit(self._DELTA_DRIVER_LIMIT + 1).collect()
-        if len(rows) > self._DELTA_DRIVER_LIMIT:
-            return None
-        if not rows:
-            return True  # empty delta: replaying it is a no-op
-        num = self._MINMAX_NUM_RE.match
-        if any(num(r["v_txt"]) is None for r in rows):
-            return None
-        keys = sorted({r["key_json"] for r in rows})
-        ids = self._driver_bucket_ids(red_table, keys)
-        hids = self._driver_bucket_ids(hist_table, keys)
-        kcol = F.col("key_json")
-        old_red = red_table.read_buckets(ids)
-        old_hist = hist_table.read_buckets(hids)
-        red_rows = old_red.filter(kcol.isin(keys)).collect()
-        hist_rows = old_hist.filter(kcol.isin(keys)).collect()
-        for r in hist_rows:
-            if r["v_txt"] is not None and num(r["v_txt"]) is None:
+    def _driver_delta(self, vdef: ViewDefinition, rows: list, batch_token):
+        """The driver arm of every delta fold, for a delta collected by
+        _delta_rows. The decision state — the delta plus the touched
+        keys' current reduced/sidecar rows, read driver-side
+        (read_key_rows, no Spark job) — is bounded by the delta's keys
+        (times minmax_hist_bound + 1 for min/max), so the fold runs in
+        plain Python and each table's commit plan is a scan of its
+        touched buckets, a literal-IN filter and a union with a local
+        relation: no shuffle and no broadcast beyond the write's own.
+        Paired A/B at drip size (a 4096-file, 512-key origin with
+        mapped, count and min views; 8-file updates retracting key
+        minimums; 4 cpus; two interleaved process pairs, median of 10
+        updates each): 13 Spark jobs, 4.4 CPU-s and 2.2 s wall per
+        update, against 54 jobs, 12.1 CPU-s and 6.0 s with min/max
+        forced onto the vectorized arm (~10 joins, each AQE stage its
+        own job). The vectorized arms stay for deltas past the limit.
+
+        Per fold: count — reduced' = old + net count; sum/avg — the
+        (cnt, ssum) sidecar plus the net count and value-weighted sum,
+        reduced value derived from it; min/max — the bounded value
+        histogram (see _reaggregate_minmax_delta for the invariant).
+        Every reduced VALUE text is formatted IN-PLAN from the raw
+        numbers (the refold's own casts), never by Python, so the
+        committed bytes are bit-identical to the other routes'.
+
+        Returns None when not eligible (a value text outside the
+        domain where Python and Spark provably agree — the vectorized
+        arm then runs), False when a min/max key needs the refold
+        (nothing staged), else (pairs, None): the (Target, frame) of
+        every table not yet holding ``batch_token`` (crash-window
+        replay: a committed table skips, the other applies against its
+        own pre-batch rows), empty for an empty delta."""
+        from pyspark.sql import types as T
+
+        red_table, *side = self._reaggregate_tables(vdef)
+        side = side[0] if side else None
+        red_done = self._token_applied(red_table, batch_token)
+        side_done = side is None or self._token_applied(side, batch_token)
+        if red_done and side_done:
+            return [], None
+        key_of: "dict[str, Any]" = {}
+        for r in rows:
+            key_of.setdefault(r["key_json"], r["key"])
+
+        def _local(data: "list[tuple]", fields: "list[tuple[str, Any]]") -> DataFrame:
+            return local_df(
+                self.spark,
+                data,
+                T.StructType([T.StructField(n, t, True) for n, t in fields]),
+            )
+
+        key_f = ("key", red_table.schema["key"].dataType)
+        kj_f = ("key_json", T.StringType())
+        fold = vdef.reduce
+        if fold == "count":
+            dk: "dict[str, int]" = {}
+            for r in rows:
+                dk[r["key_json"]] = dk.get(r["key_json"], 0) + r["dc"]
+            keys = sorted(k for k, d in dk.items() if d)
+            old = {
+                k: int(v)
+                for k, v in red_table.read_key_rows(keys, ["key_json", "value"])
+            }
+            new = [
+                (key_of[k], k, old.get(k, 0) + dk[k])
+                for k in keys
+                if old.get(k, 0) + dk[k] > 0
+            ]
+            red_local = _local(new, [key_f, kj_f, ("cnt", T.LongType())]).select(
+                "key", "key_json", F.col("cnt").cast("string").alias("value")
+            )
+            side_local = None
+        elif fold in ("sum", "avg"):
+            if any(not self._INT_RE.match(r["value"] or "") for r in rows):
                 return None
-            if r["v_txt"] is None and r["hz"] is not None and num(r["hz"]) is None:
+            ds: "dict[str, tuple[int, int]]" = {}
+            for r in rows:
+                c, x = ds.get(r["key_json"], (0, 0))
+                ds[r["key_json"]] = (c + r["dc"], x + r["dc"] * int(r["value"]))
+            keys = sorted(k for k, d in ds.items() if d != (0, 0))
+            old = {
+                k: (c, x)
+                for k, c, x in side.read_key_rows(keys, ["key_json", "cnt", "ssum"])
+            }
+            state = []
+            for k in keys:
+                oc, ox = old.get(k, (0, 0))
+                c, x = oc + ds[k][0], ox + ds[k][1]
+                if c > 0:  # delete-on-empty
+                    state.append((key_of[k], k, c, x))
+            st = _local(
+                state, [key_f, kj_f, ("cnt", T.LongType()), ("ssum", T.LongType())]
+            )
+            fmt = (
+                F.col("ssum").cast("double")
+                if fold == "sum"
+                else F.col("ssum").cast("double") / F.col("cnt")
+            ).cast("string")
+            red_local = st.select("key", "key_json", fmt.alias("value"))
+            side_local = st.select("key_json", "cnt", "ssum")
+        else:
+            got = self._minmax_driver_fold(vdef, rows, side)
+            if got is None or got is False:
+                return got
+            keys, new_hist, new_red = got
+            side_local = local_df(self.spark, new_hist, side.schema)
+            red_local = _local(
+                [(key_of[k], k, v) for k, v in new_red.items()],
+                [key_f, kj_f, ("v_txt", T.StringType())],
+            ).select(
+                "key",
+                "key_json",
+                # the refold's own format, evaluated in-plan
+                F.col("v_txt").try_cast("double").cast("string").alias("value"),
+            )
+        if not keys:
+            return [], None  # empty delta: replaying it is a no-op
+        meta = {"batch_token": batch_token}
+        pairs = []
+        for table, local, done in ((red_table, red_local, red_done), (side, side_local, side_done)):
+            if table is None or done:
+                continue
+            ids = self._driver_bucket_ids(table, keys)
+            pairs.append((
+                Target(table, ids, meta),
+                table.read_buckets(ids)
+                .filter(~F.col("key_json").isin(keys))
+                .unionByName(local),
+            ))
+        return pairs, None
+
+    def _minmax_driver_fold(self, vdef: ViewDefinition, rows: list, hist_table):
+        """The min/max histogram delta in plain Python over collected
+        delta rows: returns (touched keys, new hist rows, {key: new
+        extreme text}), None when a text falls outside the strict
+        decimal domain, False when some key needs the refold."""
+        num = self._MINMAX_NUM_RE.match
+        delta = []
+        for r in rows:
+            v = r["value"]
+            # texts Spark's try_cast(double) maps to NULL are skipped,
+            # like the refold's F.min/F.max skip nulls
+            if v is None or v[:1] in ('"', "[", "{") or v in ("null", "true", "false"):
+                continue
+            if num(v) is None:
+                return None
+            delta.append((r["key_json"], v, r["dc"]))
+        keys = sorted({k for k, _v, _dc in delta})
+        hist_rows = hist_table.read_key_rows(keys, ["key_json", "v_txt", "cnt", "hz"])
+        for _k, v, _c, hz in hist_rows:
+            if v is not None and num(v) is None:
+                return None
+            if v is None and hz is not None and num(hz) is None:
                 return None
 
         asc = vdef.reduce == "min"
         bound = self.minmax_hist_bound
         kept_old: "dict[str, dict[str, int]]" = {}
         ov_old: "dict[str, tuple[int, str | None]]" = {}
-        for r in hist_rows:
-            if r["v_txt"] is not None:
-                kept_old.setdefault(r["key_json"], {})[r["v_txt"]] = r["cnt"]
+        for k, v, c, hz in hist_rows:
+            if v is not None:
+                kept_old.setdefault(k, {})[v] = c
             else:
-                ov_old[r["key_json"]] = (r["cnt"], r["hz"])
+                ov_old[k] = (c, hz)
 
         def srt(v: str):
             return (float(v), v)
 
         tracked: "dict[str, dict[str, int]]" = {}
         unt: "dict[str, int]" = {}
-        for r in rows:
-            k, v, dc = r["key_json"], r["v_txt"], r["dc"]
+        for k, v, dc in delta:
             hz = ov_old.get(k, (0, None))[1]
             if hz is None:
                 inside = True
@@ -1678,49 +1807,7 @@ class MapReduce:
                 new_hist.append((k, None, ovc, hz))
             if keep:
                 new_red[k] = keep[0]
-
-        key_by_json = {r["key_json"]: r["key"] for r in red_rows}
-        for r in rows:
-            key_by_json.setdefault(r["key_json"], r["key"])
-        from pyspark.sql import types as T
-
-        hist_local = local_df(self.spark, new_hist, hist_table.schema)
-        key_type = red_table.schema["key"].dataType
-        red_local = local_df(
-            self.spark,
-            [(key_by_json[k], k, v) for k, v in new_red.items()],
-            T.StructType(
-                [
-                    T.StructField("key", key_type, True),
-                    T.StructField("key_json", T.StringType(), False),
-                    T.StructField("v_txt", T.StringType(), False),
-                ]
-            ),
-        ).select(
-            "key",
-            "key_json",
-            # the refold's own format, evaluated in-plan
-            F.col("v_txt").try_cast("double").cast("string").alias("value"),
-        )
-        red_df = old_red.filter(~kcol.isin(keys)).unionByName(red_local)
-        hist_df = old_hist.filter(~kcol.isin(keys)).unionByName(hist_local)
-        meta = {"batch_token": batch_token}
-        todo = [
-            (t, i, df)
-            for t, i, df, done in (
-                (red_table, ids, red_df, red_done),
-                (hist_table, hids, hist_df, hist_done),
-            )
-            if not done
-        ]
-        commit, _cancel, _hit = write_bucketed(
-            [Target(t, i, meta) for t, i, _df in todo],
-            stack_targets([df for _t, _i, df in todo]),
-            ["key_json"],
-            staging_dir=self.warehouse,
-        )
-        commit()
-        return True
+        return keys, new_hist, new_red
 
     def _reaggregate_minmax_delta(
         self,
@@ -1728,8 +1815,9 @@ class MapReduce:
         new_entries: DataFrame,
         retracted_rows: "DataFrame | None",
         batch_token,
-    ) -> bool:
-        """Watch-path re-aggregation for ``reduce='min'/'max'`` by
+        cached: "list[DataFrame]",
+    ) -> "tuple[list[tuple[Target, DataFrame]], DataFrame | None]":
+        """The vectorized arm of ``reduce='min'/'max'`` re-aggregation by
         EXACT delta against the bounded value-histogram sidecar
         (_reduced_hist_table) — r13 verdict #7, replacing the r13
         monotone-append-only fast path (which this subsumes: an
@@ -1740,22 +1828,22 @@ class MapReduce:
         the merged kept candidates re-rank (a window over <= bound +
         batch-values rows per key); evictions move count mass to the
         overflow and tighten the horizon; the new extreme is the
-        rank-1 kept value — entries are NEVER rescanned. Returns True
-        when applied; False when ANY key needs the general refold —
-        a kept set drained into a non-empty overflow (the min/max
-        truly is beyond the bound), or an inconsistent retraction —
-        in which case NOTHING commits and the caller routes the whole
-        batch's re-aggregation to the post-merge refold (which
-        rebuilds both tables and re-stamps the sync marker). The
-        refold-needed probe job is skipped for append-only batches
-        (adds cannot drain a kept set or retract anything).
+        rank-1 kept value — entries are NEVER rescanned. Runs for a
+        delta too large for _driver_delta, whose Python replica of
+        this logic is ~50 fewer jobs per micro-batch (each AQE stage of
+        this ~10-join plan is its own job).
 
-        Exactly-once mirrors the sum/avg path: reduced commits first,
-        then the histogram, both from ONE fused write with the
-        lineage-scoped batch token; a crash between the flips replays
-        with reduced skipping on its token while the histogram —
-        derived only from its OWN pre-batch rows plus the recomputed
-        delta — applies, realigning both. Exactness: counts are
+        Returns (pairs, probe): the (Target, frame) of every table not
+        yet holding ``batch_token``, for the caller's one write, and
+        the refold-needed keys as a marker frame riding that write — a
+        key whose kept set drained into a non-empty overflow (the
+        min/max truly is beyond the bound), or an inconsistent
+        retraction. A hit drops this view's targets and routes it to
+        the post-merge refold (which rebuilds both tables and
+        re-stamps the sync marker). Append-only batches carry no
+        probe (adds cannot drain a kept set or retract anything). The
+        caches go into ``cached``; the caller unpersists them after
+        the write. Exactness: counts are
         BIGINTs, the extreme is MIN/MAX over doubles (no arithmetic
         to drift), and the value format is the refold's own
         cast(min(double) as string) — pinned bit-identical by the
@@ -1765,7 +1853,7 @@ class MapReduce:
         red_done = self._token_applied(red_table, batch_token)
         hist_done = self._token_applied(hist_table, batch_token)
         if red_done and hist_done:
-            return True
+            return [], None
         asc = vdef.reduce == "min"
         grp = ["key", "key_json", "value"]
         add = new_entries.groupBy(*grp).agg(
@@ -1792,240 +1880,168 @@ class MapReduce:
         delta = delta.withColumnRenamed("value", "v_txt").filter(
             F.col("v_txt").try_cast("double").isNotNull()
         )
-        # micro-batch fast path (r15): the routing/ranking state is
-        # bounded by |delta keys| * (hist bound + 1) rows, so for a
-        # small delta the whole decision runs driver-side and the
-        # commit plan collapses to scan+filter+union — the Spark form
-        # below builds a ~10-join/broadcast plan whose planning and
-        # ~50 micro-job waves dominated the per-batch wall (measured
-        # 57 jobs, none over 0.1 s, per 8-row drip batch)
-        fast = self._minmax_delta_driver(
-            vdef, red_table, hist_table, delta, red_done, hist_done,
-            batch_token,
-        )
-        if fast is not None:
-            return fast
         delta = delta.cache()
-        try:
-            delta_keys = delta.select("key_json").distinct()
-            (rk, ids), (_hk, hids) = self._touched_bucket_ids_multi(
-                [red_table, hist_table], delta_keys
-            )
-            if rk == "probed" and not ids:
-                return True  # empty delta: replaying it is a no-op
-            old_red = red_table.read_buckets(ids)
-            old_hist = hist_table.read_buckets(hids)
-            oh = old_hist.join(F.broadcast(delta_keys), "key_json", "left_semi")
-            kept_old = oh.filter(F.col("v_txt").isNotNull()).select(
-                "key_json", "v_txt", F.col("cnt").alias("oc")
-            )
-            ov_old = oh.filter(F.col("v_txt").isNull()).select(
-                "key_json", F.col("cnt").alias("ovc"), "hz"
-            )
-            # horizon routing: a delta value strictly inside the
-            # horizon belongs to the kept set; at/beyond it, to the
-            # overflow count (exact by the hist invariant)
-            dv = F.col("v_txt").try_cast("double")
-            hzd = F.col("hz").cast("double")
-            if asc:
-                inside = (
-                    F.col("hz").isNull()
-                    | (dv < hzd)
-                    | ((dv == hzd) & (F.col("v_txt") < F.col("hz")))
-                )
-            else:
-                inside = (
-                    F.col("hz").isNull()
-                    | (dv > hzd)
-                    | ((dv == hzd) & (F.col("v_txt") > F.col("hz")))
-                )
-            dj = delta.join(
-                F.broadcast(ov_old.select("key_json", "hz")), "key_json", "left"
-            )
-            tracked = dj.filter(inside).select("key_json", "v_txt", "dc")
-            unt = (
-                dj.filter(~inside)
-                .groupBy("key_json")
-                .agg(F.sum("dc").cast("long").alias("ov_dc"))
-            )
-            cand = kept_old.join(
-                tracked, ["key_json", "v_txt"], "full_outer"
-            ).select(
-                "key_json",
-                "v_txt",
-                (
-                    F.coalesce(F.col("oc"), F.lit(0))
-                    + F.coalesce(F.col("dc"), F.lit(0))
-                ).alias("cnt"),
-                # retracting a value the kept set never tracked while
-                # it sits inside the horizon = inconsistent state
-                (
-                    F.col("oc").isNull() & (F.coalesce(F.col("dc"), F.lit(0)) < 0)
-                ).alias("bad"),
-            ).cache()
-            live = cand.filter(~F.col("bad") & (F.col("cnt") > 0))
-            # CACHED: the join+window pipeline is the batch's heavy
-            # plan, and it feeds the refold probe AND the commit write
-            # — without the cache each job recomputes it (measured
-            # ~2x the per-batch wall on retracting drips)
-            ranked, _keep0, _ev0 = self._minmax_hist_parts(vdef, live)
-            ranked = ranked.cache()
-            dv_r = F.col("v_txt").try_cast("double")
-            keep = ranked.filter(
-                F.col("rn") <= self.minmax_hist_bound
-            ).select(
-                "key_json", "v_txt", "cnt",
-                F.lit(None).cast("string").alias("hz"),
-            )
-            pair_r = F.struct(dv_r.alias("d"), F.col("v_txt").alias("t"))
-            ev = (
-                ranked.filter(F.col("rn") > self.minmax_hist_bound)
-                .groupBy("key_json")
-                .agg(
-                    F.sum("cnt").cast("long").alias("evc"),
-                    (F.min(pair_r) if asc else F.max(pair_r))
-                    .getField("t")
-                    .alias("ev_hz"),
-                )
-            )
-            ovf = (
-                delta_keys.join(ov_old, "key_json", "left")
-                .join(ev, "key_json", "left")
-                .join(unt, "key_json", "left")
-                .select(
-                    "key_json",
-                    (
-                        F.coalesce(F.col("ovc"), F.lit(0))
-                        + F.coalesce(F.col("evc"), F.lit(0))
-                        + F.coalesce(F.col("ov_dc"), F.lit(0))
-                    ).alias("ovc"),
-                    # an eviction horizon is always tighter than the
-                    # old one (evicted candidates were inside it)
-                    F.coalesce(F.col("ev_hz"), F.col("hz")).alias("hz"),
-                )
-            ).cache()
-            # refold-needed flags (adds alone cannot trip them):
-            # negative counts, untracked-inside retractions, or a key
-            # whose kept set drained into a non-empty overflow. NOT
-            # probed as its own job: the flagged keys ride the staged
-            # pair write as _t=2 marker rows (r14 verdict #3), so the
-            # flag answer is a driver-side isdir on the temp dir —
-            # ZERO extra job waves for retracting batches.
-            keep_keys = keep.select("key_json").distinct()
-            needs_refold = (
-                cand.filter(F.col("bad") | (F.col("cnt") < 0))
-                .select("key_json")
-                .unionByName(
-                    ovf.filter(F.col("ovc") < 0).select("key_json")
-                )
-                .unionByName(
-                    ovf.filter(F.col("ovc") > 0)
-                    .join(keep_keys, "key_json", "left_anti")
-                    .select("key_json")
-                )
-            )
-            # outputs: hist = carried untouched keys + kept + overflow
-            hist_df = (
-                old_hist.join(F.broadcast(delta_keys), "key_json", "left_anti")
-                .unionByName(keep)
-                .unionByName(
-                    ovf.filter(F.col("ovc") > 0).select(
-                        "key_json",
-                        F.lit(None).cast("string").alias("v_txt"),
-                        F.col("ovc").alias("cnt"),
-                        "hz",
-                    )
-                )
-            )
-            # the new extreme per surviving key = rank-1 kept value,
-            # formatted exactly like the refold (cast(extreme double))
-            newv = ranked.filter(F.col("rn") == 1).select(
-                "key_json", dv.cast("string").alias("nv")
-            )
-            red_upd = (
-                old_red.join(F.broadcast(delta_keys), "key_json", "left_semi")
-                .join(newv, "key_json", "inner")  # drops deleted keys
-                .select("key", "key_json", F.col("nv").alias("value"))
-            )
-            key_structs = delta.select("key", "key_json").distinct()
-            red_fresh = (
-                newv.join(old_red.select("key_json"), "key_json", "left_anti")
-                .join(key_structs, "key_json")
-                .select("key", "key_json", F.col("nv").alias("value"))
-            )
-            red_df = (
-                old_red.join(F.broadcast(delta_keys), "key_json", "left_anti")
-                .unionByName(red_upd)
-                .unionByName(red_fresh)
-            )
-            meta = {"batch_token": batch_token}
-            # optimistic staged write of every pending table (both,
-            # or in the crash window only the histogram) with the
-            # refold-needed keys riding along as marker rows; a flagged
-            # key cancels the staged write (temp dir dropped, no table
-            # touched). Append-only batches skip the marker (adds
-            # cannot trip any flag).
-            todo = [
-                (t, i, df)
-                for t, i, df, done in (
-                    (red_table, ids, red_df, red_done),
-                    (hist_table, hids, hist_df, hist_done),
-                )
-                if not done
-            ]
-            commit, cancel, probe_hit = write_bucketed(
-                [Target(t, i, meta) for t, i, _df in todo],
-                stack_targets([df for _t, _i, df in todo]),
-                ["key_json"],
-                probe_df=(
-                    needs_refold.select("key_json")
-                    if retracted_rows is not None
-                    else None
-                ),
-                staging_dir=self.warehouse,
-            )
-            try:
-                if probe_hit:
-                    cancel()
-                    return False
-                commit()
-                return True
-            except BaseException:
-                # an abandoned staged write leaks its data-sized temp
-                # dir permanently (r14 ADVICE) — drop it on the
-                # exception path (idempotent after commit's own
-                # cleanup)
-                cancel()
-                raise
-        finally:
-            try:
-                cand.unpersist()
-                ranked.unpersist()
-                ovf.unpersist()
-            except (NameError, UnboundLocalError):
-                pass
-            delta.unpersist()
-
-    def _touched_bucket_ids_multi(
-        self, tables: "list[BucketedEntriesTable]", keys_df: DataFrame
-    ) -> "list[tuple[str, list[int]]]":
-        """Touched ('kind', bucket ids) for several key_json-bucketed
-        tables, sharing ONE probe job across all of them (r13 spent
-        one collect per table). Kinds: 'absent' — no snapshot on disk,
-        every id without a probe (there is nothing to read or hardlink
-        behind them, so exact ids buy nothing); 'probed' — the keys'
-        ids from one shared distinct-collect. When every table is
-        absent (the first-batch fast path) NO Spark job runs."""
-        present = [t for t in tables if t.exists()]
-        ids = (
-            self._key_bucket_ids(keys_df, {t.n_buckets for t in present})
-            if present
-            else {}
+        cached.append(delta)
+        delta_keys = delta.select("key_json").distinct()
+        idlists = self._touched_ids([red_table, hist_table], delta_keys)
+        if idlists is None:
+            return [], None  # empty delta: replaying it is a no-op
+        ids, hids = idlists
+        old_red = red_table.read_buckets(ids)
+        old_hist = hist_table.read_buckets(hids)
+        oh = old_hist.join(F.broadcast(delta_keys), "key_json", "left_semi")
+        kept_old = oh.filter(F.col("v_txt").isNotNull()).select(
+            "key_json", "v_txt", F.col("cnt").alias("oc")
         )
+        ov_old = oh.filter(F.col("v_txt").isNull()).select(
+            "key_json", F.col("cnt").alias("ovc"), "hz"
+        )
+        # horizon routing: a delta value strictly inside the
+        # horizon belongs to the kept set; at/beyond it, to the
+        # overflow count (exact by the hist invariant)
+        dv = F.col("v_txt").try_cast("double")
+        hzd = F.col("hz").cast("double")
+        if asc:
+            inside = (
+                F.col("hz").isNull()
+                | (dv < hzd)
+                | ((dv == hzd) & (F.col("v_txt") < F.col("hz")))
+            )
+        else:
+            inside = (
+                F.col("hz").isNull()
+                | (dv > hzd)
+                | ((dv == hzd) & (F.col("v_txt") > F.col("hz")))
+            )
+        dj = delta.join(
+            F.broadcast(ov_old.select("key_json", "hz")), "key_json", "left"
+        )
+        tracked = dj.filter(inside).select("key_json", "v_txt", "dc")
+        unt = (
+            dj.filter(~inside)
+            .groupBy("key_json")
+            .agg(F.sum("dc").cast("long").alias("ov_dc"))
+        )
+        cand = kept_old.join(
+            tracked, ["key_json", "v_txt"], "full_outer"
+        ).select(
+            "key_json",
+            "v_txt",
+            (
+                F.coalesce(F.col("oc"), F.lit(0))
+                + F.coalesce(F.col("dc"), F.lit(0))
+            ).alias("cnt"),
+            # retracting a value the kept set never tracked while
+            # it sits inside the horizon = inconsistent state
+            (
+                F.col("oc").isNull() & (F.coalesce(F.col("dc"), F.lit(0)) < 0)
+            ).alias("bad"),
+        ).cache()
+        cached.append(cand)
+        live = cand.filter(~F.col("bad") & (F.col("cnt") > 0))
+        # CACHED: the join+window pipeline is the batch's heavy
+        # plan, and it feeds the refold probe AND the commit write
+        # — without the cache each job recomputes it (measured
+        # ~2x the per-batch wall on retracting drips)
+        ranked, keep, ev = self._minmax_hist_parts(vdef, live, cached)
+        ovf = (
+            delta_keys.join(ov_old, "key_json", "left")
+            .join(ev, "key_json", "left")
+            .join(unt, "key_json", "left")
+            .select(
+                "key_json",
+                (
+                    F.coalesce(F.col("ovc"), F.lit(0))
+                    + F.coalesce(F.col("evc"), F.lit(0))
+                    + F.coalesce(F.col("ov_dc"), F.lit(0))
+                ).alias("ovc"),
+                # an eviction horizon is always tighter than the
+                # old one (evicted candidates were inside it)
+                F.coalesce(F.col("ev_hz"), F.col("hz")).alias("hz"),
+            )
+        ).cache()
+        cached.append(ovf)
+        # refold-needed flags (adds alone cannot trip them):
+        # negative counts, untracked-inside retractions, or a key
+        # whose kept set drained into a non-empty overflow. NOT
+        # probed as its own job: the flagged keys ride the batch's
+        # one write as marker rows (r14 verdict #3), so the flag
+        # answer is a driver-side isdir on the staging dir — ZERO
+        # extra job waves for retracting batches.
+        keep_keys = keep.select("key_json").distinct()
+        needs_refold = (
+            cand.filter(F.col("bad") | (F.col("cnt") < 0))
+            .select("key_json")
+            .unionByName(
+                ovf.filter(F.col("ovc") < 0).select("key_json")
+            )
+            .unionByName(
+                ovf.filter(F.col("ovc") > 0)
+                .join(keep_keys, "key_json", "left_anti")
+                .select("key_json")
+            )
+        )
+        # outputs: hist = carried untouched keys + kept + overflow
+        hist_df = (
+            old_hist.join(F.broadcast(delta_keys), "key_json", "left_anti")
+            .unionByName(keep)
+            .unionByName(
+                ovf.filter(F.col("ovc") > 0).select(
+                    "key_json",
+                    F.lit(None).cast("string").alias("v_txt"),
+                    F.col("ovc").alias("cnt"),
+                    "hz",
+                )
+            )
+        )
+        # the new extreme per surviving key = rank-1 kept value,
+        # formatted exactly like the refold (cast(extreme double))
+        newv = ranked.filter(F.col("rn") == 1).select(
+            "key_json", dv.cast("string").alias("nv")
+        )
+        red_upd = (
+            old_red.join(F.broadcast(delta_keys), "key_json", "left_semi")
+            .join(newv, "key_json", "inner")  # drops deleted keys
+            .select("key", "key_json", F.col("nv").alias("value"))
+        )
+        key_structs = delta.select("key", "key_json").distinct()
+        red_fresh = (
+            newv.join(old_red.select("key_json"), "key_json", "left_anti")
+            .join(key_structs, "key_json")
+            .select("key", "key_json", F.col("nv").alias("value"))
+        )
+        red_df = (
+            old_red.join(F.broadcast(delta_keys), "key_json", "left_anti")
+            .unionByName(red_upd)
+            .unionByName(red_fresh)
+        )
+        meta = {"batch_token": batch_token}
         return [
-            ("probed", ids[t.n_buckets])
-            if t in present
-            else ("absent", list(range(t.n_buckets)))
+            (Target(t, i, meta), df)
+            for t, i, df, done in (
+                (red_table, ids, red_df, red_done),
+                (hist_table, hids, hist_df, hist_done),
+            )
+            if not done
+        ], (
+            # adds alone cannot trip any flag
+            needs_refold.select("key_json") if retracted_rows is not None else None
+        )
+
+    def _touched_ids(
+        self, tables: "list[BucketedEntriesTable]", keys_df: DataFrame
+    ) -> "list[list[int]] | None":
+        """Touched key_json bucket ids of each table from ONE shared
+        distinct-collect (_key_bucket_ids); a table with no snapshot
+        takes every id unprobed (nothing to read or hardlink behind
+        them), so when no table exists no job runs. None: the keys
+        are empty."""
+        present = {t.n_buckets for t in tables if t.exists()}
+        probed = self._key_bucket_ids(keys_df, present) if present else {}
+        if any(not ids for ids in probed.values()):
+            return None
+        return [
+            probed[t.n_buckets] if t.exists() else list(range(t.n_buckets))
             for t in tables
         ]
 
@@ -2091,25 +2107,37 @@ class MapReduce:
             tables.append(self._reduced_hist_table(vdef.name))
         return tables
 
-    def _refold(self, vdefs: "list[ViewDefinition]", affected_keys: DataFrame) -> None:
+    def _refold(
+        self,
+        vdefs: "list[ViewDefinition]",
+        affected_keys: DataFrame,
+        synced: "dict[str, bool] | None" = None,
+    ) -> None:
         """_reaggregate every view in ``vdefs`` over the same affected
-        keys, probing their touched bucket ids once."""
+        keys, probing their touched bucket ids once. ``synced``: each
+        view's sidecar state as routed before this batch's commits
+        (a delta view routed here marks itself unsynced for crash
+        safety, which must not turn this refold into a bootstrap)."""
         if not vdefs:
             return
         tables = [t for v in vdefs for t in self._reaggregate_tables(v)]
-        ids = self._key_bucket_ids(affected_keys, {t.n_buckets for t in tables})
+        with self._phase("maintain:refold"):
+            ids = self._key_bucket_ids(affected_keys, {t.n_buckets for t in tables})
         for v in vdefs:
-            self._reaggregate(v, affected_keys, ids)
+            with self._phase(f"maintain:refold:{v.name}"):
+                self._reaggregate(v, affected_keys, ids, (synced or {}).get(v.name))
 
     def _reaggregate(
         self,
         vdef: ViewDefinition,
         affected_keys: DataFrame,
         key_ids: "dict[int, list[int]]",
+        synced: "bool | None" = None,
     ) -> None:
         """Re-fold only affected keys, merge into the reduced table.
         ``key_ids``: the keys' touched bucket ids per bucket count
-        (_key_bucket_ids over at least this view's tables).
+        (_key_bucket_ids over at least this view's tables); ``synced``:
+        the sidecar state, read now when None.
 
         reduced' = (reduced  ⟕anti affected) ∪ fold(entries ⟕semi affected)
         — the Parquet copy-on-write equivalent of MERGE, committed
@@ -2120,13 +2148,12 @@ class MapReduce:
         cycle). Keys whose entry set became empty simply vanish
         (delete-on-empty, lib/view.js:139-143).
 
-        The refold commits WITHOUT a batch token (write_merged's
-        meta=None replaces the manifest), which is load-bearing for
-        the exact-delta interleave story: a batch-path refold erases
-        the stream's marker AND realigns reduced (and, for sum
-        views, the cnt sidecar) with the entries' current state, so
-        a later stream replay's delta computes against that same
-        state. For sum/avg views the reduced table and the sidecar
+        The refold commits WITHOUT a batch token (a Target without
+        meta replaces the manifest), which is load-bearing for
+        the exact-delta interleave story: a refold erases any delta
+        token AND realigns reduced (and, for sum views, the cnt
+        sidecar) with the entries' current state, so a later replay's
+        delta computes against that same state. For sum/avg views the reduced table and the sidecar
         commit from ONE Spark write job, stamped with a shared
         fresh 'sync' marker (r13 ADVICE: two sequential commits left
         a crash window whose stale sidecar would silently skew every
@@ -2135,24 +2162,22 @@ class MapReduce:
         whole sidecar from entries, covering both that window and a
         reduced table materialized before the view declared
         value_type)."""
-        tables = self._reaggregate_tables(vdef)
-        red_table = tables[0]
+        red_table, *side = self._reaggregate_tables(vdef)
+        side = side[0] if side else None
         ids = key_ids[red_table.n_buckets]
         if not ids:
             return  # empty affected set: nothing to refold or delete
-        if vdef.exact_delta_fold() in ("sum", "avg"):
-            cnt_table = tables[1]
-            synced = self._sidecar_synced(vdef)
-            cnt_ids = key_ids[cnt_table.n_buckets]
-            import uuid as _uuid
+        entries = self.entries_df(vdef.name)
+        touched = entries.join(F.broadcast(affected_keys), "key_json", "left_semi")
 
-            sync = {"sync": _uuid.uuid4().hex}
-            old = red_table.read_buckets(ids)
-            entries = self.entries_df(vdef.name)
-            touched = entries.join(
-                F.broadcast(affected_keys), "key_json", "left_semi"
+        def carried(table, bucket_ids) -> DataFrame:
+            # untouched rows of the touched buckets
+            return table.read_buckets(bucket_ids).join(
+                F.broadcast(affected_keys), "key_json", "left_anti"
             )
-            kept = old.join(F.broadcast(affected_keys), "key_json", "left_anti")
+
+        cached = []
+        if vdef.exact_delta_fold() in ("sum", "avg"):
             # ONE entries pass serves both the refold and the sidecar
             # realignment (folded value + exact integer sufficient
             # statistics in the same agg; the sidecar must follow
@@ -2173,114 +2198,61 @@ class MapReduce:
                 .agg(fold_expr.cast("string").alias("value"), *stats)
                 .cache()
             )
-            try:
-                red_df = kept.unionByName(
-                    both.select("key", "key_json", "value")
-                )
-                if synced:
-                    # incremental: untouched sidecar rows carry
-                    cnt_df = (
-                        cnt_table.read_buckets(cnt_ids)
-                        .join(F.broadcast(affected_keys), "key_json", "left_anti")
-                        .unionByName(both.select("key_json", "cnt", "ssum"))
+            cached.append(both)
+            refolded = both.select("key", "key_json", "value")
+            side_touched = both.select("key_json", "cnt", "ssum")
+            side_all = entries.groupBy("key_json").agg(*stats)
+        else:
+            refolded = reduce_entries(touched, vdef.reduce, vdef.key_types())
+            if side is not None:  # min/max
+                # a key with NO numeric values folds to NULL (F.min/F.max
+                # skip nulls, then the agg over an all-null group IS
+                # null) — drop it: a NULL reduced value crashes get() at
+                # json.loads(None), and the histogram delta path (which
+                # tracks numeric values only) deletes such keys, so the
+                # refold must agree or stream=batch diverges (r14 ADVICE)
+                refolded = refolded.filter(F.col("value").isNotNull())
+
+                def _hist_rows(ents: DataFrame) -> DataFrame:
+                    live = ents.groupBy("key_json", F.col("value").alias("v_txt")).agg(
+                        F.count(F.lit(1)).cast("long").alias("cnt")
                     )
-                else:
-                    # BOOTSTRAP: the sidecar is absent, stale, or
-                    # unverifiable — rebuild it for EVERY key from the
-                    # same entries scan (touched keys from `both`,
-                    # the rest aggregated fresh), so the next stream
-                    # delta applies against true counts everywhere,
-                    # not only the keys this batch touched
-                    cnt_ids = list(range(cnt_table.n_buckets))
-                    rest = (
-                        entries.join(
-                            F.broadcast(affected_keys), "key_json", "left_anti"
+                    _ranked, keep_rows, ev = self._minmax_hist_parts(vdef, live)
+                    return keep_rows.unionByName(
+                        ev.select(
+                            "key_json",
+                            F.lit(None).cast("string").alias("v_txt"),
+                            F.col("evc").alias("cnt"),
+                            F.col("ev_hz").alias("hz"),
                         )
-                        .groupBy("key_json")
-                        .agg(*stats)
                     )
-                    cnt_df = rest.unionByName(
-                        both.select("key_json", "cnt", "ssum")
-                    )
-                commit, _cancel, _hit = write_bucketed(
-                    [Target(red_table, ids, sync), Target(cnt_table, cnt_ids, sync)],
-                    stack_targets([red_df, cnt_df]),
-                    ["key_json"],
-                    staging_dir=self.warehouse,
-                )
-                commit()
-            finally:
-                both.unpersist()
-            return
-        if vdef.reduce in ("min", "max"):
-            # min/max refold maintains the value-histogram sidecar the
-            # same way the sum/avg refold maintains (cnt, ssum): both
-            # tables rebuild from ONE touched-entries pass and commit
-            # fused with a shared sync marker. An unsynced sidecar
-            # (refold crash window, or a delta batch that hit the
-            # bound on SOME key) bootstraps the
-            # FULL histogram from entries.
-            hist_table = tables[1]
-            synced = self._sidecar_synced(vdef)
-            hist_ids = key_ids[hist_table.n_buckets]
+
+                side_touched, side_all = _hist_rows(touched), _hist_rows(entries)
+        targets = [Target(red_table, ids)]
+        frames = [carried(red_table, ids).unionByName(refolded)]
+        if side is not None:
+            # both tables commit from ONE write, stamped with a shared
+            # fresh sync marker; an unsynced sidecar (absent, stale, or
+            # a refold crash window) BOOTSTRAPS from every entry, so
+            # the next delta applies against true state for all keys
             import uuid as _uuid
 
             sync = {"sync": _uuid.uuid4().hex}
-            old = red_table.read_buckets(ids)
-            entries = self.entries_df(vdef.name)
-            touched = entries.join(
-                F.broadcast(affected_keys), "key_json", "left_semi"
+            if synced is None:
+                synced = self._sidecar_synced(vdef)
+            side_ids = key_ids[side.n_buckets] if synced else range(side.n_buckets)
+            targets = [Target(red_table, ids, sync), Target(side, side_ids, sync)]
+            frames.append(
+                carried(side, side_ids).unionByName(side_touched) if synced else side_all
             )
-            kept = old.join(F.broadcast(affected_keys), "key_json", "left_anti")
-            # a key with NO numeric values folds to NULL (F.min/F.max
-            # skip nulls, then the agg over an all-null group IS null)
-            # — drop it: a NULL reduced value crashes get() at
-            # json.loads(None), and the histogram delta path (which
-            # tracks numeric values only) deletes such keys, so the
-            # refold must agree or stream=batch diverges (r14 ADVICE)
-            refolded = reduce_entries(
-                touched, vdef.reduce, vdef.key_types()
-            ).filter(F.col("value").isNotNull())
-            red_df = kept.unionByName(refolded)
-
-            def _hist_rows(ents: DataFrame) -> DataFrame:
-                live = ents.groupBy("key_json", F.col("value").alias("v_txt")).agg(
-                    F.count(F.lit(1)).cast("long").alias("cnt")
-                )
-                _ranked, keep_rows, ev = self._minmax_hist_parts(vdef, live)
-                ov_rows = ev.select(
-                    "key_json",
-                    F.lit(None).cast("string").alias("v_txt"),
-                    F.col("evc").alias("cnt"),
-                    F.col("ev_hz").alias("hz"),
-                )
-                return keep_rows.unionByName(ov_rows)
-
-            if synced:
-                hist_df = (
-                    hist_table.read_buckets(hist_ids)
-                    .join(F.broadcast(affected_keys), "key_json", "left_anti")
-                    .unionByName(_hist_rows(touched))
-                )
-            else:
-                hist_ids = list(range(hist_table.n_buckets))
-                hist_df = _hist_rows(entries)
+        try:
             commit, _cancel, _hit = write_bucketed(
-                [Target(red_table, ids, sync), Target(hist_table, hist_ids, sync)],
-                stack_targets([red_df, hist_df]),
-                ["key_json"],
-                staging_dir=self.warehouse,
+                targets, stack_targets(frames), ["key_json"], staging_dir=self.warehouse
             )
             commit()
-            return
-        old = red_table.read_buckets(ids)
-        entries = self.entries_df(vdef.name)
-        touched = entries.join(F.broadcast(affected_keys), "key_json", "left_semi")
-        kept = old.join(F.broadcast(affected_keys), "key_json", "left_anti")
-        refolded = reduce_entries(touched, vdef.reduce, vdef.key_types())
-        red_table.write_merged(
-            ids, kept.unionByName(refolded), sort_cols=["key_json"]
-        )
+        finally:
+            for df in cached:
+                df.unpersist()
 
     # -- single-file ops (reference indexFile/unindexFile) ----------
     def index_file(self, origin: str, pathname: str, content: str, version: int | None = None) -> None:
@@ -2632,6 +2604,11 @@ class MapReduce:
         # replay converge on the shared store without duplication),
         # and only this view's derived state resets below
         self._reduced_table(view).reset()
+        if others and vdef.reduce is not None:
+            # the shared entries stay while the reduced state empties:
+            # a replay's delta against them would be 0, so the next
+            # batch refolds this view over all its keys
+            self._reduced_table(view).set_meta({"refold": "reset"})
         if view in self.views and self.views[view].exact_delta_fold() in (
             "sum", "avg",
         ):

@@ -116,6 +116,13 @@ class VersionedTable:
         except (FileNotFoundError, json.JSONDecodeError):
             return {}
 
+    def set_meta(self, meta: dict) -> None:
+        """Replace the current snapshot's manifest meta, data unchanged
+        (a no-op on a table with no snapshot)."""
+        v = self._current()
+        if v is not None:
+            self._set_current(v, meta)
+
     def _snapshot_dir(self, v: int) -> str:
         return f"{self.root}/v{v:08d}"
 
@@ -653,6 +660,34 @@ class BucketedEntriesTable(VersionedTable):
             .parquet(*dirs)
         )
 
+    def read_key_rows(self, keys: "list[str]", columns: "list[str]") -> "list[tuple]":
+        """Driver-local read (pyarrow, NO Spark job) of the current
+        snapshot's rows whose bucket column is in ``keys``: only the
+        keys' bucket dirs are opened, and the ``in`` filter prunes row
+        groups by their min/max stats. For key sets bounded by a
+        micro-batch, like BucketedMetaTable.read_rows."""
+        import pyarrow.parquet as pq
+
+        v = self._current()
+        if v is None or not keys:
+            return []
+        self._require_bucketed()
+        out: "list[tuple]" = []
+        for b in sorted({self.bucket_of(k) for k in keys}):
+            for dirpath, _dirs, names in os.walk(self._bucket_dir(v, b)):
+                for n in sorted(names):
+                    if not n.endswith(".parquet"):
+                        continue
+                    # one file at a time: files of one table can carry
+                    # different padding columns (stack_targets)
+                    t = pq.read_table(
+                        os.path.join(dirpath, n),
+                        columns=columns,
+                        filters=[(self.bucket_col, "in", list(keys))],
+                    )
+                    out += zip(*[t.column(c).to_pylist() for c in columns])
+        return out
+
     def bucket_stats(self) -> "dict[int, int]":
         """Per-bucket on-disk bytes of the current snapshot (driver
         os.walk — metadata-sized). The operational signal for when to
@@ -797,13 +832,14 @@ class Target(NamedTuple):
     n: "int | None" = None
 
 
-def stack_targets(frames: "list[DataFrame]") -> DataFrame:
+def stack_targets(frames: "list[DataFrame]", start: int = 0) -> DataFrame:
     """One ``write_bucketed`` frame from per-target frames: row set i
-    tagged ``_t = i`` and padded with the others' missing columns as
-    typed NULLs (parquet nulls are metadata-cheap, and every read pins
-    its own table schema, so the padding is never projected)."""
-    out = frames[0].withColumn("_t", F.lit(0))
-    for i, df in enumerate(frames[1:], 1):
+    tagged ``_t = start + i`` and padded with the others' missing
+    columns as typed NULLs (parquet nulls are metadata-cheap, and every
+    read pins its own table schema, so the padding is never
+    projected)."""
+    out = frames[0].withColumn("_t", F.lit(start))
+    for i, df in enumerate(frames[1:], start + 1):
         out = out.unionByName(
             df.withColumn("_t", F.lit(i)), allowMissingColumns=True
         )
@@ -814,15 +850,17 @@ def write_bucketed(
     targets: "list[Target]",
     frame: DataFrame,
     sort_cols: "list[str] | None" = None,
-    probe_df: "DataFrame | None" = None,
+    probes: "Iterable[DataFrame]" = (),
     staging_dir: "str | None" = None,
-) -> "tuple[Callable[[], None], Callable[[], None], bool]":
+) -> "tuple[Callable[..., None], Callable[[], None], list[bool]]":
     """THE bucketed-snapshot writer: every write of a bucketed table
     (merges, re-aggregation commits, rebucket, compaction) is ONE Spark
     job here. ``frame`` holds each target's touched buckets' full
     post-write contents, every row tagged with its target's index in
-    ``_t``; a row's bucket is crc32 of the shared bucket column modulo
-    ITS target's count (a literal ``_t -> n`` map when counts differ).
+    ``_t``; a row's bucket is crc32 of ITS target's bucket column
+    modulo ITS target's count, so one job can write tables bucketed on
+    different columns (a maintenance batch writes its entries shards,
+    on file_url, beside its reduced and sidecar tables, on key_json).
 
     No explicit partition count: a REPARTITION_BY_COL shuffle lets AQE
     size the write tasks to the rows (a drip batch coalesces to ~1
@@ -833,48 +871,53 @@ def write_bucketed(
     (``_t``, ``_b``) value still hashes wholly into one task, so a
     bucket dir gets a handful of files sorted by ``sort_cols``
     (row-group min/max stats prune key-range scans in the bucket, the
-    LevelDB-iterator stand-in).
+    LevelDB-iterator stand-in; a sort column a target lacks is NULL
+    padding and sorts nothing).
 
     One target writes straight into its new snapshot dir; several (or
-    a ``probe_df``) stage under one ``_merge-*`` dir in
-    ``staging_dir`` (default: the first table's parent; the engine
-    passes its warehouse and sweeps that prefix on open).
+    any probe) stage under one ``_merge-*`` dir in ``staging_dir``
+    (default: the first table's parent; the engine passes its
+    warehouse and sweeps that prefix on open).
 
-    ``probe_df``: MARKER rows riding the job as target
-    ``len(targets)``, never committed. partitionBy materializes only
-    non-empty partitions, so ``probe_hit`` (its dir exists) answers
-    "had it rows" with no job of its own (r14 verdict #3).
+    ``probes``: frames of MARKER rows riding the job as targets
+    ``len(targets) + j``, never committed. partitionBy materializes
+    only non-empty partitions, so ``hits[j]`` (its dir exists) answers
+    "had probe j rows" with no job of its own (r14 verdict #3).
 
-    Returns (commit, cancel, probe_hit): ``commit`` flips the targets
-    in caller order through ``_snapshot_commit``; ``cancel`` drops a
-    staged write without touching any table."""
+    Returns (commit, cancel, hits). ``commit(which=None)`` flips the
+    targets with the given indices (default: every one not yet
+    flipped), in caller order, through ``_snapshot_commit`` — so a
+    caller can publish some targets, do other work, then publish the
+    rest, and leave out targets it decided to drop. ``cancel`` drops
+    the staged write; after a partial commit it must be called once
+    the caller is done (the default ``commit()`` calls it)."""
     import shutil
     import tempfile
 
-    col = targets[0].table.bucket_col
-    if any(t.table.bucket_col != col for t in targets):
-        raise ValueError("write_bucketed targets must share one bucket column")
     plan = []
     for t in targets:
         cur = t.table._current()
         if cur is not None:
             t.table._require_bucketed()
         plan.append((t.table, cur, int(t.n or t.table.n_buckets), t.ids, t.meta))
-    ns = [p[2] for p in plan]
-    n_of = (
-        F.lit(ns[0])
-        if len(set(ns)) == 1
-        else F.create_map(
-            *[F.lit(x) for i, n in enumerate(ns) for x in (i, n)]
-        )[F.col("_t")]
-    )
-    if probe_df is not None:
+    layouts: "dict[tuple[str, int], list[int]]" = {}  # (col, n) -> targets
+    for i, (t, p) in enumerate(zip(targets, plan)):
+        layouts.setdefault((t.table.bucket_col, p[2]), []).append(i)
+    if len(layouts) == 1:
+        ((col, n),) = layouts
+        b = _bucket(col, F.lit(n))
+    else:
+        b = F.lit(0)  # probe markers: any bucket
+        for (col, n), idx in layouts.items():
+            b = F.when(F.col("_t").isin(idx), _bucket(col, F.lit(n))).otherwise(b)
+    probes = list(probes)
+    for j, p in enumerate(probes):
         frame = frame.unionByName(
-            probe_df.withColumn("_t", F.lit(len(targets))),
+            p.withColumn("_t", F.lit(len(targets) + j)),
             allowMissingColumns=True,
         )
-    w = frame.withColumn("_b", _bucket(col, n_of))
-    staged = len(targets) > 1 or probe_df is not None
+    w = frame.withColumn("_b", b)
+    staged = len(targets) > 1 or bool(probes)
     if staged:
         keys = ["_t", "_b"]
         out = tempfile.mkdtemp(
@@ -898,11 +941,13 @@ def write_bucketed(
         if staged:
             shutil.rmtree(out, ignore_errors=True)
         raise
-    probe_hit = os.path.isdir(f"{out}/_t={len(targets)}")
+    hits = [
+        os.path.isdir(f"{out}/_t={len(targets) + j}") for j in range(len(probes))
+    ]
     commit, cancel = _snapshot_commit(
         [(*p, src) for p, src in zip(plan, srcs)], out if staged else None
     )
-    return commit, cancel, probe_hit
+    return commit, cancel, hits
 
 
 def _snapshot_commit(plan: list, staging: "str | None"):
@@ -916,16 +961,22 @@ def _snapshot_commit(plan: list, staging: "str | None"):
     snapshot's bucket count, ``src`` the dir holding the written
     ``_b=K`` dirs — the new snapshot dir itself (a direct write), a
     staged dir, or None (nothing written: an empty snapshot). Returns
-    (commit, cancel); both drop ``staging``."""
+    (commit, cancel): ``commit(which=None)`` flips the plan rows with
+    the given indices, or every row not yet flipped and then drops
+    ``staging``; ``cancel`` drops ``staging``."""
     import shutil
+
+    done: "set[int]" = set()
 
     def cancel() -> None:
         if staging is not None:
             shutil.rmtree(staging, ignore_errors=True)
 
-    def commit() -> None:
+    def commit(which: "Iterable[int] | None" = None) -> None:
+        idx = [i for i in range(len(plan)) if i not in done] if which is None else which
         try:
-            for t, cur, n, ids, meta, src in plan:
+            for i in idx:
+                t, cur, n, ids, meta, src = plan[i]
                 v = (cur or 0) + 1
                 dest = t._snapshot_dir(v)
                 if src != dest:
@@ -945,7 +996,11 @@ def _snapshot_commit(plan: list, staging: "str | None"):
                             _link_tree(old, t._bucket_dir(v, b))
                 t._write_snapshot_meta(dest, n)
                 t._set_current(v, meta)
-        finally:
+                done.add(i)
+        except BaseException:
+            cancel()
+            raise
+        if which is None:
             cancel()
 
     return commit, cancel
@@ -1350,13 +1405,31 @@ class AppendOnlyLog:
             df = df.select(*[f.name for f in self.schema.fields])
         return df
 
+    def has_partitions(self) -> bool:
+        """Has any append landed? A partitioned log with no partition
+        directory holds no rows (driver-side scandir, stops at the
+        first match)."""
+        if not self.partition_by:
+            return True
+        first = (self._hash_col() if self.hash_levels else self.partition_by[0]) + "="
+        with os.scandir(self.root) as it:
+            return any(e.name.startswith(first) for e in it)
+
     def read_origin(self, value: str) -> DataFrame:
         """One source's rows, with PartitionFilters pruning through
         EVERY directory level (under hash_levels=1 the scan carries
         both the origin_hash= and origin= predicates — at millions of
         origins that is the difference between touching 1/256th of
-        the directory tree and all of it)."""
+        the directory tree and all of it).
+
+        A log with no partition directory yet reads as empty without
+        Spark: a read lists the root twice (partition inference, then
+        files), so a first append landing between the two listings
+        would hand the scan files whose partition values its empty
+        partition schema cannot hold."""
         col = self.partition_by[0] if self.partition_by else "origin"
+        if not self.has_partitions():
+            return empty_df(self.spark, self.schema)
         if not self.hash_levels:
             return self.read().filter(F.col(col) == value)
         ext = T.StructType(

@@ -6,8 +6,10 @@ only earlier engine versions wrote are refused with EngineError on
 first use instead of migrated. Also pinned here: the driver-side
 bucketed reset, compaction sizing that does not depend on how many
 files the input was split into, eager_release's error path, driver
-rows that reach the JVM without a Python worker, and a warm cycle that
-reuses its generated code.
+rows that reach the JVM without a Python worker, a warm cycle that
+reuses its generated code, the Spark job budget of one update and the
+phase name on each of its jobs, and the crash replay of index()'s
+slice token.
 """
 
 import json
@@ -453,3 +455,207 @@ def test_warm_cycle_reuses_generated_code(spark, tmp_path):
     db.close()
     assert by_index[-1] <= 30, by_index
     assert by_watch[-1] <= 30, by_watch
+
+
+# -- the drip shape: one maintenance update's Spark jobs ---------------
+
+DRIP_VIEWS = (("by_key", None), ("counts", "count"), ("mins", "min"))
+
+
+def _drip_engine(spark, wh):
+    db = MapReduce(spark, wh)
+    for name, reduce in DRIP_VIEWS:
+        db.define(name, path="/d/*.json", map=map_kv, reduce=reduce,
+                  key_schema=["string"])
+    return db
+
+
+def _drip_changelog():
+    """A 64-file backfill over 8 keys, then an 8-file update: four files
+    holding their key's minimum re-keyed to fresh keys (min
+    retraction), four others re-valued."""
+    backfill = [
+        _row("dat://hot", f"/d/{i:03d}.json", 1, f"k{i % 8}", 1000 + (i * 37) % 500)
+        for i in range(64)
+    ]
+    mins = {}
+    for r in backfill:
+        k, v = json.loads(r["content"])["k"], json.loads(r["content"])["v"]
+        if k not in mins or v < mins[k][0]:
+            mins[k] = (v, r["pathname"])
+    holders = [p for _v, p in sorted(mins.values())][:4]
+    others = [r["pathname"] for r in backfill if r["pathname"] not in holders][:4]
+    update = [_row("dat://hot", p, 2, f"n{j}", 7 + j) for j, p in enumerate(holders)]
+    update += [_row("dat://hot", p, 2, f"k{j}", 5000 + j) for j, p in enumerate(others)]
+    return backfill, update
+
+
+def _max_job_id(spark):
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    return max([jobs.apply(i).jobId() for i in range(jobs.size())], default=-1)
+
+
+def _jobs_since(spark, j0):
+    """(job id, description) of every job started after ``j0``, from
+    the status store the status tracker reads."""
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    out = []
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        if j.jobId() > j0:
+            d = j.description()
+            out.append((j.jobId(), d.get() if d.isDefined() else None))
+    return sorted(out)
+
+
+def _view_state(db, view):
+    return (
+        db.list(view),
+        sorted(tuple(r) for r in db.reduced_df(view).select("key_json", "value").collect())
+        if db._view(view).reduce is not None else None,
+    )
+
+
+@pytest.fixture(scope="module")
+def drip_update(spark, tmp_path_factory):
+    """The drip shape kept by index() and by watch drains side by side:
+    the jobs of one 8-file update on each, and the three engines."""
+    root = tmp_path_factory.mktemp("drip")
+    backfill, update = _drip_changelog()
+    by_index, by_watch = _drip_engine(spark, f"{root}/index"), _drip_engine(spark, f"{root}/watch")
+    for db in (by_index, by_watch):
+        db.append_changes(backfill)
+    by_index.index("dat://hot")
+    W.watch_until_caught_up(by_watch)
+    for db in (by_index, by_watch):
+        db.append_changes(update)
+    j0 = _max_job_id(spark)
+    by_index.index("dat://hot")
+    j1 = _max_job_id(spark)
+    W.watch_until_caught_up(by_watch)
+    jobs = {
+        "index": [j for j in _jobs_since(spark, j0) if j[0] <= j1],
+        "watch": _jobs_since(spark, j1),
+    }
+    scratch = _drip_engine(spark, f"{root}/scratch")
+    scratch.append_changes(backfill + update)
+    scratch.index("dat://hot")
+    yield jobs, (by_index, by_watch, scratch), backfill + update
+    for db in (by_index, by_watch, scratch):
+        db.close()
+
+
+def test_update_job_budget(drip_update):
+    """One 8-file update that retracts key minimums runs at most 16
+    Spark jobs inside index() and inside one watch drain (the three
+    views share one probe, one delta collect and one write), and both
+    warehouses equal a from-scratch index of the same changelog."""
+    jobs, (by_index, by_watch, scratch), rows = drip_update
+    assert 0 < len(jobs["index"]) <= 16, jobs["index"]
+    assert 0 < len(jobs["watch"]) <= 16, jobs["watch"]
+    latest = {r["pathname"]: json.loads(r["content"]) for r in rows}
+    model: "dict[str, list[int]]" = {}  # key -> values by file url
+    for _p, obj in sorted(latest.items()):
+        model.setdefault(obj["k"], []).append(obj["v"])
+    for db in (by_index, by_watch):
+        for view, _reduce in DRIP_VIEWS:
+            assert _view_state(db, view) == _view_state(scratch, view), view
+        for k, vs in model.items():
+            assert db.get("counts", k) == {"key": k, "value": len(vs)}
+            assert db.get("mins", k) == {"key": k, "value": float(min(vs))}
+            assert db.get("by_key", k)["value"] == vs
+        assert db.get("counts", "k-none") is None
+
+
+def test_update_jobs_carry_phase_names(drip_update):
+    """Every Spark job of the update names its maintenance phase."""
+    jobs, _dbs, _rows = drip_update
+    for path in ("index", "watch"):
+        unnamed = [j for j in jobs[path] if not (j[1] or "").startswith("maintain:")]
+        assert unnamed == [], (path, unnamed)
+
+
+# -- crash replay of the index() slice token ---------------------------
+
+
+class _Crash(Exception):
+    pass
+
+
+@pytest.mark.parametrize("boundary", ["reduced", "flips", "offsets"])
+def test_index_slice_token_crash_replay(spark, tmp_path, monkeypatch, boundary):
+    """index() crashes at a commit boundary after its reduced and
+    sidecar tables took the slice; another origin is indexed (its
+    commits overwrite the slice's token); more rows arrive; a reopened
+    engine reruns index(). The pending slice replays before any other
+    batch, so count, long sum and min views equal a from-scratch index
+    of the same changelog (re-deltaing the slice would apply the first
+    update twice)."""
+    views = (("c", "count", None), ("s", "sum", "long"), ("m", "min", None))
+
+    def engine(wh):
+        db = MapReduce(spark, wh)
+        for name, reduce, vt in views:
+            db.define(name, path="/d/*.json", map=map_kv, reduce=reduce,
+                      key_schema=["string"], value_type=vt)
+        return db
+
+    backfill, update = _drip_changelog()
+    late = [_row("dat://hot", f"/d/{i:03d}.json", 3, f"k{i % 3}", i) for i in range(60, 70)]
+    wh = str(tmp_path / "wh")
+    db = engine(wh)
+    db.index_source("dat://hot", backfill)
+
+    def crash(self, point):
+        if point == boundary:
+            raise _Crash(point)
+
+    monkeypatch.setattr(MapReduce, "_crash_point", crash)
+    db.append_changes(update)
+    with pytest.raises(_Crash):
+        db.index("dat://hot")
+    monkeypatch.undo()
+    assert db._reduced_table("c").manifest_meta()["batch_token"] == "index:dat://hot:1-2"
+    cold = [_row("dat://cold", f"/d/{i}.json", 1, f"k{i % 2}", 40 + i) for i in range(4)]
+    db.index_source("dat://cold", cold)
+    db.append_changes(late)
+    db.close()
+    db = engine(wh)
+    db.index("dat://hot")
+    scratch = engine(str(tmp_path / "scratch"))
+    scratch.index_source("dat://hot", backfill + update + late)
+    scratch.index_source("dat://cold", cold)
+    for name, _reduce, _vt in views:
+        assert _view_state(db, name) == _view_state(scratch, name), name
+        for k in ("k0", "k1", "k2", "k5", "n0", "n3"):
+            assert db.get(name, k) == scratch.get(name, k), (name, k)
+    assert dict(((v, o), lv) for v, o, lv in db.offsets.read_rows()) == {
+        (name, o): lv for name, _r, _vt in views for o, lv in (("dat://hot", 3), ("dat://cold", 1))
+    }
+    db.close()
+    scratch.close()
+
+
+def test_late_twin_refolds_over_the_shared_store(spark, tmp_path):
+    """A reduced view that joins (or is reset over) a shared entries
+    store its twin already filled cannot take deltas against those
+    entries — its replay would retract exactly what it adds. Its first
+    batch refolds it over all keys, after which deltas resume."""
+    backfill, update = _drip_changelog()
+    db = MapReduce(spark, str(tmp_path / "wh"))
+    db.define("by_key", path="/d/*.json", map=map_kv, key_schema=["string"])
+    db.index_source("dat://hot", backfill)
+    db.define("counts", path="/d/*.json", map=map_kv, reduce="count",
+              key_schema=["string"])
+    db.index("dat://hot")
+    db.index_source("dat://hot", update)
+    scratch = _drip_engine(spark, str(tmp_path / "scratch"))
+    scratch.index_source("dat://hot", backfill + update)
+    assert _view_state(db, "counts") == _view_state(scratch, "counts")
+    assert db._reduced_table("counts").manifest_meta()["batch_token"].startswith("index:")
+    db.reset("counts")
+    assert db.get("counts", "k1") is None
+    db.index("dat://hot")
+    assert _view_state(db, "counts") == _view_state(scratch, "counts")
+    db.close()
+    scratch.close()

@@ -447,7 +447,9 @@ FORCED_BROADCAST_SITES = {
     # merge (2), one-job merge (2) and pre-merge retraction probe (1)
     # + _merge_entries' one batch-bounded url broadcast, shared by its
     # anti and semi joins
-    "engine.py": 20,
+    # 13 = 20 - 7: the refold's affected-keys semi/anti joins, once per
+    # fold kind (9), now shared by all kinds (2); no site is new
+    "engine.py": 13,
     # streaming_contamination's blocklist — broadcast-sized BY
     # CONTRACT (distinct shingles of protected corpora; documented)
     "streaming/watch.py": 1,

@@ -980,7 +980,6 @@ class MapReduce:
         groups: "dict[str, list[ViewDefinition]]" = {}
         for vdef in views:
             groups.setdefault(self._store_key(vdef), []).append(vdef)
-        batch_df = batch_df.persist()
         upd_cache: dict = {}  # path-key -> cached compacted updates
         mapped: dict = {}  # (path-key, map fn, key schema) -> cached entries
         try:
@@ -998,7 +997,10 @@ class MapReduce:
             # both caches fill lazily inside the first job that reads
             # them (the probe, then the delta collect or the write), so
             # the Python map stage costs no job of its own; views
-            # sharing (path, map fn, key schema) share ONE map stage
+            # sharing (path, map fn, key schema) share ONE map stage.
+            # The batch itself is read only by the probe (its targets,
+            # and through the compactions), so it is not cached: a
+            # cache would cost a job of its own for no reuse
             for vdef in views:
                 pk = _path_key(vdef)
                 if pk not in upd_cache:
@@ -1072,7 +1074,6 @@ class MapReduce:
                 df.unpersist()
             for upd in upd_cache.values():
                 upd.unpersist()
-            batch_df.unpersist()
         if bookkeeping:
             for vdef in views:
                 for origin in origins:

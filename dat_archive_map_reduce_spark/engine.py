@@ -36,6 +36,7 @@ from __future__ import annotations
 import hashlib
 import json
 import re as _re
+import uuid as _uuid
 from contextlib import contextmanager
 from typing import Any, Callable, Sequence
 
@@ -285,17 +286,6 @@ class MapReduce:
             # every store has its pointer table from birth, so
             # entries_df never has to walk shard manifests
             self._entries_ptr_table(name).overwrite_rows([])
-        elif (
-            vdef.reduce is not None
-            and not self._reduced_table(name).exists()
-            and self._entries_ptr_table(name).read_rows()
-        ):
-            # a new reduced view over a store its twins already filled:
-            # its replay's deltas against those entries would be 0, so
-            # its first batch refolds it over all its keys
-            red = self._reduced_table(name)
-            red.reset()
-            red.set_meta({"refold": "reset"})
         return vdef
 
     def _view(self, name: str) -> ViewDefinition:
@@ -519,10 +509,16 @@ class MapReduce:
             bucket_col="origin",
         )
 
-    def _record_entry_ptrs(self, view: str, origins: "Sequence[str]") -> None:
+    def _record_entry_ptrs(
+        self, view: str, origins: "Sequence[str]", stamp: "str | None" = None
+    ) -> None:
         """Upsert the CURRENT snapshot version of each origin's shard
         into the view's pointer table — called inside/after every
         shard pointer flip, one bucket-scoped upsert per batch.
+        ``stamp``: the token of the batch whose merge flipped the
+        shards, committed with the upsert as the store's
+        ``batch_token`` (None keeps it: a rebucket or a re-resolved
+        pointer leaves the rows as they were).
         Driver-side manifest reads of the batch's origins only."""
         rows = []
         for o in origins:
@@ -530,7 +526,9 @@ class MapReduce:
             if v is not None:
                 rows.append((o, v))
         if rows:
-            self._entries_ptr_table(view).upsert_rows(rows, key_cols=(0,))
+            self._entries_ptr_table(view).upsert_rows(
+                rows, key_cols=(0,), meta=None if stamp is None else {"batch_token": stamp}
+            )
 
     def entries_df(self, view: str, origins: Sequence[str] | None = None) -> DataFrame:
         """All current entries of a view as ONE DataFrame. Shards stay
@@ -689,14 +687,16 @@ class MapReduce:
 
     def _index_slices(self, origin: str) -> bool:
         """One index() pass: every view's unapplied slice of the
-        origin's changelog through the maintenance cycle, views grouped
-        by start offset (a view defined later indexes separately over
-        its own, longer slice). Each slice carries the token
+        origin's changelog through the maintenance cycle, one cycle per
+        distinct start offset (a view defined later indexes separately
+        over its own, longer slice). Views sharing an entries store
+        start together from their lowest offset, so no cycle flips a
+        store under a twin that has not taken the same rows; a twin
+        already past part of the slice re-merges those rows, whose
+        net delta is 0. Each slice carries the token
         ``index:<origin>:<start>-<target>`` — the target comes from the
         cycle's probe — so re-aggregation takes the same delta route as
-        watch. Pending slices of a crashed pass replay first
-        (_replay_pending_slices). Returns whether any rows applied."""
-        self._replay_pending_slices()
+        watch. Returns whether any rows applied."""
         if not self.changelog.has_partitions():
             return False  # nothing appended yet: no Spark job
         log = self.changelog.read_origin(origin)
@@ -708,8 +708,9 @@ class MapReduce:
             if o == origin
         }
         by_start: "dict[int, list[ViewDefinition]]" = {}
-        for name, vdef in self.views.items():
-            by_start.setdefault(offsets.get(name, 0), []).append(vdef)
+        for vdefs in self._views_by_store():
+            start = min(offsets.get(v.name, 0) for v in vdefs)
+            by_start.setdefault(start, []).extend(vdefs)
         applied = False
         for start, vdefs in by_start.items():
             try:
@@ -730,38 +731,6 @@ class MapReduce:
                 )
                 raise
         return applied
-
-    def _replay_pending_slices(self) -> None:
-        """Replay every index() slice a crash left half-committed: some
-        reduced or sidecar table holds its token
-        ``index:<origin>:<start>-<target>`` while its views' offsets
-        for that origin still read ``start``. The replay applies
-        exactly that slice with that token — the committed tables skip
-        it, the rest apply it, the entries merge re-runs idempotently,
-        the offsets advance — before any other batch can overwrite the
-        token and re-delta those rows over a table that holds them.
-        Driver-side manifest and offsets reads only."""
-        pending: "dict[tuple[str, int, int], set[str]]" = {}
-        for v in self.views.values():
-            if v.reduce is None:
-                continue
-            for t in self._reaggregate_tables(v):
-                tok = t.manifest_meta().get("batch_token")
-                m = _re.fullmatch(r"index:(.*):(\d+)-(\d+)", tok) if isinstance(tok, str) else None
-                if m:
-                    pending.setdefault((m[1], int(m[2]), int(m[3])), set()).add(v.name)
-        for (origin, start, end), names in sorted(pending.items()):
-            offsets = {v: lv for v, o, lv in self.offsets.read_rows([origin]) if o == origin}
-            if all(offsets.get(n, 0) != start for n in names):
-                continue  # the slice completed: its offsets advanced
-            self._maintain_batch(
-                self.changelog.read_origin(origin).filter(
-                    F.col("version").between(start + 1, end)
-                ),
-                [v for v in self.views.values() if offsets.get(v.name, 0) == start],
-                batch_token=f"index:{origin}:{start}-{end}",
-                progress=True,
-            )
 
     def index_source(self, origin: str, rows: list[dict], watch: bool = False) -> None:
         """Convenience: append changes for origin then index it."""
@@ -941,8 +910,8 @@ class MapReduce:
         ``views`` — a snapshot of the registry, so a view define()d
         concurrently simply joins the next batch. Every entry point
         runs it: watch passes each micro-batch with its stream token;
-        index() passes one origin's unapplied slice per distinct start
-        offset with its slice token (a callable of the probe's
+        index() passes one origin's unapplied slice per distinct store
+        start offset with its slice token (a callable of the probe's
         per-origin targets, since the slice's target is only known
         once probed); index_file/unindex_file pass their one-row batch
         with no token (re-aggregation then refolds) and
@@ -1177,20 +1146,26 @@ class MapReduce:
           token — index_file/unindex_file), and for a min/max view
           whose extreme fell past the histogram bound: the refold,
           after the entries flips.
+        - a view whose reduced table does not reflect the store's
+          current entries (_stale_views): the refold over ALL its
+          keys, after the flips.
 
         Commit order (the exactly-once contract): the one write job
         stages every table; then the reduced and sidecar targets flip,
         stamped with the token, so a replay of the same token skips
-        them; then the entries flips and one pointer-table upsert; the
-        caller writes offsets last. The deltas read the retraction
-        state from plans pinned to the PRE-merge snapshots, so staging
-        the entries in the same job cannot leak."""
+        them; then the entries flips and one pointer-table upsert
+        stamping the store with the token; then the refolds, stamped
+        with it too; the caller writes offsets last. The deltas read
+        the retraction state from plans pinned to the PRE-merge
+        snapshots, so staging the entries in the same job cannot
+        leak. A token-less batch stamps a fresh one."""
         updates, counts, buckets = prepared
         if not counts:
             return
         # the store is shared by every member, so ONE member drives the
         # entries merge
         lead = vdefs[0]
+        stamp = batch_token or f"file:{_uuid.uuid4().hex}"
         # sum/avg and min/max require a SYNCED sidecar: a reduced table
         # materialized before the view declared value_type, or a crash
         # between a refold's table commits, leaves reduced/sidecar
@@ -1207,15 +1182,7 @@ class MapReduce:
                 return "minmax"
             return None
 
-        # a reduced table marked "refold" (a twin reset over the kept
-        # shared store, or a crash between a past-bound mark and its
-        # refold) no longer tracks the entries it would take a delta
-        # against: it refolds over ALL its keys once
-        whole = {
-            v.name for v in vdefs
-            if v.reduce is not None
-            and "refold" in self._reduced_table(v.name).manifest_meta()
-        }
+        whole = self._stale_views(vdefs, batch_token)
         kinds = {v.name: v.name not in whole and _delta_kind(v) for v in vdefs}
         refold = [v for v in vdefs if v.reduce is not None and not kinds[v.name]]
         with self._phase("maintain:probe"):
@@ -1273,20 +1240,19 @@ class MapReduce:
                 # a flagged min/max key drops only its view's targets
                 refold += [v for (v, _p), hit in zip(probes, hits) if hit]
                 dropped = {v.name for v in refold}
+                # a dropped view keeps its old token, so until its
+                # refold re-stamps it, it reads as stale; a delta view
+                # with nothing to write still takes the token
                 commit(
                     [n_ent + i for i, name in enumerate(owners) if name not in dropped]
                 )
-                for v in refold:
-                    if kinds[v.name]:
-                        # a delta view that must refold leaves its
-                        # sidecar unsynced until the refold re-stamps
-                        # it, so a crash before that refold makes the
-                        # replay refold too (its delta would be 0
-                        # against the already-flipped entries)
-                        self._reduced_table(v.name).set_meta({"refold": batch_token})
+                for v in vdefs:
+                    if kinds[v.name] and v.name not in dropped and v.name not in owners:
+                        for t in self._reaggregate_tables(v):
+                            t.set_meta({"batch_token": batch_token})
                 self._crash_point("reduced")
                 commit(range(n_ent))
-                self._record_entry_ptrs(lead.name, origins)
+                self._record_entry_ptrs(lead.name, origins, stamp)
                 self._crash_point("flips")
             finally:
                 cancel()
@@ -1300,16 +1266,51 @@ class MapReduce:
             if not part:
                 continue
             if part[0].name in whole:
+                # every key the store holds, and every key a stale
+                # table still lists
                 keys = self.entries_df(lead.name).select("key_json")
+                for v in part:
+                    keys = keys.union(self._reduced_table(v.name).read().select("key_json"))
             else:
                 keys = new_entries.select("key_json")
                 if retr is not None:
                     keys = retr.select("key_json").union(keys)
             keys = keys.distinct().cache()
             try:
-                self._refold(part, keys, {v.name: v.name not in whole and synced[v.name] for v in part})
+                self._refold(
+                    part, keys, stamp,
+                    {v.name: v.name not in whole and synced[v.name] for v in part},
+                )
             finally:
                 keys.unpersist()
+
+    def _stale_views(self, vdefs: "list[ViewDefinition]", batch_token) -> "set[str]":
+        """The reduced views of one store whose tables do not reflect
+        its current entries, so a delta against them would miss or
+        double-apply rows. Every entries flip stamps the pointer table
+        with its batch's token and every reduced commit stamps the
+        token of the entries state it reflects (a delta's
+        ``batch_token``, a refold's ``sync``): a view is current when
+        its token is the store's or this batch's own (a replay), or it
+        has none and the store is empty. Stale after a crash between
+        reduced commits and entries flips followed by another batch, a
+        twin reset over or defined on a filled store, or a min/max
+        refold past the bound that never ran. Driver-side reads only."""
+        ptrs = self._entries_ptr_table(vdefs[0].name)
+        flipped = ptrs.manifest_meta().get("batch_token")
+        stale = set()
+        for v in vdefs:
+            if v.reduce is None:
+                continue
+            red = self._reduced_table(v.name)
+            if self._token_applied(red, batch_token):
+                continue  # a replay of a batch it committed
+            m = red.manifest_meta()
+            tok = m.get("batch_token", m.get("sync"))
+            current = tok == flipped if tok is not None else not ptrs.read_rows()
+            if not current:
+                stale.add(v.name)
+        return stale
 
     # delta rows above this take the vectorized arms; the collect stays
     # micro-batch-bounded, the same class as the <=4096-row codebook
@@ -1603,7 +1604,12 @@ class MapReduce:
         updates each): 13 Spark jobs, 4.4 CPU-s and 2.2 s wall per
         update, against 54 jobs, 12.1 CPU-s and 6.0 s with min/max
         forced onto the vectorized arm (~10 joins, each AQE stage its
-        own job). The vectorized arms stay for deltas past the limit.
+        own job); with only the count view on the vectorized arm, fed
+        bucket ids computed from the same collect (no id probe), three
+        interleaved process pairs: 11 jobs, 4.1 CPU-s, 2.2 s wall
+        against 18 jobs, 5.4 CPU-s, 2.8 s (the vectorized delta's
+        shuffle, cache and broadcasts). The vectorized arms stay for
+        deltas past the limit.
 
         Per fold: count — reduced' = old + net count; sum/avg — the
         (cnt, ssum) sidecar plus the net count and value-weighted sum,
@@ -2112,13 +2118,14 @@ class MapReduce:
         self,
         vdefs: "list[ViewDefinition]",
         affected_keys: DataFrame,
+        stamp: str,
         synced: "dict[str, bool] | None" = None,
     ) -> None:
         """_reaggregate every view in ``vdefs`` over the same affected
-        keys, probing their touched bucket ids once. ``synced``: each
-        view's sidecar state as routed before this batch's commits
-        (a delta view routed here marks itself unsynced for crash
-        safety, which must not turn this refold into a bootstrap)."""
+        keys, probing their touched bucket ids once. ``stamp``: the
+        token of the entries state the refold reads (_stale_views);
+        ``synced``: each view's sidecar state as routed before this
+        batch's commits, read now when absent."""
         if not vdefs:
             return
         tables = [t for v in vdefs for t in self._reaggregate_tables(v)]
@@ -2126,19 +2133,21 @@ class MapReduce:
             ids = self._key_bucket_ids(affected_keys, {t.n_buckets for t in tables})
         for v in vdefs:
             with self._phase(f"maintain:refold:{v.name}"):
-                self._reaggregate(v, affected_keys, ids, (synced or {}).get(v.name))
+                self._reaggregate(v, affected_keys, ids, stamp, (synced or {}).get(v.name))
 
     def _reaggregate(
         self,
         vdef: ViewDefinition,
         affected_keys: DataFrame,
         key_ids: "dict[int, list[int]]",
+        stamp: str,
         synced: "bool | None" = None,
     ) -> None:
         """Re-fold only affected keys, merge into the reduced table.
         ``key_ids``: the keys' touched bucket ids per bucket count
-        (_key_bucket_ids over at least this view's tables); ``synced``:
-        the sidecar state, read now when None.
+        (_key_bucket_ids over at least this view's tables); ``stamp``:
+        the sync marker committed on every table; ``synced``: the
+        sidecar state, read now when None.
 
         reduced' = (reduced  ⟕anti affected) ∪ fold(entries ⟕semi affected)
         — the Parquet copy-on-write equivalent of MERGE, committed
@@ -2149,25 +2158,32 @@ class MapReduce:
         cycle). Keys whose entry set became empty simply vanish
         (delete-on-empty, lib/view.js:139-143).
 
-        The refold commits WITHOUT a batch token (a Target without
-        meta replaces the manifest), which is load-bearing for
-        the exact-delta interleave story: a refold erases any delta
-        token AND realigns reduced (and, for sum views, the cnt
-        sidecar) with the entries' current state, so a later replay's
-        delta computes against that same state. For sum/avg views the reduced table and the sidecar
-        commit from ONE Spark write job, stamped with a shared
-        fresh 'sync' marker (r13 ADVICE: two sequential commits left
+        The refold commits a ``sync`` marker (the token of the entries
+        state it read, so the view reads as current to _stale_views)
+        and no batch token: it realigns reduced (and a sidecar) with
+        the entries, so a later replay's delta computes against that
+        same state. Reduced table and sidecar commit from ONE write
+        with the shared marker (r13 ADVICE: two sequential commits left
         a crash window whose stale sidecar would silently skew every
-        later delta — now a marker mismatch routes the next stream
-        batch back here, and the BOOTSTRAP arm below rebuilds the
-        whole sidecar from entries, covering both that window and a
-        reduced table materialized before the view declared
-        value_type)."""
+        later delta — now a marker mismatch routes the next batch back
+        here, and the BOOTSTRAP arm below rebuilds the whole sidecar
+        from entries, covering that window and a reduced table
+        materialized before the view declared value_type)."""
         red_table, *side = self._reaggregate_tables(vdef)
         side = side[0] if side else None
         ids = key_ids[red_table.n_buckets]
+        sync = {"sync": stamp}
+        if side is not None and synced is None:
+            synced = self._sidecar_synced(vdef)
         if not ids:
-            return  # empty affected set: nothing to refold or delete
+            # empty affected set: nothing to refold or delete, the
+            # tables only take the marker (an unsynced sidecar keeps
+            # its own, so it still bootstraps later)
+            for t in [red_table] + ([side] if side is not None and synced else []):
+                if not t.exists():
+                    t.reset()
+                t.set_meta(sync)
+            return
         entries = self.entries_df(vdef.name)
         touched = entries.join(F.broadcast(affected_keys), "key_json", "left_semi")
 
@@ -2229,20 +2245,15 @@ class MapReduce:
                     )
 
                 side_touched, side_all = _hist_rows(touched), _hist_rows(entries)
-        targets = [Target(red_table, ids)]
+        targets = [Target(red_table, ids, sync)]
         frames = [carried(red_table, ids).unionByName(refolded)]
         if side is not None:
-            # both tables commit from ONE write, stamped with a shared
-            # fresh sync marker; an unsynced sidecar (absent, stale, or
-            # a refold crash window) BOOTSTRAPS from every entry, so
-            # the next delta applies against true state for all keys
-            import uuid as _uuid
-
-            sync = {"sync": _uuid.uuid4().hex}
-            if synced is None:
-                synced = self._sidecar_synced(vdef)
+            # both tables commit from ONE write, stamped with the shared
+            # sync marker; an unsynced sidecar (absent, stale, or a
+            # refold crash window) BOOTSTRAPS from every entry, so the
+            # next delta applies against true state for all keys
             side_ids = key_ids[side.n_buckets] if synced else range(side.n_buckets)
-            targets = [Target(red_table, ids, sync), Target(side, side_ids, sync)]
+            targets.append(Target(side, side_ids, sync))
             frames.append(
                 carried(side, side_ids).unionByName(side_touched) if synced else side_all
             )
@@ -2302,11 +2313,21 @@ class MapReduce:
                 continue  # nothing of this origin in the store
             gone_keys = ent_table.read().select("key_json").distinct()
             gone_keys = gone_keys.cache()
+            # a stale view is left stale: its next batch refolds it
+            # over all its keys anyway
+            stale = self._stale_views(vdefs, None)
+            stamp = f"unindex:{_uuid.uuid4().hex}"
             ent_table.reset()
             # drop the origin's pointer row BEFORE re-aggregating —
             # the refold's entries_df must no longer see this shard
-            self._entries_ptr_table(lead.name).delete_rows([origin])
-            self._refold([v for v in vdefs if v.reduce is not None], gone_keys)
+            self._entries_ptr_table(lead.name).delete_rows(
+                [origin], meta={"batch_token": stamp}
+            )
+            self._refold(
+                [v for v in vdefs if v.reduce is not None and v.name not in stale],
+                gone_keys,
+                stamp,
+            )
             gone_keys.unpersist()
         self.offsets.overwrite_rows(
             [r for r in self.offsets.read_rows() if r[1] != origin]
@@ -2604,12 +2625,10 @@ class MapReduce:
         # replay would rebuild; the retract-then-add merge makes the
         # replay converge on the shared store without duplication),
         # and only this view's derived state resets below
+        # an emptied reduced table over the kept shared entries no
+        # longer reflects its store: its next batch refolds it
+        # (_stale_views)
         self._reduced_table(view).reset()
-        if others and vdef.reduce is not None:
-            # the shared entries stay while the reduced state empties:
-            # a replay's delta against them would be 0, so the next
-            # batch refolds this view over all its keys
-            self._reduced_table(view).set_meta({"refold": "reset"})
         if view in self.views and self.views[view].exact_delta_fold() in (
             "sum", "avg",
         ):

@@ -735,9 +735,10 @@ class BucketedEntriesTable(VersionedTable):
         """Rewrite the whole current snapshot at ``n`` buckets — every
         bucket touched, so nothing hardlinks — and re-pin the table
         default AFTER the flip (reads resolve the snapshot meta first,
-        so a crash between flip and re-pin stays consistent)."""
+        so a crash between flip and re-pin stays consistent). The
+        rows are unchanged, so the manifest meta carries over."""
         commit, _cancel, _hit = write_bucketed(
-            [Target(self, range(n), n=n)],
+            [Target(self, range(n), self.manifest_meta(), n=n)],
             self.read().withColumn("_t", F.lit(0)),
             sort_cols,
         )
@@ -1172,21 +1173,27 @@ class BucketedMetaTable(VersionedTable):
         self._set_current(v)
 
     def upsert_rows(
-        self, updates: "list[tuple]", key_cols: "tuple[int, ...]"
+        self,
+        updates: "list[tuple]",
+        key_cols: "tuple[int, ...]",
+        meta: "dict | None" = None,
     ) -> None:
         """Upsert row tuples keyed by the ``key_cols`` column indices,
         touching ONLY the updates' buckets: each touched bucket file
         is rewritten with its surviving rows + the updates, every
         untouched bucket file hardlinks into the new snapshot (same
         inode, two directory entries — vacuum of either snapshot
-        leaves the other readable)."""
+        leaves the other readable). ``meta`` replaces the manifest
+        meta, committed with the pointer flip; None keeps it."""
         import pyarrow.parquet as pq
 
         if not updates:
             return
+        meta = self.manifest_meta() if meta is None else meta
         cur = self._current()
         if cur is None:
             self.overwrite_rows(updates)
+            self.set_meta(meta)
             return
         self._bucket_files(cur)  # refuses a flat snapshot
         by_bucket: "dict[int, list]" = {}
@@ -1216,13 +1223,13 @@ class BucketedMetaTable(VersionedTable):
                         kept.append(r)
             kept.extend(by_bucket[b])
             self._write_bucket_file(d, b, kept)
-        self._set_current(v)
+        self._set_current(v, meta)
 
-    def delete_rows(self, values) -> None:
+    def delete_rows(self, values, meta: "dict | None" = None) -> None:
         """Drop every row whose bucket column value is in ``values``,
         touching ONLY those values' buckets (untouched bucket files
-        hardlink, exactly like upsert_rows). No-op on an absent
-        table."""
+        hardlink, exactly like upsert_rows, and ``meta`` as there).
+        No-op on an absent table."""
         import pyarrow.parquet as pq
 
         values = set(values)
@@ -1231,6 +1238,7 @@ class BucketedMetaTable(VersionedTable):
         cur = self._current()
         if cur is None:
             return
+        meta = self.manifest_meta() if meta is None else meta
         self._bucket_files(cur)  # refuses a flat snapshot
         want = {self.bucket_of(x) for x in values}
         names = [f.name for f in self.schema.fields]
@@ -1256,7 +1264,7 @@ class BucketedMetaTable(VersionedTable):
                 if r[self._col_idx] not in values
             ]
             self._write_bucket_file(d, b, kept)
-        self._set_current(v)
+        self._set_current(v, meta)
 
 
 class AppendOnlyLog:

@@ -145,9 +145,6 @@ def watch(
         return f"{lineage[0]}:{batch_id}"
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # an index() pass that crashed mid-commit goes first, before
-        # this batch's tokens overwrite the ones its replay needs
-        engine._replay_pending_slices()
         targets = engine._maintain_batch(
             batch_df,
             list(engine.views.values()),

@@ -8,8 +8,8 @@ bucketed reset, compaction sizing that does not depend on how many
 files the input was split into, eager_release's error path, driver
 rows that reach the JVM without a Python worker, a warm cycle that
 reuses its generated code, the Spark job budget of one update and the
-phase name on each of its jobs, and the crash replay of index()'s
-slice token.
+phase name on each of its jobs, and crash recovery across entry points
+and twin views of a shared entries store.
 """
 
 import json
@@ -582,35 +582,50 @@ class _Crash(Exception):
     pass
 
 
-@pytest.mark.parametrize("boundary", ["reduced", "flips", "offsets"])
-def test_index_slice_token_crash_replay(spark, tmp_path, monkeypatch, boundary):
-    """index() crashes at a commit boundary after its reduced and
-    sidecar tables took the slice; another origin is indexed (its
-    commits overwrite the slice's token); more rows arrive; a reopened
-    engine reruns index(). The pending slice replays before any other
-    batch, so count, long sum and min views equal a from-scratch index
-    of the same changelog (re-deltaing the slice would apply the first
-    update twice)."""
-    views = (("c", "count", None), ("s", "sum", "long"), ("m", "min", None))
+CRASH_VIEWS = (("c", "count", None), ("s", "sum", "long"), ("m", "min", None))
 
-    def engine(wh):
-        db = MapReduce(spark, wh)
-        for name, reduce, vt in views:
-            db.define(name, path="/d/*.json", map=map_kv, reduce=reduce,
-                      key_schema=["string"], value_type=vt)
-        return db
 
-    backfill, update = _drip_changelog()
-    late = [_row("dat://hot", f"/d/{i:03d}.json", 3, f"k{i % 3}", i) for i in range(60, 70)]
-    wh = str(tmp_path / "wh")
-    db = engine(wh)
-    db.index_source("dat://hot", backfill)
+def _crash_engine(spark, wh):
+    db = MapReduce(spark, wh)
+    for name, reduce, vt in CRASH_VIEWS:
+        db.define(name, path="/d/*.json", map=map_kv, reduce=reduce,
+                  key_schema=["string"], value_type=vt)
+    return db
 
+
+def _crash_at(monkeypatch, boundary):
     def crash(self, point):
         if point == boundary:
             raise _Crash(point)
 
     monkeypatch.setattr(MapReduce, "_crash_point", crash)
+
+
+def _assert_views_equal(db, scratch, views, keys=("k0", "k1", "k2", "k5", "n0", "n3")):
+    for name in views:
+        assert _view_state(db, name) == _view_state(scratch, name), name
+        for k in keys:
+            assert db.get(name, k) == scratch.get(name, k), (name, k)
+
+
+@pytest.mark.parametrize("boundary", ["reduced", "flips", "offsets"])
+def test_index_slice_token_crash_replay(spark, tmp_path, monkeypatch, boundary):
+    """index() crashes at a commit boundary after its reduced and
+    sidecar tables took the slice; another origin is indexed; more rows
+    arrive; a reopened engine reruns index() over a longer slice with a
+    new token. Count, long sum and min views equal a from-scratch index
+    of the same changelog: a crash before the entries flips leaves the
+    views stale against the store's token, so they refold (a delta
+    would apply the first update twice), and a crash after them leaves
+    the slice's rows in the store, so their rerun delta is 0."""
+    views = [name for name, _r, _vt in CRASH_VIEWS]
+    engine = lambda wh: _crash_engine(spark, wh)  # noqa: E731
+    backfill, update = _drip_changelog()
+    late = [_row("dat://hot", f"/d/{i:03d}.json", 3, f"k{i % 3}", i) for i in range(60, 70)]
+    wh = str(tmp_path / "wh")
+    db = engine(wh)
+    db.index_source("dat://hot", backfill)
+    _crash_at(monkeypatch, boundary)
     db.append_changes(update)
     with pytest.raises(_Crash):
         db.index("dat://hot")
@@ -625,13 +640,92 @@ def test_index_slice_token_crash_replay(spark, tmp_path, monkeypatch, boundary):
     scratch = engine(str(tmp_path / "scratch"))
     scratch.index_source("dat://hot", backfill + update + late)
     scratch.index_source("dat://cold", cold)
-    for name, _reduce, _vt in views:
-        assert _view_state(db, name) == _view_state(scratch, name), name
-        for k in ("k0", "k1", "k2", "k5", "n0", "n3"):
-            assert db.get(name, k) == scratch.get(name, k), (name, k)
+    _assert_views_equal(db, scratch, views)
     assert dict(((v, o), lv) for v, o, lv in db.offsets.read_rows()) == {
-        (name, o): lv for name, _r, _vt in views for o, lv in (("dat://hot", 3), ("dat://cold", 1))
+        (name, o): lv for name in views for o, lv in (("dat://hot", 3), ("dat://cold", 1))
     }
+    db.close()
+    scratch.close()
+
+
+@pytest.mark.parametrize("first", ["watch", "index"])
+def test_crash_before_flips_then_other_entry_point(spark, tmp_path, monkeypatch, first):
+    """A batch commits its reduced and sidecar tables, then crashes
+    before its entries flips; the next batch comes through another
+    entry point, so nothing replays the crashed token first: index()
+    after a watch batch (then the stream restarts and replays its
+    batch), or index_file after an index() pass (then index() reruns).
+    The views' tokens are not the store's, so they refold, and count,
+    long sum and min views equal a from-scratch index."""
+    views = [name for name, _r, _vt in CRASH_VIEWS]
+    backfill, update = _drip_changelog()
+    wh = str(tmp_path / "wh")
+    db = _crash_engine(spark, wh)
+    db.index_source("dat://hot", backfill)
+    _crash_at(monkeypatch, "reduced")
+    db.append_changes(update)
+    with pytest.raises(Exception):
+        W.watch_until_caught_up(db) if first == "watch" else db.index("dat://hot")
+    monkeypatch.undo()
+    db.close()
+    db = _crash_engine(spark, wh)
+    scratch = _crash_engine(spark, str(tmp_path / "scratch"))
+    scratch.index_source("dat://hot", backfill + update)
+    extra = json.dumps({"k": "k1", "v": 2})
+    if first == "watch":
+        db.index("dat://hot")
+        _assert_views_equal(db, scratch, views)
+        W.watch_until_caught_up(db)
+    else:
+        db.index_file("dat://hot", "/d/999.json", extra)
+        scratch.index_file("dat://hot", "/d/999.json", extra)
+        # the crashed update is not applied yet: backfill + the file
+        by_key: "dict[str, list[int]]" = {}
+        for r in backfill + [_row("dat://hot", "/d/999.json", 2, "k1", 2)]:
+            obj = json.loads(r["content"])
+            by_key.setdefault(obj["k"], []).append(obj["v"])
+        for name, fold in (("c", len), ("s", sum), ("m", min)):
+            assert {r["key"]: r["value"] for r in db.list(name)} == {
+                k: fold(vs) for k, vs in by_key.items()
+            }, name
+        db.index("dat://hot")
+    _assert_views_equal(db, scratch, views)
+    db.close()
+    scratch.close()
+
+
+@pytest.mark.parametrize("late", ["reset-mapped", "define-first"])
+def test_lagging_twin_then_update_matches_scratch(spark, tmp_path, late):
+    """A view of the drip shape lags its twins on their shared entries
+    store — the mapped view reset, or a min view defined anew ahead of
+    them by a reopened engine — and an update arrives. One
+    index() pass reaches every view: no cycle flips the store under a
+    twin that has not taken the same rows (a lagging count or min twin
+    would never see the update), and a reduced view that does not
+    reflect the store refolds over all its keys."""
+    backfill, update = _drip_changelog()
+    wh = str(tmp_path / "wh")
+    db = _drip_engine(spark, wh)
+    db.index_source("dat://hot", backfill)
+    if late == "define-first":
+        db.close()
+        db = MapReduce(spark, wh)
+        order = [DRIP_VIEWS[2], DRIP_VIEWS[0], DRIP_VIEWS[1]]
+        db.define("mins2", path="/d/*.json", map=map_kv, reduce="min",
+                  key_schema=["string"])
+        for name, reduce in order:
+            db.define(name, path="/d/*.json", map=map_kv, reduce=reduce,
+                      key_schema=["string"])
+    else:
+        db.reset("by_key")
+    db.append_changes(update)
+    db.index("dat://hot")
+    scratch = _drip_engine(spark, str(tmp_path / "scratch"))
+    scratch.index_source("dat://hot", backfill + update)
+    for name, _reduce in DRIP_VIEWS:
+        assert _view_state(db, name) == _view_state(scratch, name), name
+    if late == "define-first":
+        assert _view_state(db, "mins2") == _view_state(scratch, "mins")
     db.close()
     scratch.close()
 
@@ -659,3 +753,16 @@ def test_late_twin_refolds_over_the_shared_store(spark, tmp_path):
     assert _view_state(db, "counts") == _view_state(scratch, "counts")
     db.close()
     scratch.close()
+
+
+def test_unchanged_batch_keeps_views_current(spark, tmp_path):
+    """A batch that re-puts its files unchanged writes no reduced row,
+    yet every view takes its token: none reads as stale against the
+    store the batch flipped (a stale view refolds over all its keys)."""
+    db = _crash_engine(spark, str(tmp_path / "wh"))
+    rows = [_row("dat://a", f"/d/{i}.json", 1, f"k{i % 3}", i) for i in range(6)]
+    db.index_source("dat://a", rows)
+    db.index_source("dat://a", [dict(r, version=2) for r in rows])
+    assert db._stale_views(list(db.views.values()), None) == set()
+    assert db._reduced_table("c").manifest_meta()["batch_token"] == "index:dat://a:1-2"
+    db.close()

@@ -1249,7 +1249,7 @@ def test_streaming_contamination_equals_batch(spark, tmp_path):
     blocklist.unpersist()
 
 
-def test_count_delta_reaggregation_exactly_once(spark, tmp_path):
+def test_count_delta_reaggregation_exactly_once(spark, tmp_path, monkeypatch):
     """The r12 count-delta re-aggregation path: a watch drain over a
     reduce='count' view must (1) land the identical state as a
     batch-indexed twin (delta == refold, integers), (2) stamp the
@@ -1293,12 +1293,15 @@ def test_count_delta_reaggregation_exactly_once(spark, tmp_path):
 
     v_before = red._current()
     bogus = db._entries_table("kc", "dat://c0").read()  # nonzero rows
-    db._reaggregate_exact_delta(
+    got = db._reaggregate_exact_delta(
         db._view("kc"), bogus, empty_df(spark, entries_schema(
             db._view("kc").key_types())).select("key", "key_json"),
         batch_token=tok1,
     )
-    assert red._current() == v_before, "replayed token must skip"
+    assert got == ([], None), "replayed token must skip"
+    rows_b = [{"key": "key0", "key_json": '"key0"', "value": "0", "dc": 3}]
+    assert db._driver_delta(db._view("kc"), rows_b, tok1) == ([], None)
+    assert red._current() == v_before
 
     # (2)+(4) crash window: v2 updates — commit the reduced delta with
     # a new token but 'crash' before the entries merges, then replay
@@ -1328,16 +1331,31 @@ def test_count_delta_reaggregation_exactly_once(spark, tmp_path):
             db._entries_table("kc", "dat://c0").bucket_expr("url").alias("b")
         ).distinct().collect())}
     tok2 = 999_001
-    db._reaggregate_exact_delta(
+    from dat_archive_map_reduce_spark.plans.catalog import (
+        stack_targets,
+        write_bucketed,
+    )
+
+    pairs, _probe = db._reaggregate_exact_delta(
         vdef, new_e,
         db._merge_entries(vdef, upd, new_e, buckets)[0],
         batch_token=tok2,
     )
+    assert [t.table.root for t, _df in pairs] == [red.root]
+    commit, _cancel, _hit = write_bucketed(
+        [t for t, _df in pairs], stack_targets([df for _t, df in pairs]),
+        ["key_json"], staging_dir=wh,
+    )
+    commit()
+    assert red.manifest_meta()["batch_token"] == tok2
     # crash happened here: reduced reflects v2, entries still v1.
-    # replay of the full batch with the same token:
+    # replay of the full batch with the same token, on the vectorized
+    # arm (every delta past the driver limit):
+    monkeypatch.setattr(MapReduce, "_DELTA_DRIVER_LIMIT", 0)
     db._apply_store_batch(
         [vdef], (upd, counts, buckets), new_e, batch_token=tok2,
     )
+    monkeypatch.undo()
     upd.unpersist()
     new_e.unpersist()
     # final state equals a batch twin that saw v1+v2

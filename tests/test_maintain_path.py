@@ -619,11 +619,10 @@ def test_index_slice_token_crash_replay(spark, tmp_path, monkeypatch, boundary):
     would apply the first update twice), and a crash after them leaves
     the slice's rows in the store, so their rerun delta is 0."""
     views = [name for name, _r, _vt in CRASH_VIEWS]
-    engine = lambda wh: _crash_engine(spark, wh)  # noqa: E731
     backfill, update = _drip_changelog()
     late = [_row("dat://hot", f"/d/{i:03d}.json", 3, f"k{i % 3}", i) for i in range(60, 70)]
     wh = str(tmp_path / "wh")
-    db = engine(wh)
+    db = _crash_engine(spark, wh)
     db.index_source("dat://hot", backfill)
     _crash_at(monkeypatch, boundary)
     db.append_changes(update)
@@ -635,9 +634,9 @@ def test_index_slice_token_crash_replay(spark, tmp_path, monkeypatch, boundary):
     db.index_source("dat://cold", cold)
     db.append_changes(late)
     db.close()
-    db = engine(wh)
+    db = _crash_engine(spark, wh)
     db.index("dat://hot")
-    scratch = engine(str(tmp_path / "scratch"))
+    scratch = _crash_engine(spark, str(tmp_path / "scratch"))
     scratch.index_source("dat://hot", backfill + update + late)
     scratch.index_source("dat://cold", cold)
     _assert_views_equal(db, scratch, views)

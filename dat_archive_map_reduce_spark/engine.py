@@ -59,6 +59,7 @@ from dat_archive_map_reduce_spark.operators.map_reduce import (
     reduced_schema,
     run_map,
 )
+from dat_archive_map_reduce_spark.plans import catalog
 from dat_archive_map_reduce_spark.plans.catalog import (
     OFFSETS_SCHEMA,
     REBUILD_HINT,
@@ -67,6 +68,7 @@ from dat_archive_map_reduce_spark.plans.catalog import (
     BucketedMetaTable,
     Target,
     VersionedTable,
+    drop_checkpoint,
     empty_df,
     local_df,
     stack_targets,
@@ -801,7 +803,7 @@ class MapReduce:
         updates: DataFrame,
         new_entries: DataFrame,
         buckets: "dict[str, list[int]]",
-    ) -> "tuple[DataFrame | None, list[str], list[Target], DataFrame]":
+    ) -> "tuple[DataFrame | None, list[str], list[Target], DataFrame, DataFrame | None]":
         """THE retract-then-add merge of one entries store's shards over
         a batch of 1..N origins (``buckets``: origin -> touched bucket
         ids at the engine count, from _probe_batch). Retracts every
@@ -820,7 +822,8 @@ class MapReduce:
         one shared collect, and still joins the one write —
         write_bucketed buckets each row by its own shard's count.
 
-        Returns (retracted, origins, targets, frame), all lazy:
+        Returns (retracted, origins, targets, frame, flagged), all
+        lazy:
         ``retracted`` — the (key, key_json, value) rows the batch
         retracts, multiplicity preserved, for the deltas and the
         refold's key set; its plan is pinned to the pre-merge snapshot
@@ -828,7 +831,10 @@ class MapReduce:
         the flips. None when no shard exists yet (nothing can retract —
         the backfill fast path). ``targets``/``frame``: one
         write_bucketed target per origin shard, in ``origins`` order,
-        and the rows to write tagged ``_t`` = that index. The caller
+        and the rows to write tagged ``_t`` = that index. ``flagged``:
+        the checkpointed pre-merge read both derive from (None with
+        ``retracted``), which the caller releases (drop_checkpoint)
+        once it has read ``retracted`` for the last time. The caller
         writes them (beside its reduced targets), flips them after the
         reduced commits, then records the pointers; offsets advance
         only after that, so a mid-commit crash re-applies the batch
@@ -861,19 +867,29 @@ class MapReduce:
             if t.exists():
                 part = t.read_buckets(ids[o])
                 old = part if old is None else old.unionByName(part)
-        frame, retracted = new_entries, None
+        frame, retracted, flagged = new_entries, None, None
         if old is not None:
-            urls = F.broadcast(updates.select("url"))
-            hit = old["file_url"] == urls["url"]
-            frame = old.join(urls, hit, "left_anti").unionByName(new_entries)
-            retracted = old.join(urls, hit, "left_semi").select(
-                "key", "key_json", "value"
+            # ONE flagged pre-merge read serves the retraction and the
+            # carried rows: the batch's urls (one row per url, after
+            # latest_wins) are broadcast once, here, and the lazy local
+            # checkpoint keeps the rows of the first job that reads
+            # them (a cache would cost a job of its own), so the
+            # second job reads neither the buckets nor a broadcast
+            urls = F.broadcast(updates.select("url", F.lit(True).alias("_r")))
+            flagged = (
+                old.join(urls, old["file_url"] == urls["url"], "left")
+                .drop("url")
+                .localCheckpoint(eager=False)
             )
+            frame = flagged.filter(F.col("_r").isNull()).drop("_r").unionByName(
+                new_entries
+            )
+            retracted = flagged.filter(F.col("_r")).select("key", "key_json", "value")
         t_of = F.create_map(
             *[F.lit(x) for i, o in enumerate(origins) for x in (o, i)]
         )[F.col("origin")]
         targets = [Target(t, ids[o]) for o, t in zip(origins, tables)]
-        return retracted, origins, targets, frame.withColumn("_t", t_of)
+        return retracted, origins, targets, frame.withColumn("_t", t_of), flagged
 
     @contextmanager
     def _phase(self, name: str):
@@ -1124,9 +1140,10 @@ class MapReduce:
         shares it — map-twins, r14 verdict #5) over a multi-origin
         batch, paying each per-batch cost once instead of once per
         (origin, view): ONE entries merge for the whole group, whose
-        pre-merge read also yields the retracted rows; ONE delta
-        collect serving every member view's re-aggregation; and ONE
-        write_bucketed job carrying the entries shards AND every
+        pre-merge read (one url broadcast) also yields the retracted
+        rows; ONE delta collect serving every member view's
+        re-aggregation; and ONE write_bucketed call carrying the
+        entries shards AND every
         view's reduced and sidecar targets (the reference's single
         LevelDB batch of entries and reduced rows, lib/view.js:89-103).
 
@@ -1150,7 +1167,7 @@ class MapReduce:
           current entries (_stale_views): the refold over ALL its
           keys, after the flips.
 
-        Commit order (the exactly-once contract): the one write job
+        Commit order (the exactly-once contract): the one write
         stages every table; then the reduced and sidecar targets flip,
         stamped with the token, so a replay of the same token skips
         them; then the entries flips and one pointer-table upsert
@@ -1186,7 +1203,7 @@ class MapReduce:
         kinds = {v.name: v.name not in whole and _delta_kind(v) for v in vdefs}
         refold = [v for v in vdefs if v.reduce is not None and not kinds[v.name]]
         with self._phase("maintain:probe"):
-            retr, origins, targets, frame = self._merge_entries(
+            retr, origins, targets, frame, flagged = self._merge_entries(
                 lead, updates, new_entries, buckets
             )
         n_ent = len(targets)
@@ -1195,94 +1212,104 @@ class MapReduce:
         probes: "list[tuple[ViewDefinition, DataFrame]]" = []
         cached: "list[DataFrame]" = []
         try:
-            if any(kinds.values()):
-                with self._phase("maintain:delta"):
-                    rows = self._delta_rows(new_entries, retr)
-                for v in vdefs:
-                    if not kinds[v.name]:
-                        continue
-                    with self._phase(f"maintain:delta:{v.name}"):
-                        got = (
-                            self._driver_delta(v, rows, batch_token)
-                            if rows is not None
-                            else None
-                        )
-                        if got is None:
-                            arm = (
-                                self._reaggregate_exact_delta
-                                if kinds[v.name] == "exact"
-                                else self._reaggregate_minmax_delta
+            try:
+                if any(kinds.values()):
+                    with self._phase("maintain:delta"):
+                        rows = self._delta_rows(new_entries, retr)
+                    for v in vdefs:
+                        if not kinds[v.name]:
+                            continue
+                        with self._phase(f"maintain:delta:{v.name}"):
+                            got = (
+                                self._driver_delta(v, rows, batch_token)
+                                if rows is not None
+                                else None
                             )
-                            got = arm(v, new_entries, retr, batch_token, cached)
-                    if got is False:
-                        refold.append(v)
-                        continue
-                    pairs, probe = got
-                    for t, df in pairs:
-                        targets.append(t)
-                        frames.append(df)
-                        owners.append(v.name)
-                    if probe is not None:
-                        probes.append((v, probe))
-            if frames:
-                frame = frame.unionByName(
-                    stack_targets(frames, start=n_ent), allowMissingColumns=True
-                )
-            with self._phase("maintain:write"):
-                commit, cancel, hits = write_bucketed(
-                    targets,
-                    frame,
-                    ["key_json", "file_url", "emit_seq"],
-                    probes=[p for _v, p in probes],
-                    staging_dir=self.warehouse,
-                )
-            try:
-                # a flagged min/max key drops only its view's targets
-                refold += [v for (v, _p), hit in zip(probes, hits) if hit]
-                dropped = {v.name for v in refold}
-                # a dropped view keeps its old token, so until its
-                # refold re-stamps it, it reads as stale; a delta view
-                # with nothing to write still takes the token
-                commit(
-                    [n_ent + i for i, name in enumerate(owners) if name not in dropped]
-                )
-                for v in vdefs:
-                    if kinds[v.name] and v.name not in dropped and v.name not in owners:
-                        for t in self._reaggregate_tables(v):
-                            t.set_meta({"batch_token": batch_token})
-                self._crash_point("reduced")
-                commit(range(n_ent))
-                self._record_entry_ptrs(lead.name, origins, stamp)
-                self._crash_point("flips")
+                            if got is None:
+                                arm = (
+                                    self._reaggregate_exact_delta
+                                    if kinds[v.name] == "exact"
+                                    else self._reaggregate_minmax_delta
+                                )
+                                got = arm(v, new_entries, retr, batch_token, cached)
+                        if got is False:
+                            refold.append(v)
+                            continue
+                        pairs, probe = got
+                        for t, df in pairs:
+                            targets.append(t)
+                            frames.append(df)
+                            owners.append(v.name)
+                        if probe is not None:
+                            probes.append((v, probe))
+                if frames:
+                    frame = frame.unionByName(
+                        stack_targets(frames, start=n_ent), allowMissingColumns=True
+                    )
+                with self._phase("maintain:write"):
+                    commit, cancel, hits = write_bucketed(
+                        targets,
+                        frame,
+                        ["key_json", "file_url", "emit_seq"],
+                        probes=[p for _v, p in probes],
+                        staging_dir=self.warehouse,
+                        # a batch of more files than the driver arm
+                        # holds rows is a backfill: its write is past
+                        # the bound unless the map drops most files
+                        large=sum(counts.values()) > catalog._DRIVER_WRITE_LIMIT,
+                    )
+                try:
+                    # a flagged min/max key drops only its view's targets
+                    refold += [v for (v, _p), hit in zip(probes, hits) if hit]
+                    dropped = {v.name for v in refold}
+                    # a dropped view keeps its old token, so until its
+                    # refold re-stamps it, it reads as stale; a delta view
+                    # with nothing to write still takes the token
+                    commit(
+                        [n_ent + i for i, name in enumerate(owners) if name not in dropped]
+                    )
+                    for v in vdefs:
+                        if kinds[v.name] and v.name not in dropped and v.name not in owners:
+                            for t in self._reaggregate_tables(v):
+                                t.set_meta({"batch_token": batch_token})
+                    self._crash_point("reduced")
+                    commit(range(n_ent))
+                    self._record_entry_ptrs(lead.name, origins, stamp)
+                    self._crash_point("flips")
+                finally:
+                    cancel()
             finally:
-                cancel()
+                for df in cached:
+                    df.unpersist()
+            # the refolds read ``retr``, so its checkpoint is dropped last
+            for part in (
+                [v for v in refold if v.name not in whole],
+                [v for v in refold if v.name in whole],
+            ):
+                if not part:
+                    continue
+                if part[0].name in whole:
+                    # every key the store holds, and every key a stale
+                    # table still lists
+                    keys = self.entries_df(lead.name).select("key_json")
+                    for v in part:
+                        keys = keys.union(self._reduced_table(v.name).read().select("key_json"))
+                else:
+                    keys = new_entries.select("key_json")
+                    if retr is not None:
+                        keys = retr.select("key_json").union(keys)
+                keys = keys.distinct().cache()
+                try:
+                    self._refold(
+                        part, keys, stamp,
+                        {v.name: v.name not in whole and synced[v.name] for v in part},
+                        large=part[0].name in whole,
+                    )
+                finally:
+                    keys.unpersist()
         finally:
-            for df in cached:
-                df.unpersist()
-        for part in (
-            [v for v in refold if v.name not in whole],
-            [v for v in refold if v.name in whole],
-        ):
-            if not part:
-                continue
-            if part[0].name in whole:
-                # every key the store holds, and every key a stale
-                # table still lists
-                keys = self.entries_df(lead.name).select("key_json")
-                for v in part:
-                    keys = keys.union(self._reduced_table(v.name).read().select("key_json"))
-            else:
-                keys = new_entries.select("key_json")
-                if retr is not None:
-                    keys = retr.select("key_json").union(keys)
-            keys = keys.distinct().cache()
-            try:
-                self._refold(
-                    part, keys, stamp,
-                    {v.name: v.name not in whole and synced[v.name] for v in part},
-                )
-            finally:
-                keys.unpersist()
+            if flagged is not None:
+                drop_checkpoint(flagged)
 
     def _stale_views(self, vdefs: "list[ViewDefinition]", batch_token) -> "set[str]":
         """The reduced views of one store whose tables do not reflect
@@ -2120,12 +2147,15 @@ class MapReduce:
         affected_keys: DataFrame,
         stamp: str,
         synced: "dict[str, bool] | None" = None,
+        large: bool = False,
     ) -> None:
         """_reaggregate every view in ``vdefs`` over the same affected
         keys, probing their touched bucket ids once. ``stamp``: the
         token of the entries state the refold reads (_stale_views);
         ``synced``: each view's sidecar state as routed before this
-        batch's commits, read now when absent."""
+        batch's commits, read now when absent; ``large``: the keys are
+        every key of the views, so their writes skip the driver arm's
+        collect (write_bucketed)."""
         if not vdefs:
             return
         tables = [t for v in vdefs for t in self._reaggregate_tables(v)]
@@ -2133,7 +2163,9 @@ class MapReduce:
             ids = self._key_bucket_ids(affected_keys, {t.n_buckets for t in tables})
         for v in vdefs:
             with self._phase(f"maintain:refold:{v.name}"):
-                self._reaggregate(v, affected_keys, ids, stamp, (synced or {}).get(v.name))
+                self._reaggregate(
+                    v, affected_keys, ids, stamp, (synced or {}).get(v.name), large
+                )
 
     def _reaggregate(
         self,
@@ -2142,12 +2174,14 @@ class MapReduce:
         key_ids: "dict[int, list[int]]",
         stamp: str,
         synced: "bool | None" = None,
+        large: bool = False,
     ) -> None:
         """Re-fold only affected keys, merge into the reduced table.
         ``key_ids``: the keys' touched bucket ids per bucket count
         (_key_bucket_ids over at least this view's tables); ``stamp``:
         the sync marker committed on every table; ``synced``: the
-        sidecar state, read now when None.
+        sidecar state, read now when None; ``large``: passed to
+        write_bucketed.
 
         reduced' = (reduced  ⟕anti affected) ∪ fold(entries ⟕semi affected)
         — the Parquet copy-on-write equivalent of MERGE, committed
@@ -2259,7 +2293,8 @@ class MapReduce:
             )
         try:
             commit, _cancel, _hit = write_bucketed(
-                targets, stack_targets(frames), ["key_json"], staging_dir=self.warehouse
+                targets, stack_targets(frames), ["key_json"],
+                staging_dir=self.warehouse, large=large,
             )
             commit()
         finally:
@@ -2647,23 +2682,21 @@ class MapReduce:
         Reduced view -> {key, value: folded}; mapped view ->
         {key, value: [all values]} in deterministic (file_url,
         emit_seq) order; missing key -> None.
+
+        A reduced view is bucketed ON key_json, so its lookup is one
+        driver-side pyarrow read of the key's one bucket dir with a
+        pushed key_json filter (read_key_rows) — no Spark job, the
+        reference's one LevelDB seek. A mapped view scans its entries
+        shards on Spark.
         """
         vdef = self._view(view)
         comps = normalize_key(key)
         kj = _canon_key_json(comps if len(comps) > 1 else comps[0])
         if vdef.reduce is not None:
-            red = self._reduced_table(view)
-            # the reduced table is bucketed ON key_json, so a point
-            # lookup reads exactly one bucket; within the bucket, the key_json sort makes parquet row-group
-            # min/max stats prune the scan further
-            row = (
-                red.read_buckets([red.bucket_of(kj)])
-                .filter(F.col("key_json") == kj)
-                .first()
-            )
-            if row is None:
+            rows = self._reduced_table(view).read_key_rows([kj], ["value"])
+            if not rows:
                 return None
-            return {"key": key, "value": json.loads(row["value"])}
+            return {"key": key, "value": json.loads(rows[0][0])}
         rows = (
             self.entries_df(view)
             .filter(F.col("key_json") == kj)
@@ -2678,13 +2711,11 @@ class MapReduce:
     def get_many(self, view: str, keys: "Sequence[Any]") -> "dict":
         """Batched point lookup: {key: value} for every key found
         (missing keys absent), semantics per-key identical to get().
-        The serving win over a get() loop is structural, not just
-        batching: on a reduced view the probe reads ONLY the union of
-        the requested keys' buckets (k keys touch <= k of N bucket
-        directories — at 100 TB, a 50-key batch reads ~50/N of the
-        view instead of launching 50 jobs over it), with one isin
-        filter the parquet scan pushes into row-group stats; on a
-        mapped view, one pushed isin scan replaces k separate jobs.
+        On a reduced view it reads ONLY the union of the requested
+        keys' buckets (k keys touch <= k of N bucket directories), on
+        the driver with pyarrow and one pushed key_json ``in`` filter
+        (read_key_rows) — no Spark job; on a mapped view, one pushed
+        isin scan replaces k separate jobs.
         Result keys are the CALLER's key objects (compound list keys
         come back as tuples — dict keys must hash). Distinct caller
         keys that canonicalize to the same key_json (e.g. "a" and
@@ -2703,18 +2734,8 @@ class MapReduce:
             return {}
         kjs = sorted(kj_of)
         if vdef.reduce is not None:
-            red = self._reduced_table(view)
-            rows = (
-                red.read_buckets(sorted({red.bucket_of(j) for j in kjs}))
-                .filter(F.col("key_json").isin(kjs))
-                .select("key_json", "value")
-                .collect()
-            )
-            return {
-                ck: json.loads(r["value"])
-                for r in rows
-                for ck in kj_of[r["key_json"]]
-            }
+            rows = self._reduced_table(view).read_key_rows(kjs, ["key_json", "value"])
+            return {ck: json.loads(v) for kj, v in rows for ck in kj_of[kj]}
         rows = (
             self.entries_df(view)
             .filter(F.col("key_json").isin(kjs))

@@ -79,6 +79,14 @@ def local_df(
     )
 
 
+def drop_checkpoint(df: DataFrame) -> None:
+    """Release the blocks of a ``localCheckpoint`` DataFrame, which
+    ``unpersist()`` does not reach (no cache entry holds them): they
+    belong to the checkpointed RDD under its ``LogicalRDD`` plan. The
+    frame cannot be read afterwards."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 class VersionedTable:
     def __init__(self, spark: SparkSession, root: str, schema: T.StructType):
         self.spark = spark
@@ -741,6 +749,7 @@ class BucketedEntriesTable(VersionedTable):
             [Target(self, range(n), self.manifest_meta(), n=n)],
             self.read().withColumn("_t", F.lit(0)),
             sort_cols,
+            large=True,
         )
         commit()
         self._default_n = n
@@ -787,9 +796,9 @@ class BucketedEntriesTable(VersionedTable):
         """Commit a new snapshot: ``touched_df`` (which must contain
         ONLY rows whose bucket id is in ``touched_ids`` — i.e. the
         touched buckets' full post-merge contents) is written
-        bucket-partitioned in ONE Spark job; every other bucket's
-        files are hardlinked from the previous snapshot. The
-        one-target call of ``write_bucketed``.
+        bucket-partitioned; every other bucket's files are hardlinked
+        from the previous snapshot. The one-target call of
+        ``write_bucketed``.
 
         ``meta``: extra manifest keys committed atomically with the
         pointer flip (same contract as overwrite(meta=...)) — the
@@ -799,7 +808,7 @@ class BucketedEntriesTable(VersionedTable):
         delta path's interleave story depends on).
 
         ``defer_commit=True`` splits the write from the commit: the
-        Spark job writing the touched buckets runs NOW (into the new
+        write of the touched buckets runs NOW (into the new
         snapshot directory, invisible to readers — only the pointer
         flip publishes it), and the returned zero-arg closure performs
         the driver-side commit (hardlink untouched buckets, layout
@@ -847,43 +856,70 @@ def stack_targets(frames: "list[DataFrame]", start: int = 0) -> DataFrame:
     return out
 
 
+# Bounds of write_bucketed's driver arm: a write of at most this many
+# rows is collected once and written with pyarrow; a bigger one runs
+# the Spark write. Sized with tools/profile_maintain.py (CHANGES.md has
+# the table): the arms tie at about this many rows.
+_DRIVER_WRITE_LIMIT = 131072
+# ... and the bytes one collect may hold: each row gets an even share
+# (2 KiB of string data at the row bound), and a wider row sends the
+# write to Spark, so values of any width cannot fill the driver.
+_DRIVER_WRITE_BYTES = 256 << 20
+
+
 def write_bucketed(
     targets: "list[Target]",
     frame: DataFrame,
     sort_cols: "list[str] | None" = None,
     probes: "Iterable[DataFrame]" = (),
     staging_dir: "str | None" = None,
+    large: bool = False,
 ) -> "tuple[Callable[..., None], Callable[[], None], list[bool]]":
     """THE bucketed-snapshot writer: every write of a bucketed table
-    (merges, re-aggregation commits, rebucket, compaction) is ONE Spark
-    job here. ``frame`` holds each target's touched buckets' full
-    post-write contents, every row tagged with its target's index in
-    ``_t``; a row's bucket is crc32 of ITS target's bucket column
-    modulo ITS target's count, so one job can write tables bucketed on
-    different columns (a maintenance batch writes its entries shards,
-    on file_url, beside its reduced and sidecar tables, on key_json).
+    (merges, re-aggregation commits, rebucket, compaction) runs here.
+    ``frame`` holds each target's touched buckets' full post-write
+    contents, every row tagged with its target's index in ``_t``; a
+    row's bucket ``_b`` is crc32 of ITS target's bucket column modulo
+    ITS target's count, computed in-plan, so one write can cover
+    tables bucketed on different columns (a maintenance batch writes
+    its entries shards, on file_url, beside its reduced and sidecar
+    tables, on key_json).
 
-    No explicit partition count: a REPARTITION_BY_COL shuffle lets AQE
-    size the write tasks to the rows (a drip batch coalesces to ~1
-    task, a backfill keeps full parallelism). A count pinned to the
-    buckets ran one near-empty task per bucket — the dominant fixed
-    cost of every micro-batch commit at 16-256 buckets (r13 verdict
-    #1), a 32768-task shuffle for a 32768-bucket rebucket. Each
-    (``_t``, ``_b``) value still hashes wholly into one task, so a
-    bucket dir gets a handful of files sorted by ``sort_cols``
-    (row-group min/max stats prune key-range scans in the bucket, the
-    LevelDB-iterator stand-in; a sort column a target lacks is NULL
-    padding and sorts nothing).
+    Two arms, one layout. The frame is collected once as Arrow
+    (_collect_small). At most _DRIVER_WRITE_LIMIT rows within
+    _DRIVER_WRITE_BYTES (a micro-batch) and the driver writes one
+    parquet file per (``_t``, ``_b``) group with pyarrow, sorted by
+    ``sort_cols`` with nulls first: no write job, no shuffle, no
+    per-task output commit — the reference's one bounded LevelDB
+    batch write (lib/view.js:89-103). More rows, or a row wider than
+    its share of the bytes, and the collect is dropped and ONE Spark
+    job writes the frame with
+    a REPARTITION_BY_COL shuffle on (``_t``, ``_b``) and no explicit
+    partition count, so AQE sizes the write tasks to the rows (a
+    count pinned to the buckets ran one near-empty task per bucket, a
+    32768-task shuffle for a 32768-bucket rebucket); each group hashes
+    wholly into one task, so a bucket dir gets a handful of files
+    sorted within by ``sort_cols``. Past the bound the collect's
+    upstream stages run twice, so ``large`` (from a caller that knows
+    its frame is big: rebucket, compaction, a whole-view refold, a
+    batch of more files than the row bound) skips the collect and goes
+    straight to the Spark write. Either way row-group min/max stats
+    prune key-range scans in the bucket, the LevelDB-iterator
+    stand-in; a sort column a target lacks is NULL padding and sorts
+    nothing.
 
-    One target writes straight into its new snapshot dir; several (or
-    any probe) stage under one ``_merge-*`` dir in ``staging_dir``
-    (default: the first table's parent; the engine passes its
-    warehouse and sweeps that prefix on open).
+    One target writes straight into its new snapshot dir, cleared
+    first;
+    several (or any probe) stage under one ``_merge-*`` dir in
+    ``staging_dir`` (default: the first table's parent; the engine
+    passes its warehouse and sweeps that prefix on open).
 
-    ``probes``: frames of MARKER rows riding the job as targets
-    ``len(targets) + j``, never committed. partitionBy materializes
-    only non-empty partitions, so ``hits[j]`` (its dir exists) answers
-    "had probe j rows" with no job of its own (r14 verdict #3).
+    ``probes``: frames of MARKER rows riding the write as targets
+    ``len(targets) + j``, never committed; ``hits[j]`` answers "had
+    probe j rows" with no job of its own (r14 verdict #3) — on the
+    Spark arm because partitionBy materializes only non-empty
+    partitions, so its dir exists only then; on the driver arm from
+    the collected ``_t`` column.
 
     Returns (commit, cancel, hits). ``commit(which=None)`` flips the
     targets with the given indices (default: every one not yet
@@ -920,35 +956,121 @@ def write_bucketed(
     w = frame.withColumn("_b", b)
     staged = len(targets) > 1 or bool(probes)
     if staged:
-        keys = ["_t", "_b"]
         out = tempfile.mkdtemp(
             prefix="_merge-",
             dir=staging_dir or os.path.dirname(targets[0].table.root),
         )
         srcs = [f"{out}/_t={i}" for i in range(len(targets))]
     else:
-        keys = ["_b"]
-        w = w.drop("_t")
         table, cur = plan[0][0], plan[0][1]
         out = table._snapshot_dir((cur or 0) + 1)
-        os.makedirs(out, exist_ok=True)
+        # a crash-orphaned dir at this version must not leak into it
+        shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
         srcs = [out]
-    w = w.repartition(*keys)
-    if sort_cols:
-        w = w.sortWithinPartitions(*keys, *sort_cols)
     try:
-        w.write.mode("overwrite").partitionBy(*keys).parquet(out)
+        got = None if large else _collect_small(w)
+        if got is not None:
+            # the row-group grain the Spark writer takes from the same
+            # setting: row-group stats are the in-bucket pruning grain
+            block = frame.sparkSession.sparkContext._jsc.hadoopConfiguration().getLong(
+                "parquet.block.size", 128 << 20
+            )
+            hits = _write_groups(
+                got, out, staged, len(targets), len(probes), sort_cols, block
+            )
+        else:
+            keys = ["_t", "_b"] if staged else ["_b"]
+            w = (w if staged else w.drop("_t")).repartition(*keys)
+            if sort_cols:
+                w = w.sortWithinPartitions(*keys, *sort_cols)
+            w.write.mode("overwrite").partitionBy(*keys).parquet(out)
+            hits = [
+                os.path.isdir(f"{out}/_t={len(targets) + j}")
+                for j in range(len(probes))
+            ]
     except BaseException:
         if staged:
             shutil.rmtree(out, ignore_errors=True)
         raise
-    hits = [
-        os.path.isdir(f"{out}/_t={len(targets) + j}") for j in range(len(probes))
-    ]
     commit, cancel = _snapshot_commit(
         [(*p, src) for p, src in zip(plan, srcs)], out if staged else None
     )
     return commit, cancel, hits
+
+
+def _collect_small(w: DataFrame):
+    """write_bucketed's one collect: ``w`` as Arrow when it holds at
+    most _DRIVER_WRITE_LIMIT rows, each row's string columns within an
+    even share of _DRIVER_WRITE_BYTES, else None. A wider row comes
+    back as NULLs and a flag, so the collect holds at most about
+    _DRIVER_WRITE_BYTES whatever the rows carry."""
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    share = _DRIVER_WRITE_BYTES // max(_DRIVER_WRITE_LIMIT, 1)
+    wide = sum(
+        (
+            F.coalesce(F.octet_length(f.name), F.lit(0))
+            for f in w.schema
+            if isinstance(f.dataType, (T.StringType, T.BinaryType))
+        ),
+        F.lit(0),
+    ) > share
+    got = (
+        # one partition, so the limit reads its rows in place instead
+        # of shuffling every partition's rows into one
+        w.coalesce(1)
+        .select(
+            *[
+                c if c in ("_t", "_b") else F.when(~wide, F.col(c)).alias(c)
+                for c in w.columns
+            ],
+            wide.alias("_wide"),
+        )
+        .limit(_DRIVER_WRITE_LIMIT + 1)
+        .toArrow()
+    )
+    if got.num_rows > _DRIVER_WRITE_LIMIT or pc.any(got["_wide"]).as_py():
+        return None
+    return got.drop_columns(["_wide"]).cast(to_arrow_schema(w.schema))
+
+
+def _write_groups(
+    got, out: str, staged: bool, n_targets: int, n_probes: int,
+    sort_cols: "list[str] | None", block_bytes: int,
+) -> "list[bool]":
+    """write_bucketed's driver arm: the collected Arrow frame as one
+    parquet file per (``_t``, ``_b``) group under ``out``, in the
+    directories partitionBy fills (``_t=i/_b=K`` staged, ``_b=K``
+    direct), without the partition columns; each file sorted like
+    sortWithinPartitions (ascending, nulls first), in row groups of
+    about ``block_bytes`` of Arrow data. Probe markers are not written.
+    Returns the probe hits."""
+    import pyarrow.parquet as pq
+
+    order = [("_t", "ascending"), ("_b", "ascending")] + [
+        (c, "ascending") for c in sort_cols or [] if c in got.column_names
+    ]
+    got = got.sort_by(order, null_placement="at_start")
+    data = got.drop_columns(["_t", "_b"])
+    group_rows = max(1, block_bytes * data.num_rows // max(data.nbytes, 1))
+    ts, bs = got.column("_t").to_pylist(), got.column("_b").to_pylist()
+    start = 0
+    for i in range(1, len(ts) + 1):
+        if i < len(ts) and (ts[i], bs[i]) == (ts[start], bs[start]):
+            continue
+        t, b = ts[start], bs[start]
+        if t < n_targets:
+            d = f"{out}/_t={t}/_b={b}" if staged else f"{out}/_b={b}"
+            os.makedirs(d, exist_ok=True)
+            pq.write_table(
+                data.slice(start, i - start),
+                f"{d}/part-00000.parquet",
+                row_group_size=group_rows,
+            )
+        start = i
+    return [n_targets + j in set(ts) for j in range(n_probes)]
 
 
 def _snapshot_commit(plan: list, staging: "str | None"):

@@ -546,13 +546,14 @@ def drip_update(spark, tmp_path_factory):
 
 
 def test_update_job_budget(drip_update):
-    """One 8-file update that retracts key minimums runs at most 16
+    """One 8-file update that retracts key minimums runs at most 9
     Spark jobs inside index() and inside one watch drain (the three
-    views share one probe, one delta collect and one write), and both
+    views share one probe with the batch's one url broadcast, one delta
+    collect and one collect of the driver-written frame), and both
     warehouses equal a from-scratch index of the same changelog."""
     jobs, (by_index, by_watch, scratch), rows = drip_update
-    assert 0 < len(jobs["index"]) <= 16, jobs["index"]
-    assert 0 < len(jobs["watch"]) <= 16, jobs["watch"]
+    assert 0 < len(jobs["index"]) <= 9, jobs["index"]
+    assert 0 < len(jobs["watch"]) <= 9, jobs["watch"]
     latest = {r["pathname"]: json.loads(r["content"]) for r in rows}
     model: "dict[str, list[int]]" = {}  # key -> values by file url
     for _p, obj in sorted(latest.items()):

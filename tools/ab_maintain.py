@@ -3,8 +3,11 @@ the ab_bench.py twin for watch-mode regressions (r13 verdict #6: the
 r13 maintain fixed-cost regression shipped unflagged because only the
 query side had an A/B arbiter).
 
-Protocol mirrors ab_bench.py: the old commit is materialized in a git
-worktree and measurement processes ALTERNATE old/new (A B A B ...), a
+Protocol mirrors ab_bench.py: the old commit is materialized with
+``git archive`` into a temporary directory (no worktree is registered,
+so it runs in any clone, and the directory is removed at exit) and
+measurement processes ALTERNATE old/new, each round flipping which
+side runs first (A B, B A, ...), a
 fresh JVM + fresh warehouse per process, so slow host phases hit both
 sides equally. Each process runs tools/maintain_point.py (shipped from
 the NEW tree so both sides run the identical scenario; the engine
@@ -23,9 +26,11 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RUNNER = os.path.join(REPO, "tools", "maintain_point.py")
@@ -50,6 +55,23 @@ def run_side(tree: str, rows: int) -> dict:
     )
 
 
+def run_rounds(old_tree: str, rows: int, rounds: int) -> "dict[str, dict[str, list[float]]]":
+    acc: dict[str, dict[str, list[float]]] = {
+        "wall_sec": {"old": [], "new": []},
+        "drip_sec_per_batch": {"old": [], "new": []},
+    }
+    for rnd in range(rounds):
+        # alternate which side runs first, so a slow host phase hits
+        # both sides equally
+        sides = (("old", old_tree), ("new", REPO))
+        for side, tree in sides if rnd % 2 == 0 else sides[::-1]:
+            got = run_side(tree, rows)
+            for k in acc:
+                acc[k][side].append(got[k])
+            print(json.dumps({"round": rnd, "side": side, **got}), flush=True)
+    return acc
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("old_commit")
@@ -57,23 +79,18 @@ def main() -> None:
     ap.add_argument("--rounds", type=int, default=3)
     args = ap.parse_args()
 
-    wt = f"/tmp/abm-{args.old_commit[:10]}"
-    if not os.path.isdir(wt):
-        subprocess.run(
-            ["git", "worktree", "add", "--detach", wt, args.old_commit],
+    wt = tempfile.mkdtemp(prefix=f"abm-{args.old_commit[:10]}-")
+    try:
+        archive = subprocess.run(
+            ["git", "archive", args.old_commit],
             cwd=REPO,
             check=True,
-        )
-    acc: dict[str, dict[str, list[float]]] = {
-        "wall_sec": {"old": [], "new": []},
-        "drip_sec_per_batch": {"old": [], "new": []},
-    }
-    for rnd in range(args.rounds):
-        for side, tree in (("old", wt), ("new", REPO)):
-            got = run_side(tree, args.rows)
-            for k in acc:
-                acc[k][side].append(got[k])
-            print(json.dumps({"round": rnd, "side": side, **got}), flush=True)
+            capture_output=True,
+        ).stdout
+        subprocess.run(["tar", "-x", "-C", wt], input=archive, check=True)
+        acc = run_rounds(wt, args.rows, args.rounds)
+    finally:
+        shutil.rmtree(wt, ignore_errors=True)
     print("\n== verdict (median of per-process numbers) ==")
     for k, sides in acc.items():
         old = statistics.median(sides["old"])

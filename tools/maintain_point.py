@@ -1,6 +1,8 @@
 """One maintain-curve point, runnable against ANY repo checkout via
-PYTHONPATH: replicates bench.py's maintain scenario (4 origins x 2
-views, one availableNow drain) and prints ONE JSON line. Used by
+PYTHONPATH: bench.py's maintain scenario (4 origins, one availableNow
+drain) over three views on one shared entries store — a mapped view,
+its ``count`` twin and its ``min`` twin, so a run exercises the count
+and the min/max delta arms — and prints ONE JSON line. Used by
 tools/ab_maintain.py to interleave A/B runs across two commits — the
 streaming twin of tools/ab_bench.py (r13 verdict #6).
 
@@ -46,7 +48,7 @@ def main() -> None:
 
     def map_first(content, meta, emit):
         obj = json.loads(content)
-        emit(obj["first"], meta["url"])
+        emit(obj["first"], obj["n"])
 
     root = tempfile.mkdtemp(prefix="ab-maintain-")
     try:
@@ -61,13 +63,14 @@ def main() -> None:
         ]
         db = MapReduce(spark, f"{root}/wh")
         db.define("by_key", path="/docs/*.json", map=map_first, key_schema=["string"])
-        db.define(
-            "counts",
-            path="/docs/*.json",
-            map=map_first,
-            reduce="count",
-            key_schema=["string"],
-        )
+        for name, reduce in (("counts", "count"), ("mins", "min")):
+            db.define(
+                name,
+                path="/docs/*.json",
+                map=map_first,
+                reduce=reduce,
+                key_schema=["string"],
+            )
         db.append_changes(rows)
         t0 = time.perf_counter()
         q = _watch(db)

@@ -17,7 +17,7 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -474,8 +474,13 @@ def typed_engine(spark, tmp_path_factory):
     db.close()
 
 
-def _kj(key):
+def _kj(view, key):
+    """The stored key_json ``key`` names on ``view``: its components
+    coerced to the view's key_schema like the map stage's emits."""
+    types = TYPED_VIEWS[view][0]
     comps = normalize_key(key)
+    cast = {"string": str, "long": int, "double": float}
+    comps = tuple(cast[t](c) for t, c in zip(types, comps))
     return key_json(comps if len(comps) > 1 else comps[0])
 
 
@@ -503,42 +508,55 @@ def test_reduced_reads_start_no_spark_job(spark, typed_engine):
     assert set(many[0]) == {"a", "b"}
 
 
+PRESENT = (
+    [("cs", s) for s in STRINGS] + [("cl", x) for x in LONGS]
+    + [("md", x) for x in DOUBLES]
+    + [("cp", [s, x]) for s in STRINGS[:3] for x in LONGS[:3]]
+    # a caller's components coerce to the key schema: 1 names the
+    # double key 1.0, and 1.0 the long key 1
+    + [("md", 1), ("cl", 1.0)]
+)
+MISSING = [("cs", "zz"), ("cs", ["a"]), ("cl", 99), ("md", 3.25),
+           ("cp", ["a", 99]), ("cp", ["zz", 0])]
+
+
+def _hashable(key):
+    return tuple(key) if isinstance(key, list) else key
+
+
 def _query_keys():
-    present = (
-        [("cs", s) for s in STRINGS] + [("cl", x) for x in LONGS]
-        + [("md", x) for x in DOUBLES]
-        + [("cp", [s, x]) for s in STRINGS[:3] for x in LONGS[:3]]
-    )
-    missing = [("cs", "zz"), ("cs", ["a"]), ("cl", 99), ("cl", 1.0), ("md", 1),
-               ("md", 3.25), ("cp", ["a", 99]), ("cp", ["zz", 0])]
-    return st.lists(st.sampled_from(present + missing), min_size=1, max_size=8)
+    return st.lists(st.sampled_from(PRESENT + MISSING), min_size=1, max_size=8)
 
 
 @given(_query_keys())
+@example([("md", 1), ("cl", 1.0), ("md", 3.25)])
 @settings(max_examples=20, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_driver_read_equals_reduced_df_filter(typed_engine, picks):
     """On typed scalar and compound keys, present and missing, get and
     get_many return what a Spark filter of reduced_df on the keys'
-    key_json returns."""
+    stored key_json returns; every key of the present pool is found."""
     db = typed_engine
     by_view: "dict[str, list]" = {}
     for view, key in picks:
         by_view.setdefault(view, []).append(key)
+    present = {(view, _hashable(k)) for view, k in PRESENT}
     for view, keys in by_view.items():
-        kjs = sorted({_kj(k) for k in keys})
+        kjs = sorted({_kj(view, k) for k in keys})
         want = {
             r["key_json"]: json.loads(r["value"])
             for r in db.reduced_df(view).filter(F.col("key_json").isin(kjs)).collect()
         }
         for k in keys:
+            kj = _kj(view, k)
+            assert kj in want or (view, _hashable(k)) not in present, (view, k)
             got = db.get(view, k)
-            assert got == ({"key": k, "value": want[_kj(k)]} if _kj(k) in want else None)
+            assert got == ({"key": k, "value": want[kj]} if kj in want else None)
         many = db.get_many(view, keys)
-        assert {(tuple(k) if isinstance(k, list) else k) for k in keys if _kj(k) in want} == set(many)
+        assert {_hashable(k) for k in keys if _kj(view, k) in want} == set(many)
         for k in keys:
-            if _kj(k) in want:
-                assert many[tuple(k) if isinstance(k, list) else k] == want[_kj(k)]
+            if _kj(view, k) in want:
+                assert many[_hashable(k)] == want[_kj(view, k)]
 
 
 def test_get_many_maps_equal_caller_keys(typed_engine):
@@ -548,7 +566,7 @@ def test_get_many_maps_equal_caller_keys(typed_engine):
     db = typed_engine
     for view, hit in (("cl", 1), ("md", 1.0)):
         got = db.get_many(view, [1, 1.0])
-        value = db.reduced_df(view).filter(F.col("key_json") == _kj(hit)).first()["value"]
+        value = db.reduced_df(view).filter(F.col("key_json") == _kj(view, hit)).first()["value"]
         assert got[1] == got[1.0] == json.loads(value)
     got = db.get_many("cs", ["a", ["a"]])
     assert got["a"] == got[("a",)] == db.get("cs", "a")["value"]

@@ -694,6 +694,79 @@ def test_crash_before_flips_then_other_entry_point(spark, tmp_path, monkeypatch,
     scratch.close()
 
 
+MINMAX_VIEWS = (("mn", "min"), ("mx", "max"))
+
+
+def _minmax_engine(spark, wh):
+    db = MapReduce(spark, wh)
+    for name, reduce in MINMAX_VIEWS:
+        db.define(name, path="/d/*.json", map=map_kv, reduce=reduce,
+                  key_schema=["string"])
+    return db
+
+
+def _minmax_changelog():
+    """The drip backfill, then an update that re-keys the files holding
+    four keys' minimums and four keys' maximums to fresh keys (min and
+    max retraction) and deletes one file."""
+    backfill, _update = _drip_changelog()
+    by_key: "dict[str, list[tuple[int, str]]]" = {}
+    for r in backfill:
+        obj = json.loads(r["content"])
+        by_key.setdefault(obj["k"], []).append((obj["v"], r["pathname"]))
+    keys = sorted(by_key)
+    holders = [min(by_key[k])[1] for k in keys[:4]] + [max(by_key[k])[1] for k in keys[4:]]
+    update = [_row("dat://hot", p, 2, f"n{j}", 7 + j) for j, p in enumerate(holders)]
+    gone = next(r["pathname"] for r in backfill if r["pathname"] not in holders)
+    update.append(_row("dat://hot", gone, 2, None, None, typ="del"))
+    return backfill, update
+
+
+@pytest.fixture(scope="module")
+def minmax_scratch(spark, tmp_path_factory):
+    """A from-scratch index of the min/max crash changelog."""
+    backfill, update = _minmax_changelog()
+    db = _minmax_engine(spark, str(tmp_path_factory.mktemp("minmax-scratch")))
+    db.index_source("dat://hot", backfill + update)
+    yield db
+    db.close()
+
+
+@pytest.mark.parametrize("boundary", ["reduced", "flips", "offsets"])
+@pytest.mark.parametrize("entry", ["watch", "index"])
+def test_minmax_refold_past_limit_crash_resumes_to_scratch(
+    spark, tmp_path, monkeypatch, minmax_scratch, entry, boundary
+):
+    """With the delta driver limit at 2, a retracting batch's min and
+    max deltas are past it and take the refold. The batch crashes at a
+    commit boundary in a watch drain or an index() slice; a reopened
+    engine resumes the same way, and both views equal a from-scratch
+    index: get, list and reduced_df."""
+    backfill, update = _minmax_changelog()
+    monkeypatch.setattr(MapReduce, "_DELTA_DRIVER_LIMIT", 2)
+    wh = str(tmp_path / "wh")
+    db = _minmax_engine(spark, wh)
+    db.append_changes(backfill)
+    resume = (lambda d: d.index("dat://hot")) if entry == "index" else W.watch_until_caught_up
+    resume(db)
+    db.append_changes(update)
+    collected = []
+    real_rows = MapReduce._delta_rows
+    with monkeypatch.context() as m:
+        m.setattr(MapReduce, "_delta_rows",
+                  lambda self, *a: collected.append(real_rows(self, *a)) or collected[-1])
+        _crash_at(m, boundary)
+        with pytest.raises(Exception):
+            resume(db)
+    assert collected == [None], "the update's delta must be past the limit"
+    db.close()
+    db = _minmax_engine(spark, wh)
+    resume(db)
+    keys = ("k0", "k3", "k4", "k7", "n0", "n3", "n4", "n7", "absent")
+    _assert_views_equal(db, minmax_scratch, [n for n, _r in MINMAX_VIEWS], keys)
+    db.close()
+
+
 @pytest.mark.parametrize("late", ["reset-mapped", "define-first"])
 def test_lagging_twin_then_update_matches_scratch(spark, tmp_path, late):
     """A view of the drip shape lags its twins on their shared entries

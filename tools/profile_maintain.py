@@ -1,4 +1,6 @@
-"""Profile the maintain-curve 8k point by maintenance phase: every Spark
+"""Profile the maintain-curve 8k point by maintenance phase, over
+tools/maintain_point.py's three views (a mapped view and its count and
+min twins on one shared entries store): every Spark
 job of the maintenance cycle carries a ``maintain:<phase>`` description
 (MapReduce._phase), so this reads the jobs of one watch drain from
 Spark's status store and prints, per phase, the job count and the
@@ -59,7 +61,7 @@ def main() -> None:
 
     def map_first(content, meta, emit):
         obj = json.loads(content)
-        emit(obj["first"], meta["url"])
+        emit(obj["first"], obj["n"])
 
     root = tempfile.mkdtemp(prefix="profile-maintain-")
     try:
@@ -74,13 +76,14 @@ def main() -> None:
         ]
         db = MapReduce(spark, f"{root}/wh")
         db.define("by_key", path="/docs/*.json", map=map_first, key_schema=["string"])
-        db.define(
-            "counts",
-            path="/docs/*.json",
-            map=map_first,
-            reduce="count",
-            key_schema=["string"],
-        )
+        for name, reduce in (("counts", "count"), ("mins", "min")):
+            db.define(
+                name,
+                path="/docs/*.json",
+                map=map_first,
+                reduce=reduce,
+                key_schema=["string"],
+            )
         compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
         compiles0 = compiles.getCount()
         t0 = time.perf_counter()

@@ -745,7 +745,7 @@ class BucketedEntriesTable(VersionedTable):
         default AFTER the flip (reads resolve the snapshot meta first,
         so a crash between flip and re-pin stays consistent). The
         rows are unchanged, so the manifest meta carries over."""
-        commit, _cancel = write_bucketed(
+        commit, _cancel, _hit = write_bucketed(
             [Target(self, range(n), self.manifest_meta(), n=n)],
             self.read().withColumn("_t", F.lit(0)),
             sort_cols,
@@ -815,7 +815,7 @@ class BucketedEntriesTable(VersionedTable):
         meta, pointer flip). An abandoned closure leaves only an
         orphaned vNNNNNNNN directory that the next write at the same
         version clears."""
-        commit, _cancel = write_bucketed(
+        commit, _cancel, _hit = write_bucketed(
             [Target(self, touched_ids, meta)],
             touched_df.withColumn("_t", F.lit(0)),
             sort_cols,
@@ -871,9 +871,10 @@ def write_bucketed(
     targets: "list[Target]",
     frame: DataFrame,
     sort_cols: "list[str] | None" = None,
+    probes: "Iterable[DataFrame]" = (),
     staging_dir: "str | None" = None,
     large: bool = False,
-) -> "tuple[Callable[..., None], Callable[[], None]]":
+) -> "tuple[Callable[..., None], Callable[[], None], list[bool]]":
     """THE bucketed-snapshot writer: every write of a bucketed table
     (merges, re-aggregation commits, rebucket, compaction) runs here.
     ``frame`` holds each target's touched buckets' full post-write
@@ -908,11 +909,19 @@ def write_bucketed(
     nothing.
 
     One target writes straight into its new snapshot dir, cleared
-    first; several stage under one ``_merge-*`` dir in ``staging_dir``
-    (default: the first table's parent; the engine passes its
-    warehouse and sweeps that prefix on open).
+    first;
+    several (or any probe) stage under one ``_merge-*`` dir in
+    ``staging_dir`` (default: the first table's parent; the engine
+    passes its warehouse and sweeps that prefix on open).
 
-    Returns (commit, cancel). ``commit(which=None)`` flips the
+    ``probes``: frames of MARKER rows riding the write as targets
+    ``len(targets) + j``, never committed; ``hits[j]`` answers "had
+    probe j rows" with no job of its own (r14 verdict #3) — on the
+    Spark arm because partitionBy materializes only non-empty
+    partitions, so its dir exists only then; on the driver arm from
+    the collected ``_t`` column.
+
+    Returns (commit, cancel, hits). ``commit(which=None)`` flips the
     targets with the given indices (default: every one not yet
     flipped), in caller order, through ``_snapshot_commit`` — so a
     caller can publish some targets, do other work, then publish the
@@ -935,11 +944,17 @@ def write_bucketed(
         ((col, n),) = layouts
         b = _bucket(col, F.lit(n))
     else:
-        b = F.lit(0)
+        b = F.lit(0)  # probe markers: any bucket
         for (col, n), idx in layouts.items():
             b = F.when(F.col("_t").isin(idx), _bucket(col, F.lit(n))).otherwise(b)
+    probes = list(probes)
+    for j, p in enumerate(probes):
+        frame = frame.unionByName(
+            p.withColumn("_t", F.lit(len(targets) + j)),
+            allowMissingColumns=True,
+        )
     w = frame.withColumn("_b", b)
-    staged = len(targets) > 1
+    staged = len(targets) > 1 or bool(probes)
     if staged:
         out = tempfile.mkdtemp(
             prefix="_merge-",
@@ -961,13 +976,19 @@ def write_bucketed(
             block = frame.sparkSession.sparkContext._jsc.hadoopConfiguration().getLong(
                 "parquet.block.size", 128 << 20
             )
-            _write_groups(got, out, staged, sort_cols, block)
+            hits = _write_groups(
+                got, out, staged, len(targets), len(probes), sort_cols, block
+            )
         else:
             keys = ["_t", "_b"] if staged else ["_b"]
             w = (w if staged else w.drop("_t")).repartition(*keys)
             if sort_cols:
                 w = w.sortWithinPartitions(*keys, *sort_cols)
             w.write.mode("overwrite").partitionBy(*keys).parquet(out)
+            hits = [
+                os.path.isdir(f"{out}/_t={len(targets) + j}")
+                for j in range(len(probes))
+            ]
     except BaseException:
         if staged:
             shutil.rmtree(out, ignore_errors=True)
@@ -975,7 +996,7 @@ def write_bucketed(
     commit, cancel = _snapshot_commit(
         [(*p, src) for p, src in zip(plan, srcs)], out if staged else None
     )
-    return commit, cancel
+    return commit, cancel, hits
 
 
 def _collect_small(w: DataFrame):
@@ -1016,14 +1037,16 @@ def _collect_small(w: DataFrame):
 
 
 def _write_groups(
-    got, out: str, staged: bool, sort_cols: "list[str] | None", block_bytes: int
-) -> None:
+    got, out: str, staged: bool, n_targets: int, n_probes: int,
+    sort_cols: "list[str] | None", block_bytes: int,
+) -> "list[bool]":
     """write_bucketed's driver arm: the collected Arrow frame as one
     parquet file per (``_t``, ``_b``) group under ``out``, in the
     directories partitionBy fills (``_t=i/_b=K`` staged, ``_b=K``
     direct), without the partition columns; each file sorted like
     sortWithinPartitions (ascending, nulls first), in row groups of
-    about ``block_bytes`` of Arrow data."""
+    about ``block_bytes`` of Arrow data. Probe markers are not written.
+    Returns the probe hits."""
     import pyarrow.parquet as pq
 
     order = [("_t", "ascending"), ("_b", "ascending")] + [
@@ -1038,14 +1061,16 @@ def _write_groups(
         if i < len(ts) and (ts[i], bs[i]) == (ts[start], bs[start]):
             continue
         t, b = ts[start], bs[start]
-        d = f"{out}/_t={t}/_b={b}" if staged else f"{out}/_b={b}"
-        os.makedirs(d, exist_ok=True)
-        pq.write_table(
-            data.slice(start, i - start),
-            f"{d}/part-00000.parquet",
-            row_group_size=group_rows,
-        )
+        if t < n_targets:
+            d = f"{out}/_t={t}/_b={b}" if staged else f"{out}/_b={b}"
+            os.makedirs(d, exist_ok=True)
+            pq.write_table(
+                data.slice(start, i - start),
+                f"{d}/part-00000.parquet",
+                row_group_size=group_rows,
+            )
         start = i
+    return [n_targets + j in set(ts) for j in range(n_probes)]
 
 
 def _snapshot_commit(plan: list, staging: "str | None"):

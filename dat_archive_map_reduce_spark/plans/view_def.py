@@ -62,8 +62,8 @@ class ViewDefinition:
         which the refold's own double sums degrade. min/max are not
         subtractable at all, but get their own no-rescan delta path
         against a bounded value-histogram sidecar
-        (engine._minmax_driver_fold; the refold past the driver
-        limit or the bound); collect always refolds."""
+        (engine._reaggregate_minmax_delta, refold only past the
+        bound); collect always refolds."""
         if self.reduce == "count":
             return "count"
         if self.reduce in ("sum", "avg") and self.value_type in (

@@ -734,14 +734,15 @@ def minmax_scratch(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("boundary", ["reduced", "flips", "offsets"])
 @pytest.mark.parametrize("entry", ["watch", "index"])
-def test_minmax_refold_past_limit_crash_resumes_to_scratch(
+def test_minmax_delta_past_limit_crash_resumes_to_scratch(
     spark, tmp_path, monkeypatch, minmax_scratch, entry, boundary
 ):
-    """With the delta driver limit at 2, a retracting batch's min and
-    max deltas are past it and take the refold. The batch crashes at a
-    commit boundary in a watch drain or an index() slice; a reopened
-    engine resumes the same way, and both views equal a from-scratch
-    index: get, list and reduced_df."""
+    """With the delta driver limit at 2, the backfill's and a retracting
+    batch's min and max deltas are past it and take the in-plan
+    histogram arm (its bootstrap branch, then its merge). The batch
+    crashes at a commit boundary in a watch drain or an index() slice;
+    a reopened engine resumes the same way, and both views equal a
+    from-scratch index: get, list and reduced_df."""
     backfill, update = _minmax_changelog()
     monkeypatch.setattr(MapReduce, "_DELTA_DRIVER_LIMIT", 2)
     wh = str(tmp_path / "wh")

@@ -449,10 +449,7 @@ FORCED_BROADCAST_SITES = {
     # anti and semi joins
     # 13 = 20 - 7: the refold's affected-keys semi/anti joins, once per
     # fold kind (9), now shared by all kinds (2); no site is new
-    # 8 = 13 - 5: the delta-key semi/anti and horizon joins of the
-    # deleted in-plan min/max histogram arm; a min/max delta past the
-    # driver limit refolds
-    "engine.py": 8,
+    "engine.py": 13,
     # streaming_contamination's blocklist — broadcast-sized BY
     # CONTRACT (distinct shingles of protected corpora; documented)
     "streaming/watch.py": 1,

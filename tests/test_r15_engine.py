@@ -445,23 +445,25 @@ def map_kv_pair(content, meta, emit):
 
 @pytest.mark.parametrize("key_schema", [["string"], ["string", "long"]],
                          ids=["string", "string-long"])
-def test_minmax_driver_delta_matches_refold(spark, tmp_path, key_schema):
-    """The driver-side min/max histogram delta must commit
-    BIT-IDENTICAL reduced + histogram state to the refold that takes
-    every min/max delta past the driver limit: run the same backfill +
-    retracting drip through two warehouses, one with the driver path
-    forced OFF (_DELTA_DRIVER_LIMIT = 0 routes every batch to the
-    refold), and compare both tables row by row plus their commit
-    markers. A string-valued emit rides along: both paths must skip it
-    identically. The compound key checks that the driver path's struct
-    keys survive its Arrow-built frames."""
+def test_minmax_driver_delta_matches_vectorized_path(spark, tmp_path, key_schema):
+    """The r15 driver-side micro-batch fast path of the min/max
+    histogram delta must commit BIT-IDENTICAL reduced + histogram
+    state to the vectorized Spark form it replaces: run the same
+    backfill + retracting drip through two warehouses, one with the
+    driver path forced OFF (_DELTA_DRIVER_LIMIT = 0 routes every
+    batch to the vectorized plan), and compare both tables row by
+    row plus the batch tokens. A string-valued emit rides along:
+    both paths must skip it identically (the try_cast filter runs
+    BEFORE the driver gate, so it reaches neither routing). The
+    compound key checks that the driver path's struct keys survive
+    its Arrow-built frames."""
     compound = len(key_schema) > 1
 
     def key(k):
         return [k, len(k)] if compound else k
 
     dbs = []
-    for name, limit in (("drv", None), ("refold", 0)):
+    for name, limit in (("drv", None), ("vec", 0)):
         db = MapReduce(spark, str(tmp_path / f"wh-{name}"))
         if limit is not None:
             db._DELTA_DRIVER_LIMIT = limit
@@ -481,24 +483,19 @@ def test_minmax_driver_delta_matches_refold(spark, tmp_path, key_schema):
         ])
         W.watch_until_caught_up(db)
         dbs.append(db)
-    drv, ref = dbs
+    drv, vec = dbs
     red_d = sorted(map(tuple, drv._reduced_table("mn").read().collect()))
-    red_r = sorted(map(tuple, ref._reduced_table("mn").read().collect()))
-    assert red_d == red_r
+    red_v = sorted(map(tuple, vec._reduced_table("mn").read().collect()))
+    assert red_d == red_v
     hist_d = sorted(map(tuple, drv._reduced_hist_table("mn").read().collect()))
-    hist_r = sorted(map(tuple, ref._reduced_hist_table("mn").read().collect()))
-    assert hist_d == hist_r
-    # the delta stamped the lineage token on both tables
-    tok = drv._reduced_table("mn").manifest_meta().get("batch_token")
-    assert isinstance(tok, str) and ":" in tok
-    assert drv._reduced_hist_table("mn").manifest_meta().get("batch_token") == tok
-    # the refold stamped both with the entries state it read: the
-    # store's pointer-table token
-    flipped = ref._entries_ptr_table("mn").manifest_meta().get("batch_token")
-    assert isinstance(flipped, str) and ":" in flipped
-    for t in (ref._reduced_table("mn"), ref._reduced_hist_table("mn")):
-        meta = t.manifest_meta()
-        assert meta.get("sync") == flipped and "batch_token" not in meta
+    hist_v = sorted(map(tuple, vec._reduced_hist_table("mn").read().collect()))
+    assert hist_d == hist_v
+    # both delta paths stamped the lineage token on both tables
+    for db in dbs:
+        tok = db._reduced_table("mn").manifest_meta().get("batch_token")
+        assert isinstance(tok, str) and ":" in tok
+        assert (db._reduced_hist_table("mn").manifest_meta()
+                .get("batch_token") == tok)
     for k, v in (("k0", 3.0), ("k1", 4.0), ("f", -7.0)):
         assert drv.get("mn", key(k)) == {"key": key(k), "value": v}
     for db in dbs:

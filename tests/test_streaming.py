@@ -1298,9 +1298,9 @@ def test_count_delta_reaggregation_exactly_once(spark, tmp_path, monkeypatch):
             db._view("kc").key_types())).select("key", "key_json"),
         batch_token=tok1,
     )
-    assert got == [], "replayed token must skip"
+    assert got == ([], None), "replayed token must skip"
     rows_b = [{"key": "key0", "key_json": '"key0"', "value": "0", "dc": 3}]
-    assert db._driver_delta(db._view("kc"), rows_b, tok1) == []
+    assert db._driver_delta(db._view("kc"), rows_b, tok1) == ([], None)
     assert red._current() == v_before
 
     # (2)+(4) crash window: v2 updates — commit the reduced delta with
@@ -1336,13 +1336,13 @@ def test_count_delta_reaggregation_exactly_once(spark, tmp_path, monkeypatch):
         write_bucketed,
     )
 
-    pairs = db._reaggregate_exact_delta(
+    pairs, _probe = db._reaggregate_exact_delta(
         vdef, new_e,
         db._merge_entries(vdef, upd, new_e, buckets)[0],
         batch_token=tok2,
     )
     assert [t.table.root for t, _df in pairs] == [red.root]
-    commit, _cancel = write_bucketed(
+    commit, _cancel, _hit = write_bucketed(
         [t for t, _df in pairs], stack_targets([df for _t, df in pairs]),
         ["key_json"], staging_dir=wh,
     )

@@ -1361,19 +1361,27 @@ class MapReduce:
         per-key sum, sum/avg from the value-weighted sum, min/max from
         the per-value counts; its keys give every touched bucket id
         through bucket_of, with no id probe."""
+        rows = (
+            self._net_delta(new_entries, retracted)
+            .limit(self._DELTA_DRIVER_LIMIT + 1)
+            .collect()
+        )
+        return None if len(rows) > self._DELTA_DRIVER_LIMIT else rows
+
+    @staticmethod
+    def _net_delta(new_entries: DataFrame, retracted: "DataFrame | None") -> DataFrame:
+        """(key, key_json, value, dc): a store batch's net entry count
+        per value, added minus retracted, zero rows dropped."""
         delta = new_entries.select("key", "key_json", "value", F.lit(1).alias("dc"))
         if retracted is not None:
             delta = delta.unionByName(
                 retracted.select("key", "key_json", "value", F.lit(-1).alias("dc"))
             )
-        rows = (
+        return (
             delta.groupBy("key", "key_json", "value")
             .agg(F.sum("dc").cast("long").alias("dc"))
             .filter(F.col("dc") != 0)
-            .limit(self._DELTA_DRIVER_LIMIT + 1)
-            .collect()
         )
-        return None if len(rows) > self._DELTA_DRIVER_LIMIT else rows
 
     @staticmethod
     def _token_applied(table: VersionedTable, batch_token) -> bool:
@@ -1912,22 +1920,14 @@ class MapReduce:
         if red_done and hist_done:
             return [], None
         asc = vdef.reduce == "min"
-        grp = ["key", "key_json", "value"]
-        add = new_entries.groupBy(*grp).agg(
-            F.count(F.lit(1)).cast("long").alias("dc")
-        )
         if retracted_rows is None:
-            delta = add
+            # adds only: every count is positive, so no netting; this
+            # keeps the bootstrap's plan one count aggregation
+            delta = new_entries.groupBy("key", "key_json", "value").agg(
+                F.count(F.lit(1)).cast("long").alias("dc")
+            )
         else:
-            sub = retracted_rows.groupBy(*grp).agg(
-                (-F.count(F.lit(1))).cast("long").alias("dc")
-            )
-            delta = (
-                add.unionByName(sub)
-                .groupBy(*grp)
-                .agg(F.sum("dc").cast("long").alias("dc"))
-                .filter(F.col("dc") != 0)
-            )
+            delta = self._net_delta(new_entries, retracted_rows)
         # the histogram tracks NUMERIC values only (F.min/F.max skip
         # nulls — _minmax_hist_parts): drop non-castable delta values
         # BEFORE routing, so they land in neither tracked nor overflow

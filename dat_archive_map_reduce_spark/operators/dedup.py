@@ -136,47 +136,6 @@ def shingle_rows(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataF
     )
 
 
-def inverted_index_pair_ids(
-    posting_rows: DataFrame, hot_cap: int | None = None
-) -> DataFrame:
-    """(doc, token) posting rows -> (id_a, id_b, common), id_a < id_b —
-    inverted_index_pair_counts without per-doc sizes riding through
-    the bucket shuffle. Callers that need sizes aggregate them
-    separately (groupBy(doc).count() — map-side partial combine, far
-    lighter than a per-doc window over the full posting stream) and
-    join onto the PAIR output, which is orders of magnitude smaller
-    than the postings. Same bucket/hot_cap semantics as the sized
-    variant."""
-    buckets = (
-        posting_rows.groupBy("token")
-        .agg(F.sort_array(F.collect_list("doc")).alias("ds"))
-        .filter(F.size("ds") >= 2)
-    )
-    if hot_cap is not None:
-        buckets = buckets.filter(F.size("ds") <= hot_cap)
-    pairs = F.flatten(
-        F.transform(
-            F.slice(F.col("ds"), 1, F.size("ds") - 1),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size("ds")),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-    return (
-        buckets.select(pairs.alias("ps"))
-        # alias-then-explode_outer: inlining the O(k^2) pair expression
-        # into the generator makes InferFiltersFromGenerate re-inline it
-        # into a size>0 filter below the projection — every bucket would
-        # build its pair array twice. The attribute form evaluates once;
-        # outer needs no filter (size(ds)>=2 guarantees pairs non-empty).
-        .select(F.explode_outer("ps").alias("p"))
-        .groupBy("p.id_a", "p.id_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-        .select("id_a", "id_b", "common")
-    )
-
-
 def inverted_index_pair_counts(
     posting_rows: DataFrame, hot_cap: int | None = None
 ) -> DataFrame:
@@ -518,9 +477,14 @@ def portable_minhash_candidates(
     independently-computed ground truth); pipelines acting on pairs
     should go through portable_minhash_pairs, whose verify removes
     false positives. ``sets`` is shingle_sets output (doc, sh, n_sh)."""
-    banded = portable_minhash_bands(
-        portable_minhash_sigs(sets, num_perm), num_perm, bands
+    return bucket_pairs(
+        portable_minhash_bands(portable_minhash_sigs(sets, num_perm), num_perm, bands)
     )
+
+
+def bucket_pairs(banded: DataFrame) -> DataFrame:
+    """(id, band, bucket) rows -> distinct (id_a < id_b) pairs of ids
+    sharing some (band, bucket)."""
     buckets = (
         banded.groupBy("band", "bucket")
         .agg(F.sort_array(F.collect_list("id")).alias("ds"))
@@ -544,73 +508,74 @@ def portable_minhash_candidates(
     )
 
 
-def incremental_minhash_pairs(
-    new_docs: DataFrame,
-    base_docs: DataFrame,
-    base_sigs: DataFrame | None,
-    text_col: str,
-    id_col: str,
-    num_perm: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
+def minhash_band_map(num_perm: int = 8, bands: int = 4, shingle_n: int = 3):
+    """View map over ``{"doc_id", "text"}`` files emitting
+    ``([band, bucket], doc_id)`` (key schema ``("long", "string")``):
+    the document's rows of ``portable_minhash_bands(
+    portable_minhash_sigs(shingle_sets(...)))``, bit for bit (pinned
+    by test), so a changed or deleted file retracts its bands. A
+    document of fewer than ``shingle_n`` tokens emits nothing."""
+    if num_perm % bands:
+        raise ValueError("num_perm must be a multiple of bands")
+    r = num_perm // bands
+
+    def _map(content, meta, emit):
+        import hashlib
+        import json
+
+        rec = json.loads(content)
+        text = rec.get("text")
+        if text is None or text.count(" ") < shingle_n - 1:
+            return
+        ts = text.lower().split(" ")
+        sh = {" ".join(ts[i : i + shingle_n]) for i in range(len(ts) - shingle_n + 1)}
+        sig = [
+            min(hashlib.md5(f"{i}:{s}".encode()).hexdigest() for s in sh)
+            for i in range(num_perm)
+        ]
+        for b in range(bands):
+            emit([b, "".join(sig[b * r : (b + 1) * r])], rec["doc_id"])
+
+    return _map
+
+
+def doc_text_map(content, meta, emit):
+    """View map over ``{"doc_id", "text"}`` files emitting
+    ``(doc_id, text)`` (key schema ``("long",)``): the texts
+    view_minhash_pairs verifies against."""
+    import json
+
+    rec = json.loads(content)
+    emit(rec["doc_id"], rec.get("text"))
+
+
+def view_minhash_pairs(
+    db,
+    band_view: str,
+    text_view: str,
     threshold: float = 0.5,
-) -> tuple[DataFrame, DataFrame]:
-    """Ingest-time near-dup check: verified pairs touching the NEW
-    batch — (new, base) cross pairs plus within-batch pairs — without
-    ever re-banding the accumulated corpus' documents.
-
-    This is how MinHash dedup runs operationally at 100 TB: signatures
-    are computed once per document and PERSISTED (``base_sigs`` — e.g.
-    a log the caller appends each batch's ``(id, signature)`` rows
-    to); each incoming batch only pays signature cost for its own docs
-    plus one bucket join of its bands against new + base bands.
-    Returns ``(pairs, new_sigs)`` — append ``new_sigs`` to the
-    signature table after the batch commits. Batch-split invariance:
-    processing a corpus in any batch order yields exactly the union of
-    the one-shot ``portable_minhash_pairs`` output, because
-    signatures, banding, and verification are all per-doc
-    deterministic (tested).
-    """
-    new_sigs = portable_minhash_sigs(
-        shingle_sets(new_docs, text_col, id_col, shingle_n), num_perm
-    ).persist()
-    nb = portable_minhash_bands(new_sigs, num_perm, bands)
-    if base_sigs is not None:
-        every = nb.unionByName(portable_minhash_bands(base_sigs, num_perm, bands))
-        corpus = base_docs.select(id_col, text_col).union(
-            new_docs.select(id_col, text_col)
-        )
-    else:
-        every = nb
-        corpus = new_docs.select(id_col, text_col)
-    # one bucket join of the new bands against new + base bands finds
-    # the within-batch and the cross pairs together
-    a, b = nb.alias("a"), every.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") != F.col("b.id")),
-        )
-        .select(
-            F.least("a.id", "b.id").alias("id_a"),
-            F.greatest("a.id", "b.id").alias("id_b"),
-        )
-        .distinct()
+    shingle_n: int = 3,
+) -> DataFrame:
+    """Verified near-dup pairs (id_a, id_b, jaccard) of the views'
+    current documents — equal to portable_minhash_pairs over them.
+    Band keys of ``band_view`` (minhash_band_map) holding two or more
+    ids are the candidates, verified exactly against ``text_view``
+    (doc_text_map). Signatures are computed once per file by the map;
+    pairs derive on read, so an updated or deleted document's pairs
+    leave with its entries. ``shingle_n`` must be the band map's."""
+    banded = db.entries_df(band_view).select(
+        F.col("value").cast("long").alias("id"),
+        F.col("key.k0").alias("band"),
+        F.col("key.k1").alias("bucket"),
     )
-    from dat_archive_map_reduce_spark.operators._util import eager_release
-
-    cands = cands.persist()
-    pairs = eager_release(
-        verify_jaccard_pairs(
-            cands, corpus, text_col, id_col, n=shingle_n, threshold=threshold
-        ),
-        cands,
+    docs = db.entries_df(text_view).select(
+        F.col("key.k0").alias("doc_id"),
+        # value holds the JSON-encoded text; '$' unquotes the scalar
+        F.get_json_object("value", "$").alias("text"),
     )
-    # new_sigs stays persisted by design: it is the incremental state
-    # the caller folds into the signature table for the next batch
-    return pairs, new_sigs
+    return verify_jaccard_pairs(
+        bucket_pairs(banded), docs, "text", "doc_id", n=shingle_n, threshold=threshold
+    )
 
 
 # ---------------------------------------------------------------------
@@ -921,8 +886,7 @@ def incremental_span_counts(
     ingesting B1 then B2 yields byte-identical state to ingesting
     B1 ∪ B2 at once. Only the NEW batch is ever re-shingled; the
     accumulated state is one narrow (16-byte hash, long) table that
-    merges with a partial-combined sum, the same shape a foreachBatch
-    stream maintains in an AppendOnlyLog (cf. streaming_neardup_ingest).
+    merges with a partial-combined sum.
     """
     batch_counts = (
         span_postings(new_docs, text_col, id_col, span_len)

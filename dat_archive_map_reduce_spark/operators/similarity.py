@@ -16,6 +16,7 @@ replay bit-for-bit under the SQL oracle; the seeded IVF path
 
 from __future__ import annotations
 
+import math
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -41,6 +42,21 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def py_cosine(a: Sequence[float], b: Sequence[float]) -> float:
+    """Python twin of cosine(), bit for bit: the same left-to-right
+    folds from 0.0 and a correctly rounded sqrt."""
+    dot_ = 0.0
+    na = 0.0
+    nb = 0.0
+    for x, y in zip(a, b):
+        dot_ += x * y
+    for x in a:
+        na += x * x
+    for y in b:
+        nb += y * y
+    return dot_ / (math.sqrt(na) * math.sqrt(nb))
 
 
 def brute_force_topk(
@@ -291,11 +307,10 @@ def ivf_assign_expr(
     """Deterministic nearest-pinned-centroid assignment: argmax of
     cosine over the (id, vector) codebook, ties to the SMALLER
     centroid id (the -id trick inside array_max's lexicographic
-    struct compare). One shared implementation so the batch IVF plan
-    (portable_ivf_topk) and the streaming maintenance twin
-    (streaming.watch.streaming_ivf_assign) can never drift — their
-    stream=batch equality is pinned by test. Codebook is baked as
-    plan literals: zero-shuffle narrow scan, the 100 TB shape."""
+    struct compare). The batch IVF plan (portable_ivf_topk) uses it;
+    ivf_cluster_map is its Python twin for an engine view, pinned
+    equal by test. Codebook is baked as plan literals: zero-shuffle
+    narrow scan, the 100 TB shape."""
     v = F.col(vec_col).cast("array<double>")
     choices = F.array(
         *[
@@ -307,6 +322,40 @@ def ivf_assign_expr(
         ]
     )
     return -F.array_max(choices)["nid"]
+
+
+def ivf_cluster_map(cents: "list[tuple[int, Sequence[float]]]"):
+    """View map over ``{"vec_id", "embedding"}`` files emitting
+    ``(cluster, vec_id)`` (key schema ``("long",)``): ivf_assign_expr's
+    assignment, bit for bit (pinned by test). A re-put embedding moves
+    cluster, a deleted one leaves; a probe is ivf_probe plus one
+    ``get_many`` of the probed clusters."""
+    cents = sorted((int(c), [float(x) for x in v]) for c, v in cents)
+
+    def _map(content, meta, emit):
+        import json
+
+        rec = json.loads(content)
+        emit(ivf_probe(cents, rec["embedding"], 1)[0], rec["vec_id"])
+
+    return _map
+
+
+def ivf_probe(
+    cents: "list[tuple[int, Sequence[float]]]",
+    query_vec: Sequence[float],
+    n_probe: int,
+) -> "list[int]":
+    """The ``n_probe`` centroid ids nearest ``query_vec``, ties to the
+    smaller id."""
+    qv = [float(x) for x in query_vec]
+    return [
+        cid
+        for cid, _ in sorted(
+            ((cid, py_cosine(qv, cv)) for cid, cv in cents),
+            key=lambda t: (-t[1], t[0]),
+        )[:n_probe]
+    ]
 
 
 def portable_ivf_topk(
@@ -343,27 +392,7 @@ def portable_ivf_topk(
     if not rows:  # empty corpus: empty answer, not a crash
         return _empty_topk(corpus, id_col, "cos_sim")
     cents = [(cid, rows[cid]) for cid in sorted(rows)]
-
-    def _py_cos(a: Sequence[float], b: Sequence[float]) -> float:
-        dot_ = 0.0
-        na = 0.0
-        nb = 0.0
-        for x, y in zip(a, b):
-            dot_ += x * y
-        for x in a:
-            na += x * x
-        for y in b:
-            nb += y * y
-        return dot_ / ((na ** 0.5) * (nb ** 0.5))
-
-    qv = [float(x) for x in query_vec]
-    probed = [
-        cid
-        for cid, _ in sorted(
-            ((cid, _py_cos(qv, cv)) for cid, cv in cents),
-            key=lambda t: (-t[1], t[0]),
-        )[:n_probe]
-    ]
+    probed = ivf_probe(cents, query_vec, n_probe)
     assigned = corpus.withColumn("_cluster", ivf_assign_expr(cents, vec_col))
     cands = assigned.filter(F.col("_cluster").isin(probed)).drop("_cluster")
     return brute_force_topk(cands, query_vec, k, vec_col, id_col)

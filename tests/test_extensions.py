@@ -548,27 +548,40 @@ def test_cross_containment_finds_quoted_probe(spark):
     assert crows == {(100, 1)}  # boilerplate fps (2 train docs) dropped
 
 
-def test_incremental_minhash_equals_batch(documents):
-    """Batch-split invariance: ingesting the corpus in two batches
-    against an accumulated signature table finds exactly the one-shot
-    portable pipeline's verified pair set."""
-    full = {
-        (r.id_a, r.id_b)
-        for r in dedup.portable_minhash_pairs(documents, "text", "doc_id").collect()
-    }
-    half_a = documents.filter(F.col("doc_id") % 2 == 0)
-    half_b = documents.filter(F.col("doc_id") % 2 == 1)
-    p1, sigs_a = dedup.incremental_minhash_pairs(
-        half_a, half_a.limit(0), None, "text", "doc_id"
+def test_minhash_band_map_equals_spark_bands(spark, documents):
+    """The view map's Python MinHash bands equal the Spark band
+    pipeline row for row, on every document plus hand-made ones:
+    non-ASCII letters (dotted capital I, sharp s, a final capital
+    sigma), double and edge spaces, and a document of fewer than
+    shingle_n tokens, which emits nothing."""
+    import json
+
+    hand = [
+        (9001, "İstanbul STRASSE straße ΟΔΟΣ ΣΟΦΟΣ and ΌΡΟΣ"),
+        (9002, "double  spaces  inside  this   text"),
+        (9003, " leading and trailing spaces "),
+        (9004, "two tokens"),
+    ]
+    docs = documents.select("doc_id", "text").unionByName(
+        spark.createDataFrame(hand, "doc_id long, text string")
     )
-    p2, _ = dedup.incremental_minhash_pairs(
-        half_b, half_a, sigs_a, "text", "doc_id"
+    want = sorted(
+        (r.id, r.band, r.bucket)
+        for r in dedup.portable_minhash_bands(
+            dedup.portable_minhash_sigs(dedup.shingle_sets(docs, "text", "doc_id"))
+        ).collect()
     )
-    got = {(r.id_a, r.id_b) for r in p1.collect()} | {
-        (r.id_a, r.id_b) for r in p2.collect()
-    }
-    assert got == full
-    assert len(full) > 0
+    band_map = dedup.minhash_band_map()
+    got = []
+    for r in docs.collect():
+        band_map(
+            json.dumps({"doc_id": r.doc_id, "text": r.text}),
+            {},
+            lambda k, v: got.append((v, k[0], k[1])),
+        )
+    assert sorted(got) == want
+    ids = {i for i, _, _ in got}
+    assert {9001, 9002, 9003} <= ids and 9004 not in ids
 
 
 def test_mg_heavy_hitters_partitioning_invariant(spark, documents):

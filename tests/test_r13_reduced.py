@@ -255,42 +255,94 @@ def test_auto_rebucket_covers_reduced_tables(spark, tmp_path):
     db.close()
 
 
-def test_streaming_ivf_assign_equals_batch(spark, tmp_path):
-    """Streaming IVF maintenance (the ANN pillar's streaming twin):
-    embeddings drained file-by-file through streaming_ivf_assign land
-    assignments BIT-IDENTICAL to a batch pass with the same pinned
-    codebook (ivf_assign_expr is shared, so they cannot drift), a
-    replayed batch's overwrite never duplicates rows, and serving
-    from the assignments table reproduces portable_ivf_topk's
-    candidate set + top-k exactly."""
-    from dat_archive_map_reduce_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_assign_expr,
-        portable_ivf_topk,
-    )
-    from dat_archive_map_reduce_spark.sources.tables import load_table
-    from dat_archive_map_reduce_spark.streaming.watch import (
-        ivf_assignments,
-        streaming_ivf_assign,
-    )
+def _vec_row(vec_id, emb, version, typ="put"):
+    return {
+        "origin": "dat://emb",
+        "pathname": f"/v/{vec_id}.json",
+        "version": version,
+        "type": typ,
+        "content": None if typ == "del" else json.dumps(
+            {"vec_id": vec_id, "embedding": [float(x) for x in emb]}
+        ),
+    }
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    corpus = emb.select("vec_id", "embedding")
+
+def _sf_codebook(spark):
+    from dat_archive_map_reduce_spark.sources.tables import load_table
+
+    corpus = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
+        "vec_id", "embedding"
+    )
     cent_ids = list(range(1, 9))
     cents = sorted(
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in corpus.filter(F.col("vec_id").isin(cent_ids)).collect()
     )
-    src = str(tmp_path / "emb-src")
-    corpus.repartition(4).write.parquet(src)
-    out = str(tmp_path / "assign")
-    streaming_ivf_assign(
-        spark, src, str(tmp_path / "ckpt"), out, cents, corpus.schema
+    return corpus, cent_ids, cents
+
+
+def test_ivf_cluster_map_equals_assign_expr(spark):
+    """The IVF view map assigns every embedding, after its JSON round
+    trip, to the cluster ivf_assign_expr computes, ties included: a
+    duplicated centroid under a larger id ties exactly with its
+    original on every vector, and a vector equidistant from two
+    centroids goes to the smaller id."""
+    from dat_archive_map_reduce_spark.operators.similarity import (
+        ivf_assign_expr,
+        ivf_cluster_map,
     )
-    got = sorted(
-        (r["vec_id"], r["cluster"])
-        for r in ivf_assignments(spark, out).collect()
+
+    corpus, _, cents = _sf_codebook(spark)
+    cents = cents + [(99, cents[0][1])]
+    small = [(7, [1.0, 0.0]), (3, [0.0, 1.0])]
+    tie = spark.createDataFrame(
+        [(1, [1.0, 1.0]), (2, [2.0, 1.0])], "vec_id long, embedding array<double>"
     )
+    got = {}
+    for name, df, cb in (("sf", corpus, cents), ("tie", tie, small)):
+        want = sorted(
+            (r["vec_id"], r["c"])
+            for r in df.select("vec_id", ivf_assign_expr(cb).alias("c")).collect()
+        )
+        cmap = ivf_cluster_map(cb)
+        got[name] = []
+        for r in df.collect():
+            cmap(
+                _vec_row(r["vec_id"], r["embedding"], 1)["content"],
+                {},
+                lambda k, v, out=got[name]: out.append((v, k)),
+            )
+        assert sorted(got[name]) == want and len(want) == df.count()
+    assert sorted(got["tie"]) == [(1, 3), (2, 7)]
+    sf_clusters = {c for _, c in got["sf"]}
+    assert 1 in sf_clusters and 99 not in sf_clusters
+
+
+def test_streaming_ivf_assign_equals_batch(spark, tmp_path):
+    """IVF maintenance as an engine view: embeddings arriving in two
+    appends, each drained by watch, land assignments equal to a batch
+    ivf_assign_expr pass with the same pinned codebook, one per
+    vector, and serving through one get_many of the probed clusters
+    reproduces portable_ivf_topk's top-k exactly."""
+    from dat_archive_map_reduce_spark.operators.similarity import (
+        brute_force_topk,
+        ivf_assign_expr,
+        ivf_cluster_map,
+        ivf_probe,
+        portable_ivf_topk,
+    )
+
+    corpus, cent_ids, cents = _sf_codebook(spark)
+    db = MapReduce(spark, str(tmp_path / "wh"))
+    db.define("ivf", path="/v/*.json", map=ivf_cluster_map(cents),
+              key_schema=["long"])
+    vecs = [(r["vec_id"], r["embedding"]) for r in corpus.collect()]
+    for half in (0, 1):
+        db.append_changes(
+            [_vec_row(i, e, half + 1) for i, e in vecs if i % 2 == half]
+        )
+        W.watch_until_caught_up(db)
+    got = sorted((r["value"], r["key"]) for r in db.list("ivf"))
     want = sorted(
         (r["vec_id"], r["c"])
         for r in corpus.select(
@@ -298,27 +350,47 @@ def test_streaming_ivf_assign_equals_batch(spark, tmp_path):
         ).collect()
     )
     assert got == want and len(got) == corpus.count()
-    # serving equivalence: candidates from the assignments table +
-    # exact rerank == portable_ivf_topk on the same corpus
+    # serving equivalence: candidates from one get_many of the probed
+    # clusters + exact rerank == portable_ivf_topk on the same corpus
     qv = [float(x) for x in
           corpus.filter(F.col("vec_id") == 5).first()["embedding"]]
     expect = [tuple(r) for r in portable_ivf_topk(
         corpus, qv, centroid_ids=cent_ids, n_probe=2, k=5).collect()]
-
-    def _cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        return d / ((sum(x * x for x in a) ** 0.5)
-                    * (sum(y * y for y in b) ** 0.5))
-
-    probed = [c for c, _ in sorted(
-        ((c, _cos(qv, v)) for c, v in cents), key=lambda t: (-t[1], t[0])
-    )[:2]]
-    cands = corpus.join(
-        ivf_assignments(spark, out).filter(F.col("cluster").isin(probed)),
-        "vec_id", "left_semi",
-    )
+    probed = ivf_probe(cents, qv, 2)
+    ids = [i for vs in db.get_many("ivf", probed).values() for i in vs]
+    cands = corpus.filter(F.col("vec_id").isin(ids))
     got_topk = [tuple(r) for r in brute_force_topk(cands, qv, 5).collect()]
     assert got_topk == expect
+    db.close()
+
+
+def test_ivf_view_retracts_moved_and_deleted_vectors(spark, tmp_path):
+    """Re-putting a vector with a new embedding moves it to its new
+    cluster, and deleting it removes its assignment from get_many."""
+    from dat_archive_map_reduce_spark.operators.similarity import ivf_cluster_map
+
+    db = MapReduce(spark, str(tmp_path / "wh"))
+    db.define("ivf", path="/v/*.json",
+              map=ivf_cluster_map([(1, [1.0, 0.0]), (2, [0.0, 1.0])]),
+              key_schema=["long"])
+
+    def clusters():
+        return {c: sorted(v) for c, v in db.get_many("ivf", [1, 2]).items()}
+
+    db.append_changes([
+        _vec_row(10, [1.0, 0.1], 1),
+        _vec_row(11, [0.2, 1.0], 1),
+        _vec_row(12, [0.9, 0.3], 1),
+    ])
+    W.watch_until_caught_up(db)
+    assert clusters() == {1: [10, 12], 2: [11]}
+    db.append_changes([_vec_row(10, [0.0, 1.0], 2)])
+    W.watch_until_caught_up(db)
+    assert clusters() == {1: [12], 2: [10, 11]}
+    db.append_changes([_vec_row(11, None, 3, typ="del"), _vec_row(12, None, 3, typ="del")])
+    W.watch_until_caught_up(db)
+    assert clusters() == {2: [10]}
+    db.close()
 
 
 def test_avg_delta_stream_equals_batch_bit_exact(spark, tmp_path):

@@ -492,39 +492,85 @@ def test_stream_stream_interval_join_equals_batch(spark, tmp_path):
     assert len(got) == len(batch)  # exactly-once, no duplicate pairs
 
 
+def _doc_row(doc_id, text, version, typ="put"):
+    return {
+        "origin": "dat://docs",
+        "pathname": f"/docs/{doc_id}.json",
+        "version": version,
+        "type": typ,
+        "content": None if typ == "del" else json.dumps(
+            {"doc_id": doc_id, "text": text}
+        ),
+    }
+
+
+def _neardup_views(spark, wh):
+    from dat_archive_map_reduce_spark.operators.dedup import (
+        doc_text_map,
+        minhash_band_map,
+    )
+
+    db = MapReduce(spark, wh)
+    db.define("bands", path="/docs/*.json", map=minhash_band_map(),
+              key_schema=["long", "string"])
+    db.define("texts", path="/docs/*.json", map=doc_text_map,
+              key_schema=["long"])
+    return db
+
+
+def _view_pairs(db):
+    from dat_archive_map_reduce_spark.operators.dedup import view_minhash_pairs
+
+    return {
+        (r.id_a, r.id_b)
+        for r in view_minhash_pairs(db, "bands", "texts").collect()
+    }
+
+
 def test_streaming_neardup_ingest_equals_batch(spark, tmp_path):
-    """Continuous near-dup ingestion over micro-batches must find
-    exactly the one-shot portable MinHash pipeline's verified pair
-    set: docs arrive in two files (one per trigger), each batch is
-    checked against the accumulated signature/doc logs."""
+    """Near-dup ingestion as engine views must find exactly the
+    one-shot portable MinHash pipeline's verified pair set: docs
+    arrive in two appends, each drained by watch, and the pairs are
+    read from the band and text views."""
     from dat_archive_map_reduce_spark.operators.dedup import portable_minhash_pairs
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text").cache()
-    src = str(tmp_path / "src")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(src)
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-
-    pairs_out = str(tmp_path / "pairs")
-    W.streaming_neardup_ingest(
-        spark,
-        source_dir=src,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        state_root=str(tmp_path / "state"),
-        pairs_out=pairs_out,
-        schema=docs.schema,
-    )
-    got = {
-        (r.id_a, r.id_b)
-        for r in spark.read.option("recursiveFileLookup", "true")
-        .parquet(pairs_out)
-        .collect()
-    }
+    db = _neardup_views(spark, str(tmp_path / "wh"))
+    rows = [(r.doc_id, r.text) for r in docs.collect()]
+    for half in (0, 1):
+        db.append_changes(
+            [_doc_row(i, t, half + 1) for i, t in rows if i % 2 == half]
+        )
+        W.watch_until_caught_up(db)
+    got = _view_pairs(db)
     want = {
         (r.id_a, r.id_b)
         for r in portable_minhash_pairs(docs, "text", "doc_id").collect()
     }
     assert got == want
     assert len(want) > 0
+    db.close()
+
+
+def test_neardup_views_retract_updated_and_deleted_docs(spark, tmp_path):
+    """Re-putting a document so it no longer matches its partner, and
+    deleting a document, each remove the affected pairs."""
+    db = _neardup_views(spark, str(tmp_path / "wh"))
+    a = "the quick brown fox jumps over the lazy dog near the river bank"
+    b = "a completely different sentence about spark streaming and views"
+    db.append_changes([
+        _doc_row(1, a, 1), _doc_row(2, a, 1), _doc_row(3, b, 1),
+        _doc_row(4, b + " today", 1), _doc_row(5, "unrelated short note here", 1),
+    ])
+    W.watch_until_caught_up(db)
+    assert _view_pairs(db) == {(1, 2), (3, 4)}
+    db.append_changes([_doc_row(2, "nothing in common with any other text", 2)])
+    W.watch_until_caught_up(db)
+    assert _view_pairs(db) == {(3, 4)}
+    db.append_changes([_doc_row(4, None, 3, typ="del")])
+    W.watch_until_caught_up(db)
+    assert _view_pairs(db) == set()
+    db.close()
 
 
 def test_stream_static_enrichment_equals_batch(spark, tmp_path):

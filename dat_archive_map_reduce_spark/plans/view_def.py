@@ -60,10 +60,10 @@ class ViewDefinition:
         statistics (count, integer sum) and derives the folded value,
         bit-identical to a refold up to 2^53 — the same magnitude at
         which the refold's own double sums degrade. min/max are not
-        subtractable at all, but get their own no-rescan delta path
+        subtractable at all, but get their own no-rescan delta fold
         against a bounded value-histogram sidecar
-        (engine._reaggregate_minmax_delta, refold only past the
-        bound); collect always refolds."""
+        (engine._fold_minmax, refold only past the bound); collect
+        always refolds."""
         if self.reduce == "count":
             return "count"
         if self.reduce in ("sum", "avg") and self.value_type in (

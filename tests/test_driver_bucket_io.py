@@ -73,7 +73,7 @@ def _arm_engine(spark, wh):
 def _arm_history(db):
     """Backfill two origins, then a two-origin watch batch that re-keys,
     re-values and deletes files (retractions, min retraction), then a
-    single-file index_file/unindex_file pair (refold commits)."""
+    single-file index_file/unindex_file pair (deltas under file tokens)."""
     for o in ("dat://a", "dat://b"):
         db.index_source(o, [
             _row(o, f"/d/{i}.json", 1, f"k{i % 5}", 100 + (i * 7) % 40, i % 3)
@@ -275,7 +275,7 @@ def _stored_rdds(spark) -> "set[int]":
 def test_update_releases_its_checkpoint(spark, tmp_path, monkeypatch):
     """An update over a filled store checkpoints its flagged pre-merge
     read, and drop_checkpoint frees those blocks once the update is
-    done, after index_file's refold too: the block manager holds no
+    done, after an index_file too: the block manager holds no
     RDD the update added."""
     from dat_archive_map_reduce_spark import engine as engine_mod
 

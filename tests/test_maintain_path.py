@@ -694,6 +694,65 @@ def test_crash_before_flips_then_other_entry_point(spark, tmp_path, monkeypatch,
     scratch.close()
 
 
+def test_single_file_ops_take_the_delta_route(spark, tmp_path):
+    """index_file and unindex_file stamp their one-row batch with a
+    fresh file token, so count, long sum and min views take their
+    delta fold: no maintain:refold job runs (a refold scans the
+    store's entries for its keys), and the views equal the folds of
+    the files left."""
+    backfill, _update = _drip_changelog()
+    db = _crash_engine(spark, str(tmp_path / "wh"))
+    db.index_source("dat://hot", backfill)
+    gone = backfill[0]["pathname"]
+    j0 = _max_job_id(spark)
+    db.index_file("dat://hot", "/d/999.json", json.dumps({"k": "k1", "v": 2}))
+    db.unindex_file("dat://hot", gone)
+    jobs = _jobs_since(spark, j0)
+    assert jobs and not [j for j in jobs if (j[1] or "").startswith("maintain:refold")], jobs
+    by_key: "dict[str, list[int]]" = {}
+    for r in backfill[1:] + [_row("dat://hot", "/d/999.json", 2, "k1", 2)]:
+        obj = json.loads(r["content"])
+        by_key.setdefault(obj["k"], []).append(obj["v"])
+    for name, fold in (("c", len), ("s", lambda vs: float(sum(vs))), ("m", lambda vs: float(min(vs)))):
+        assert {r["key"]: r["value"] for r in db.list(name)} == {
+            k: fold(vs) for k, vs in by_key.items()
+        }, name
+    db.close()
+
+
+@pytest.mark.parametrize("boundary", ["reduced", "flips"])
+def test_index_file_crash_then_index_matches_scratch(spark, tmp_path, monkeypatch, boundary):
+    """index_file crashes at a commit boundary, then index() applies a
+    later update. A crash after the reduced commit leaves the views'
+    file token unlike the store's, so the update refolds them and the
+    file's rows, never flipped into the store, are not there; a crash
+    after the flips leaves views and store on the file's token, so
+    the update's delta applies on top of the file. Every view equals
+    a from-scratch engine given the same calls."""
+    views = [name for name, _r, _vt in CRASH_VIEWS]
+    backfill, update = _drip_changelog()
+    extra = json.dumps({"k": "k1", "v": 2})
+    wh = str(tmp_path / "wh")
+    db = _crash_engine(spark, wh)
+    db.index_source("dat://hot", backfill)
+    _crash_at(monkeypatch, boundary)
+    with pytest.raises(_Crash):
+        db.index_file("dat://hot", "/d/999.json", extra)
+    monkeypatch.undo()
+    db.close()
+    db = _crash_engine(spark, wh)
+    db.append_changes(update)
+    db.index("dat://hot")
+    scratch = _crash_engine(spark, str(tmp_path / "scratch"))
+    scratch.index_source("dat://hot", backfill)
+    if boundary == "flips":
+        scratch.index_file("dat://hot", "/d/999.json", extra)
+    scratch.index_source("dat://hot", update)
+    _assert_views_equal(db, scratch, views)
+    db.close()
+    scratch.close()
+
+
 MINMAX_VIEWS = (("mn", "min"), ("mx", "max"))
 
 
@@ -738,8 +797,8 @@ def test_minmax_delta_past_limit_crash_resumes_to_scratch(
     spark, tmp_path, monkeypatch, minmax_scratch, entry, boundary
 ):
     """With the delta driver limit at 2, the backfill's and a retracting
-    batch's min and max deltas are past it and take the in-plan
-    histogram arm (its bootstrap branch, then its merge). The batch
+    batch's min and max deltas are past it, so their histogram fold
+    runs on executors (first over empty tables, then merging). The batch
     crashes at a commit boundary in a watch drain or an index() slice;
     a reopened engine resumes the same way, and both views equal a
     from-scratch index: get, list and reduced_df."""

@@ -449,7 +449,12 @@ FORCED_BROADCAST_SITES = {
     # anti and semi joins
     # 13 = 20 - 7: the refold's affected-keys semi/anti joins, once per
     # fold kind (9), now shared by all kinds (2); no site is new
-    "engine.py": 13,
+    # 5 = 13 - 10 + 2: the ten delta-key semi/anti/horizon joins of
+    # the in-plan count/sum and min/max delta arms are deleted; the
+    # delta fold's executor placement adds its delta-key semi-join
+    # (the keys' current rows) and replaced-keys anti-join, both
+    # bounded by the batch's delta keys
+    "engine.py": 5,
     # streaming_contamination's blocklist — broadcast-sized BY
     # CONTRACT (distinct shingles of protected corpora; documented)
     "streaming/watch.py": 1,

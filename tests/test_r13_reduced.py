@@ -194,20 +194,26 @@ def test_reduced_table_bucketed_and_hardlink_reuse(spark, tmp_path):
 
 
 def test_sum_delta_interleaved_with_batch_refold(spark, tmp_path):
-    """Stream deltas and batch-path refolds interleave on a sum view:
-    the refold erases the token and realigns reduced + sidecar with
-    entries, so a later stream batch's delta composes exactly
-    (every ordering converges — same pin as the count-delta twin)."""
+    """Stream deltas, a single-file op and batch-path refolds
+    interleave on a sum view: the single-file op takes the delta with
+    its own file token, and the refold (unindex's) erases the token
+    and realigns reduced + sidecar with entries, so a later stream
+    batch's delta composes exactly (every ordering converges — same
+    pin as the count-delta twin)."""
     db = MapReduce(spark, str(tmp_path / "wh-i"))
     db.define("s", path="/d/*.json", map=map_sum, reduce="sum",
               key_schema=["string"], value_type="long")
     db.append_changes([
         _row("dat://a", "/d/0.json", 1, "x", 1),
         _row("dat://a", "/d/1.json", 1, "y", 2),
+        _row("dat://b", "/d/0.json", 1, "x", 100),
     ])
     W.watch_until_caught_up(db)  # stream delta (token stamped)
-    # BATCH path: a single-file op runs token-less -> general refold
     db.index_file("dat://a", "/d/2.json", json.dumps({"k": "x", "v": 10}))
+    assert db._reduced_table("s").manifest_meta()["batch_token"].startswith("file:")
+    assert db.get("s", "x") == {"key": "x", "value": 111.0}
+    # BATCH path: unindex refolds the keys the origin contributed
+    db.unindex("dat://b")
     assert db._reduced_table("s").manifest_meta().get("batch_token") is None
     assert db.get("s", "x") == {"key": "x", "value": 11.0}
     # sidecar realigned by the refold

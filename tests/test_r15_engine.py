@@ -446,17 +446,15 @@ def map_kv_pair(content, meta, emit):
 @pytest.mark.parametrize("key_schema", [["string"], ["string", "long"]],
                          ids=["string", "string-long"])
 def test_minmax_driver_delta_matches_vectorized_path(spark, tmp_path, key_schema):
-    """The r15 driver-side micro-batch fast path of the min/max
-    histogram delta must commit BIT-IDENTICAL reduced + histogram
-    state to the vectorized Spark form it replaces: run the same
-    backfill + retracting drip through two warehouses, one with the
-    driver path forced OFF (_DELTA_DRIVER_LIMIT = 0 routes every
-    batch to the vectorized plan), and compare both tables row by
-    row plus the batch tokens. A string-valued emit rides along:
-    both paths must skip it identically (the try_cast filter runs
-    BEFORE the driver gate, so it reaches neither routing). The
-    compound key checks that the driver path's struct keys survive
-    its Arrow-built frames."""
+    """The two placements of the min/max histogram fold commit
+    BIT-IDENTICAL reduced + histogram state: run the same backfill +
+    retracting drip through two warehouses, one with every delta past
+    the driver limit (_DELTA_DRIVER_LIMIT = 0 runs the fold on
+    executors through cogroup(...).applyInArrow), and compare both
+    tables row by row plus the batch tokens. A string-valued emit
+    rides along: both placements must skip it identically. The
+    compound key checks that struct keys survive the driver's local
+    frames and the executors' Arrow batches."""
     compound = len(key_schema) > 1
 
     def key(k):
@@ -505,12 +503,13 @@ def test_minmax_driver_delta_matches_vectorized_path(spark, tmp_path, key_schema
 
 @pytest.mark.parametrize("reduce, value_type", [("count", None), ("sum", "long"), ("avg", "long")])
 def test_exact_delta_arms_match(spark, tmp_path, reduce, value_type):
-    """The driver arm and the vectorized arm of the exactly-subtractable
+    """The driver and executor placements of the exactly-subtractable
     folds commit BIT-IDENTICAL reduced (and, for sum/avg, sidecar)
     state: the same backfill and retracting drip run through two
-    warehouses, one with every delta forced onto the vectorized plan
-    (_DELTA_DRIVER_LIMIT = 0), by watch drains and by index() passes,
-    and the values equal the folds of the latest file versions."""
+    warehouses, one with every delta past the driver limit
+    (_DELTA_DRIVER_LIMIT = 0 runs the fold on executors), by watch
+    drains and by index() passes, and the values equal the folds of
+    the latest file versions."""
     dbs = []
     for name, limit in (("drv", None), ("vec", 0)):
         db = MapReduce(spark, str(tmp_path / f"wh-{name}"))

@@ -1331,22 +1331,16 @@ def test_count_delta_reaggregation_exactly_once(spark, tmp_path, monkeypatch):
     dbb.index("dat://c1")
     assert db.list("kc") == dbb.list("kc")
 
-    # (3) replaying the SAME token is a no-op even with a bogus delta
-    from dat_archive_map_reduce_spark.operators.map_reduce import (
-        entries_schema,
-    )
-    from dat_archive_map_reduce_spark.plans.catalog import empty_df
-
+    # (3) replaying the SAME token is a no-op even with a bogus delta,
+    # on executors and on the driver
     v_before = red._current()
     bogus = db._entries_table("kc", "dat://c0").read()  # nonzero rows
-    got = db._reaggregate_exact_delta(
-        db._view("kc"), bogus, empty_df(spark, entries_schema(
-            db._view("kc").key_types())).select("key", "key_json"),
-        batch_token=tok1,
+    got = db._fold_delta(
+        db._view("kc"), tok1, None, db._net_delta(bogus, None), [],
     )
     assert got == ([], None), "replayed token must skip"
     rows_b = [{"key": "key0", "key_json": '"key0"', "value": "0", "dc": 3}]
-    assert db._driver_delta(db._view("kc"), rows_b, tok1) == ([], None)
+    assert db._fold_delta(db._view("kc"), tok1, rows_b) == ([], None)
     assert red._current() == v_before
 
     # (2)+(4) crash window: v2 updates — commit the reduced delta with
@@ -1382,10 +1376,11 @@ def test_count_delta_reaggregation_exactly_once(spark, tmp_path, monkeypatch):
         write_bucketed,
     )
 
-    pairs, _probe = db._reaggregate_exact_delta(
-        vdef, new_e,
-        db._merge_entries(vdef, upd, new_e, buckets)[0],
-        batch_token=tok2,
+    cached = []
+    pairs, _probe = db._fold_delta(
+        vdef, tok2, None,
+        db._net_delta(new_e, db._merge_entries(vdef, upd, new_e, buckets)[0]),
+        cached,
     )
     assert [t.table.root for t, _df in pairs] == [red.root]
     commit, _cancel, _hit = write_bucketed(
@@ -1393,10 +1388,12 @@ def test_count_delta_reaggregation_exactly_once(spark, tmp_path, monkeypatch):
         ["key_json"], staging_dir=wh,
     )
     commit()
+    for df in cached:
+        df.unpersist()
     assert red.manifest_meta()["batch_token"] == tok2
     # crash happened here: reduced reflects v2, entries still v1.
-    # replay of the full batch with the same token, on the vectorized
-    # arm (every delta past the driver limit):
+    # replay of the full batch with the same token, with the fold on
+    # executors (every delta past the driver limit):
     monkeypatch.setattr(MapReduce, "_DELTA_DRIVER_LIMIT", 0)
     db._apply_store_batch(
         [vdef], (upd, counts, buckets), new_e, batch_token=tok2,

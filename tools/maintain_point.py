@@ -2,7 +2,7 @@
 PYTHONPATH: bench.py's maintain scenario (4 origins, one availableNow
 drain) over three views on one shared entries store — a mapped view,
 its ``count`` twin and its ``min`` twin, so a run exercises the count
-and the min/max delta arms — and prints ONE JSON line. Used by
+and the min/max delta folds — and prints ONE JSON line. Used by
 tools/ab_maintain.py to interleave A/B runs across two commits — the
 streaming twin of tools/ab_bench.py (r13 verdict #6).
 
